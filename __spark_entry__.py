@@ -434,13 +434,14 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exercised: A2 min/max rollup by flagship_extract; broadcast dict joins
 # by J6 (test_plan_quality.py::test_dictionary_join_broadcasts); W5
 # running windows by receipt_items; T1 top-k by knn_bruteforce;
-# minhash signatures by dedup_minhash_lsh (+ test_dedup_scale parity);
+# minhash signatures by dedup_minhash_lsh (+ test_dedup_scale vs DuckDB);
 # per-query IVF recall by ivf_recall_mean / ivf_recall_clustered.
 #
 # NOTE(r05 late): three more intermediates/duplicates were retired to
 # admit the late round-5 operators as driver-checked rows:
 # simhash_fingerprints (the signature relation dedup_simhash computes
-# internally; Arrow/expr twins stay parity-tested in test_dedup_scale),
+# internally; the Arrow batch is checked against this SQL in
+# test_dedup_scale),
 # doc_fingerprints (the relation fingerprint_pairs builds; winnowing
 # still value-checked through that row), receipt_warnings (P2 warning
 # semantics stay driver-checked via invoice_warnings and pytest-checked
@@ -1729,8 +1730,8 @@ def _sql_label_spans() -> str:
 
 def _sql_ivf_assign(src: str, cents: str, nprobe: int = 1) -> str:
     """Assign each vector of `src` to its `nprobe` nearest centroids of
-    `cents` (cosine desc, centroid-id asc tiebreak) — mirrors _assign_cells
-    (nprobe=1) / _assign_cells_multi (nprobe>1)."""
+    `cents` (cosine desc, centroid-id asc tiebreak) — mirrors
+    similarity.assign_cells_arrow."""
     return f"""(
       SELECT vid, v, cid AS cell FROM (
         SELECT e.vec_id AS vid, e.embedding AS v, c.cid,

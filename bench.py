@@ -242,34 +242,11 @@ def warc_worker(threads: int, path: str) -> None:
     )
     chunks = spark.read.parquet(path)
 
-    def one_pass(cmd: str = "go") -> float:
-        if cmd == "go:fused":
-            # single Python boundary: parse + tokenize + rollup + classify
-            # inside one mapInArrow; payload bytes never re-cross Arrow
-            from image_ocr_spark.operators.warcsource import warc_extract
-
-            df = warc_extract(chunks).agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum(F.length("text")).alias("chars"),
-            )
-        elif cmd == "go:composed":
-            # two Python boundaries: records materialize back to the JVM,
-            # html re-enters the tokenizer stage (salt=False to match the
-            # fused path's segment-granularity parallelism)
-            from image_ocr_spark.plans.pipeline import extract_pages
-
-            recs = read_warc(chunks).select(
-                "url", F.col("payload").alias("html")
-            )
-            df = extract_pages(recs, salt=False).agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum(F.length("text")).alias("chars"),
-            )
-        else:
-            df = read_warc(chunks).agg(
-                F.count(F.lit(1)).alias("records"),
-                F.sum(F.octet_length("payload")).alias("payload_bytes"),
-            )
+    def one_pass() -> float:
+        df = read_warc(chunks).agg(
+            F.count(F.lit(1)).alias("records"),
+            F.sum(F.octet_length("payload")).alias("payload_bytes"),
+        )
         df._jdf.queryExecution().executedPlan()
         t0 = time.time()
         df.collect()
@@ -279,9 +256,9 @@ def warc_worker(threads: int, path: str) -> None:
     print(json.dumps({"ready": True}), flush=True)
     for line in sys.stdin:
         cmd = line.strip()
-        if cmd not in ("go", "go:fused", "go:composed"):
+        if cmd != "go":
             break
-        print(json.dumps({"t": one_pass(cmd)}), flush=True)
+        print(json.dumps({"t": one_pass()}), flush=True)
     spark.stop()
 
 
@@ -333,43 +310,6 @@ def warc_scaling_main() -> None:
         "scaling_efficiency": round(effs[len(effs) // 2], 3),
         "scaling_samples": [round(e, 3) for e in effs],
     }))
-
-
-def warc_fused_main(cpus: int = HI) -> None:
-    """Fused (one Python boundary) vs composed (records re-cross Arrow)
-    segment-to-extraction, interleaved on the SAME pinned worker so each
-    pair samples one noise window.  A low-cpu arm (``--warc-fused 4``)
-    probes the shared-core regime: the composed path runs TWO resident
-    Python workers per task, so at 4 pinned cores it oversubscribes 2x
-    while the fused path stays one process per core."""
-    os.makedirs(CACHE_ROOT, exist_ok=True)
-    meta = prepare_warc_chunks()
-    pmeta = prepare_pages()
-    ncpu = os.cpu_count() or 1
-    cores = f"0-{min(cpus, ncpu) - 1}"
-    w = PinnedWorker(cpus, cores, warc_chunks_path(), mode="--warc-worker")
-    w.wait_ready()
-    w.ask("go:fused")  # warm the fused plan's python workers too
-    w.ask("go:composed")
-    best = {"fused": float("inf"), "composed": float("inf")}
-    for _ in range(3):
-        best["fused"] = min(best["fused"], w.ask("go:fused"))
-        best["composed"] = min(best["composed"], w.ask("go:composed"))
-    w.close()
-    mb = pmeta["bytes"] / 1e6
-    print(json.dumps({
-        "metric": f"warc_extract_fused_vs_composed_{_sf_tag()}",
-        "unit": "sec",
-        "cpus": cpus,
-        "records": meta["records"],
-        "payload_mb": round(mb, 1),
-        "fused_s": round(best["fused"], 3),
-        "composed_s": round(best["composed"], 3),
-        "fused_mb_per_sec": round(mb / best["fused"], 2),
-        "composed_mb_per_sec": round(mb / best["composed"], 2),
-        "speedup": round(best["composed"] / best["fused"], 3),
-    }))
-
 
 
 def frontier_worker(threads: int, path: str) -> None:
@@ -976,9 +916,6 @@ def main() -> None:
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--warc-ingest":
         warc_scaling_main()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--warc-fused":
-        warc_fused_main(int(sys.argv[2]) if len(sys.argv) > 2 else HI)
         return
     if len(sys.argv) > 1 and sys.argv[1] == "--bloom-build":
         bloom_build_main()

@@ -7,9 +7,9 @@ Common-Crawl-style page tables ``(url, warc_ts, html:binary, text, lang)``:
 - ``pycore``    — pure-Python semantic core (HTML/PDF tokenizers, normalizers,
                   classifier, field extractors).  This is the single source of
                   truth for per-document semantics; the Spark operators wrap it
-                  in Arrow-batched pandas UDFs, and the test oracle calls it
-                  directly, so byte-identity holds by construction.
-- ``operators`` — Spark operators: tokenize (mapInPandas), block scoring &
+                  in Arrow-batched mapInArrow functions, and the test oracle
+                  calls it directly, so byte-identity holds by construction.
+- ``operators`` — Spark operators: tokenize (mapInArrow), block scoring &
                   content selection, span joins, dedup, similarity search,
                   checkpoint manifests.
 - ``functions`` — native Spark SQL column builders (dates, amounts, phones,

@@ -3,15 +3,14 @@ training-data-pipeline dedup battery: exact, MinHash+LSH, SimHash, n-gram
 Jaccard).
 
 Scale design:
-- Signatures (minhash vector, shingle hashes, winnowed fingerprints) are
-  PER-ROW computations with no shuffle; each doc computes its signature in
-  the scan stage.  Two interchangeable implementations exist:
-  * array-expression form (JVM-side, zero Python) — the semantic reference,
-    replayed verbatim by the DuckDB oracle;
-  * Arrow+numpy form (mapInArrow) — the PRODUCTION default: Spark's
-    higher-order array functions are CodegenFallback (interpreted per
-    element), measured 10-20x slower than the vectorized batch at sf0.1;
-    bit-identical outputs, asserted by parity tests.
+- Signatures (minhash vector, shingle hashes, simhash, winnowed
+  fingerprints) are PER-ROW computations with no shuffle; each doc
+  computes its signature in the scan stage as an Arrow+numpy batch
+  (mapInArrow).  Spark's higher-order array functions are
+  CodegenFallback (interpreted per element) and measured 10-20x slower
+  than the vectorized batch at sf0.1.  The semantic reference is the
+  DuckDB oracle (`__spark_entry__.oracle_sql`), whose signature SQL the
+  tests replay against these batches bit for bit.
 - Shuffles happen only where semantically required: LSH band bucketing
   (groupBy band key — bounded fan-in per bucket), candidate-pair
   verification (equi-join on shingle hash), exact dedup (groupBy hash).
@@ -101,69 +100,6 @@ def hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def tokens_col(text: Column) -> Column:
-    return F.split(text, " ")
-
-
-def shingles_col(text: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
-    """Distinct word n-gram shingle strings of a text column (per-row)."""
-    toks = tokens_col(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(toks) - (n - 1)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    return F.array_distinct(grams)
-
-
-def shingle_hashes_col(text: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
-    return F.transform(shingles_col(text, n), hash32)
-
-
-def minhash_col(
-    text: Column, num_perm: int = DEFAULT_NUM_PERM, n: int = DEFAULT_SHINGLE_N
-) -> Column:
-    """MinHash signature as array<long> — per-row, shuffle-free."""
-    hashes = shingle_hashes_col(text, n)
-    sig = [
-        F.array_min(
-            F.transform(hashes, lambda h: (PERM_A[i] * h + PERM_B[i]) % MERSENNE31)
-        )
-        for i in range(num_perm)
-    ]
-    return F.array(*sig)
-
-
-def simhash_from_hashes(toks_h: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash fingerprint (bigint) from an array<long> of token hashes —
-    per-row, shuffle-free.
-
-    Bit b of the fingerprint is set iff the multiplicity-weighted sum of
-    (+1/-1) over token-hash bit b is positive.  The bit loop is unrolled in
-    Python (shift amounts must be literals); pass a *materialized column*
-    of token hashes, not an inline expression — it is referenced `bits`
-    times.
-    """
-    zero = F.lit(0).cast("long")
-
-    def vote_fn(b: int):
-        return lambda s, h: s + (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1)
-
-    total = zero
-    for b in range(bits):
-        vote = F.aggregate(toks_h, zero, vote_fn(b))
-        total = total + F.when(vote > 0, F.lit(1 << b).cast("long")).otherwise(zero)
-    return total
-
-
-def with_simhash(df: DataFrame, text_col: str = "text",
-                 out_col: str = "fp", bits: int = SIMHASH_BITS) -> DataFrame:
-    """Append a SimHash fingerprint column (token hashes materialized once)."""
-    toks_h = F.transform(tokens_col(F.coalesce(F.col(text_col), F.lit(""))), hash60)
-    return (
-        df.withColumn("_toks_h", toks_h)
-        .withColumn(out_col, simhash_from_hashes(F.col("_toks_h"), bits))
-        .drop("_toks_h")
-    )
-
-
 def with_variants(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                   offset: int = VARIANT_OFFSET) -> DataFrame:
     """Deterministic near-duplicate injection: every doc gets one mutated
@@ -184,7 +120,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     num_perm: int = DEFAULT_NUM_PERM,
     bands: int = DEFAULT_BANDS,
-    impl: str = "arrow",
     max_bucket: "int | None" = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding.
@@ -206,18 +141,9 @@ def minhash_lsh_pairs(
     within an oversized bucket only hub-spoke pairs exist for per-pair
     scoring, so keep it None when exact pair LISTS matter and the corpus
     is known template-free (the driver's oracle replays the clique form).
-
-    ``impl``: 'arrow' (default; vectorized signatures) or 'expr' (the
-    JVM-expression twin — same bits, ~10x slower at corpus scale).
     """
     rows = num_perm // bands
-    if impl == "arrow":
-        sig = minhash_arrow(docs, id_col, text_col, num_perm)
-    else:
-        sig = docs.select(
-            F.col(id_col).alias("id"),
-            minhash_col(F.coalesce(F.col(text_col), F.lit("")), num_perm).alias("sig"),
-        )
+    sig = minhash_arrow(docs, id_col, text_col, num_perm)
     banded = sig.select(
         "id",
         F.posexplode(
@@ -284,7 +210,6 @@ def ngram_jaccard_pairs(
     threshold_milli: int = 500,
     max_df: int = DEFAULT_SHINGLE_MAX_DF,
     min_shared: int = 1,
-    impl: str = "arrow",
     persist_sigs: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing >= min_shared RARE
@@ -317,13 +242,7 @@ def ngram_jaccard_pairs(
     each pair's full shingle arrays are re-joined and intersected
     (array_intersect), so max_df affects recall only, never the score.
     """
-    if impl == "arrow":
-        sh = shingle_hashes_arrow(docs, id_col, text_col, n)
-    else:
-        sh = docs.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes_col(F.coalesce(F.col(text_col), F.lit("")), n).alias("hs"),
-        )
+    sh = shingle_hashes_arrow(docs, id_col, text_col, n)
     # the signature relation feeds THREE consumers (candidate explode +
     # both verify sides); without materialization Spark recomputes the
     # signature pass per consumer.  An operator cannot know when its
@@ -377,7 +296,6 @@ def simhash_hamming_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     chunks: int = SIMHASH_CHUNKS,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: candidates share at least one of `chunks`
     fingerprint chunks (pigeonhole: hamming <= chunks-1 guarantees a shared
@@ -385,19 +303,15 @@ def simhash_hamming_pairs(
     each chunk key spans 2^15 buckets, keeping per-bucket candidate counts
     ~N/32768 at corpus scale.
 
-    r07: default impl is the Arrow fingerprint twin and the self-join is
-    hinted shuffle_hash — the broadcast self-join evaluated the whole
-    fingerprint pipeline on BOTH sides (no exchange to reuse) and
-    broadcasting one full side caps out at scale anyway; measured 5.75 s
-    (expr+broadcast) -> 1.2 s (arrow+shuffle_hash) for 10k sf0.1 docs at
-    16 cores, identical 5,417 output rows."""
+    r07: fingerprints come from the Arrow batch (simhash_arrow) and the
+    self-join is hinted shuffle_hash — the broadcast self-join evaluated
+    the whole fingerprint pipeline on BOTH sides (no exchange to reuse)
+    and broadcasting one full side caps out at scale anyway; measured
+    5.75 s (array expressions + broadcast) -> 1.2 s (arrow +
+    shuffle_hash) for 10k sf0.1 docs at 16 cores, identical 5,417 output
+    rows."""
     bits_per = SIMHASH_BITS // chunks
-    if impl == "arrow":
-        fp = simhash_arrow(docs, id_col, text_col)
-    else:
-        fp = with_simhash(
-            docs.select(F.col(id_col).alias("id"), F.col(text_col)), text_col
-        ).select("id", "fp")
+    fp = simhash_arrow(docs, id_col, text_col)
     chunk_arr = F.array(
         *[
             F.shiftright(F.col("fp"), c * bits_per).bitwiseAND(
@@ -449,53 +363,6 @@ POLY_B = 257              # rolling-hash base; gram hash is the Rabin-Karp
                           # polynomial sum(cp[i+j] * B^j) mod MERSENNE31
 
 
-def winnow_fingerprints_col(
-    text: Column, k: int = WINNOW_K, w: int = WINNOW_W,
-    max_chars: int = WINNOW_MAX_CHARS,
-) -> Column:
-    """Winnowed document fingerprints as array<long> — per-row, shuffle-free.
-
-    Rabin-Karp polynomial hash of every character k-gram (codepoint
-    arithmetic — identical integers in Spark, DuckDB, and Python, no string
-    allocation or md5 in the hot loop), then keep the minimum hash of each
-    w-wide window; consecutive windows usually share their minimum, so the
-    distinct set is ~2/(w+1) of positions — a compact, position-robust
-    fingerprint (insertions shift positions but leave most window minima
-    intact).
-
-    Codepoints come from one split('') pass so every gram hash is O(k)
-    element_at lookups — an earlier substring(text, i, k) form was O(i) per
-    gram (UTF8String position scan) and went quadratic on long documents.
-    Out-of-range positions (text shorter than k) hash as codepoint 0.
-    """
-    text = F.substring(text, 1, max_chars)
-    cps = F.transform(F.split(text, ""), lambda c: F.ascii(c).cast("long"))
-    n_grams = F.greatest(F.lit(1), F.size(cps) - (k - 1))
-    powers = [pow(POLY_B, j, MERSENNE31) for j in range(k)]
-
-    # Array-level formulation: gram hashes = elementwise combination of k
-    # SHIFTED VIEWS of the codepoint array (slice is one O(n) op; zip_with
-    # pads the shorter side with NULL -> coalesce 0 covers texts shorter
-    # than k).  A per-index element_at(cps, i+j) form re-evaluated the cps
-    # expression inside the lambda and went super-linear.
-    def _term(pw: int):
-        # closure factory, not a default arg: pyspark inspects lambda arity
-        return lambda a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0)) * pw
-
-    acc = F.transform(F.slice(cps, 1, n_grams), lambda x: x * powers[0])
-    for j in range(1, k):
-        acc = F.zip_with(acc, F.slice(cps, 1 + j, n_grams), _term(powers[j]))
-    hs = F.transform(acc, lambda x: x % MERSENNE31)
-
-    # winnow = elementwise min of w shifted views (least() skips the NULL
-    # padding zip_with adds when a view runs short)
-    n_win = F.greatest(F.lit(1), n_grams - (w - 1))
-    mins = F.slice(hs, 1, n_win)
-    for j in range(1, w):
-        mins = F.zip_with(mins, F.slice(hs, 1 + j, n_win), lambda a, b: F.least(a, b))
-    return F.array_sort(F.array_distinct(mins))
-
-
 def with_fingerprints(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -503,17 +370,10 @@ def with_fingerprints(
     k: int = WINNOW_K,
     w: int = WINNOW_W,
     max_chars: int = WINNOW_MAX_CHARS,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, fp) rows: one row per winnowed fingerprint of each document."""
-    if impl == "arrow":
-        return winnow_arrow(docs, id_col, text_col, k, w, max_chars).withColumnRenamed(
-            "id", id_col
-        )
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    return docs.select(
-        F.col(id_col),
-        F.explode(winnow_fingerprints_col(t, k, w, max_chars)).alias("fp"),
+    return winnow_arrow(docs, id_col, text_col, k, w, max_chars).withColumnRenamed(
+        "id", id_col
     )
 
 
@@ -559,13 +419,14 @@ def fingerprint_match_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Arrow+numpy signature paths (production default).  Each mirrors its
-# array-expression twin BIT-EXACTLY:
-# - token split: Python str.split(" ") == Java split(regex " ", limit -1)
+# Arrow+numpy signature batches.  Each replays its DuckDB oracle SQL
+# (__spark_entry__: _sql_shingles, _sql_minhash_cte, _SQL_TH +
+# _SQL_SIMHASH_EXPR, _sql_winnow_fps_cte) BIT-EXACTLY:
+# - token split: Python str.split(" ") == string_split(text, ' ')
 #   (both keep interior AND trailing empty strings; "" -> [""])
 # - shingle/token hashes: md5-prefix ints, same as hash32/hash60
-# - winnow codepoints: ord(c) == F.ascii per split('') char (BMP; astral
-#   chars are the one documented divergence — Spark splits surrogates)
+# - winnow codepoints: ord(c) == ascii() per character (BMP; astral
+#   chars are the one documented divergence)
 # ---------------------------------------------------------------------------
 
 
@@ -597,8 +458,8 @@ def shingle_hashes_arrow(
     text_col: str = "text",
     n: int = DEFAULT_SHINGLE_N,
 ) -> DataFrame:
-    """(id, hs array<long>) via mapInArrow — vectorized twin of
-    shingle_hashes_col."""
+    """(id, hs array<long>) via mapInArrow: each document's distinct word
+    n-gram shingle hashes (md5-prefix, first-occurrence order)."""
     import pyarrow as pa
 
     def fn(batches):
@@ -624,8 +485,9 @@ def minhash_arrow(
     num_perm: int = DEFAULT_NUM_PERM,
     n: int = DEFAULT_SHINGLE_N,
 ) -> DataFrame:
-    """(id, sig array<long>) via mapInArrow — vectorized twin of
-    minhash_col (numpy broadcast over the permutation matrix)."""
+    """(id, sig array<long>) via mapInArrow: the MinHash signature, the
+    min of each fixed affine permutation (A[i]*h + B[i]) mod P over the
+    shingle hashes (numpy broadcast over the permutation matrix)."""
     import pyarrow as pa
 
     np = _np()
@@ -657,16 +519,16 @@ def simhash_arrow(
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
-    """(id, fp) via mapInArrow — vectorized twin of with_simhash: same
-    60-bit md5-prefix token hashes, same multiplicity-weighted bit votes
-    (numpy shifts over the token-hash matrix instead of 60 interpreted
-    aggregate folds per row).
+    """(id, fp) via mapInArrow: the 60-bit SimHash fingerprint.  Bit b is
+    set iff the multiplicity-weighted sum of (+1/-1) over the 60-bit
+    md5-prefix token hashes' bit b is positive (numpy shifts over the
+    token-hash matrix).
 
-    The DEFAULT since r07 (re-measured: 0.69 s arrow vs 2.16 s expr for
-    10k sf0.1 docs at 16 cores — the 60 interpreted aggregate folds per
-    row in the expression form dominate, not the md5).  A per-batch token
-    cache dedupes md5 calls (natural-language tokens repeat heavily);
-    it is cleared between batches so worker memory stays bounded."""
+    r07 measured 0.69 s here vs 2.16 s for the same votes as Spark array
+    expressions (10k sf0.1 docs, 16 cores) — 60 interpreted aggregate
+    folds per row dominate, not the md5.  A per-batch token cache
+    dedupes md5 calls (natural-language tokens repeat heavily); it is
+    cleared between batches so worker memory stays bounded."""
     import hashlib
 
     import pyarrow as pa
@@ -707,14 +569,20 @@ def simhash_arrow(
 
 
 def _winnow_list(text: str, k: int, w: int, max_chars: int, powers) -> list:
-    """Sorted distinct winnowed fingerprints of one text — numpy twin of
-    winnow_fingerprints_col (identical padding/edge semantics)."""
+    """Sorted distinct winnowed fingerprints of one text.
+
+    Rabin-Karp polynomial hash of every character k-gram (codepoint
+    arithmetic, identical integers in DuckDB and Python), then the
+    minimum hash of each w-wide window; consecutive windows usually share
+    their minimum, so the distinct set is ~2/(w+1) of positions — a
+    compact, position-robust fingerprint.  Out-of-range positions (text
+    shorter than k) hash as codepoint 0."""
     np = _np()
     s = (text or "")[:max_chars]
     cps = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
     n = len(cps)
     n_grams = max(1, n - (k - 1))
-    # pad with zeros so short texts match the coalesce(.., 0) expression form
+    # pad with zeros so short texts match the oracle's coalesce(.., 0)
     if n < n_grams + k - 1:
         cps = np.concatenate([cps, np.zeros(n_grams + k - 1 - n, dtype=np.int64)])
     win = np.lib.stride_tricks.sliding_window_view(cps, k)[:n_grams]
@@ -735,8 +603,7 @@ def winnow_arrow(
     w: int = WINNOW_W,
     max_chars: int = WINNOW_MAX_CHARS,
 ) -> DataFrame:
-    """(id, fp) exploded winnowed fingerprints via mapInArrow — vectorized
-    twin of with_fingerprints' expression path."""
+    """(id, fp) exploded winnowed fingerprints via mapInArrow."""
     import pyarrow as pa
 
     np = _np()
@@ -1016,7 +883,6 @@ def contamination_flags(
     text_col: str = "text",
     n: int = DEFAULT_SHINGLE_N,
     min_overlap: int = 2,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, n_overlap): documents sharing >= min_overlap word n-grams with
     ANY benchmark item — eval-set decontamination, the training-data gate
@@ -1029,18 +895,8 @@ def contamination_flags(
     counts distinct overlapping shingles.  No corpus self-join anywhere —
     this is a different join geometry from the dedup pair ops.
     """
-    if impl == "arrow":
-        doc_sh = shingle_hashes_arrow(docs, id_col, text_col, n)
-        bench_sh = shingle_hashes_arrow(benchmark, id_col, text_col, n)
-    else:
-        doc_sh = docs.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes_col(F.coalesce(F.col(text_col), F.lit("")), n).alias("hs"),
-        )
-        bench_sh = benchmark.select(
-            F.col(id_col).alias("id"),
-            shingle_hashes_col(F.coalesce(F.col(text_col), F.lit("")), n).alias("hs"),
-        )
+    doc_sh = shingle_hashes_arrow(docs, id_col, text_col, n)
+    bench_sh = shingle_hashes_arrow(benchmark, id_col, text_col, n)
     bench_grams = (
         bench_sh.select(F.explode("hs").alias("h")).distinct()
     )

@@ -327,9 +327,11 @@ def allocate_crawl_budget(
     # quotient's ulp reaches the 1/total fraction grid and a truncate
     # could disagree with exact floor-div between engines.  try_multiply
     # (r07, ADVICE): at int64-edge rank scales a dominant host's
-    # rank * total_budget would overflow and raise under ANSI — NULL
-    # coalesces to the min_per_host floor instead, consistent with the
-    # try_add/try_multiply hardening in schedule_frontier/recrawl_due
+    # rank * total_budget would overflow and raise under ANSI.  The NULL
+    # saturates UP to total_budget: rank <= sum(rank), so the true share
+    # is at most total_budget, and an overflow only happens for a host
+    # whose rank is huge — flooring it to min_per_host would starve
+    # exactly the host the prior ranks highest
     share = F.expr(
         f"try_multiply(cast({total_budget} as bigint), {rank_col}) div {int(total)}"
     )
@@ -337,7 +339,7 @@ def allocate_crawl_budget(
         "host",
         F.greatest(
             F.lit(min_per_host).cast("long"),
-            F.coalesce(share, F.lit(min_per_host).cast("long")),
+            F.coalesce(share, F.lit(total_budget).cast("long")),
         ).alias("budget"),
     )
 

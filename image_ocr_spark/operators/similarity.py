@@ -1,21 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, both pure DataFrame (no UDF):
-- brute-force cosine top-k: queries x corpus cross product with the dot
-  product as a fold over the zipped arrays.  Correctness baseline; at scale
-  the corpus side is the big relation and the (small) query set broadcasts.
+Two search paths, both scored in vectorized Arrow batches (mapInArrow +
+numpy; Spark's higher-order array functions are interpreted per element
+and measured ~10x slower at sf0.1):
+- brute-force cosine top-k: queries x corpus cross product, scored pair
+  by pair.  Correctness baseline; at scale the corpus side is the big
+  relation and the (small) query set broadcasts.
 - IVF top-k (the scale path): centroids trained with deterministic Lloyd
   iterations (k-means) seeded by a greedy farthest-point sweep (the
   deterministic k-means++ variant) over a deterministic hash sample of the
-  corpus; every vector is assigned to its nearest centroid (broadcast C-row
-  join); search probes the query's `nprobe` nearest cells — the classic
-  inverted-file pruning, expressed as an equi-join on cell id.
+  corpus; every vector is assigned to its nearest centroid in the scan
+  stage (centroids broadcast); search probes the query's `nprobe` nearest
+  cells — the classic inverted-file pruning, expressed as an equi-join on
+  cell id.
 
 Determinism across engines and partitionings:
-- Cosine uses explicit double casts and left-to-right fold order so the
-  DuckDB oracle produces bit-identical doubles (rank outputs are integer,
-  so a 1-ulp divergence cannot flip results unless two sims tie within fp
-  error — fixture embeddings are random floats, min observed gap >> 1e-12).
+- Cosine accumulates in double, dimension-ascending (the left-to-right
+  fold order), so the DuckDB oracle produces bit-identical doubles (rank
+  outputs are integer, so a 1-ulp divergence cannot flip results unless
+  two sims tie within fp error — fixture embeddings are random floats,
+  min observed gap >> 1e-12).
 - Centroid means are accumulated in integer deci-micro units
   (round(x * 1e7) as long): integer sums are order-independent, so the
   trained centroids are bit-identical regardless of shuffle order — the
@@ -77,7 +81,7 @@ def cosine_sim(a: Column, b: Column) -> Column:
 def _pair_sim_arrow(pairs: DataFrame) -> DataFrame:
     """(query_id, neighbor_id, sim) from (query_id, neighbor_id, qv, cv)
     via mapInArrow — fold-order-exact cosine, vectorized across pairs
-    (defined below with the other Arrow twins; forward use only)."""
+    (NULL for zero-norm vectors, like cosine_sim)."""
     import pyarrow as pa
     import numpy as np
 
@@ -115,9 +119,9 @@ def _pair_sim_arrow(pairs: DataFrame) -> DataFrame:
 
 def _rank_topk(sim: DataFrame, k: int) -> DataFrame:
     """Shared (query_id, neighbor_id, rank) tail: NULL sims excluded,
-    deterministic (sim desc, neighbor_id asc) tiebreak, rank <= k.  Both
-    the float and the int8-quantized brute-force paths use THIS function
-    so tiebreak/null policy cannot diverge between them."""
+    deterministic (sim desc, neighbor_id asc) tiebreak, rank <= k.  The
+    float and int8-quantized brute-force and IVF paths all use THIS
+    function so tiebreak/null policy cannot diverge between them."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")
     )
@@ -135,14 +139,12 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """(query_id, neighbor_id, rank) — exact cosine top-k per query.
 
     The query side is broadcast (it is small by construction); the corpus
-    streams.  Deterministic tiebreak on neighbor id.  ``impl='arrow'``
-    (default) scores the broadcast-join output in vectorized batches with
-    fold-order-exact doubles; 'expr' is the JVM-expression twin.
+    streams.  Deterministic tiebreak on neighbor id.  The broadcast-join
+    output is scored in vectorized batches with fold-order-exact doubles.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -150,104 +152,18 @@ def brute_force_topk(
     c = embeddings.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    joined = F.broadcast(q).crossJoin(c)
-    if impl == "arrow":
-        sim = _pair_sim_arrow(joined)
-    else:
-        sim = joined.select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    return _rank_topk(sim, k)
+    return _rank_topk(_pair_sim_arrow(F.broadcast(q).crossJoin(c)), k)
 
 
 Centroids = "list[tuple[int, list[float]]]"  # (centroid_id, vector), id-sorted
 
 
-def _assign_expr(v: Column, cents: list) -> Column:
-    """Nearest-centroid id as a PURE per-row expression over an embedded
-    centroid literal array — the scale-critical shape: assignment runs in
-    the scan stage with ZERO shuffle (the old crossJoin+groupBy(vid) form
-    pushed k copies of the corpus through an exchange per iteration).
-    Centroids are O(k*dim) driver-side values, the classic iterative-ML
-    control plane (collect -> embed -> next pass).  Tiebreak: strict '>'
-    over the id-ascending literal array == smaller centroid id wins."""
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in cv]).alias("centv"),
-            )
-            for cid, cv in cents
-        ]
-    )
-    init = F.struct(
-        F.lit(-2.0).alias("s"), F.lit(-1).cast("long").alias("cid")
-    )  # cosine >= -1 > -2, so the first centroid always replaces init
-
-    def step(acc: Column, c: Column) -> Column:
-        sim = cosine_sim(v, c["centv"])
-        return F.when(
-            sim > acc["s"],
-            F.struct(sim.alias("s"), c["cid"].cast("long").alias("cid")),
-        ).otherwise(acc)
-
-    return F.aggregate(arr, init, step)["cid"]
-
-
-def _assign_cells(vecs: DataFrame, cents: list) -> DataFrame:
-    """(vid, v, cell) — shuffle-free nearest-centroid assignment."""
-    return vecs.withColumn("cell", _assign_expr(F.col("v"), cents))
-
-
-def _assign_topn_expr(v: Column, cents: list, nprobe: int) -> Column:
-    """Array of the `nprobe` nearest centroid ids (sim desc, cid asc) as a
-    pure per-row expression: score the embedded centroid literal, sort the
-    (−sim, cid) structs ascending, slice, project.  O(C log C) per row,
-    still zero-shuffle — the multi-probe analog of _assign_expr."""
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in cv]).alias("centv"),
-            )
-            for cid, cv in cents
-        ]
-    )
-    scored = F.transform(
-        arr,
-        lambda c: F.struct(
-            (-cosine_sim(v, c["centv"])).alias("ns"),
-            c["cid"].cast("long").alias("cid"),
-        ),
-    )
-    # drop NULL-sim entries (zero-norm vector or centroid): a degenerate
-    # vector yields an EMPTY probe list -> excluded from candidates
-    valid = F.filter(scored, lambda t: t["ns"].isNotNull())
-    return F.transform(
-        F.slice(F.array_sort(valid), 1, nprobe), lambda t: t["cid"]
-    )
-
-
-def _assign_cells_multi(vecs: DataFrame, cents: list, nprobe: int) -> DataFrame:
-    """(vid, v, cell) with up to `nprobe` rows per vector — every vector
-    lands in each of its nprobe nearest cells, so a near-dup pair straddling
-    one Voronoi boundary still shares >= 1 cell (VERDICT r02 item 1: the
-    single-cell blocking silently dropped boundary pairs)."""
-    return vecs.withColumn(
-        "cell", F.explode(_assign_topn_expr(F.col("v"), cents, nprobe))
-    )
-
-
 # ---------------------------------------------------------------------------
-# Arrow+numpy twins of the assignment / pair-verify expressions.  The fold
-# cosine is replayed with SEQUENTIAL-IN-DIMENSION accumulation (acc = acc +
-# V[:,j]*c[j], j ascending) — each row's additions happen in exactly the
-# fold's order, so doubles are bitwise identical to the expression form and
-# to the DuckDB oracle; numpy only vectorizes ACROSS rows.  Spark's
-# higher-order array functions are CodegenFallback (interpreted per
-# element) — the expression assignment measured ~10x slower at sf0.1.
+# Arrow+numpy assignment and scoring.  The fold cosine is replayed with
+# SEQUENTIAL-IN-DIMENSION accumulation (acc = acc + V[:,j]*c[j], j
+# ascending) — each row's additions happen in exactly the fold's order, so
+# doubles are bitwise identical to cosine_sim and to the DuckDB oracle;
+# numpy only vectorizes ACROSS rows.
 # ---------------------------------------------------------------------------
 
 
@@ -310,8 +226,11 @@ def _flat_f64(col, n: int):
 def assign_cells_arrow(
     vecs: DataFrame, cents: list, nprobe: int = 1, bc=None
 ) -> DataFrame:
-    """(vid, v, cell) via mapInArrow — vectorized twin of _assign_cells
-    (nprobe=1) / _assign_cells_multi (nprobe>1); still zero-shuffle.
+    """(vid, v, cell) via mapInArrow: each vector's `nprobe` nearest
+    centroids (cosine desc, centroid-id asc tiebreak), one row per probe
+    — a scan-stage map with zero shuffle.  With nprobe >= 2 a near-dup
+    pair straddling one Voronoi boundary still shares >= 1 cell (VERDICT
+    r02 item 1: single-cell blocking silently dropped boundary pairs).
 
     The centroid list travels as a Spark BROADCAST, not in the task
     closure (r05): a closure payload is re-serialized into every task of
@@ -343,9 +262,9 @@ def assign_cells_arrow(
             sims = _cos_matrix(V, cents_v)
             k = min(nprobe, ncents)
             # degenerate rows (zero-norm vector, or every centroid
-            # zero-norm): mirror the expression twins — cell -1 when
-            # nprobe == 1 (_assign_expr's fold init), NO rows when
-            # nprobe > 1 (_assign_topn_expr's filtered-empty probe list)
+            # zero-norm) have no direction: cell -1 when nprobe == 1
+            # (kept, and skipped by _update_centroids), NO rows when
+            # nprobe > 1 (excluded from candidates)
             deg = np.all(np.isneginf(sims), axis=1)
             if not np.isneginf(sims).any():
                 # fast path: stable argsort of -sims = sim desc, ties keep
@@ -388,46 +307,6 @@ def assign_cells_arrow(
     vtype = vecs.schema["v"].dataType.simpleString()
     return vecs.select("vid", "v").mapInArrow(
         fn, f"vid long, v {vtype}, cell long"
-    )
-
-
-def _pair_cos_milli_arrow(pairs: DataFrame) -> DataFrame:
-    """(id_a, id_b, cos_milli) from (id_a, id_b, va, vb) via mapInArrow —
-    fold-order-exact floor(1000*cosine) on candidate pairs."""
-    import pyarrow as pa
-    import numpy as np
-
-    def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ida = batch.column(0)
-            idb = batch.column(1)
-            _, A = _flat_f64(batch.column(2), n)
-            _, B = _flat_f64(batch.column(3), n)
-            d = A.shape[1]
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            dot = np.zeros(n)
-            for j in range(d):
-                x, y = A[:, j], B[:, j]
-                na = na + x * x
-                nb = nb + y * y
-                dot = dot + x * y
-            n2 = na * nb
-            ok = n2 > 0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cm = np.where(
-                    ok, np.floor(1000.0 * (dot / np.sqrt(np.where(ok, n2, 1.0)))), 0
-                ).astype(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [ida, idb, pa.array(cm, pa.int64(), mask=~ok)],
-                ["id_a", "id_b", "cos_milli"],
-            )
-
-    return pairs.select("id_a", "id_b", "va", "vb").mapInArrow(
-        fn, "id_a long, id_b long, cos_milli long"
     )
 
 
@@ -819,7 +698,6 @@ def kmeans_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sample_size: int = DEFAULT_SAMPLE_SIZE,
-    impl: str = "arrow",
     init: str = "auto",
 ) -> list:
     """Driver-side centroid list [(id, [float,...])] after `iters` Lloyd
@@ -831,11 +709,11 @@ def kmeans_train(
     pass (kmeans_batched_init) above it, so the O(S*C) driver sweep never
     runs at the C ~ sqrt(N) default on a large corpus; "greedy"/"batched"
     force a path.  ``num_centroids=None`` derives C ~ sqrt(N) from a
-    corpus count.  Each iteration is one corpus pass: shuffle-free
-    assignment expression, then the integer-exact elementwise mean (k*dim
-    partial-aggregated rows), then an O(k*dim) collect — the only driver
-    traffic, as in any iterative ML loop.  Cells that end an iteration
-    empty are dropped, as in standard Lloyd.  Centroid updates are
+    corpus count.  Each iteration is one corpus pass: shuffle-free Arrow
+    assignment (assign_cells_arrow), then the integer-exact elementwise
+    mean (k*dim partial-aggregated rows), then an O(k*dim) collect — the
+    only driver traffic, as in any iterative ML loop.  Cells that end an
+    iteration empty are dropped, as in standard Lloyd.  Centroid updates are
     integer-exact, so a converged iteration reproduces the previous
     centroid list EXACTLY — the loop short-circuits on equality instead of
     burning the remaining corpus passes (VERDICT r03 item 8).
@@ -857,20 +735,16 @@ def kmeans_train(
         )
     sc = embeddings.sparkSession.sparkContext
     for _ in range(iters):
-        if impl == "arrow":
-            # round-scoped broadcast: destroyed as soon as the centroid
-            # update materializes, so the loop never stacks payloads
-            # (at C = sqrt(N) geometry each is hundreds of MB)
-            bc = sc.broadcast(cents)
-            assigned = assign_cells_arrow(vecs, cents, bc=bc)
-        else:
-            bc = None
-            assigned = _assign_cells(vecs, cents)
+        # round-scoped broadcast: destroyed as soon as the centroid
+        # update materializes, so the loop never stacks payloads
+        # (at C = sqrt(N) geometry each is hundreds of MB)
+        bc = sc.broadcast(cents)
         try:
-            updated = _update_centroids(assigned).collect()
+            updated = _update_centroids(
+                assign_cells_arrow(vecs, cents, bc=bc)
+            ).collect()
         finally:
-            if bc is not None:
-                bc.destroy()
+            bc.destroy()
         new_cents = sorted((r.centroid_id, list(r.centv)) for r in updated)
         if new_cents == cents:
             break  # integer-exact fixed point; further passes are no-ops
@@ -939,51 +813,31 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
     init: str = "auto",
 ) -> DataFrame:
     """(query_id, neighbor_id, rank) searching the query's `nprobe` nearest
     IVF cells (trained centroids, multi-probe — VERDICT r01 item 6).
 
-    Corpus-side cell assignment is shuffle-free (per-row expression or the
-    vectorized Arrow twin); the only corpus exchange is the broadcast-probe
-    join's output."""
+    Corpus-side cell assignment is shuffle-free (assign_cells_arrow); the
+    only corpus exchange is the broadcast-probe join's output."""
     cents = kmeans_train(
-        embeddings, num_centroids, iters, id_col, vec_col, impl=impl, init=init
+        embeddings, num_centroids, iters, id_col, vec_col, init=init
     )
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     )
-    assigned = (
-        assign_cells_arrow(vecs, cents)
-        if impl == "arrow"
-        else _assign_cells(vecs, cents)
-    )
-
+    assigned = assign_cells_arrow(vecs, cents)
     probes = _probe_cells(queries, cents, nprobe, id_col, vec_col)
     matched = F.broadcast(probes).join(assigned, F.col("pcell") == F.col("cell"))
-    if impl == "arrow":
-        sim = _pair_sim_arrow(
-            matched.select(
-                "query_id",
-                F.col("vid").alias("neighbor_id"),
-                "qv",
-                F.col("v").alias("cv"),
-            )
-        )
-    else:
-        sim = matched.select(
+    sim = _pair_sim_arrow(
+        matched.select(
             "query_id",
             F.col("vid").alias("neighbor_id"),
-            cosine_sim(F.col("qv"), F.col("v")).alias("sim"),
+            "qv",
+            F.col("v").alias("cv"),
         )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sim.filter(F.col("sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
     )
+    return _rank_topk(sim, k)
 
 
 def _blocked_cos_pairs(
@@ -1035,14 +889,13 @@ def _dup_pairs_grouped(
     max_cell: Optional[int] = 4096,
 ) -> DataFrame:
     """(id_a, id_b, cos_milli >= threshold) scored PER CELL via
-    applyInPandas — the shuffle-frugal twin of the candidate-join + pair
-    verify: the join path shuffles every candidate pair with BOTH its
-    vectors (pairs * 2 * dim floats — ~6 GB at the sf1.0 battery), while
-    grouping shuffles each vector ONCE (N * dim) and scores the cell's
-    pairs in place with blocked numpy.  Arithmetic is bit-identical to
-    _pair_cos_milli_arrow: per-vector norms and the pair dot both
-    accumulate dimension-ascending, n2 = na*nb in the same order, then
-    floor(1000 * dot/sqrt(n2)).  Blocks bound MEMORY to
+    applyInPandas.  Grouping shuffles each vector ONCE (N * dim) and
+    scores the cell's pairs in place with blocked numpy; a candidate
+    equi-join would shuffle every candidate pair with BOTH its vectors
+    (pairs * 2 * dim floats — ~6 GB at the sf1.0 battery).  Arithmetic
+    replays the oracle's fold cosine: per-vector norms and the pair dot
+    both accumulate dimension-ascending, n2 = na*nb in the same order,
+    then floor(1000 * dot/sqrt(n2)).  Blocks bound MEMORY to
     O(block^2 + block*dim) per task regardless of cell size.
 
     ``max_cell`` (r05, VERDICT r04 item 2) bounds per-task COMPUTE — the
@@ -1160,19 +1013,16 @@ def embedding_dup_pairs(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "grouped",
     max_cell: Optional[int] = 4096,
 ) -> DataFrame:
     """(id_a, id_b, cos_milli): embedding-cosine near-duplicate pairs.
 
-    ``impl`` (all three bit-identical; parity-tested):
-    - "grouped" (PRODUCTION default, r04): per-cell applyInPandas scoring —
-      shuffles each vector once (N*dim) instead of every candidate pair
-      with both vectors (pairs*2*dim); measured 8.1x faster at the sf1.0
-      battery (271.9 s -> 33.4 s) and the right shuffle shape at 100 TB.
-    - "arrow": candidate equi-join + vectorized pair verify (the r03 path).
-    - "expr": JVM-expression twin — the semantic reference the DuckDB
-      oracle replays.
+    Scoring is per cell (_dup_pairs_grouped, r04): it shuffles each vector
+    once (N*dim) instead of every candidate pair with both vectors
+    (pairs*2*dim) — measured 8.1x faster than a candidate equi-join at the
+    sf1.0 battery (271.9 s -> 33.4 s) and the right shuffle shape at
+    100 TB.  The DuckDB oracle (_sql_dedup_embedding) is the semantic
+    reference.
 
     Blocking: every vector is assigned to its `nprobe` nearest IVF cells
     (trained centroids); candidates are pairs sharing any cell.  With
@@ -1190,41 +1040,14 @@ def embedding_dup_pairs(
     blocked apart — raise nprobe for higher recall at linearly more
     candidate volume (the standard IVF trade).
     """
-    cents = kmeans_train(
-        embeddings, num_centroids, iters, id_col, vec_col,
-        impl="arrow" if impl == "grouped" else impl,
-    )
+    cents = kmeans_train(embeddings, num_centroids, iters, id_col, vec_col)
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     )
-    if impl in ("arrow", "grouped"):
-        assigned = assign_cells_arrow(vecs, cents, nprobe)
-    else:
-        assigned = _assign_cells_multi(vecs, cents, nprobe)
-    if impl == "grouped":
-        # per-cell scoring: shuffles each vector once (N*dim) instead of
-        # every candidate pair twice (pairs*2*dim) — see _dup_pairs_grouped
-        return _dup_pairs_grouped(
-            assigned, threshold_milli, max_cell=max_cell
-        ).distinct()
-    a = assigned.select(
-        F.col("vid").alias("id_a"), F.col("v").alias("va"), F.col("cell").alias("ca")
-    )
-    b = assigned.select(
-        F.col("vid").alias("id_b"), F.col("v").alias("vb"), F.col("cell").alias("cb")
-    )
-    cand = a.join(b, (F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b")))
-    if impl == "arrow":
-        verified = _pair_cos_milli_arrow(cand)
-    else:
-        cos_milli = F.floor(
-            F.lit(1000) * cosine_sim(F.col("va"), F.col("vb"))
-        ).cast("long")
-        verified = cand.select("id_a", "id_b", cos_milli.alias("cos_milli"))
-    return (
-        verified.filter(F.col("cos_milli") >= threshold_milli)
-        .distinct()
-    )
+    assigned = assign_cells_arrow(vecs, cents, nprobe)
+    return _dup_pairs_grouped(
+        assigned, threshold_milli, max_cell=max_cell
+    ).distinct()
 
 
 def ivf_recall_at_k(

@@ -1,4 +1,4 @@
-"""Tokenizer operator: pages DataFrame -> nodes DataFrame via mapInArrow.
+"""Tokenizer operator: pages DataFrame -> one packed row per document.
 
 The engine's single JVM->Python boundary (SURVEY.md §2.10 X1 — the graft of
 BaseOCREngine.recognize, `engines/base.py:178-204`).  The format branch
@@ -16,10 +16,12 @@ no engine produced nodes => "none"), the per-row analog of the reference's
 fallback warning.  ``available_engines()`` is the registry probe.
 
 Scale notes:
-- `mapInArrow` (not mapInPandas): output node rows are built as pyarrow
-  arrays straight from Python lists — measured ~3-4x cheaper per node than
-  pandas DataFrame construction, and the node stream is ~16x the page count,
-  so this boundary dominates the job.
+- `mapInArrow` (not mapInPandas): each output row carries its document's
+  node array, assembled columnar from flat Python lists (no per-node dict
+  or pandas round-trip).  A document's nodes never leave their producing
+  task, so the downstream rollup (blocks.extract_text_packed) needs no
+  shuffle: the whole extraction is per-row expressions after the single
+  salted repartition.
 - Arrow batch size is bounded by spark.sql.execution.arrow.maxRecordsPerBatch
   (session.py) so a batch of fat pages stays in worker memory.
 - Compiled regex state lives at module import (once per Python worker) —
@@ -33,35 +35,31 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from ..pycore.htmltok import scan_html_cols, tokenize_html
+from ..pycore.htmltok import scan_html_cols
 from ..pycore.pdftok import is_pdf, tokenize_pdf
-from ..schemas import NODE_SCHEMA
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("doc_id", pa.int64()),
-        pa.field("engine", pa.string()),
-        pa.field("node_id", pa.int32()),
-        pa.field("tag_class", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("n_chars", pa.int32()),
-        pa.field("n_link_chars", pa.int32()),
-        pa.field("n_words", pa.int32()),
-    ]
-)
 
-_SENTINEL = {
-    "node_id": -1,
-    "tag_class": "empty",
-    "text": "",
-    "n_chars": 0,
-    "n_link_chars": 0,
-    "n_words": 0,
-}
+def _pdf_cols(raw: bytes):
+    """tokenize_pdf node dicts -> the flat-column tuple scan_html_cols
+    produces (PDF is ~10% of a crawl mix, so the dict hop is cheap here)."""
+    nodes = tokenize_pdf(raw)
+    return (
+        [n["tag_class"] for n in nodes],
+        [n["text"] for n in nodes],
+        [n["n_chars"] for n in nodes],
+        [n["n_link_chars"] for n in nodes],
+        [n["n_words"] for n in nodes],
+    )
 
-# ordered engine registry (the X2 strategy table); order = fallback order
-ENGINES = {"html": tokenize_html, "pdf": tokenize_pdf}
+
+# ordered engine registry (the X2 strategy table); order = fallback order.
+# Each engine maps page bytes to (tag, text, n_chars, n_link, n_words)
+# columns, one entry per node.
+ENGINES = {"html": scan_html_cols, "pdf": _pdf_cols}
+
+# sentinel node in column form: empty/broken pages still yield one node
+# (node_id -1) so every document keeps its result row downstream
+_SENT_COLS = ([-1], ["empty"], [""], [0], [0], [0])
 
 
 def detect_engine(raw: bytes) -> str:
@@ -85,77 +83,27 @@ def available_engines() -> list:
     return out
 
 
-def _run_engine(raw, engine: str):
-    """(used_engine, nodes) for one page under the given strategy.
+def _run_engine_cols(raw, engine: str):
+    """(used_engine, nid, tag, text, n_chars, n_link, n_words) for one page
+    under the given strategy; nid is range(n) except the sentinel's [-1].
 
     auto: magic-byte pick, never-raise (ref pipeline.py:251-271).
     named: forced engine, then per-row fallback through the registry; if
     no engine yields nodes the row reports 'none' with the sentinel."""
     if engine == "auto":
         if raw is None:
-            return "html", [_SENTINEL]
-        try:
-            eng = detect_engine(raw)
-            nodes = ENGINES[eng](raw)
-        except Exception:
-            return "error", [_SENTINEL]
-        return eng, (nodes or [_SENTINEL])
-    if raw is not None:
-        for eng in [engine] + [e for e in ENGINES if e != engine]:
-            fn = ENGINES.get(eng)
-            if fn is None:
-                continue
-            try:
-                nodes = fn(raw)
-            except Exception:
-                continue
-            if nodes:
-                return eng, nodes
-    return "none", [_SENTINEL]
-
-
-def _pdf_cols(nodes):
-    """tokenize_pdf node dicts -> the flat-column tuple scan_html_cols
-    produces (PDF is ~10% of a crawl mix, so the dict hop is cheap here)."""
-    return (
-        [n["tag_class"] for n in nodes],
-        [n["text"] for n in nodes],
-        [n["n_chars"] for n in nodes],
-        [n["n_link_chars"] for n in nodes],
-        [n["n_words"] for n in nodes],
-    )
-
-
-# sentinel in column form: node_id [-1], matching _SENTINEL exactly
-_SENT_COLS = ([-1], ["empty"], [""], [0], [0], [0])
-
-# cols-producing engine registry, same keys/order as ENGINES
-_ENGINES_COLS = {
-    "html": scan_html_cols,
-    "pdf": lambda raw: _pdf_cols(tokenize_pdf(raw)),
-}
-
-
-def _run_engine_cols(raw, engine: str):
-    """(used_engine, nid, tag, text, n_chars, n_link, n_words) for one page
-    — the flat-column twin of _run_engine (identical strategy/fallback
-    semantics, parity-pinned by tests), feeding the Arrow builders without
-    a per-node dict round-trip.  nid is range(n) except the sentinel's
-    [-1]."""
-    if engine == "auto":
-        if raw is None:
             return ("html",) + _SENT_COLS
         try:
             eng = "pdf" if is_pdf(raw) else "html"
-            cols = _ENGINES_COLS[eng](raw)
+            cols = ENGINES[eng](raw)
         except Exception:
             return ("error",) + _SENT_COLS
         if not cols[0]:
             return (eng,) + _SENT_COLS
         return (eng, range(len(cols[0]))) + cols
     if raw is not None:
-        for eng in [engine] + [e for e in _ENGINES_COLS if e != engine]:
-            fn = _ENGINES_COLS.get(eng)
+        for eng in [engine] + [e for e in ENGINES if e != engine]:
+            fn = ENGINES.get(eng)
             if fn is None:
                 continue
             try:
@@ -166,78 +114,6 @@ def _run_engine_cols(raw, engine: str):
                 return (eng, range(len(cols[0]))) + cols
     return ("none",) + _SENT_COLS
 
-
-def _tokenize_arrow(
-    batches: Iterator[pa.RecordBatch], engine: str = "auto"
-) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        names = batch.schema.names
-        urls = batch.column(names.index("url")).to_pylist()
-        htmls = batch.column(names.index("html")).to_pylist()
-        if "doc_id" in names:
-            doc_ids = batch.column(names.index("doc_id")).to_pylist()
-        else:
-            doc_ids = [None] * len(urls)
-
-        c_url: list = []
-        c_doc: list = []
-        c_eng: list = []
-        c_nid: list = []
-        c_tag: list = []
-        c_txt: list = []
-        c_nch: list = []
-        c_nlk: list = []
-        c_nwd: list = []
-        for url, doc_id, raw in zip(urls, doc_ids, htmls):
-            # sentinel: empty/broken pages still yield a result row
-            # downstream without a reconciliation join
-            used, nid, tag, txt, nch, nlk, nwd = _run_engine_cols(raw, engine)
-            n = len(tag)
-            c_url.extend([url] * n)
-            c_doc.extend([doc_id] * n)
-            c_eng.extend([used] * n)
-            c_nid.extend(nid)
-            c_tag.extend(tag)
-            c_txt.extend(txt)
-            c_nch.extend(nch)
-            c_nlk.extend(nlk)
-            c_nwd.extend(nwd)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(c_url, pa.string()),
-                pa.array(c_doc, pa.int64()),
-                pa.array(c_eng, pa.string()),
-                pa.array(c_nid, pa.int32()),
-                pa.array(c_tag, pa.string()),
-                pa.array(c_txt, pa.string()),
-                pa.array(c_nch, pa.int32()),
-                pa.array(c_nlk, pa.int32()),
-                pa.array(c_nwd, pa.int32()),
-            ],
-            schema=_ARROW_SCHEMA,
-        )
-
-
-def tokenize(pages: DataFrame, engine: str = "auto") -> DataFrame:
-    """pages(url, html[, doc_id], ...) -> nodes (NODE_SCHEMA), row per node.
-
-    Column-prunes the input to exactly what the tokenizer needs BEFORE the
-    Arrow boundary so no unused columns cross into Python.  ``engine``
-    selects the strategy (see module docstring).
-    """
-    cols = ["url", "html"] + (["doc_id"] if "doc_id" in pages.columns else [])
-    return pages.select(*cols).mapInArrow(
-        lambda batches: _tokenize_arrow(batches, engine), NODE_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# packed variant: one row per DOCUMENT with the node array inline.
-# A document's nodes never leave their producing task, so the downstream
-# rollup needs NO shuffle at all — the whole extraction becomes per-row
-# expressions after the single salted repartition.  The flat node view is
-# recoverable via explode for node-level operators.
-# ---------------------------------------------------------------------------
 
 _NODE_STRUCT = pa.struct(
     [
@@ -333,103 +209,4 @@ def tokenize_packed(pages: DataFrame, engine: str = "auto") -> DataFrame:
     cols = ["url", "html"] + (["doc_id"] if "doc_id" in pages.columns else [])
     return pages.select(*cols).mapInArrow(
         lambda batches: _tokenize_packed(batches, engine), PACKED_DDL
-    )
-
-
-# ---------------------------------------------------------------------------
-# fused variant: tokenize + content selection + classify in ONE Python pass,
-# emitting only the final per-document row (no node structs cross Arrow).
-# The rollup logic is pycore.blocks/classify — the SAME code the byte-
-# identity oracle runs, and tests/test_blocks_parity.py proves it equals
-# the SQL rollup bit-for-bit (every column, every page kind).
-#
-# MEASURED OUTCOME (r3): fused is ~20-30% SLOWER than packed+SQL rollup at
-# 16 cores despite skipping the node-array Arrow transfer.  Reason: the
-# SQL rollup executes in the SAME pipelined stage as the tokenizer — JVM
-# threads consume node batches while the Python workers produce the next
-# ones, so its ~2.5s of expression work hides behind the Python boundary;
-# fusing moves that work onto the Python critical path (all 16 cores are
-# already tokenize-bound).  Kept because the trade flips when the cluster
-# is transfer-bound rather than CPU-bound (remote shuffle, fatter nodes,
-# narrower rows), and as the one-boundary reference implementation.
-# ---------------------------------------------------------------------------
-
-FUSED_DDL = (
-    "url string, doc_id long, engine string, text string, title string, "
-    "n_nodes int, n_content_nodes int, "
-    "receipt_score_centi long, invoice_score_centi long, doc_type string"
-)
-
-
-def _extract_fused(
-    batches: Iterator[pa.RecordBatch], engine: str = "auto"
-) -> Iterator[pa.RecordBatch]:
-    from ..pycore.blocks import extract_main_text, select_content
-    from ..pycore.classify import classify_doc
-    from ..pycore.htmltok import page_title
-
-    for batch in batches:
-        names = batch.schema.names
-        urls = batch.column(names.index("url")).to_pylist()
-        htmls = batch.column(names.index("html")).to_pylist()
-        if "doc_id" in names:
-            doc_ids = batch.column(names.index("doc_id")).to_pylist()
-        else:
-            doc_ids = [None] * len(urls)
-        c_eng: list = []
-        c_txt: list = []
-        c_ttl: list = []
-        c_nn: list = []
-        c_ncn: list = []
-        c_rs: list = []
-        c_is: list = []
-        c_dt: list = []
-        for raw in htmls:
-            used, nodes = _run_engine(raw, engine)
-            real = [n for n in nodes if n["node_id"] >= 0]
-            text = extract_main_text(real)
-            cls = classify_doc(text)
-            c_eng.append(used)
-            c_txt.append(text)
-            c_ttl.append(page_title(real))
-            c_nn.append(len(real))
-            c_ncn.append(len(select_content(real)))
-            c_rs.append(cls["receipt_score_centi"])
-            c_is.append(cls["invoice_score_centi"])
-            c_dt.append(cls["doc_type"])
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(urls, pa.string()),
-                pa.array(doc_ids, pa.int64()),
-                pa.array(c_eng, pa.string()),
-                pa.array(c_txt, pa.string()),
-                pa.array(c_ttl, pa.string()),
-                pa.array(c_nn, pa.int32()),
-                pa.array(c_ncn, pa.int32()),
-                pa.array(c_rs, pa.int64()),
-                pa.array(c_is, pa.int64()),
-                pa.array(c_dt, pa.string()),
-            ],
-            schema=pa.schema(
-                [
-                    pa.field("url", pa.string()),
-                    pa.field("doc_id", pa.int64()),
-                    pa.field("engine", pa.string()),
-                    pa.field("text", pa.string()),
-                    pa.field("title", pa.string()),
-                    pa.field("n_nodes", pa.int32()),
-                    pa.field("n_content_nodes", pa.int32()),
-                    pa.field("receipt_score_centi", pa.int64()),
-                    pa.field("invoice_score_centi", pa.int64()),
-                    pa.field("doc_type", pa.string()),
-                ]
-            ),
-        )
-
-
-def extract_fused(pages: DataFrame, engine: str = "auto") -> DataFrame:
-    """pages -> final extraction rows in one mapInArrow pass (FUSED_DDL)."""
-    cols = ["url", "html"] + (["doc_id"] if "doc_id" in pages.columns else [])
-    return pages.select(*cols).mapInArrow(
-        lambda batches: _extract_fused(batches, engine), FUSED_DDL
     )

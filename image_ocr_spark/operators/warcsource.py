@@ -217,73 +217,3 @@ def pages_to_warc(
         .alias("content_type"),
     )
     return rows.mapInArrow(_write_batches(max_chunk_bytes), PAGES_TO_WARC_SCHEMA)
-
-
-def _warc_extract_batches(engine: str):
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from image_ocr_spark.pycore.warc import parse_warc
-
-        from .tokenize import _extract_fused
-
-        def record_batches() -> Iterator[pa.RecordBatch]:
-            schema = pa.schema(
-                [pa.field("url", pa.string()), pa.field("html", pa.binary())]
-            )
-            for b in batches:
-                urls: list = []
-                htmls: list = []
-                for chunk in b.column(0).to_pylist():
-                    for rec in parse_warc(chunk or b"")["records"]:
-                        urls.append(rec["url"])
-                        htmls.append(rec["payload"])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(urls, pa.string()), pa.array(htmls, pa.binary())],
-                    schema=schema,
-                )
-
-        yield from _extract_fused(record_batches(), engine)
-
-    return gen
-
-
-def warc_extract(
-    chunks: DataFrame, chunk_col: str = "chunk", engine: str = "auto"
-) -> DataFrame:
-    """WARC segment rows -> final extraction rows in ONE Python pass.
-
-    The composed path (`read_warc` -> `extract_pages`) ships every
-    payload byte across the Arrow boundary twice (records back to the
-    JVM, html back into the tokenizer's Python stage); this fusion
-    parses the segment and runs the same pycore tokenize+rollup+classify
-    (`tokenize._extract_fused` — the parity-tested fused rollup) without
-    the payload ever leaving the Python worker.  Output is byte-identical
-    to `extract_pages(..., rollup='fused')` over the same pages (tested);
-    `doc_id` is null — WARC records carry no fixture id.
-
-    Skew note: granularity is the segment, so parallelism comes from
-    segment count (~10^5 one-GB segments at 100 TB >> cores) rather than
-    the record-level salt; a segment is the crawler's own write unit, so
-    per-segment work is naturally bounded by segment size.
-
-    Measured crossover (bench.py --warc-fused, interleaved best-of-3 on
-    one pinned worker): at sf0.001 the fusion wins 1.43x (per-batch JVM
-    round-trips dominate); at sf0.1 it is 0.93x @16 cpus and 0.95x @4
-    cpus — the composed path's two chained mapInArrow stages run as
-    SEPARATE Python workers per task, so gunzip+parse overlaps tokenize
-    in a per-task pipeline that hides the extra copies once tasks are
-    long, and the 4-cpu arm shows that holds even 2x-oversubscribed
-    (8 worker processes on 4 pinned cores).  So composed is the
-    wall-clock default at scale; what the fusion still buys is (a) peak
-    memory — payload bytes exist in ONE Python heap instead of two
-    workers plus the JVM Arrow buffers, and (b) half the resident Python
-    workers per core — margins for memory-constrained executors, not
-    speed.  Use the composed path when records must be materialized
-    (e.g. checkpointed ingest) or for throughput at scale; use this one
-    for latency on small batches or when worker memory is the binding
-    constraint.
-    """
-    from .tokenize import FUSED_DDL
-
-    return chunks.select(F.col(chunk_col).alias("chunk")).mapInArrow(
-        _warc_extract_batches(engine), FUSED_DDL
-    )

@@ -1,16 +1,19 @@
 """The flagship extraction pipeline (SURVEY.md §3.4 lifecycle).
 
-    pages --salted repartition--> tokenize (mapInPandas, one Arrow boundary)
-          --> content selection + rollup (window + single hash agg)
+    pages --salted repartition--> tokenize_packed (mapInArrow, one Arrow
+          boundary, one row per document with its node array inline)
+          --> content selection + main-text rollup (extract_text_packed:
+              per-row array expressions, no shuffle)
           --> classify (native SQL keyword scoring)
-          --> per-url result row (left join back so empty pages survive)
 
 Scale design:
 - `salt_repartition` spreads a hot host's pages across partitions by
   xxhash64(url) BEFORE the Python stage (north rule: host-skew defusal).
-- Downstream grouping keys by url — the same key — so AQE/Catalyst keep the
-  exchange count at one for the rollup.
-- The fat `html` column is pruned immediately after tokenize; nothing
+  It is the plan's only exchange: a document's nodes never leave the task
+  that tokenized them, so the rollup and classify run in the same stage.
+- Every page keeps its row: pages yielding zero nodes carry a sentinel
+  node through tokenize and come back with text=''.
+- The fat `html` column is pruned at the tokenizer input; nothing
   downstream reads raw bytes.
 """
 
@@ -40,7 +43,6 @@ def extract_pages(
     num_partitions: int | None = None,
     engine: str = "auto",
     salt: bool = True,
-    rollup: str = "sql",
 ) -> DataFrame:
     """pages(url, html[, doc_id]) -> one extraction row per url.
 
@@ -57,13 +59,6 @@ def extract_pages(
     """
     if salt:
         pages = salt_repartition(pages, num_partitions)
-    if rollup == "fused":
-        # tokenize + content selection + classify in ONE Python pass
-        # (pycore rollup, byte-identical to the SQL form by parity tests);
-        # the node stream never crosses the Arrow boundary
-        from ..operators.tokenize import extract_fused
-
-        return extract_fused(pages, engine=engine)
     packed = tokenize_packed(pages, engine=engine)  # one row per doc
     per_url = extract_text_packed(packed)  # per-row exprs, NO shuffle
     return classify_df(per_url, "text")

@@ -1,8 +1,8 @@
 """Public schemas of the engine (the Spark IR, mirroring SURVEY.md §1).
 
-NODE_SCHEMA mirrors the reference's OCRWord/OCRBlock rows
-(`engines/base.py:63-92`): one row per block-level text run, with the
-integer stats the content classifier consumes.
+The tokenizer's node struct (the reference's OCRWord/OCRBlock rows,
+`engines/base.py:63-92`) lives with its producer: ``PACKED_DDL`` in
+operators/tokenize.py.
 """
 
 from pyspark.sql import types as T
@@ -26,20 +26,6 @@ GEN_PAGE_SCHEMA = T.StructType(
         T.StructField("html", T.BinaryType(), False),
         T.StructField("lang", T.StringType(), True),
         T.StructField("kind", T.StringType(), False),
-    ]
-)
-
-NODE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), True),
-        T.StructField("engine", T.StringType(), False),  # html | pdf
-        T.StructField("node_id", T.IntegerType(), False),
-        T.StructField("tag_class", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("n_chars", T.IntegerType(), False),
-        T.StructField("n_link_chars", T.IntegerType(), False),
-        T.StructField("n_words", T.IntegerType(), False),
     ]
 )
 

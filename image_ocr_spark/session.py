@@ -13,14 +13,36 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+
+def _host_heap() -> str:
+    """Default driver heap: about half of the host's MemTotal, in whole GiB
+    (at least 1g); ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{max(1, kib // 2 // (1 << 20))}g"
+
+
+def _host_cpus() -> int:
+    """Default shuffle partitions: the cpus this process may run on;
+    ``SPARK_GRAFT_CPUS`` overrides it."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
 ENGINE_CONFS = {
-    # single-JVM local mode: driver heap IS executor heap; host has 128 GiB.
-    # -Xms pinned to -Xmx: a growing heap caused multi-pass GC thrash that
-    # showed up as 10-20x stage-CPU swings in bench runs.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-    "spark.driver.extraJavaOptions": (
-        "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g") + " -XX:+UseG1GC"
-    ),
     "spark.driver.maxResultSize": "4g",
     # AQE: runtime shuffle coalescing + skew-join splitting (north rule)
     "spark.sql.adaptive.enabled": "true",
@@ -52,11 +74,17 @@ def get_spark(
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus else 32
+        shuffle_partitions = _host_cpus()
+    heap = _host_heap()
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
+    # single-JVM local mode: driver heap IS executor heap, sized from the
+    # host.  -Xms pinned to -Xmx: a growing heap caused multi-pass GC
+    # thrash that showed up as 10-20x stage-CPU swings in bench runs.
+    builder = builder.config("spark.driver.memory", heap).config(
+        "spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+UseG1GC"
+    )
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

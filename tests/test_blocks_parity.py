@@ -1,74 +1,51 @@
-"""The two relational formulations of content selection (single-agg with
-higher-order exprs vs window lag/lead) must produce identical results —
-and both must equal the pure-Python rule."""
+"""The production rollup (tokenize_packed -> extract_text_packed ->
+classify_df, run by extract_pages) must equal the single-process pycore
+oracle per url on every column the two share — across all page kinds and
+on documents whose text carries control bytes."""
 
-from pyspark.sql import functions as F
-
-from image_ocr_spark.operators.blocks import extract_text, extract_text_window
-from image_ocr_spark.operators.generate import generate_pages
-from image_ocr_spark.operators.tokenize import tokenize
-from image_ocr_spark.plans.pipeline import salt_repartition
+from image_ocr_spark.pycore.extractor import extract_page
 
 
-def test_agg_and_window_formulations_agree(spark, documents):
-    nodes = tokenize(salt_repartition(generate_pages(documents), 8))
-    a = {
-        r.url: (r.text, r.title, r.n_nodes, r.n_content_nodes)
-        for r in extract_text(nodes).collect()
-    }
-    b = {
-        r.url: (r.text, r.title, r.n_nodes, r.n_content_nodes)
-        for r in extract_text_window(nodes).collect()
-    }
-    assert a == b
+def _assert_matches_pycore(rows, html_by_url):
+    """Every column extract_pages shares with pycore.extractor.extract_page
+    (text bytes, title, engine, node counts, doc_type, both scores) agrees
+    for every url."""
+    assert sorted(r.url for r in rows) == sorted(html_by_url)
+    for r in rows:
+        want = extract_page(html_by_url[r.url])
+        got = r.asDict()
+        shared = sorted(set(got) & set(want))
+        assert shared == [
+            "doc_type",
+            "engine",
+            "invoice_score_centi",
+            "n_content_nodes",
+            "n_nodes",
+            "receipt_score_centi",
+            "text",
+            "title",
+        ]
+        assert got["text"].encode("utf-8") == want["text"].encode("utf-8"), r.url
+        assert {c: got[c] for c in shared} == {c: want[c] for c in shared}, r.url
 
 
-def test_seed_rule_matches_pycore(spark, documents, doc_rows):
+def test_rollup_matches_pycore_every_column(extracted, doc_rows):
+    """All fixture page kinds (articles, pdf, receipts, edge cases)."""
     from image_ocr_spark.fixtures.gen_pages import build_page
-    from image_ocr_spark.operators.blocks import with_content_flag
-    from image_ocr_spark.pycore.blocks import select_content
-    from image_ocr_spark.pycore.extractor import extract_page
-    from image_ocr_spark.pycore.htmltok import tokenize_html
-    from image_ocr_spark.pycore.pdftok import is_pdf, tokenize_pdf
 
-    nodes = tokenize(generate_pages(documents))
-    flagged = with_content_flag(nodes).filter(F.col("is_content"))
-    got = {}
-    for r in flagged.select("doc_id", "node_id").collect():
-        got.setdefault(r.doc_id, set()).add(r.node_id)
-    for doc_id, text, lang in doc_rows:
-        raw = build_page(doc_id, text, lang)["html"]
-        ns = tokenize_pdf(raw) if is_pdf(raw) else tokenize_html(raw)
-        exp = set(select_content(ns))
-        assert got.get(doc_id, set()) == exp, doc_id
-
-
-def test_fused_rollup_matches_sql_rollup(spark, documents):
-    """extract_pages(rollup='fused') (pycore rollup inside the tokenize
-    pass) must equal the SQL rollup row-for-row on every column, across
-    all page kinds (articles, pdf, receipts, edge cases)."""
-    from image_ocr_spark.operators.generate import generate_pages
-    from image_ocr_spark.plans.pipeline import extract_pages
-
-    pages = generate_pages(documents)
-    cols = None
-
-    def snap(df):
-        nonlocal cols
-        cols = sorted(df.columns)
-        return {r["url"]: tuple(r[c] for c in cols) for r in df.collect()}
-
-    sql_rows = snap(extract_pages(pages, rollup="sql"))
-    fused_rows = snap(extract_pages(pages, rollup="fused"))
-    assert fused_rows == sql_rows and len(fused_rows) > 0
+    pages = [build_page(doc_id, text, lang) for doc_id, text, lang in doc_rows]
+    _assert_matches_pycore(
+        extracted.collect(), {p["url"]: p["html"] for p in pages}
+    )
 
 
 def test_clean_text_guard_on_control_chars(spark):
     """r07 `_clean_collapsed` guard: documents whose node text carries a
     non-whitespace control byte must route through the FULL clean_text
-    chain (the rlike branch), staying byte-identical to the pycore rollup
-    (fused path); clean documents take the no-op branch with the same
-    output either way."""
+    chain (the rlike branch), staying byte-identical to the pycore rollup;
+    clean documents take the no-op branch with the same output either
+    way.  An empty page and a fake PDF ride along: both yield no nodes
+    and must still come back as a row with text=''."""
     from image_ocr_spark.plans.pipeline import extract_pages
 
     htmls = [
@@ -77,23 +54,17 @@ def test_clean_text_guard_on_control_chars(spark):
         "<p>\x07 bell and \x7f del chars in a long seed sentence here</p>".encode(),
         "<p>edge\x1f</p><p>another long seed sentence with many words here</p>".encode(),
         "<p>\x00 leading control then a long seed sentence with words</p>".encode(),
+        b"",
+        b"%PDF-1.4 then nothing sensible",
     ]
     pages = spark.createDataFrame(
         [(f"u{i}", i, h) for i, h in enumerate(htmls)],
         "url string, doc_id long, html binary",
     )
-    cols = None
-
-    def snap(df):
-        nonlocal cols
-        cols = sorted(df.columns)
-        return {r["url"]: tuple(r[c] for c in cols) for r in df.collect()}
-
-    sql_rows = snap(extract_pages(pages, salt=False, rollup="sql"))
-    fused_rows = snap(extract_pages(pages, salt=False, rollup="fused"))
-    assert sql_rows == fused_rows and len(sql_rows) == len(htmls)
+    rows = extract_pages(pages, salt=False).collect()
+    _assert_matches_pycore(rows, {f"u{i}": h for i, h in enumerate(htmls)})
     # the chain actually fired: control bytes are gone from every text
-    ti = cols.index("text")
-    texts = [v[ti] for v in sql_rows.values()]
+    texts = [r.text for r in rows]
     assert all("\x00" not in t and "\x1f" not in t and "\x7f" not in t for t in texts)
     assert any("ctrl" in t for t in texts)
+    assert sum(t == "" for t in texts) == 2

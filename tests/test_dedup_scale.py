@@ -10,8 +10,8 @@ from image_ocr_spark.operators.dedup import (
     SIMHASH_BITS,
     SIMHASH_CHUNKS,
     ngram_jaccard_pairs,
+    simhash_arrow,
     simhash_hamming_pairs,
-    with_simhash,
 )
 
 
@@ -28,7 +28,7 @@ def test_simhash_width_and_chunk_keyspace(spark):
          for i in range(64)],
         "doc_id long, text string",
     )
-    fp = with_simhash(docs).select("fp").collect()
+    fp = simhash_arrow(docs).select("fp").collect()
     fps = [r.fp for r in fp]
     assert all(0 <= v < (1 << SIMHASH_BITS) for v in fps)
     # the widened bits are actually populated (some fp exceeds 32-bit range)
@@ -107,54 +107,62 @@ ADVERSARIAL_TEXTS = [
 ]
 
 
-def _adv_df(spark):
-    rows = [(i, t) for i, t in enumerate(ADVERSARIAL_TEXTS)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+def _signature_cases(spark, documents):
+    """(Spark df, DuckDB connection with a `src(doc_id, text)` view over the
+    SAME rows) for the fixture documents, then for ADVERSARIAL_TEXTS.  The
+    DuckDB side runs the driver oracle's signature SQL, the independent
+    reference the Arrow signature batches must reproduce bit for bit."""
+    import duckdb
+    import pyarrow as pa
+
+    docs = [(r.doc_id, r.text) for r in documents.select("doc_id", "text").collect()]
+    for rows in (docs, list(enumerate(ADVERSARIAL_TEXTS))):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        con = duckdb.connect()
+        con.register(
+            "t",
+            pa.table(
+                {
+                    "doc_id": pa.array([d for d, _ in rows], pa.int64()),
+                    "text": pa.array([t for _, t in rows], pa.string()),
+                }
+            ),
+        )
+        con.execute("CREATE VIEW src AS SELECT doc_id, coalesce(text, '') AS text FROM t")
+        try:
+            yield df, con
+        finally:
+            con.close()
 
 
-def test_minhash_arrow_matches_expr(spark, documents):
-    """The production Arrow+numpy minhash path must be BIT-identical to the
-    JVM-expression twin (which the DuckDB oracle replays) — on the real
-    corpus and on adversarial whitespace/short/unicode strings."""
-    from pyspark.sql import functions as F
+def test_minhash_arrow_matches_duckdb(spark, documents):
+    """The Arrow+numpy minhash batch must be BIT-identical to the DuckDB
+    oracle's minhash SQL — on the real corpus and on adversarial
+    whitespace/short/unicode strings."""
+    import __spark_entry__ as e
+    from image_ocr_spark.operators.dedup import DEFAULT_NUM_PERM, minhash_arrow
 
-    from image_ocr_spark.operators.dedup import minhash_arrow, minhash_col
-
-    for df in (documents.select("doc_id", "text"), _adv_df(spark)):
-        expr = {
-            r.doc_id: list(r.sig)
-            for r in df.select(
-                "doc_id",
-                minhash_col(F.coalesce(F.col("text"), F.lit(""))).alias("sig"),
-            ).collect()
-        }
-        arrow = {
-            r.id: list(r.sig) for r in minhash_arrow(df, "doc_id", "text").collect()
-        }
-        assert arrow == expr
+    cols = ", ".join(f"s{i}" for i in range(DEFAULT_NUM_PERM))
+    sql = f"WITH {e._sql_shingles('src')}, {e._sql_minhash_cte()} SELECT doc_id, {cols} FROM mh"
+    for df, con in _signature_cases(spark, documents):
+        want = {r[0]: list(r[1:]) for r in con.execute(sql).fetchall()}
+        got = {r.id: list(r.sig) for r in minhash_arrow(df).collect()}
+        assert got == want and len(got) == df.count()
 
 
-def test_shingle_hashes_arrow_matches_expr(spark, documents):
-    from pyspark.sql import functions as F
+def test_shingle_hashes_arrow_matches_duckdb(spark, documents):
+    """Distinct shingle hash SETS match the oracle's `sh` CTE (DuckDB's
+    list_distinct does not keep first-occurrence order, so compare
+    sorted)."""
+    import __spark_entry__ as e
+    from image_ocr_spark.operators.dedup import shingle_hashes_arrow
 
-    from image_ocr_spark.operators.dedup import (
-        shingle_hashes_arrow,
-        shingle_hashes_col,
-    )
-
-    for df in (documents.select("doc_id", "text"), _adv_df(spark)):
-        expr = {
-            r.doc_id: list(r.hs)
-            for r in df.select(
-                "doc_id",
-                shingle_hashes_col(F.coalesce(F.col("text"), F.lit(""))).alias("hs"),
-            ).collect()
-        }
-        arrow = {
-            r.id: list(r.hs)
-            for r in shingle_hashes_arrow(df, "doc_id", "text").collect()
-        }
-        assert arrow == expr
+    sql = f"WITH {e._sql_shingles('src')} SELECT doc_id, hs FROM sh"
+    for df, con in _signature_cases(spark, documents):
+        want = {d: sorted(hs) for d, hs in con.execute(sql).fetchall()}
+        got = {r.id: list(r.hs) for r in shingle_hashes_arrow(df).collect()}
+        assert all(len(set(hs)) == len(hs) for hs in got.values())
+        assert {d: sorted(hs) for d, hs in got.items()} == want
 
 
 def test_dedup_components_chain_and_singletons(spark):
@@ -216,35 +224,35 @@ def test_dedup_components_frees_all_intermediate_storage(spark):
     }
 
 
-def test_simhash_arrow_matches_expr(spark, documents):
-    from pyspark.sql import functions as F
+def test_simhash_arrow_matches_duckdb(spark, documents):
+    """60-bit SimHash from the Arrow batch == the oracle's token-hash vote
+    SQL (_SQL_TH + _SQL_SIMHASH_EXPR)."""
+    import __spark_entry__ as e
 
-    from image_ocr_spark.operators.dedup import simhash_arrow, with_simhash
+    sql = (
+        f"SELECT doc_id, ({e._SQL_SIMHASH_EXPR})::BIGINT "
+        f"FROM (SELECT doc_id, {e._SQL_TH} AS th FROM src)"
+    )
+    for df, con in _signature_cases(spark, documents):
+        want = dict(con.execute(sql).fetchall())
+        got = {r.id: r.fp for r in simhash_arrow(df).collect()}
+        assert got == want and len(got) == df.count()
 
-    for df in (documents.select("doc_id", "text"), _adv_df(spark)):
-        expr = {
-            r.doc_id: r.fp
-            for r in with_simhash(df.select("doc_id", "text")).collect()
-        }
-        arrow = {r.id: r.fp for r in simhash_arrow(df, "doc_id", "text").collect()}
-        assert arrow == expr
 
-
-def test_winnow_arrow_matches_expr(spark, documents):
-    from pyspark.sql import functions as F
-
+def test_winnow_arrow_matches_duckdb(spark, documents):
+    """Winnowed Rabin-Karp fingerprints (with_fingerprints) == the oracle's
+    _sql_winnow_fps_cte, fingerprint for fingerprint."""
+    import __spark_entry__ as e
     from image_ocr_spark.operators.dedup import with_fingerprints
 
-    for df in (documents.select("doc_id", "text"), _adv_df(spark)):
-        expr = sorted(
-            (r.doc_id, r.fp)
-            for r in with_fingerprints(df, impl="expr").collect()
-        )
-        arrow = sorted(
-            (r.doc_id, r.fp)
-            for r in with_fingerprints(df, impl="arrow").collect()
-        )
-        assert arrow == expr
+    sql = (
+        f"WITH {e._sql_winnow_fps_cte('src')} "
+        "SELECT doc_id, unnest(fps) AS fp FROM f"
+    )
+    for df, con in _signature_cases(spark, documents):
+        want = sorted(con.execute(sql).fetchall())
+        got = sorted((r.doc_id, r.fp) for r in with_fingerprints(df).collect())
+        assert got == want and len({d for d, _ in got}) == df.count()
 
 
 def test_lsh_hot_bucket_star_edges_preserve_components(spark):

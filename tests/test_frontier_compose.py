@@ -226,6 +226,22 @@ def test_budget_allocation_and_capped_schedule(spark):
     assert kept == [f"http://big/{i}" for i in range(6)]
 
 
+def test_budget_overflow_saturates_to_total_budget(spark):
+    """A rank at the int64 edge overflows rank * total_budget.  The
+    dominant host's true share is <= total_budget (its rank is at most
+    the rank sum), so the overflowed share saturates UP to total_budget;
+    it must not collapse to the min_per_host floor."""
+    from image_ocr_spark.operators.robotsfrontier import allocate_crawl_budget
+
+    hosts = spark.createDataFrame(
+        [("dominant", 1 << 62), ("small", 1)], "host string, rank long"
+    )
+    budgets = allocate_crawl_budget(hosts, total_budget=1000, min_per_host=1)
+    got = {r.host: r.budget for r in budgets.collect()}
+    # true shares: floor(1000 * 2^62 / (2^62 + 1)) = 999 and 0 -> floor 1
+    assert got == {"dominant": 1000, "small": 1}
+
+
 def test_recrawl_due_matches_duckdb(spark):
     """Freshness leg (r06): changefreq -> interval, 'never' excluded,
     never-crawled always due, overdue_milli is the staleness priority —

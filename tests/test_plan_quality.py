@@ -38,9 +38,9 @@ def test_html_column_pruned(spark, pages_path):
 def test_tokenizer_input_pruned(spark, pages_path):
     """The tokenize operator itself prunes to url/html/doc_id before the
     Arrow boundary — kind/lang/warc_ts never cross into Python."""
-    from image_ocr_spark.operators.tokenize import tokenize
+    from image_ocr_spark.operators.tokenize import tokenize_packed
 
-    nodes = tokenize(spark.read.parquet(pages_path))
+    nodes = tokenize_packed(spark.read.parquet(pages_path))
     read_schema = _formatted(nodes).split("ReadSchema:")[1].splitlines()[0]
     assert "warc_ts" not in read_schema and "kind" not in read_schema
 
@@ -58,23 +58,6 @@ def test_dictionary_join_broadcasts(spark):
         .agg(F.count(F.lit(1)).alias("n_customers"))
     )
     assert "BroadcastHashJoin" in _formatted(df)
-
-
-def test_rollup_is_single_exchange(spark, pages_path):
-    """extract_text: exactly one exchange (the url rollup) after the salted
-    repartition — no window sort shuffle over the node stream."""
-    from image_ocr_spark.operators.blocks import extract_text
-    from image_ocr_spark.operators.tokenize import tokenize
-    from image_ocr_spark.plans.pipeline import salt_repartition
-
-    import re
-
-    pages = spark.read.parquet(pages_path)
-    plan = _formatted(extract_text(tokenize(salt_repartition(pages, 8))))
-    ops = re.findall(r"^\((\d+)\) (\w+)", plan, re.M)
-    n_exchanges = sum(1 for _, op in ops if op == "Exchange")
-    assert n_exchanges == 2, f"expected salt + rollup exchanges only: {ops}"
-    assert not any(op == "Sort" for _, op in ops), "no sort in the rollup plan"
 
 
 def test_classifier_stays_codegen(spark):
@@ -105,15 +88,12 @@ def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path):
 
 
 def test_minhash_signatures_no_shuffle(spark, documents):
-    """Signatures are per-row array expressions: computed in the scan stage,
+    """Signatures are per-row Arrow batches: computed in the scan stage,
     zero Exchange (at 100 TB the signature pass is free with the scan)."""
-    from image_ocr_spark.operators.dedup import minhash_col, with_simhash
+    from image_ocr_spark.operators.dedup import minhash_arrow, simhash_arrow
 
-    sigs = documents.select(
-        "doc_id", minhash_col(F.coalesce(F.col("text"), F.lit(""))).alias("sig")
-    )
-    assert "Exchange" not in _formatted(sigs)
-    assert "Exchange" not in _formatted(with_simhash(documents.select("doc_id", "text")))
+    assert "Exchange" not in _formatted(minhash_arrow(documents))
+    assert "Exchange" not in _formatted(simhash_arrow(documents))
 
 
 def test_brute_force_knn_broadcasts_queries(spark):

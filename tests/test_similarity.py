@@ -15,6 +15,53 @@ def _recall_maps(rows):
     return d
 
 
+def _duck(embeddings=None):
+    """DuckDB connection with an `embeddings` view: the fixture parquet, or
+    the given (vec_id, embedding) rows as BIGINT / DOUBLE[]."""
+    import duckdb
+    import pyarrow as pa
+
+    con = duckdb.connect()
+    if embeddings is None:
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM "
+            f"read_parquet('{SF_DIR}/embeddings.parquet')"
+        )
+    else:
+        con.register(
+            "embeddings",
+            pa.table(
+                {
+                    "vec_id": pa.array([i for i, _ in embeddings], pa.int64()),
+                    "embedding": pa.array(
+                        [[float(x) for x in v] for _, v in embeddings],
+                        pa.list_(pa.float64()),
+                    ),
+                }
+            ),
+        )
+    return con
+
+
+def _rank_key(rows):
+    return sorted((int(q), int(r), int(n)) for q, n, r in rows)
+
+
+def _sql_bruteforce(k: int, nq: int) -> str:
+    """Exact cosine top-k of the first `nq` vectors, the knn_bruteforce
+    oracle with its own k."""
+    import __spark_entry__ as e
+
+    cos = e._sql_cosine("q.embedding", "c.embedding")
+    return f"""
+        SELECT query_id, neighbor_id, rank FROM (
+          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                 row_number() OVER (PARTITION BY q.vec_id
+                                    ORDER BY {cos} DESC, c.vec_id ASC) AS rank
+          FROM embeddings q, embeddings c WHERE q.vec_id < {nq})
+        WHERE rank <= {k}"""
+
+
 def test_ivf_recall_vs_bruteforce(spark):
     from image_ocr_spark.operators.similarity import brute_force_topk, ivf_topk
 
@@ -121,45 +168,54 @@ def test_embedding_dup_pairs_sqrt_default(spark):
     assert want <= exact
 
 
-def test_arrow_assignment_and_dedup_match_expr(spark):
-    """The Arrow+numpy assignment/verify twins must reproduce the
-    expression path BIT-exactly: same trained centroids (the sequential-
-    in-dimension accumulation replays the fold's rounding) and the same
-    near-dup pair set with identical cos_milli values."""
-    from pyspark.sql import functions as F
+def test_kmeans_and_assignment_match_duckdb(spark):
+    """The Arrow assignment replays the oracle's fold cosine BIT-exactly:
+    kmeans_train's centroids equal the DuckDB k-means chain's (bitwise-equal
+    doubles, after the sampled k-means++ init and 2 Lloyd updates), and
+    assign_cells_arrow puts every vector in the same nprobe=2 cells as
+    _sql_ivf_assign."""
+    import pyarrow as pa
 
-    from image_ocr_spark.operators.dedup import VARIANT_OFFSET
+    import __spark_entry__ as e
     from image_ocr_spark.operators.similarity import (
-        embedding_dup_pairs,
+        assign_cells_arrow,
         kmeans_train,
     )
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
-        "vec_id", "embedding"
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = kmeans_train(emb, num_centroids=8, iters=2)
+    ctes, final = e._sql_kmeans_chain("embeddings", 8, 2)
+    con = _duck()
+    want = con.execute(
+        "WITH " + ",\n".join(ctes) + f" SELECT cid, centv FROM {final} ORDER BY cid"
+    ).fetchall()
+    assert cents == [(int(c), list(v)) for c, v in want] and len(cents) == 8
+
+    vecs = emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
+    got = sorted(
+        (r.vid, r.cell) for r in assign_cells_arrow(vecs, cents, nprobe=2).collect()
     )
-    c_expr = kmeans_train(emb, num_centroids=8, iters=2, impl="expr")
-    c_arrow = kmeans_train(emb, num_centroids=8, iters=2, impl="arrow")
-    assert c_expr == c_arrow  # bitwise-equal centroid doubles
-
-    dup = emb.select((F.col("vec_id") + VARIANT_OFFSET).alias("vec_id"), "embedding")
-    corpus = emb.unionByName(dup)
-    kw = dict(threshold_milli=990, num_centroids=8, iters=1, nprobe=2)
-    p_expr = {
-        (r.id_a, r.id_b): r.cos_milli
-        for r in embedding_dup_pairs(corpus, impl="expr", **kw).collect()
-    }
-    p_arrow = {
-        (r.id_a, r.id_b): r.cos_milli
-        for r in embedding_dup_pairs(corpus, impl="arrow", **kw).collect()
-    }
-    assert p_expr == p_arrow and len(p_arrow) > 0
+    con.register(
+        "c",
+        pa.table(
+            {
+                "cid": pa.array([cid for cid, _ in cents], pa.int64()),
+                "centv": pa.array([v for _, v in cents], pa.list_(pa.float64())),
+            }
+        ),
+    )
+    assign = con.execute(
+        f"SELECT vid, cell FROM {e._sql_ivf_assign('embeddings', 'c', 2)} ORDER BY 1, 2"
+    ).fetchall()
+    con.close()
+    assert got == assign and len(got) == 2 * emb.count()
 
 
-def test_knn_arrow_matches_expr(spark):
-    """Arrow-scored search (brute force + IVF) returns the same ranked
-    neighbor lists as the expression path."""
-    from pyspark.sql import functions as F
-
+def test_knn_matches_duckdb(spark):
+    """Arrow-scored search (brute force + IVF) returns the oracle's ranked
+    neighbor lists: brute-force SQL, and _sql_kmeans_ivf replaying the
+    same training, probing and tiebreaks."""
+    import __spark_entry__ as e
     from image_ocr_spark.operators.similarity import brute_force_topk, ivf_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -168,19 +224,22 @@ def test_knn_arrow_matches_expr(spark):
     def key(df):
         return sorted((r.query_id, r.rank, r.neighbor_id) for r in df.collect())
 
-    assert key(brute_force_topk(emb, q, k=5, impl="arrow")) == key(
-        brute_force_topk(emb, q, k=5, impl="expr")
-    )
-    kw = dict(k=5, num_centroids=8, iters=2, nprobe=2)
-    assert key(ivf_topk(emb, q, impl="arrow", **kw)) == key(
-        ivf_topk(emb, q, impl="expr", **kw)
-    )
+    con = _duck()
+    got = key(brute_force_topk(emb, q, k=5))
+    assert got == _rank_key(con.execute(_sql_bruteforce(5, 16)).fetchall())
+    assert len(got) == 16 * 5
+    got = key(ivf_topk(emb, q, k=5, num_centroids=8, iters=2, nprobe=2))
+    want = con.execute(
+        e._sql_kmeans_ivf(k=5, num_centroids=8, iters=2, nprobe=2, nq=16)
+    ).fetchall()
+    con.close()
+    assert got == _rank_key(want) and len(got) > 0
 
 
 def test_zero_norm_vectors_excluded_not_fatal(spark):
     """Review r3: an all-zero embedding must neither crash the job (Spark 4
     ANSI raises DIVIDE_BY_ZERO even for doubles) nor poison rankings with
-    NaN — it is excluded from neighbors and pairs on BOTH impls."""
+    NaN — it is excluded from neighbors and pairs."""
     from pyspark.sql import functions as F
 
     from image_ocr_spark.operators.similarity import (
@@ -197,21 +256,20 @@ def test_zero_norm_vectors_excluded_not_fatal(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = emb.filter(F.col("vec_id") < 2)
-    for impl in ("arrow", "expr"):
-        top = brute_force_topk(emb, q, k=4, impl=impl).collect()
-        assert all(r.neighbor_id != 3 for r in top), (impl, top)
-        assert {r.query_id for r in top} == {0, 1}
-        pairs = embedding_dup_pairs(
-            emb, threshold_milli=900, num_centroids=2, iters=1, nprobe=2,
-            impl=impl,
-        ).collect()
-        assert all(3 not in (r.id_a, r.id_b) for r in pairs), (impl, pairs)
-        assert (0, 1) in {(r.id_a, r.id_b) for r in pairs}
+    top = brute_force_topk(emb, q, k=4).collect()
+    assert all(r.neighbor_id != 3 for r in top), top
+    assert {r.query_id for r in top} == {0, 1}
+    pairs = embedding_dup_pairs(
+        emb, threshold_milli=900, num_centroids=2, iters=1, nprobe=2
+    ).collect()
+    assert all(3 not in (r.id_a, r.id_b) for r in pairs), pairs
+    assert (0, 1) in {(r.id_a, r.id_b) for r in pairs}
 
 
 def test_arrow_assignment_is_shuffle_free(spark):
-    """The Arrow assignment twin must stay a scan-stage map (no Exchange),
-    like the expression form."""
+    """The corpus->cell assignment must be a scan-stage map (no Exchange):
+    the old crossJoin+groupBy(vid) form shuffled k copies of the corpus
+    per k-means iteration."""
     from pyspark.sql import functions as F
 
     from image_ocr_spark.operators.similarity import (
@@ -228,20 +286,6 @@ def test_arrow_assignment_is_shuffle_free(spark):
         .executedPlan()
         .toString()
     )
-    assert "Exchange" not in plan, plan
-
-
-def test_ivf_assignment_is_shuffle_free(spark):
-    """The corpus->cell assignment must be a per-row expression (no
-    Exchange): the old crossJoin+groupBy(vid) form shuffled k copies of the
-    corpus per k-means iteration."""
-    from image_ocr_spark.operators.similarity import _assign_cells, kmeans_train
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = kmeans_train(emb, num_centroids=8, iters=1)
-    vecs = emb.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
-    plan = _assign_cells(vecs, cents)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
 
@@ -408,10 +452,12 @@ def test_batched_seed_oracle_contiguous_on_short_corpus(spark):
     assert [c for c, _ in sorted(seeds)] == [0, 1, 2, 3, 4]
 
 
-def test_ivf_double_corpus_arrow_matches_expr(spark):
-    """Review r4 follow-through: the Arrow assignment path must preserve
-    array<double> vectors end-to-end (no float32 re-emit), so IVF results
-    on a double corpus match the full-precision expression twin."""
+def test_ivf_double_corpus_matches_duckdb(spark):
+    """Review r4 follow-through: the Arrow assignment path must pass
+    non-float32 vectors through end-to-end (no float32 re-emit), so IVF
+    results match the full-precision DuckDB replay.  This corpus is
+    array<decimal(28,6)>; both sides score it as the nearest doubles."""
+    import __spark_entry__ as e
     from image_ocr_spark.operators.similarity import ivf_topk
 
     emb = spark.range(150).selectExpr(
@@ -420,20 +466,23 @@ def test_ivf_double_corpus_arrow_matches_expr(spark):
         "AS embedding",
     )
     q = emb.filter(F.col("vec_id") < 8)
-    kw = dict(k=5, num_centroids=6, iters=2, nprobe=2)
-
-    def key(df):
-        return sorted((r.query_id, r.rank, r.neighbor_id) for r in df.collect())
-
-    assert key(ivf_topk(emb, q, impl="arrow", **kw)) == key(
-        ivf_topk(emb, q, impl="expr", **kw)
+    got = sorted(
+        (r.query_id, r.rank, r.neighbor_id)
+        for r in ivf_topk(emb, q, k=5, num_centroids=6, iters=2, nprobe=2).collect()
     )
+    con = _duck([(r.vec_id, r.embedding) for r in emb.collect()])
+    want = con.execute(
+        e._sql_kmeans_ivf(k=5, num_centroids=6, iters=2, nprobe=2, nq=8)
+    ).fetchall()
+    con.close()
+    assert got == _rank_key(want) and len(got) == 8 * 5
 
 
-def test_embedding_dup_pairs_grouped_matches_arrow(spark):
-    """The grouped per-cell scorer (production default) must be
-    BIT-identical to the candidate-join + Arrow-verify path on the real
-    corpus — same pairs, same cos_milli."""
+def test_embedding_dup_pairs_match_duckdb(spark):
+    """The grouped per-cell scorer must reproduce the oracle's candidate
+    join + exact-cosine verify (_sql_dedup_embedding) BIT-exactly on the
+    duplicate-injected fixture corpus — same pairs, same cos_milli."""
+    import __spark_entry__ as e
     from image_ocr_spark.operators.dedup import VARIANT_OFFSET
     from image_ocr_spark.operators.similarity import embedding_dup_pairs
 
@@ -442,16 +491,21 @@ def test_embedding_dup_pairs_grouped_matches_arrow(spark):
     )
     dup = emb.select((F.col("vec_id") + VARIANT_OFFSET).alias("vec_id"), "embedding")
     corpus = emb.unionByName(dup)
-    kw = dict(threshold_milli=990, num_centroids=8, iters=1, nprobe=2)
-    p_arrow = {
+    got = {
         (r.id_a, r.id_b): r.cos_milli
-        for r in embedding_dup_pairs(corpus, impl="arrow", **kw).collect()
+        for r in embedding_dup_pairs(
+            corpus, threshold_milli=990, num_centroids=8, iters=1, nprobe=2
+        ).collect()
     }
-    p_grouped = {
-        (r.id_a, r.id_b): r.cos_milli
-        for r in embedding_dup_pairs(corpus, impl="grouped", **kw).collect()
-    }
-    assert p_grouped == p_arrow and len(p_grouped) > 0
+    con = _duck()
+    want = con.execute(
+        e._sql_dedup_embedding(
+            threshold_milli=990, num_centroids=8, iters=1, nprobe=2
+        )
+    ).fetchall()
+    con.close()
+    assert got == {(a, b): c for a, b, c in want}
+    assert len(got) >= emb.count()  # every injected exact duplicate pairs
 
 
 def test_grouped_hot_cell_cap_parity(spark):
@@ -504,7 +558,7 @@ def test_grouped_hot_cell_cap_parity(spark):
     # trivially — review r5 finding)
     from image_ocr_spark.operators.similarity import _salted_subblocks
 
-    cents = kmeans_train(corpus, 6, 1, "vec_id", "embedding", impl="arrow")
+    cents = kmeans_train(corpus, 6, 1, "vec_id", "embedding")
     assigned = assign_cells_arrow(
         corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v")),
         cents,

@@ -125,7 +125,7 @@ def test_engine_registry_and_fallback():
     fallback chain, and 'none' when no engine yields nodes."""
     from image_ocr_spark.pycore.pdftok import make_pdf
     from image_ocr_spark.operators.tokenize import (
-        _run_engine,
+        _run_engine_cols,
         available_engines,
         detect_engine,
     )
@@ -135,23 +135,43 @@ def test_engine_registry_and_fallback():
     pdf = make_pdf(["hello pdf"])
     assert detect_engine(html) == "html" and detect_engine(pdf) == "pdf"
 
+    def nodes(cols):
+        """(used_engine, node tuples) from the flat-column result."""
+        used, *fields = cols
+        return used, [tuple(f) for f in zip(*fields)]
+
     # auto: magic bytes
-    assert _run_engine(html, "auto")[0] == "html"
-    assert _run_engine(pdf, "auto")[0] == "pdf"
+    assert _run_engine_cols(html, "auto")[0] == "html"
+    assert _run_engine_cols(pdf, "auto")[0] == "pdf"
+    # auto nodes are the pycore tokenizers' nodes, node ids 0..n-1
+    used, got = nodes(_run_engine_cols(html, "auto"))
+    want = [
+        (i, n["tag_class"], n["text"], n["n_chars"], n["n_link_chars"], n["n_words"])
+        for i, n in enumerate(tokenize_html(html))
+    ]
+    assert used == "html" and got == want and got
+    used, got = nodes(_run_engine_cols(pdf, "auto"))
+    assert used == "pdf" and [g[2] for g in got] == [
+        n["text"] for n in tokenize_pdf(pdf)
+    ]
     # forced pdf on html bytes -> falls back to html, same nodes as auto
-    used, nodes = _run_engine(html, "pdf")
-    assert used == "html" and nodes == _run_engine(html, "auto")[1]
+    assert nodes(_run_engine_cols(html, "pdf")) == nodes(
+        _run_engine_cols(html, "auto")
+    )
     # forced html on pdf bytes does NOT fall back: the html tokenizer is a
     # greedy text extractor and produces (garbage) nodes — fallback triggers
     # only when the forced engine yields nothing; that is the documented
     # asymmetry of output-based (not quality-based) fallback
-    assert _run_engine(pdf, "html")[0] == "html"
-    # nothing tokenizes an empty body under a forced engine -> 'none'
-    used, nodes = _run_engine(b"<html><body></body></html>", "pdf")
-    assert used == "none" and nodes[0]["tag_class"] == "empty"
+    assert _run_engine_cols(pdf, "html")[0] == "html"
+    # nothing tokenizes an empty body under a forced engine -> 'none' with
+    # the sentinel node (id -1, class 'empty')
+    used, got = nodes(_run_engine_cols(b"<html><body></body></html>", "pdf"))
+    assert used == "none" and got == [(-1, "empty", "", 0, 0, 0)]
     # null payload under a forced engine -> 'none'; under auto -> html
-    assert _run_engine(None, "pdf")[0] == "none"
-    assert _run_engine(None, "auto")[0] == "html"
+    assert _run_engine_cols(None, "pdf")[0] == "none"
+    assert nodes(_run_engine_cols(None, "auto")) == (
+        "html", [(-1, "empty", "", 0, 0, 0)]
+    )
 
 
 def test_pdf_flate_matches_uncompressed():

@@ -299,37 +299,6 @@ def test_warc_ingest_resumes_from_checkpoint(spark, documents, tmp_path):
     assert m["buckets"] == 6 and m["output_rows"] == pages.count()
 
 
-def test_warc_extract_fused_matches_composed(spark, documents):
-    """The single-boundary fusion (segment -> extraction rows, payload
-    never re-crosses Arrow) is value-identical to the composed
-    read_warc -> extract_pages path over the same pages."""
-    from image_ocr_spark.operators.generate import generate_pages
-    from image_ocr_spark.operators.warcsource import pages_to_warc, warc_extract
-    from image_ocr_spark.plans.pipeline import extract_pages
-
-    pages = generate_pages(documents.filter(F.col("doc_id") < 200)).persist()
-    try:
-        chunks = pages_to_warc(pages, max_chunk_bytes=32 << 10)
-        n_in = (
-            chunks._jdf.queryExecution().executedPlan().toString().count("Exchange")
-        )
-        fused = warc_extract(chunks)
-        # the fusion itself adds no Exchange (r07: the fixture generator
-        # upstream carries one id-spread Exchange — compare, not zero)
-        assert (
-            fused._jdf.queryExecution().executedPlan().toString().count("Exchange")
-            == n_in
-        )
-        got = {r.url: (r.text, r.title, r.doc_type, r.engine, r.n_nodes)
-               for r in fused.collect()}
-        want = {r.url: (r.text, r.title, r.doc_type, r.engine, r.n_nodes)
-                for r in extract_pages(pages, salt=False).collect()}
-        assert got == want and len(got) == pages.count()
-        assert all(r.doc_id is None for r in fused.collect())  # no fixture id
-    finally:
-        pages.unpersist()
-
-
 def test_binaryfile_segment_path_matches_chunk_rows(spark, tmp_path):
     """The documented 100 TB ingest shape (COVERAGE S7) actually runs:
     .warc.gz segment FILES read via spark.read.format('binaryFile') ->
