@@ -82,35 +82,6 @@ def bloom_positions_col(
     return F.array(*[(h1 + F.lit(i) * h2) % F.lit(m_bits) for i in range(1, k + 1)])
 
 
-def bloom_position_rows(
-    df: DataFrame,
-    key_col: str = "text",
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Distinct (pos: long) rows the snapshot's keys set — the
-    DataFrame-native build relation.  One hash shuffle whose output is
-    bounded by m_bits rows no matter how large the snapshot is (the
-    groupBy's map-side combine collapses hot positions per partition)."""
-    pos = bloom_positions_col(F.col(key_col), m_bits, k)
-    return df.select(F.explode(pos).alias("pos")).distinct()
-
-
-def pack_position_rows(rows, m_bits: int):
-    """Bitmap from collected (pos) Rows — the RETIRED driver-side build
-    formulation, kept as the single parity/bench twin of bloom_build
-    (tests/test_bloom.py, bench.py --bloom-build) so the bit-packing
-    convention lives in exactly one place.  Do not use in pipelines:
-    it materializes every distinct position as a driver Row."""
-    import numpy as np
-
-    bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-    if rows:
-        pos = np.fromiter((r.pos for r in rows), dtype=np.int64, count=len(rows))
-        np.bitwise_or.at(bitmap, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-    return bitmap
-
-
 def bloom_build(
     df: DataFrame,
     key_col: str = "text",
@@ -125,12 +96,13 @@ def bloom_build(
     bitmap segment; each group packs its seg_bits-wide slice into bytes
     EXECUTOR-side (OR is idempotent, so no distinct pass is needed), and
     the driver receives exactly m_bits/8 payload bytes of packed chunks —
-    never position Rows.  (The previous row-collect build materialized
-    ~0.3*m_bits driver Row objects at 16-bits/key density — ~400x the
-    byte payload; tests/test_bloom.py pins bitmap equality against that
-    formulation.)  Per-task memory is one slice + its group's rows,
-    which at production sizing (m ~= 16n) is ~k*seg_bits/16 rows
-    independent of snapshot size."""
+    never position Rows (collecting the distinct positions instead would
+    materialize ~0.3*m_bits driver Rows at 16 bits/key, ~400x the byte
+    payload).  Per-task memory is one slice + its group's rows, which at
+    production sizing (m ~= 16n) is ~k*seg_bits/16 rows independent of
+    snapshot size.  tests/test_bloom.py checks the bitmap against the
+    DuckDB replay of the positions, packed in the test, at one, many and
+    a short last segment."""
     import numpy as np
     import pandas as pd
 

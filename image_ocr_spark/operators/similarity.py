@@ -509,7 +509,7 @@ def maxcos_arrow(vecs: DataFrame, seeds: list) -> DataFrame:
     return vecs.mapInArrow(fn, f"vid long, v {vtype}, maxcos double")
 
 
-# above this C, kmeans_train's "auto" init switches from the driver-sampled
+# above this C, kmeans_train's init switches from the driver-sampled
 # greedy sweep to the distributed batched farthest-point pass
 BATCHED_INIT_THRESHOLD = 128
 
@@ -698,17 +698,15 @@ def kmeans_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sample_size: int = DEFAULT_SAMPLE_SIZE,
-    init: str = "auto",
 ) -> list:
     """Driver-side centroid list [(id, [float,...])] after `iters` Lloyd
     updates.
 
-    Init: ``init="auto"`` uses the driver-sampled deterministic k-means++
-    sweep (kmeanspp_init — the oracle-replayable small-C path) up to
-    C = BATCHED_INIT_THRESHOLD and the distributed batched farthest-point
-    pass (kmeans_batched_init) above it, so the O(S*C) driver sweep never
-    runs at the C ~ sqrt(N) default on a large corpus; "greedy"/"batched"
-    force a path.  ``num_centroids=None`` derives C ~ sqrt(N) from a
+    Init: the driver-sampled deterministic k-means++ sweep (kmeanspp_init
+    — the oracle-replayable small-C path) up to C = BATCHED_INIT_THRESHOLD
+    and the distributed batched farthest-point pass (kmeans_batched_init)
+    above it, so the O(S*C) driver sweep never runs at the C ~ sqrt(N)
+    default for large N.  ``num_centroids=None`` derives C ~ sqrt(N) from a
     corpus count.  Each iteration is one corpus pass: shuffle-free Arrow
     assignment (assign_cells_arrow), then the integer-exact elementwise
     mean (k*dim partial-aggregated rows), then an O(k*dim) collect — the
@@ -723,9 +721,7 @@ def kmeans_train(
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     )
-    if init == "batched" or (
-        init == "auto" and num_centroids > BATCHED_INIT_THRESHOLD
-    ):
+    if num_centroids > BATCHED_INIT_THRESHOLD:
         cents = kmeans_batched_init(
             embeddings, num_centroids, id_col=id_col, vec_col=vec_col
         )
@@ -813,16 +809,13 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    init: str = "auto",
 ) -> DataFrame:
     """(query_id, neighbor_id, rank) searching the query's `nprobe` nearest
     IVF cells (trained centroids, multi-probe — VERDICT r01 item 6).
 
     Corpus-side cell assignment is shuffle-free (assign_cells_arrow); the
     only corpus exchange is the broadcast-probe join's output."""
-    cents = kmeans_train(
-        embeddings, num_centroids, iters, id_col, vec_col, init=init
-    )
+    cents = kmeans_train(embeddings, num_centroids, iters, id_col, vec_col)
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     )

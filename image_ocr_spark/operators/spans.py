@@ -1,81 +1,27 @@
 """Labeled spans over the canonical extracted text (the north star's
 "native Spark SQL expressions emitting labeled spans").
 
-Two implementations with identical output:
-
-- ``label_spans_arrow``: one Arrow-batched pass sharing
-  pycore.extractor.label_spans — byte-identical to the oracle by
-  construction; character offsets into the canonical text.
-- ``label_spans_sql``: pure Spark SQL — regexp_extract_all for the match
-  values, offsets recovered with a cumulative ``locate`` fold
-  (F.aggregate carrying (search_from, spans)).  Used where the plan must
-  stay JVM-only; parity with the Arrow path is asserted in tests.
+``label_spans_sql`` is pure Spark SQL: regexp_extract_all for the match
+values, offsets recovered with a cumulative ``locate`` fold
+(F.aggregate carrying (search_from, spans)), character offsets into the
+canonical text.  The plan stays JVM-only and DuckDB-expressible
+(entry:label_spans); tests/test_spans.py pins its rows to
+pycore.extractor.label_spans.  Cost: the fold is an interpreted
+``aggregate`` calling ``locate`` per match (CodegenFallback), so it is
+O(matches x text) on match-dense documents.
 
 Span rows: (url, start, end, label, value), ordered by (start, label).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..pycore.extractor import SPAN_PATTERNS, label_spans
-
-SPAN_ROW_SCHEMA = "url string, start int, end int, label string, value string"
-
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("start", pa.int32()),
-        pa.field("end", pa.int32()),
-        pa.field("label", pa.string()),
-        pa.field("value", pa.string()),
-    ]
-)
-
-
-def _spans_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        urls = batch.column(0).to_pylist()
-        texts = batch.column(1).to_pylist()
-        c_url: List = []
-        c_s: List = []
-        c_e: List = []
-        c_l: List = []
-        c_v: List = []
-        for url, text in zip(urls, texts):
-            for sp in label_spans(text or ""):
-                c_url.append(url)
-                c_s.append(sp["start"])
-                c_e.append(sp["end"])
-                c_l.append(sp["label"])
-                c_v.append(sp["value"])
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(c_url, pa.string()),
-                pa.array(c_s, pa.int32()),
-                pa.array(c_e, pa.int32()),
-                pa.array(c_l, pa.string()),
-                pa.array(c_v, pa.string()),
-            ],
-            schema=_ARROW_SCHEMA,
-        )
-
-
-def label_spans_arrow(extracted: DataFrame, key: str = "url") -> DataFrame:
-    """(key, text) -> span rows via the shared pycore scanner.
-
-    THE 100 TB PATH: one linear re.finditer scan per document.  The SQL
-    twin below exists so the driver row stays JVM/oracle-expressible, but
-    its offset recovery is an interpreted `aggregate` fold calling
-    `locate` per match (CodegenFallback) — O(matches x text) on
-    match-dense documents.  Compose pipelines with THIS function."""
-    return extracted.select(F.col(key).alias("url"), "text").mapInArrow(
-        _spans_batches, SPAN_ROW_SCHEMA
-    )
+from ..pycore.extractor import SPAN_PATTERNS
 
 
 def _spans_for_pattern(text: Column, label: str, pattern: str) -> Column:
@@ -111,7 +57,7 @@ def _spans_for_pattern(text: Column, label: str, pattern: str) -> Column:
 
 
 def label_spans_sql(extracted: DataFrame, key: str = "url") -> DataFrame:
-    """Pure-SQL spans: same rows as label_spans_arrow (asserted in tests)."""
+    """(key, text) -> span rows (url, start, end, label, value)."""
     text = F.col("text")
     all_spans = F.flatten(
         F.array(

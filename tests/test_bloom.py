@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from image_ocr_spark.operators.bloom import (
     bloom_build,
-    bloom_position_rows,
     flag_maybe_seen,
     incremental_new,
 )
@@ -66,35 +65,40 @@ def _duck(sql):
     return out
 
 
-def test_build_positions_match_oracle(spark, documents):
-    old, _ = _snapshots(spark, documents)
-    got = sorted(
-        r.pos for r in bloom_position_rows(old, "text", M_BITS, K).collect()
-    )
-    want = sorted(
+def _oracle_positions():
+    """DuckDB's replay of the distinct bit positions OLD sets."""
+    return sorted(
         r[0]
         for r in _duck(
             "SELECT DISTINCT unnest(pos) FROM "
             f"(SELECT {POS.replace('key', 'text')} AS pos FROM old)"
         )
     )
+
+
+def test_build_positions_match_oracle(spark, documents):
+    import numpy as np
+
+    old, _ = _snapshots(spark, documents)
+    bitmap = bloom_build(old, "text", M_BITS, K)
+    got = np.flatnonzero(np.unpackbits(bitmap, bitorder="little")).tolist()
+    want = _oracle_positions()
     assert got == want
     assert 0 < len(got) < M_BITS
 
 
 def test_segmented_build_equals_row_collect_build(spark, documents):
-    """The executor-side packed build (r06: driver receives m/8 chunk
+    """The executor-side packed build (the driver receives m/8 chunk
     bytes, never position Rows) is bit-identical to the row-collect
-    formulation it replaced, at segment widths that exercise one
-    segment, many segments, and a SHORT last segment (seg not dividing
-    m).  bloom_position_rows stays the DuckDB oracle twin."""
+    formulation, here DuckDB's position replay packed on the driver, at
+    segment widths that exercise one segment, many segments, and a SHORT
+    last segment (seg not dividing m)."""
     import numpy as np
 
-    from image_ocr_spark.operators.bloom import pack_position_rows
-
     old, _ = _snapshots(spark, documents)
-    rows = bloom_position_rows(old, "text", M_BITS, K).collect()
-    want = pack_position_rows(rows, M_BITS)
+    pos = np.array(_oracle_positions(), dtype=np.int64)
+    want = np.zeros(M_BITS // 8, dtype=np.uint8)
+    np.bitwise_or.at(want, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
     for seg_bits in (M_BITS, 1 << 13, 24_000):  # 1 seg / 8 segs / short tail
         got = bloom_build(old, "text", M_BITS, K, seg_bits=seg_bits)
         assert np.array_equal(got, want), seg_bits

@@ -209,46 +209,20 @@ def test_property_roundtrips():
 
 
 def test_fdct_numpy_matches_naive_on_fixture_cycle():
-    """r07: the separable numpy FDCT must be byte-identical to the exact
-    naive loop across the ENTIRE deterministic synth domain (the pixel
-    formula cycles with lcm(w%3, h%2, value%256) = 768 ids; 800 ids with
-    both parities double-cover it)."""
-    import math
-
+    """r07: the separable numpy FDCT must be byte-identical to the
+    module's own no-numpy loop across the ENTIRE deterministic synth
+    domain (the pixel formula cycles with lcm(w%3, h%2, value%256) = 768
+    ids; 800 ids with both parities double-cover it)."""
     import image_ocr_spark.pycore.jpegdec as J
     from image_ocr_spark.operators.multimodal import _synth_jpeg_pixels
 
-    def naive(block, qtab_raster):
-        coef = [0.0] * 64
-        for r in range(8):
-            for c in range(8):
-                acc = 0.0
-                for y in range(8):
-                    cy = J._COS[y][r]
-                    base = y * 8
-                    for x in range(8):
-                        acc += block[base + x] * cy * J._COS[x][c]
-                coef[r * 8 + c] = 0.25 * J._C[r] * J._C[c] * acc
-        out = [0] * 64
-        for k in range(64):
-            z = J.ZIGZAG[k]
-            q = coef[z] / qtab_raster[z]
-            out[k] = (
-                int(math.floor(q + 0.5)) if q >= 0 else -int(math.floor(-q + 0.5))
-            )
-        return out
-
-    orig = J._fdct_quant
+    ids = range(10**12, 10**12 + 800)
+    orig = J._np
+    assert orig is not None  # the fast path must be the one compared
+    fast = [J.jpeg_encode(*_synth_jpeg_pixels(m)) for m in ids]
     try:
-        fast = [
-            J.jpeg_encode(*_synth_jpeg_pixels(m))
-            for m in range(10**12, 10**12 + 800)
-        ]
-        J._fdct_quant = naive
-        slow = [
-            J.jpeg_encode(*_synth_jpeg_pixels(m))
-            for m in range(10**12, 10**12 + 800)
-        ]
+        J._np = None  # takes the fallback branch of every numpy switch
+        slow = [J.jpeg_encode(*_synth_jpeg_pixels(m)) for m in ids]
     finally:
-        J._fdct_quant = orig
+        J._np = orig
     assert fast == slow

@@ -104,7 +104,7 @@ def _rowset(cols, rows):
 @pytest.fixture(scope="module")
 def spark():
     """Module override of the shared local[4] session: the sf1.0 tier gets
-    16 cores (the bench HI level), matching how BASELINE.md reports it.
+    16 cores, matching how BASELINE.md reports it.
 
     getOrCreate returns any EXISTING session regardless of master (review
     r4 finding): when the full suite already holds the shared local[4]

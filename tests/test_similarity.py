@@ -339,16 +339,18 @@ def test_batched_init_driver_work_is_bounded(spark):
 
 
 def test_kmeans_train_auto_switches_to_batched_init(spark):
-    """Above BATCHED_INIT_THRESHOLD the driver sweep must not run: train
-    with init='auto' at C=150 equals init='batched' bit-exactly (and both
-    produce C centroids)."""
-    from image_ocr_spark.operators.similarity import kmeans_train
+    """Above BATCHED_INIT_THRESHOLD the driver sweep must not run: with
+    no Lloyd pass, training at C=150 returns exactly the batched
+    farthest-point init (C centroids)."""
+    from image_ocr_spark.operators.similarity import (
+        kmeans_batched_init,
+        kmeans_train,
+    )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    auto = kmeans_train(emb, num_centroids=150, iters=1, init="auto")
-    forced = kmeans_train(emb, num_centroids=150, iters=1, init="batched")
-    assert auto == forced
-    assert len(auto) > 0
+    trained = kmeans_train(emb, 150, iters=0)
+    assert trained == kmeans_batched_init(emb, 150)
+    assert len(trained) == 150
 
 
 def test_kmeans_train_short_circuits_on_convergence(spark):

@@ -1,15 +1,13 @@
-"""Span extraction: Arrow path == pure-SQL path == pycore oracle (the north
-rule's span-offset gate), character offsets included."""
+"""Span extraction: pure-SQL path == pycore oracle (the north rule's
+span-offset gate), character offsets included."""
 
 from image_ocr_spark.fixtures.gen_pages import build_page, url_for
-from image_ocr_spark.operators.spans import label_spans_arrow, label_spans_sql
+from image_ocr_spark.operators.spans import label_spans_sql
 from image_ocr_spark.pycore.extractor import extract_page, label_spans
 
 
 def test_spans_three_way_parity(spark, extracted, doc_rows):
-    arrow = sorted(tuple(r) for r in label_spans_arrow(extracted).collect())
     sql = sorted(tuple(r) for r in label_spans_sql(extracted).collect())
-    assert arrow == sql
     expected = []
     for doc_id, text, lang in doc_rows:
         oracle = extract_page(build_page(doc_id, text, lang)["html"])
@@ -17,8 +15,8 @@ def test_spans_three_way_parity(spark, extracted, doc_rows):
             expected.append(
                 (url_for(doc_id), sp["start"], sp["end"], sp["label"], sp["value"])
             )
-    assert sorted(expected) == arrow
-    assert len(arrow) > 0
+    assert sorted(expected) == sql
+    assert len(sql) > 0
 
 
 def test_span_offsets_slice_back(doc_rows):
