@@ -34,11 +34,10 @@ Aiken, SIGMOD 2003.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import List
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from image_ocr_spark.operators import storage
 
 # 32-bit token/shingle hash, identical in Spark and DuckDB:
 #   Spark : conv(substring(md5(s), 1, 8), 16, 10)::long
@@ -52,25 +51,6 @@ PERM_B = [1, 2, 4, 8, 16, 32, 64, 128, 256, 512, 1024, 2048, 4096, 8192, 16384, 
 DEFAULT_NUM_PERM = 16
 DEFAULT_BANDS = 4  # 4 bands x 4 rows
 DEFAULT_SHINGLE_N = 3
-
-# persisted signature relations from ngram_jaccard_pairs calls, awaiting
-# release — see release_sig_caches()
-_SIG_CACHE: List[DataFrame] = []
-
-
-def release_sig_caches() -> None:
-    """Unpersist every signature relation a prior ngram_jaccard_pairs call
-    persisted (ADVICE r03: persist with no unpersist path accumulated one
-    cached relation per call in long-lived sessions).  Always safe to call:
-    unpersisting only forces recompute on later reuse, never wrong results.
-    Called automatically at the start of each persisting call, so at most
-    ONE call's signatures are ever cached."""
-    while _SIG_CACHE:
-        df = _SIG_CACHE.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # owning session already stopped
 
 # SimHash width: 60 bits, not 64 — 15 hex chars of md5 stay inside SIGNED
 # 64-bit range in BOTH engines (Spark long and DuckDB ('0x'||hex)::BIGINT
@@ -210,7 +190,6 @@ def ngram_jaccard_pairs(
     threshold_milli: int = 500,
     max_df: int = DEFAULT_SHINGLE_MAX_DF,
     min_shared: int = 1,
-    persist_sigs: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs sharing >= min_shared RARE
     shingles.
@@ -246,16 +225,13 @@ def ngram_jaccard_pairs(
     # the signature relation feeds THREE consumers (candidate explode +
     # both verify sides); without materialization Spark recomputes the
     # signature pass per consumer.  An operator cannot know when its
-    # caller's final action ran, so the cache is tracked in _SIG_CACHE and
-    # (a) the PREVIOUS call's relations are released on entry — a
-    # long-lived session issuing many of these queries holds at most one
-    # call's signatures, not an unbounded accumulation (ADVICE r03) —
-    # and (b) release_sig_caches() frees the last one on demand
-    # (unpersist is always correctness-safe: consumers just recompute).
-    if persist_sigs:
-        release_sig_caches()
-        sh = sh.persist()
-        _SIG_CACHE.append(sh)
+    # caller's final action ran, so the cache is held in a storage slot:
+    # (a) the PREVIOUS call's relation is freed here — a long-lived
+    # session issuing many of these queries holds at most one call's
+    # signatures, not an unbounded accumulation (ADVICE r03) — and (b)
+    # storage.release() frees the last one on demand (unpersist is always
+    # correctness-safe: consumers just recompute).
+    sh = storage.hold(sh, slot="ngram_sigs").persist()
     exploded = sh.select("id", F.explode("hs").alias("h"))
     rare = (
         exploded.groupBy("h")
@@ -631,94 +607,6 @@ def winnow_arrow(
     return src.mapInArrow(fn, "id long, fp long")
 
 
-def _persistent_rdd_ids(sc) -> set:
-    """Ids of the JVM's currently-persisted RDDs (cache + localCheckpoint
-    storage both live here — the CacheManager only tracks Dataset-level
-    .persist, so this is the complete storage census)."""
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _ckpt_rdd_id(df: DataFrame) -> int:
-    """EXACT id of the persisted RDD backing an eagerly localCheckpoint'ed
-    DataFrame: its analyzed plan is a LogicalRDD over that RDD.  Precise
-    attribution — no before/after census diffing, so relations persisted
-    CONCURRENTLY by other queries on the same session are never
-    misattributed and freed (review r4 finding)."""
-    return int(df._jdf.queryExecution().analyzed().rdd().id())
-
-
-# final-labels checkpoints of past dedup_components calls, by storage id.
-# NOT auto-released: unpersisting a localCheckpoint DESTROYS the data
-# (lineage is truncated — there is nothing to recompute from), so freeing
-# a previous call's result could break a caller still holding it.  Call
-# release_component_checkpoints(spark) once prior results are consumed.
-_CC_CKPT_IDS: set = set()
-
-
-def release_component_checkpoints(spark) -> None:
-    """Free the checkpoint storage of ALL previously returned
-    dedup_components results.  Only call after their consumers are done:
-    unlike a cache unpersist this removes the data itself (localCheckpoint
-    has no lineage to recompute), and the released DataFrames become
-    unusable."""
-    _unpersist_rdd_ids(spark.sparkContext, set(_CC_CKPT_IDS))
-    _CC_CKPT_IDS.clear()
-
-
-def _unpersist_rdd_ids(sc, rdd_ids: set) -> None:
-    jmap = sc._jsc.getPersistentRDDs()
-    for k in list(jmap.keySet().toArray()):
-        if int(k) in rdd_ids:
-            jmap.get(k).unpersist(False)
-
-
-@contextmanager
-def checkpoint_scope(spark):
-    """Scope-bound storage release for the iterative-loop operators —
-    the automatic alternative to the manual release_* contracts, so user
-    code cannot leak pinned checkpoint RDDs by forgetting a call.
-
-        with checkpoint_scope(spark):
-            clusters = dedup_components(pairs, ids).collect()
-            ranks = host_rank(edges).collect()
-        # all checkpoint storage registered inside the scope is freed
-
-    On exit, every checkpoint/cache registered DURING the scope is
-    released: dedup_components final-labels checkpoints, host_rank rank
-    checkpoints, grouped-verify assignment caches, and n-gram signature
-    caches.  Storage registered BEFORE the scope is untouched, so scopes
-    compose with long-lived sessions.  Because a localCheckpoint release
-    DESTROYS the data (no lineage to recompute), results computed inside
-    the scope must be materialized (collected/written) before exit —
-    the same rule the manual contracts document."""
-    from image_ocr_spark.operators import linkgraph, similarity
-
-    before_cc = set(_CC_CKPT_IDS)
-    before_rank = set(linkgraph._RANK_CKPT_IDS)
-    before_assign = list(similarity._ASSIGN_CACHE)
-    before_sig = list(_SIG_CACHE)
-    try:
-        yield
-    finally:
-        sc = spark.sparkContext
-        new_cc = set(_CC_CKPT_IDS) - before_cc
-        _unpersist_rdd_ids(sc, new_cc)
-        _CC_CKPT_IDS.difference_update(new_cc)
-        new_rank = set(linkgraph._RANK_CKPT_IDS) - before_rank
-        _unpersist_rdd_ids(sc, new_rank)
-        linkgraph._RANK_CKPT_IDS.difference_update(new_rank)
-        for cache, before in (
-            (similarity._ASSIGN_CACHE, before_assign),
-            (_SIG_CACHE, before_sig),
-        ):
-            for df in [d for d in cache if not any(d is b for b in before)]:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-                cache.remove(df)
-
-
 def dedup_components(
     pairs: DataFrame,
     ids: DataFrame,
@@ -765,10 +653,11 @@ def dedup_components(
       one is materialized (r03 leaked one O(N) cached relation per round
       by unpersisting a projection, which Spark's CacheManager does not
       match to the cached plan).  On return the only storage held is the
-      final (touched-node) labels checkpoint.
+      final (touched-node) labels checkpoint, registered with
+      operators/storage.py: free it with storage.release() (or run the
+      call inside storage.scope()) once the result is consumed.
 
     Driver traffic per round is ONE scalar (the changed-row count)."""
-    sc = ids.sparkSession.sparkContext
     # symmetric edge list in ONE pass over pairs (a union of two selects
     # would scan — and for an unpersisted pair plan, recompute — it twice)
     edges = (
@@ -788,20 +677,12 @@ def dedup_components(
         .persist()
     )
 
-    def _ckpt(df: DataFrame, prev_ids: set) -> tuple:
-        """Eager localCheckpoint + free the storage of the superseded
-        round; returns (checkpointed df, its EXACT storage rdd-id)."""
-        out = df.localCheckpoint(eager=True)
-        _unpersist_rdd_ids(sc, prev_ids)
-        return out, {_ckpt_rdd_id(out)}
-
     # loop state: only nodes that appear in some pair (both directions are
     # in edges, so src alone covers every endpoint)
-    labels, own_ids = _ckpt(
+    labels = ckpt = storage.checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
-        .select("id", F.col("id").cast("long").alias("label")),
-        set(),
+        .select("id", F.col("id").cast("long").alias("label"))
     )
     converged = False
     for it in range(max_iters):
@@ -846,7 +727,9 @@ def dedup_components(
                     ).alias("_chg"),
                 )
             )
-        new_labels, own_ids = _ckpt(stepped, own_ids)
+        new_labels = storage.checkpoint(stepped)
+        storage.free(ckpt)
+        ckpt = new_labels
         changed = new_labels.filter(F.col("_chg")).count()
         labels = new_labels.select("id", "label")
         if changed == 0:
@@ -854,7 +737,7 @@ def dedup_components(
             break
     if not converged:
         edges.unpersist()
-        _unpersist_rdd_ids(sc, own_ids)
+        storage.free(ckpt)
         raise RuntimeError(
             f"dedup_components did not converge in {max_iters} rounds — "
             "a component has label-path length > 2^(max_iters-"
@@ -863,9 +746,9 @@ def dedup_components(
     edges.unpersist()
     # singletons come from the ids scan at read time, so the full O(N)
     # result is never materialized to storage; the only storage held on
-    # return is the final touched-node labels checkpoint (own_ids),
-    # registered for explicit release via release_component_checkpoints
-    _CC_CKPT_IDS.update(own_ids)
+    # return is the final touched-node labels checkpoint, held for
+    # storage.release() / storage.scope()
+    storage.hold(ckpt)
     return (
         ids.select(F.col(id_col).alias("id"))
         .join(labels, "id", "left")

@@ -30,10 +30,11 @@ Scale shape (the 100 TB story):
   the loop carries the iterative-loop discipline proven in
   dedup_components: per-round EAGER localCheckpoint (plan growth is
   ~k^rounds without truncation — measured 104 s/round by iteration 4 in
-  r04), exact RDD-id release of the previous round's storage, fixed
-  round count (PageRank contracts geometrically at rate = damping; 8-12
-  rounds is the production norm, and a fixed K is what makes the oracle
-  replayable).
+  r04), the previous round's storage freed as soon as the next is
+  materialized (operators/storage.py), the final ranks held until
+  storage.release() / storage.scope(), fixed round count (PageRank
+  contracts geometrically at rate = damping; 8-12 rounds is the
+  production norm, and a fixed K is what makes the oracle replayable).
 
 Dangling hosts (no out-links) keep receiving the base teleport mass but
 redistribute nothing — the standard "mass leaks" simplification; ranks
@@ -48,24 +49,12 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from image_ocr_spark.operators.dedup import _ckpt_rdd_id, _unpersist_rdd_ids
+from image_ocr_spark.operators import storage
 from image_ocr_spark.pycore.links import find_links
 
 DEFAULT_ROUNDS = 8
 DEFAULT_DAMPING_MILLI = 850
 RANK_SCALE = 1_000_000  # one host's initial rank, in micro-rank units
-
-# rank checkpoints of past host_rank calls (same contract as
-# dedup._CC_CKPT_IDS: NOT auto-released — a localCheckpoint unpersist
-# destroys the data; call release_rank_checkpoints once consumed).
-_RANK_CKPT_IDS: set = set()
-
-
-def release_rank_checkpoints(spark) -> None:
-    """Free the checkpoint storage of ALL previously returned host_rank
-    results (they become unusable — localCheckpoints have no lineage)."""
-    _unpersist_rdd_ids(spark.sparkContext, set(_RANK_CKPT_IDS))
-    _RANK_CKPT_IDS.clear()
 
 
 def extract_links(
@@ -217,21 +206,16 @@ def host_rank(
         F.count(F.lit(1)).alias("w")
     )
     outw = w.groupBy("src").agg(F.sum("w").alias("tw"))
-    wj = w.join(outw, "src").localCheckpoint(eager=True)
-    wj_id = _ckpt_rdd_id(wj)
-
-    nodes = (
+    wj = storage.checkpoint(w.join(outw, "src"))
+    nodes = storage.checkpoint(
         edges.select(src.alias("host"))
         .unionByName(edges.select(dst.alias("host")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes_id = _ckpt_rdd_id(nodes)
 
     base = ((1000 - damping_milli) * RANK_SCALE) // 1000
     r = nodes.withColumn("rank", F.lit(RANK_SCALE).cast("long"))
-    prev_id = None
-    sc = edges.sparkSession.sparkContext
+    prev = None
     for _ in range(rounds):
         contrib = (
             wj.join(r, wj["src"] == r["host"])
@@ -248,15 +232,12 @@ def host_rank(
         )
         # eager checkpoint = this round's materialization AND plan
         # truncation (dedup_components discipline); then free last round
-        r = r_next.localCheckpoint(eager=True)
-        new_id = _ckpt_rdd_id(r)
-        if prev_id is not None:
-            _unpersist_rdd_ids(sc, {prev_id})
-        prev_id = new_id
-    _unpersist_rdd_ids(sc, {wj_id, nodes_id})
-    if prev_id is not None:
-        _RANK_CKPT_IDS.add(prev_id)
-    return r
+        r = storage.checkpoint(r_next)
+        if prev is not None:
+            storage.free(prev)
+        prev = r
+    storage.free(wj, nodes)
+    return storage.hold(r)
 
 
 def anchor_term_stats(

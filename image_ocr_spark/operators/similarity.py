@@ -46,6 +46,8 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from image_ocr_spark.operators import storage
+
 CENT_SCALE = 10_000_000  # deci-micro accumulation unit for centroid means
 DEFAULT_SAMPLE_SIZE = 64  # k-means++ init sample (collected to the driver)
 
@@ -343,10 +345,6 @@ def _py_dot(a: List[float], b: List[float]) -> float:
     return acc
 
 
-def _py_cos(a: List[float], b: List[float]) -> float:
-    return _py_dot(a, b) / math.sqrt(_py_dot(a, a) * _py_dot(b, b))
-
-
 def _sample_hash(c: Column) -> Column:
     """32-bit md5-prefix hash of the id — the engine-portable deterministic
     'random' order (Spark conv(md5) == DuckDB ('0x'||md5prefix)::BIGINT)."""
@@ -401,7 +399,7 @@ def kmeanspp_init(
     # (ADVICE r03: the pure-Python O(S*C*d) sweep was a single-threaded
     # driver bottleneck at C ~ sqrt(N)).  _cos_matrix's dim-loop fold keeps
     # every per-element accumulation left-to-right, so selections stay
-    # bitwise identical to the _py_cos form and the DuckDB oracle.
+    # bitwise identical to the DuckDB oracle's list_reduce cosine.
     V = np.array([v for _, v in samp], dtype=np.float64)  # vid-ascending
     chosen = [samp[0]]  # smallest sampled id
     # running max cosine to the chosen set; max is associative over floats,
@@ -565,25 +563,6 @@ def kmeans_batched_seed_ids(
     return [(i, vid) for i, (vid, _) in enumerate(pts)]
 
 
-# persisted assignment relations from capped _dup_pairs_grouped calls,
-# awaiting release (the counts pre-pass would otherwise re-execute the
-# full N*C*dim assignment scan for the main pass — review r5 finding).
-# Mirrors dedup._SIG_CACHE: at most one call's assignment stays cached.
-_ASSIGN_CACHE: list = []
-
-
-def release_assign_caches() -> None:
-    """Unpersist every assignment relation a prior capped grouped-verify
-    call persisted.  Always safe: lineage is intact, a later reuse just
-    recomputes."""
-    while _ASSIGN_CACHE:
-        df = _ASSIGN_CACHE.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
 def _maxcos_update_arrow(state: DataFrame, new_seeds: list) -> DataFrame:
     """(vid, v, maxcos) -> same rows with maxcos combined against ONLY the
     newly selected seed batch: max(old, max-cos-to-new).  Float max is
@@ -638,9 +617,6 @@ def _batched_farthest_points(
     dedup_components: localCheckpoint(eager) both materializes and
     truncates).  Selected rows are collected straight from the state —
     the TakeOrdered rows already carry their vectors."""
-    from image_ocr_spark.operators.dedup import _ckpt_rdd_id, _unpersist_rdd_ids
-
-    sc = embeddings.sparkSession.sparkContext
     vecs = embeddings.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
     )
@@ -662,10 +638,9 @@ def _batched_farthest_points(
         batch = max(16, -(-num_centroids // 8))  # <= ~8 rounds
     if len(seeds) >= num_centroids:
         return seeds
-    state = maxcos_arrow(vecs, seeds).filter(
-        F.col("vid") != seeds[0][0]
-    ).localCheckpoint(eager=True)
-    ckpt_id = _ckpt_rdd_id(state)
+    state = storage.checkpoint(
+        maxcos_arrow(vecs, seeds).filter(F.col("vid") != seeds[0][0])
+    )
     try:
         while len(seeds) < num_centroids:
             take = min(batch, num_centroids - len(seeds))
@@ -680,15 +655,16 @@ def _batched_farthest_points(
             seeds.extend(new)
             if len(seeds) >= num_centroids:
                 break  # the final round's state is never consumed
-            nxt = _maxcos_update_arrow(state, new).filter(
-                ~F.col("vid").isin([vid for vid, _ in new])
-            ).localCheckpoint(eager=True)
-            nxt_id = _ckpt_rdd_id(nxt)
-            _unpersist_rdd_ids(sc, {ckpt_id})
-            state, ckpt_id = nxt, nxt_id
+            nxt = storage.checkpoint(
+                _maxcos_update_arrow(state, new).filter(
+                    ~F.col("vid").isin([vid for vid, _ in new])
+                )
+            )
+            storage.free(state)
+            state = nxt
         return seeds
     finally:
-        _unpersist_rdd_ids(sc, {ckpt_id})
+        storage.free(state)
 
 
 def kmeans_train(
@@ -954,11 +930,10 @@ def _dup_pairs_grouped(
         return assigned.groupBy("cell").applyInPandas(score, out_schema)
     # the counts pre-pass and the main pass both consume `assigned`; an
     # uncached assignment (a full N*C*dim mapInArrow scan) would execute
-    # TWICE.  Cache it for the pair of passes; release the previous
-    # call's cache so long-lived sessions hold at most one.
-    release_assign_caches()
-    assigned = assigned.persist()
-    _ASSIGN_CACHE.append(assigned)
+    # TWICE (review r5 finding).  Cache it for the pair of passes in a
+    # storage slot, which frees the previous call's cache, so long-lived
+    # sessions hold at most one; storage.release() frees the last.
+    assigned = storage.hold(assigned, slot="ivf_assign").persist()
     counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("m"))
     salted = _salted_subblocks(assigned, counts, max_cell)
     return salted.groupBy("cell", "lo", "hi").applyInPandas(score, out_schema)

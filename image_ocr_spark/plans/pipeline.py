@@ -42,7 +42,6 @@ def extract_pages(
     pages: DataFrame,
     num_partitions: int | None = None,
     engine: str = "auto",
-    salt: bool = True,
 ) -> DataFrame:
     """pages(url, html[, doc_id]) -> one extraction row per url.
 
@@ -53,12 +52,9 @@ def extract_pages(
 
     ``engine`` is the pipeline-level strategy switch (ref set_engine,
     pipeline.py:120-146): 'auto' picks per row by magic bytes, a named
-    engine forces it with per-row registry fallback.  ``salt=False``
-    bypasses the skew-defusing repartition — ONLY for the bench's
-    skew-evidence mode; production always salts.
+    engine forces it with per-row registry fallback.
     """
-    if salt:
-        pages = salt_repartition(pages, num_partitions)
+    pages = salt_repartition(pages, num_partitions)
     packed = tokenize_packed(pages, engine=engine)  # one row per doc
     per_url = extract_text_packed(packed)  # per-row exprs, NO shuffle
     return classify_df(per_url, "text")

@@ -18,7 +18,7 @@ to lag/lead window functions in Spark (SURVEY.md §2.5).
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 from .normalize import clean_text
 
@@ -71,9 +71,3 @@ def extract_main_text(nodes: List[Dict]) -> str:
     keep = set(select_content(nodes))
     lines = [n["text"] for n in nodes if n["node_id"] in keep]
     return clean_text("\n".join(lines))
-
-
-def extract_title(nodes: List[Dict]) -> Optional[str]:
-    from .htmltok import page_title
-
-    return page_title(nodes)

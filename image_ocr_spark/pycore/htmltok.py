@@ -100,12 +100,6 @@ def decode_html(raw: bytes) -> str:
     return raw.decode(sniff_charset(raw), errors="replace")
 
 
-def _collapse(text: str) -> str:
-    # ' '.join(split()) == re.sub(r'\s+',' ',text).strip(): str.split() with
-    # no args splits on the same Unicode whitespace class and drops edges
-    return " ".join(text.split())
-
-
 def scan_html_cols(raw: bytes) -> tuple:
     """Raw page bytes -> parallel node columns
     ``(tag_class, text, n_chars, n_link_chars, n_words)`` (node_id is the

@@ -61,7 +61,7 @@ def test_clean_text_guard_on_control_chars(spark):
         [(f"u{i}", i, h) for i, h in enumerate(htmls)],
         "url string, doc_id long, html binary",
     )
-    rows = extract_pages(pages, salt=False).collect()
+    rows = extract_pages(pages).collect()
     _assert_matches_pycore(rows, {f"u{i}": h for i, h in enumerate(htmls)})
     # the chain actually fired: control bytes are gone from every text
     texts = [r.text for r in rows]

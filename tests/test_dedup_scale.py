@@ -202,21 +202,19 @@ def test_dedup_components_frees_all_intermediate_storage(spark):
     freed (the r03 leak unpersisted a projection of the cached plan, which
     Spark's CacheManager does not match, leaking one O(N) relation per
     round)."""
-    from image_ocr_spark.operators.dedup import (
-        _persistent_rdd_ids,
-        dedup_components,
-    )
+    from image_ocr_spark.operators import storage
+    from image_ocr_spark.operators.dedup import dedup_components
 
     sc = spark.sparkContext
     spark.catalog.clearCache()
-    before = _persistent_rdd_ids(sc)
+    before = storage.persisted_ids(sc)
     n = 30  # long enough to cross a checkpoint_interval boundary
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     ids = spark.createDataFrame([(i,) for i in range(n)], "id long")
     result = dedup_components(pairs, ids)
-    leftover = _persistent_rdd_ids(sc) - before
+    leftover = storage.persisted_ids(sc) - before
     # the result's lineage-free checkpoint is the ONLY new storage
     assert len(leftover) <= 1, f"leaked cached relations: {leftover}"
     assert {r.id: r.cluster_id for r in result.collect()} == {
@@ -420,32 +418,24 @@ def test_dedup_substrings_shuffle_shape(spark, documents):
 
 
 def test_checkpoint_scope_releases_without_explicit_calls(spark):
-    """checkpoint_scope (r06, VERDICT #8): running the iterative-loop
-    operators inside the scope releases their checkpoint storage on exit
-    with NO explicit release_* call — and storage registered before the
-    scope is untouched."""
+    """storage.scope(): running the iterative-loop operators inside the
+    scope frees their checkpoint storage on exit with NO explicit release
+    call — and storage held before the scope is untouched."""
     from pyspark.sql import functions as F
 
-    from image_ocr_spark.operators.dedup import (
-        checkpoint_scope,
-        dedup_components,
-    )
+    from image_ocr_spark.operators import storage
+    from image_ocr_spark.operators.dedup import dedup_components
     from image_ocr_spark.operators.linkgraph import host_rank
 
-    def persisted():
-        return {
-            int(k)
-            for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-        }
-
+    sc = spark.sparkContext
     ids = spark.range(60).select(F.col("id"))
     pairs = spark.range(30).select(
         F.col("id").alias("id_a"), (F.col("id") + 30).alias("id_b")
     )
     # pre-scope checkpoint: must SURVIVE the scope exit
     outside = dedup_components(pairs, ids).localCheckpoint(eager=True)
-    base = persisted()
-    with checkpoint_scope(spark):
+    base = storage.persisted_ids(sc)
+    with storage.scope():
         edges = spark.range(40).select(
             F.concat(F.lit("h"), (F.col("id") % 5).cast("string")).alias("src_host"),
             F.concat(F.lit("h"), ((F.col("id") + 1) % 5).cast("string")).alias("dst_host"),
@@ -453,39 +443,72 @@ def test_checkpoint_scope_releases_without_explicit_calls(spark):
         inner_cc = dedup_components(pairs, ids).collect()
         inner_rank = host_rank(edges, rounds=3).collect()
         assert len(inner_cc) == 60 and len(inner_rank) == 5
-        assert persisted() - base, "scope should have registered storage"
-    after = persisted()
+        assert storage.persisted_ids(sc) - base, "scope should have held storage"
+    after = storage.persisted_ids(sc)
     assert after - base == set(), f"scope leaked storage: {after - base}"
     assert outside.count() == 60  # pre-scope checkpoint still usable
-    from image_ocr_spark.operators.dedup import release_component_checkpoints
-
-    release_component_checkpoints(spark)
+    storage.release()
 
 
-def test_no_cached_relation_leaks_after_module(spark):
-    """Ungated storage census (VERDICT r04 item 9): after this module's
-    dedup battery (the default suite's heaviest persist user), releasing
-    the operator-owned caches must leave at most the entry module's
-    per-(session, sf) extraction caches behind.  Runs in every CI pass —
-    a projection-unpersist leak like r03's dedup_components bug fails
-    here even when the env-gated sf0.1/sf1.0 stress tiers don't run.
-    Defined last in the file: pytest executes module tests in definition
-    order, so the census sees the whole battery's residue."""
-    from image_ocr_spark.operators.dedup import (
-        release_component_checkpoints,
-        release_sig_caches,
+def test_ngram_signature_slot_holds_one_call(spark):
+    """The one-slot rule: each ngram_jaccard_pairs call frees the previous
+    call's signature cache, so calls in a row hold exactly ONE new
+    relation — for a repeated plan (whose cache must not be freed with the
+    previous holder's) and for a different one; storage.release() frees
+    it."""
+    from image_ocr_spark.operators import storage
+
+    sc = spark.sparkContext
+    storage.release()
+    start = storage.persisted_ids(sc)
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon w{i % 7} zeta eta") for i in range(20)],
+        "doc_id long, text string",
     )
-    from image_ocr_spark.operators.similarity import release_assign_caches
+    for n in (3, 3, 2):
+        assert ngram_jaccard_pairs(docs, n=n).collect()
+        after = storage.persisted_ids(sc)
+        assert start <= after and len(after - start) == 1, (n, start, after)
+    storage.release()
+    assert storage.persisted_ids(sc) == start
+
+
+def test_no_cached_relation_leaks_after_module(spark, documents):
+    """Ungated storage census (VERDICT r04 item 9): after every operator
+    that holds storage past its return — dedup_components, host_rank,
+    ngram_jaccard_pairs and embedding_dup_pairs — plus the rest of this
+    module's dedup battery, ONE storage.release() must leave at most the
+    entry module's per-(session, sf) extraction caches behind.  Runs in
+    every CI pass — a projection-unpersist leak like r03's
+    dedup_components bug fails here even when the env-gated sf0.1/sf1.0
+    stress tiers don't run."""
+    from image_ocr_spark.operators import storage
+    from image_ocr_spark.operators.dedup import dedup_components
+    from image_ocr_spark.operators.linkgraph import host_rank
+    from image_ocr_spark.operators.similarity import embedding_dup_pairs
+    from tests.conftest import SF_DIR
 
     import __spark_entry__ as e
 
-    release_sig_caches()
-    release_component_checkpoints(spark)
-    release_assign_caches()
+    ids = spark.range(40).select(F.col("id"))
+    pairs = spark.range(20).select(
+        F.col("id").alias("id_a"), (F.col("id") + 20).alias("id_b")
+    )
+    assert dedup_components(pairs, ids).count() == 40
+    edges = spark.range(40).select(
+        F.concat(F.lit("h"), (F.col("id") % 5).cast("string")).alias("src_host"),
+        F.concat(F.lit("h"), ((F.col("id") + 1) % 5).cast("string")).alias("dst_host"),
+    )
+    assert host_rank(edges, rounds=2).count() == 5
+    ngram_jaccard_pairs(documents.select("doc_id", "text").limit(50)).count()
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(200)
+    embedding_dup_pairs(emb, num_centroids=4).count()
+
+    storage.release()
     e.clear_extract_cache()
-    leftover = len(spark.sparkContext._jsc.getPersistentRDDs())
+    leftover = len(storage.persisted_ids(spark.sparkContext))
     assert leftover <= 2, (
-        f"{leftover} persisted RDDs remain after cache release — "
+        f"{leftover} persisted RDDs remain after storage.release() — "
         "an operator is leaking storage"
     )
 

@@ -226,3 +226,55 @@ def test_fdct_numpy_matches_naive_on_fixture_cycle():
     finally:
         J._np = orig
     assert fast == slow
+
+
+# JPEG Annex K.1 luminance quantization table, raster order
+STD_LUMA = [
+    16, 11, 10, 16, 24, 40, 51, 61,
+    12, 12, 14, 19, 26, 58, 60, 55,
+    14, 13, 16, 24, 40, 57, 69, 56,
+    14, 17, 22, 29, 51, 87, 80, 62,
+    18, 22, 37, 56, 68, 109, 103, 77,
+    24, 35, 55, 64, 81, 104, 113, 92,
+    49, 64, 78, 87, 103, 121, 120, 101,
+    72, 92, 95, 98, 112, 100, 103, 99,
+]
+
+
+def test_fdct_numpy_matches_fallback_on_random_blocks():
+    """Beyond the fixture domain: seeded random level-shifted 8x8 blocks
+    under the standard luma table quantize to the same coefficients on
+    the numpy path and on the no-numpy fallback, except where the
+    unrounded quotient lies within 1e-9 of a rounding boundary (k + 0.5),
+    where the two float summation orders may round apart.  The quotient
+    is taken from an exactly-summed (math.fsum) third evaluation."""
+    import math
+
+    import image_ocr_spark.pycore.jpegdec as J
+
+    rng = random.Random(4)
+    blocks = [[rng.randint(-128, 127) for _ in range(64)] for _ in range(400)]
+    orig = J._np
+    assert orig is not None  # the fast path must be the one compared
+    fast = [J._fdct_quant(b, STD_LUMA) for b in blocks]
+    try:
+        J._np = None
+        slow = [J._fdct_quant(b, STD_LUMA) for b in blocks]
+    finally:
+        J._np = orig
+    compared = skipped = 0
+    for b, f, s in zip(blocks, fast, slow):
+        for k, z in enumerate(J.ZIGZAG):
+            r, c = divmod(z, 8)
+            acc = math.fsum(
+                b[y * 8 + x] * J._COS[y][r] * J._COS[x][c]
+                for y in range(8)
+                for x in range(8)
+            )
+            q = abs(0.25 * J._C[r] * J._C[c] * acc / STD_LUMA[z])
+            if abs(q - math.floor(q) - 0.5) < 1e-9:
+                skipped += 1
+                continue
+            compared += 1
+            assert f[k] == s[k], (b, k, f[k], s[k])
+    assert compared > 0 and skipped < 0.01 * (compared + skipped), skipped

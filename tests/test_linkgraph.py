@@ -12,12 +12,12 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from image_ocr_spark.operators import storage
 from image_ocr_spark.operators.linkgraph import (
     DEFAULT_DAMPING_MILLI,
     RANK_SCALE,
     extract_links,
     host_rank,
-    release_rank_checkpoints,
     resolve_edges,
 )
 from image_ocr_spark.pycore.links import find_hrefs
@@ -241,22 +241,20 @@ def test_host_rank_matches_unrolled_oracle(spark):
     ranks = [r for _, r in got]
     assert len(set(ranks)) > 1  # non-degenerate: hosts differentiate
     assert all(r > 0 for r in ranks)
-    release_rank_checkpoints(spark)
+    storage.release()
 
 
 def test_host_rank_releases_intermediate_storage(spark):
     """After the loop only the FINAL rank checkpoint is held; after the
     release call, nothing of ours remains (storage-census discipline)."""
     sc = spark.sparkContext
-    before = {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    before = storage.persisted_ids(sc)
     r = host_rank(_edges(spark), rounds=3)
     r.count()
-    after = {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+    after = storage.persisted_ids(sc)
     assert len(after - before) == 1  # the final checkpoint, nothing else
-    release_rank_checkpoints(spark)
-    assert {
-        int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()
-    } - before == set()
+    storage.release()
+    assert storage.persisted_ids(sc) - before == set()
 
 
 def test_pages_to_rank_end_to_end(spark, documents):
@@ -269,7 +267,7 @@ def test_pages_to_rank_end_to_end(spark, documents):
     ranks = host_rank(edges, rounds=2).collect()
     assert len(ranks) > 0
     assert all(r.rank > 0 for r in ranks)
-    release_rank_checkpoints(spark)
+    storage.release()
 
 
 # ----------------------------------------------------------- anchor text

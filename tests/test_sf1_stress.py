@@ -18,6 +18,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from image_ocr_spark.operators import storage
 
 SRC_DIR = "/root/testdata/sf0.1"
 SF1_DIR = os.path.join(
@@ -229,7 +230,6 @@ def test_host_rank_at_sf1(spark, sf1, duck):
         DEFAULT_DAMPING_MILLI,
         RANK_SCALE,
         host_rank,
-        release_rank_checkpoints,
     )
 
     hosts_n, rounds = 1009, 6
@@ -256,7 +256,7 @@ def test_host_rank_at_sf1(spark, sf1, duck):
         (r.host, r.rank) for r in host_rank(edges, rounds=rounds).collect()
     )
     spark_s = time.time() - t0
-    release_rank_checkpoints(spark)
+    storage.release()
 
     base = ((1000 - DEFAULT_DAMPING_MILLI) * RANK_SCALE) // 1000
     sql = f"""
@@ -357,22 +357,13 @@ def test_no_cached_relation_leaks_after_battery(spark):
     extraction caches the entry module owns — a leak like r03's
     dedup_components projection-unpersist would show up here as unbounded
     growth."""
-    from image_ocr_spark.operators.dedup import (
-        release_component_checkpoints,
-        release_sig_caches,
-    )
-    from image_ocr_spark.operators.similarity import release_assign_caches
-
     import __spark_entry__ as e
 
-    release_sig_caches()
-    release_component_checkpoints(spark)
-    release_assign_caches()
+    storage.release()
     e.clear_extract_cache()
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    leftover = len(jmap)
+    leftover = len(storage.persisted_ids(spark.sparkContext))
     assert leftover <= 2, (
-        f"{leftover} persisted RDDs remain after cache release — "
+        f"{leftover} persisted RDDs remain after storage.release() — "
         "an operator is leaking storage"
     )
 
