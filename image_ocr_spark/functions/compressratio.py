@@ -20,10 +20,9 @@ the Arrow boundary carries a few ints per row.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+
+from ..operators.rowmap import map_rows
 
 LEVEL = 6  # zlib default; pinned so the ratio is reproducible
 
@@ -46,23 +45,7 @@ def compression_ratio(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, raw_bytes, deflate_bytes, ratio_milli) per document."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            ids = b.column(0).to_pylist()
-            texts = b.column(1).to_pylist()
-            stats = [compress_stats(t) for t in texts]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array([s[0] for s in stats], pa.int64()),
-                    pa.array([s[1] for s in stats], pa.int64()),
-                    pa.array([s[2] for s in stats], pa.int64()),
-                ],
-                ["doc_id", "raw_bytes", "deflate_bytes", "ratio_milli"],
-            )
-
     rows = docs.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
-    return rows.mapInArrow(run, RATIO_DDL)
+    return map_rows(rows, lambda i, t: [(i, *compress_stats(t))], RATIO_DDL)

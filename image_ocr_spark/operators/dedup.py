@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
+from image_ocr_spark.operators.rowmap import map_rows
 
 # 32-bit token/shingle hash, identical in Spark and DuckDB:
 #   Spark : conv(substring(md5(s), 1, 8), 16, 10)::long
@@ -412,6 +413,14 @@ def _np():
     return np
 
 
+def _id_text(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, t) — the two columns every signature pass reads; null text is ''."""
+    return docs.select(
+        F.col(id_col).alias("id"),
+        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
+    )
+
+
 def _shingle_hash_list(text: str, n: int) -> list:
     """Distinct n-gram shingle md5-prefix hashes (first-occurrence order)."""
     import hashlib
@@ -436,22 +445,11 @@ def shingle_hashes_arrow(
 ) -> DataFrame:
     """(id, hs array<long>) via mapInArrow: each document's distinct word
     n-gram shingle hashes (md5-prefix, first-occurrence order)."""
-    import pyarrow as pa
-
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            hs = [_shingle_hash_list(t, n) for t in texts]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(hs, pa.list_(pa.int64()))], ["id", "hs"]
-            )
-
-    src = docs.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
+    return map_rows(
+        _id_text(docs, id_col, text_col),
+        lambda i, t: [(i, _shingle_hash_list(t, n))],
+        "id long, hs array<long>",
     )
-    return src.mapInArrow(fn, "id long, hs array<long>")
 
 
 def minhash_arrow(
@@ -464,29 +462,15 @@ def minhash_arrow(
     """(id, sig array<long>) via mapInArrow: the MinHash signature, the
     min of each fixed affine permutation (A[i]*h + B[i]) mod P over the
     shingle hashes (numpy broadcast over the permutation matrix)."""
-    import pyarrow as pa
-
     np = _np()
     A = np.array(PERM_A[:num_perm], dtype=np.int64)[:, None]
     B = np.array(PERM_B[:num_perm], dtype=np.int64)[:, None]
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            sigs = []
-            for t in texts:
-                h = np.array(_shingle_hash_list(t, n), dtype=np.int64)
-                sigs.append(((A * h + B) % MERSENNE31).min(axis=1).tolist())
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(sigs, pa.list_(pa.int64()))], ["id", "sig"]
-            )
+    def sig(i, t):
+        h = np.array(_shingle_hash_list(t, n), dtype=np.int64)
+        return [(i, ((A * h + B) % MERSENNE31).min(axis=1).tolist())]
 
-    src = docs.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
-    )
-    return src.mapInArrow(fn, "id long, sig array<long>")
+    return map_rows(_id_text(docs, id_col, text_col), sig, "id long, sig array<long>")
 
 
 def simhash_arrow(
@@ -504,7 +488,9 @@ def simhash_arrow(
     expressions (10k sf0.1 docs, 16 cores) — 60 interpreted aggregate
     folds per row dominate, not the md5.  A per-batch token cache
     dedupes md5 calls (natural-language tokens repeat heavily); it is
-    cleared between batches so worker memory stays bounded."""
+    cleared between batches so worker memory stays bounded.  That cache
+    is batch-scoped state, which is why this pass keeps its own batch
+    loop instead of the per-row rowmap.map_rows."""
     import hashlib
 
     import pyarrow as pa
@@ -537,11 +523,7 @@ def simhash_arrow(
                 [ids, pa.array(fps, pa.int64())], ["id", "fp"]
             )
 
-    src = docs.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
-    )
-    return src.mapInArrow(fn, "id long, fp long")
+    return _id_text(docs, id_col, text_col).mapInArrow(fn, "id long, fp long")
 
 
 def _winnow_list(text: str, k: int, w: int, max_chars: int, powers) -> list:
@@ -579,32 +561,14 @@ def winnow_arrow(
     w: int = WINNOW_W,
     max_chars: int = WINNOW_MAX_CHARS,
 ) -> DataFrame:
-    """(id, fp) exploded winnowed fingerprints via mapInArrow."""
-    import pyarrow as pa
-
+    """(id, fp) exploded winnowed fingerprints, one row per fingerprint."""
     np = _np()
     powers = np.array([pow(POLY_B, j, MERSENNE31) for j in range(k)], dtype=np.int64)
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_id: list = []
-            out_fp: list = []
-            for i, t in zip(ids, texts):
-                fps = _winnow_list(t, k, w, max_chars, powers)
-                out_id.extend([i] * len(fps))
-                out_fp.extend(fps)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, pa.int64()), pa.array(out_fp, pa.int64())],
-                ["id", "fp"],
-            )
+    def fps(i, t):
+        return [(i, fp) for fp in _winnow_list(t, k, w, max_chars, powers)]
 
-    src = docs.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
-    )
-    return src.mapInArrow(fn, "id long, fp long")
+    return map_rows(_id_text(docs, id_col, text_col), fps, "id long, fp long")
 
 
 def dedup_components(

@@ -43,13 +43,11 @@ remain a deterministic total order, which is all a quality prior needs.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
+from image_ocr_spark.operators.rowmap import map_rows
 from image_ocr_spark.pycore.links import find_links
 
 DEFAULT_ROUNDS = 8
@@ -69,28 +67,18 @@ def extract_links(
     (url, html); everything else is pruned before the Python boundary
     (the fat-column discipline of the tokenizer)."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            out_url, out_href, out_text = [], [], []
-            for u, h in zip(urls, htmls):
-                for href, text in find_links(h or b""):
-                    out_url.append(u)
-                    out_href.append(href)
-                    if with_text:
-                        out_text.append(text)
-            cols = [pa.array(out_url, pa.string()), pa.array(out_href, pa.string())]
-            names = ["url", "href"]
-            if with_text:
-                cols.append(pa.array(out_text, pa.string()))
-                names.append("anchor")
-            yield pa.RecordBatch.from_arrays(cols, names)
+    def links(u, h):
+        if with_text:
+            return [(u, href, text) for href, text in find_links(h or b"")]
+        return [(u, href) for href, _ in find_links(h or b"")]
 
     schema = "url string, href string" + (", anchor string" if with_text else "")
-    return pages.select(
-        F.col(url_col).alias("url"), F.col(html_col).alias("html")
-    ).mapInArrow(run, schema)
+    return map_rows(_url_html(pages, url_col, html_col), links, schema)
+
+
+def _url_html(pages: DataFrame, url_col: str, html_col: str) -> DataFrame:
+    """(url, html) — the only columns a per-page pass sends to Python."""
+    return pages.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
 
 
 def _strip_default_port(hostport: Column, scheme: Column) -> Column:
@@ -303,24 +291,10 @@ def robots_flags(
     total."""
     from image_ocr_spark.pycore.robots import page_robots
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            ni, nf = [], []
-            for h in htmls:
-                a, b = page_robots(h or b"")
-                ni.append(a)
-                nf.append(b)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(ni), pa.array(nf)],
-                ["url", "robots_noindex", "robots_nofollow"],
-            )
-
-    return pages.select(
-        F.col(url_col).alias("url"), F.col(html_col).alias("html")
-    ).mapInArrow(
-        run, "url string, robots_noindex boolean, robots_nofollow boolean"
+    return map_rows(
+        _url_html(pages, url_col, html_col),
+        lambda u, h: [(u, *page_robots(h or b""))],
+        "url string, robots_noindex boolean, robots_nofollow boolean",
     )
 
 
@@ -330,21 +304,13 @@ def canonical_urls(
     """(url, canonical) — the page's declared rel=canonical target ('' if
     none).  Same one-Arrow-pass shape as extract_links; pycore
     (pycore/canonical.py) is the single source of truth."""
+    from ..pycore.canonical import canonical_url
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..pycore.canonical import canonical_url
-
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            canon = [canonical_url(h or b"") for h in htmls]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, pa.string()), pa.array(canon, pa.string())],
-                ["url", "canonical"],
-            )
-
-    rows = pages.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
-    return rows.mapInArrow(run, "url string, canonical string")
+    return map_rows(
+        _url_html(pages, url_col, html_col),
+        lambda u, h: [(u, canonical_url(h or b""))],
+        "url string, canonical string",
+    )
 
 
 def canonical_groups(

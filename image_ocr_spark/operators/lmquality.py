@@ -25,10 +25,12 @@ like dedup/ANN, built from the public CCNet/C4 recipe.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from image_ocr_spark.operators.rowmap import map_rows
 
 
 def bigrams_col(toks: Column) -> Column:
@@ -77,8 +79,6 @@ def familiarity_scores(
     gram strings (pass one to reuse a trained model across corpora);
     when None the vocabulary is trained on ``docs`` itself first.
     """
-    import pyarrow as pa
-
     if vocab is None:
         vocab = [
             r.gram
@@ -86,43 +86,26 @@ def familiarity_scores(
         ]
     bc = docs.sparkSession.sparkContext.broadcast(frozenset(vocab))
 
-    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def score(doc_id, t):
+        toks = (t or "").split(" ")
+        n = len(toks) - 1
+        if n <= 0:
+            return [(doc_id, 0, 0, 0)]
         known_set = bc.value
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            n_grams, n_known, fam = [], [], []
-            for t in texts:
-                toks = (t or "").split(" ")
-                n = len(toks) - 1
-                if n <= 0:
-                    n_grams.append(0)
-                    n_known.append(0)
-                    fam.append(0)
-                    continue
-                k = 0
-                prev = toks[0]
-                for nxt in toks[1:]:
-                    if prev + " " + nxt in known_set:
-                        k += 1
-                    prev = nxt
-                n_grams.append(n)
-                n_known.append(k)
-                fam.append((1_000_000 * k) // n)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(n_grams, pa.int64()),
-                    pa.array(n_known, pa.int64()),
-                    pa.array(fam, pa.int64()),
-                ],
-                ["doc_id", "n_grams", "n_known", "familiarity_micro"],
-            )
+        k = 0
+        prev = toks[0]
+        for nxt in toks[1:]:
+            if prev + " " + nxt in known_set:
+                k += 1
+            prev = nxt
+        return [(doc_id, n, k, (1_000_000 * k) // n)]
 
-    return docs.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("t")
-    ).mapInArrow(
-        score, "doc_id long, n_grams long, n_known long, familiarity_micro long"
+    return map_rows(
+        docs.select(
+            F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("t")
+        ),
+        score,
+        "doc_id long, n_grams long, n_known long, familiarity_micro long",
     )
 
 

@@ -1,31 +1,32 @@
 """Multimodal columns: opaque binary payloads + typed metadata + feature
-extraction via Arrow-batched UDFs.
+extraction, one per-row Arrow pass each (operators/rowmap.py).
 
 Two feature paths:
-- extract_pixel_features: REAL decode for baseline PNG via the
-  from-scratch stdlib codec (pycore/pngdec.py) — per-channel means and
-  histogram entropy over actual decoded pixels (VERDICT r03 item 3, the
-  graft of the reference's pixel-level preprocessing,
-  preprocessor.py:81-131);
+- extract_pixel_features: REAL decode of every raster format on the
+  reference's allowlist (main.py:169 — jpg/jpeg/png/bmp/tiff/tif/webp),
+  sniffed by magic bytes in media_pixel_stats: the from-scratch codecs
+  pycore/pngdec.py, pycore/jpegdec.py (baseline), pycore/bmpdec.py,
+  pycore/tiffdec.py (baseline) and pycore/webpdec.py (lossless VP8L),
+  plus lossy VP8 through the gated system-libwebp binding
+  (pycore/vp8sys.py).  Per-channel means and histogram entropy over the
+  decoded pixels — the graft of the reference's pixel-level
+  preprocessing, preprocessor.py:81-131.  Unsupported containers are
+  skipped, never raised;
 - extract_media_features: byte-level histogram features for payloads
-  with no in-sandbox decoder (audio/video).  Every raster format on the
-  reference's allowlist (main.py:169 — jpg/jpeg/png/bmp/tiff/tif/webp)
-  now decodes for real via the from-scratch codecs: pycore/pngdec.py,
-  pycore/jpegdec.py (baseline), pycore/bmpdec.py, pycore/tiffdec.py
-  (baseline), pycore/webpdec.py (lossless VP8L; lossy VP8 is the one
-  documented boundary).  decode_image remains the PIL-gated
-  general-format fallback behind an import-try (the sandbox ships no
-  PIL/cv2/ffmpeg).
+  with no decoder here (audio/video).  decode_image remains the
+  PIL-gated general-format fallback behind an import-try (the sandbox
+  ships no PIL/cv2/ffmpeg).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import List
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from image_ocr_spark.operators.rowmap import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -89,35 +90,15 @@ def byte_histogram_features(raw: bytes, dim: int = FEATURE_DIM) -> List[int]:
     return [(1_000_000 * c) // total for c in counts]
 
 
-def _featurize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    schema = pa.schema(
-        [
-            pa.field("media_id", pa.int64()),
-            pa.field("media_type", pa.string()),
-            pa.field("n_bytes", pa.int32()),
-            pa.field("feature_micro", pa.list_(pa.int64())),
-        ]
-    )
-    for batch in batches:
-        ids = batch.column(0).to_pylist()
-        kinds = batch.column(1).to_pylist()
-        blobs = batch.column(2).to_pylist()
-        feats = [byte_histogram_features(b or b"") for b in blobs]
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ids, pa.int64()),
-                pa.array(kinds, pa.string()),
-                pa.array([len(b or b"") for b in blobs], pa.int32()),
-                pa.array(feats, pa.list_(pa.int64())),
-            ],
-            schema=schema,
-        )
-
-
 def extract_media_features(media: DataFrame) -> DataFrame:
     """media (MEDIA_SCHEMA) -> per-item feature rows via one Arrow boundary."""
-    return media.select("media_id", "media_type", "content").mapInArrow(
-        _featurize, FEATURE_SCHEMA
+
+    def featurize(mid, kind, raw):
+        raw = raw or b""
+        return [(mid, kind, len(raw), byte_histogram_features(raw))]
+
+    return map_rows(
+        media.select("media_id", "media_type", "content"), featurize, FEATURE_SCHEMA
     )
 
 
@@ -139,7 +120,7 @@ def synth_media(docs: DataFrame, bytes_per_item: int = 256) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# real pixel features (from-scratch PNG decode — VERDICT r03 item 3)
+# real pixel features (every allowlisted raster format, sniffed by magic)
 # ---------------------------------------------------------------------------
 
 PIXEL_FEATURE_SCHEMA = (
@@ -239,61 +220,24 @@ def media_pixel_stats(raw: bytes):
     return w, h, ch, mean_micro, int(math.floor(-1000.0 * acc))
 
 
-def png_pixel_features(raw: bytes):
-    """Back-compat alias from the r04 PNG-only path (now sniffing both
-    supported containers)."""
-    return media_pixel_stats(raw)
-
-
-def _pixel_featurize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    schema = pa.schema(
-        [
-            pa.field("media_id", pa.int64()),
-            pa.field("width", pa.int32()),
-            pa.field("height", pa.int32()),
-            pa.field("channels", pa.int32()),
-            pa.field("mean_micro", pa.list_(pa.int64())),
-            pa.field("entropy_milli", pa.int64()),
-        ]
-    )
-    for batch in batches:
-        ids = batch.column(0).to_pylist()
-        blobs = batch.column(1).to_pylist()
-        out = {k: [] for k in ("id", "w", "h", "ch", "mm", "em")}
-        for mid, raw in zip(ids, blobs):
-            try:
-                w, h, ch, mm, em = media_pixel_stats(raw or b"")
-            except ValueError:
-                continue  # non-PNG / unsupported media: skipped, not fatal
-            out["id"].append(mid)
-            out["w"].append(w)
-            out["h"].append(h)
-            out["ch"].append(ch)
-            out["mm"].append(mm)
-            out["em"].append(em)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out["id"], pa.int64()),
-                pa.array(out["w"], pa.int32()),
-                pa.array(out["h"], pa.int32()),
-                pa.array(out["ch"], pa.int32()),
-                pa.array(out["mm"], pa.list_(pa.int64())),
-                pa.array(out["em"], pa.int64()),
-            ],
-            schema=schema,
-        )
-
-
 def extract_pixel_features(media: DataFrame) -> DataFrame:
     """(media_id, width, height, channels, mean_micro, entropy_milli) from
     DECODED pixels via one Arrow boundary — the real-decode upgrade of
     extract_media_features (which reads raw bytes).  PNG, baseline JPEG,
     BMP, baseline TIFF and lossless-WebP (VP8L) rows — the reference's
     whole raster allowlist, main.py:169 — decode for real via the
-    from-scratch codecs; unrecognized containers are skipped
-    (never-raise pipeline policy)."""
-    return media.select("media_id", "content").mapInArrow(
-        _pixel_featurize, PIXEL_FEATURE_SCHEMA
+    from-scratch codecs, lossy WebP via the gated libwebp binding;
+    containers media_pixel_stats rejects are skipped (never-raise
+    pipeline policy)."""
+
+    def featurize(mid, raw):
+        try:
+            return [(mid, *media_pixel_stats(raw or b""))]
+        except ValueError:
+            return []  # unsupported or corrupt container: skipped, not fatal
+
+    return map_rows(
+        media.select("media_id", "content"), featurize, PIXEL_FEATURE_SCHEMA
     )
 
 
@@ -311,41 +255,16 @@ def _synth_pixels(media_id: int):
 def _synth_media_df(
     docs: DataFrame, pixels_fn, encode_fn, id_offset: int = 0
 ) -> DataFrame:
-    """Shared fixture builder for every real-codec format: one mapInArrow
-    pass where ``pixels_fn(media_id) -> (w, h, ch, px)`` is the
+    """Shared fixture builder for every real-codec format: one per-row
+    Arrow pass where ``pixels_fn(media_id) -> (w, h, ch, px)`` is the
     closed-form pixel formula the DuckDB oracle replays and
     ``encode_fn(media_id, w, h, ch, px) -> bytes`` is the from-scratch
     encoder (per-format options — row order, endianness, compression —
     keyed off media_id inside the lambda)."""
-    schema = pa.schema(
-        [
-            pa.field("media_id", pa.int64()),
-            pa.field("media_type", pa.string()),
-            pa.field("content", pa.binary()),
-            pa.field("meta_width", pa.int32()),
-            pa.field("meta_height", pa.int32()),
-        ]
-    )
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs, ws, hs = [], [], []
-            for mid in ids:
-                w, h, ch, px = pixels_fn(mid)
-                blobs.append(encode_fn(mid, w, h, ch, px))
-                ws.append(w)
-                hs.append(h)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(["image"] * len(ids), pa.string()),
-                    pa.array(blobs, pa.binary()),
-                    pa.array(ws, pa.int32()),
-                    pa.array(hs, pa.int32()),
-                ],
-                schema=schema,
-            )
+    def gen(mid):
+        w, h, ch, px = pixels_fn(mid)
+        return [(mid, "image", encode_fn(mid, w, h, ch, px), w, h)]
 
     # Spread ids across the cluster BEFORE the encode pass (r07, guide
     # §2.5 input skew): the docs scan often yields one or few partitions
@@ -356,7 +275,8 @@ def _synth_media_df(
     # hash on media_id keeps the assignment deterministic under retries.
     ids = docs.select((F.col("doc_id") + F.lit(id_offset)).alias("media_id"))
     par = docs.sparkSession.sparkContext.defaultParallelism
-    return ids.repartition(par, F.col("media_id")).mapInArrow(
+    return map_rows(
+        ids.repartition(par, F.col("media_id")),
         gen,
         "media_id long, media_type string, content binary, "
         "meta_width int, meta_height int",

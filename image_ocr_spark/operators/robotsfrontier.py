@@ -17,62 +17,14 @@ lengths, the allow — RFC 9309 §2.2.2 as a single expression.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+
+from image_ocr_spark.operators.rowmap import map_rows
 
 RULES_DDL = (
     "host string, rules array<struct<is_allow: boolean, like_pat: string,"
     " plen: int>>"
 )
-
-_RULES_TYPE = pa.list_(
-    pa.struct(
-        [
-            pa.field("is_allow", pa.bool_()),
-            pa.field("like_pat", pa.string()),
-            pa.field("plen", pa.int32()),
-        ]
-    )
-)
-
-
-def _parse_batches(agent: str, max_rules: int):
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..pycore.robotstxt import parse_robots_txt, select_group, to_like
-
-        schema = pa.schema(
-            [pa.field("host", pa.string()), pa.field("rules", _RULES_TYPE)]
-        )
-        for b in batches:
-            names = b.schema.names
-            hosts = b.column(names.index("host")).to_pylist()
-            txts = b.column(names.index("robots_txt")).to_pylist()
-            rules_col = []
-            for txt in txts:
-                rules = select_group(parse_robots_txt(txt or ""), agent)
-                rules_col.append(
-                    [
-                        {
-                            "is_allow": is_allow,
-                            "like_pat": to_like(pat),
-                            "plen": len(pat),
-                        }
-                        # first max_rules win: every URL of the host pays
-                        # O(|rules|) per verdict, so an adversarial
-                        # million-rule robots.txt must not set that cost
-                        # (real parsers bound the same way — Google stops
-                        # reading at 500 KiB)
-                        for is_allow, pat in rules[:max_rules]
-                    ]
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(hosts, pa.string()), pa.array(rules_col, _RULES_TYPE)],
-                schema=schema,
-            )
-
-    return gen
 
 
 def robots_rules(
@@ -86,10 +38,21 @@ def robots_rules(
     paths pre-compiled to LIKE patterns, capped at ``max_rules`` per host
     (first rules win — the adversarial-robots bound every real parser
     applies).  Scan-stage, zero shuffle; output is host-count-sized."""
+    from ..pycore.robotstxt import parse_robots_txt, select_group, to_like
+
+    def rules(host, txt):
+        group = select_group(parse_robots_txt(txt or ""), agent)
+        # first max_rules win: every URL of the host pays O(|rules|) per
+        # verdict, so an adversarial million-rule robots.txt must not set
+        # that cost (real parsers bound the same way — Google stops
+        # reading at 500 KiB)
+        kept = group[:max_rules]
+        return [(host, [(allow, to_like(pat), len(pat)) for allow, pat in kept])]
+
     rows = robots.select(
         F.col(host_col).alias("host"), F.col(txt_col).alias("robots_txt")
     )
-    return rows.mapInArrow(_parse_batches(agent, max_rules), RULES_DDL)
+    return map_rows(rows, rules, RULES_DDL)
 
 
 def url_path(url: Column) -> Column:
@@ -132,40 +95,6 @@ def apply_robots(
 
 META_DDL = "host string, crawl_delay_milli long, sitemaps array<string>"
 
-_META_SCHEMA = pa.schema(
-    [
-        pa.field("host", pa.string()),
-        pa.field("crawl_delay_milli", pa.int64()),
-        pa.field("sitemaps", pa.list_(pa.string())),
-    ]
-)
-
-
-def _meta_batches(agent: str):
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..pycore.robotstxt import parse_robots_extras, select_crawl_delay
-
-        for b in batches:
-            names = b.schema.names
-            hosts = b.column(names.index("host")).to_pylist()
-            txts = b.column(names.index("robots_txt")).to_pylist()
-            delays, sms = [], []
-            for txt in txts:
-                sitemaps, dmap = parse_robots_extras(txt or "")
-                delays.append(select_crawl_delay(dmap, agent))
-                sms.append(sitemaps)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(hosts, pa.string()),
-                    pa.array(delays, pa.int64()),
-                    pa.array(sms, pa.list_(pa.string())),
-                ],
-                schema=_META_SCHEMA,
-            )
-
-    return gen
-
-
 def robots_host_meta(
     robots: DataFrame,
     agent: str = "*",
@@ -176,59 +105,22 @@ def robots_host_meta(
     discovery table a frontier scheduler joins against.  Scan-stage,
     zero shuffle, host-count-sized output; delay 0 = none declared for
     this crawler."""
+    from ..pycore.robotstxt import parse_robots_extras, select_crawl_delay
+
+    def meta(host, txt):
+        sitemaps, delays = parse_robots_extras(txt or "")
+        return [(host, select_crawl_delay(delays, agent), sitemaps)]
+
     rows = robots.select(
         F.col(host_col).alias("host"), F.col(txt_col).alias("robots_txt")
     )
-    return rows.mapInArrow(_meta_batches(agent), META_DDL)
+    return map_rows(rows, meta, META_DDL)
 
 
 SITEMAP_DDL = (
     "host string, kind string, loc string, lastmod string,"
     " changefreq string, priority_milli long"
 )
-
-
-def _sitemap_batches():
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..pycore.sitemap import parse_sitemap
-
-        schema = pa.schema(
-            [
-                pa.field("host", pa.string()),
-                pa.field("kind", pa.string()),
-                pa.field("loc", pa.string()),
-                pa.field("lastmod", pa.string()),
-                pa.field("changefreq", pa.string()),
-                pa.field("priority_milli", pa.int64()),
-            ]
-        )
-        for b in batches:
-            names = b.schema.names
-            hosts = b.column(names.index("host")).to_pylist()
-            xmls = b.column(names.index("sitemap_xml")).to_pylist()
-            rows = {k: [] for k in schema.names}
-            for host, xml in zip(hosts, xmls):
-                parsed = parse_sitemap(xml or "")
-                for loc, lastmod, freq, prio in parsed["urls"]:
-                    rows["host"].append(host)
-                    rows["kind"].append("url")
-                    rows["loc"].append(loc)
-                    rows["lastmod"].append(lastmod)
-                    rows["changefreq"].append(freq)
-                    rows["priority_milli"].append(prio)
-                for loc, lastmod in parsed["sitemaps"]:
-                    rows["host"].append(host)
-                    rows["kind"].append("sitemap")
-                    rows["loc"].append(loc)
-                    rows["lastmod"].append(lastmod)
-                    rows["changefreq"].append("")
-                    rows["priority_milli"].append(0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(rows[f.name], f.type) for f in schema],
-                schema=schema,
-            )
-
-    return gen
 
 
 def sitemap_entries(
@@ -239,10 +131,22 @@ def sitemap_entries(
     (pycore/sitemap.py single source of truth), zero shuffle; `kind` is
     'url' for page entries, 'sitemap' for index children (crawl those
     next round — the same resumable-frontier shape as WARC segments)."""
+    from ..pycore.sitemap import parse_sitemap
+
+    def entries(host, xml):
+        parsed = parse_sitemap(xml or "")
+        return [
+            (host, "url", loc, lastmod, freq, prio)
+            for loc, lastmod, freq, prio in parsed["urls"]
+        ] + [
+            (host, "sitemap", loc, lastmod, "", 0)
+            for loc, lastmod in parsed["sitemaps"]
+        ]
+
     rows = sitemaps.select(
         F.col(host_col).alias("host"), F.col(xml_col).alias("sitemap_xml")
     )
-    return rows.mapInArrow(_sitemap_batches(), SITEMAP_DDL)
+    return map_rows(rows, entries, SITEMAP_DDL)
 
 
 # ---------------------------------------------------------------------------

@@ -15,13 +15,13 @@ Span rows: (url, start, end, label, value), ordered by (start, label).
 
 from __future__ import annotations
 
-from typing import Iterator
+from operator import itemgetter
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..pycore.extractor import SPAN_PATTERNS
+from .rowmap import map_rows
 
 
 def _spans_for_pattern(text: Column, label: str, pattern: str) -> Column:
@@ -103,18 +103,6 @@ PDF_SPAN_SCHEMA = (
     " y_milli long, size_milli long"
 )
 
-_PDF_SPAN_ARROW = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("span_id", pa.int32()),
-        pa.field("page", pa.int32()),
-        pa.field("text", pa.string()),
-        pa.field("x_milli", pa.int64()),
-        pa.field("y_milli", pa.int64()),
-        pa.field("size_milli", pa.int64()),
-    ]
-)
-
 
 def pdf_layout_spans(
     pages: DataFrame, url_col: str = "url", pdf_col: str = "html"
@@ -128,34 +116,16 @@ def pdf_layout_spans(
     unparseable payloads yield no rows (never-raise policy)."""
     from ..pycore.pdftok import is_pdf, pdf_spans
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            raws = batch.column(1).to_pylist()
-            cols = {name: [] for name in _PDF_SPAN_ARROW.names}
-            for url, raw in zip(urls, raws):
-                raw = raw or b""
-                if not is_pdf(raw):
-                    continue
-                for sp in pdf_spans(raw):
-                    cols["url"].append(url)
-                    cols["span_id"].append(sp["seq"])
-                    cols["page"].append(sp["page"])
-                    cols["text"].append(sp["text"])
-                    cols["x_milli"].append(sp["x_milli"])
-                    cols["y_milli"].append(sp["y_milli"])
-                    cols["size_milli"].append(sp["size_milli"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[f.name], f.type)
-                    for f in _PDF_SPAN_ARROW
-                ],
-                schema=_PDF_SPAN_ARROW,
-            )
+    fields = itemgetter("seq", "page", "text", "x_milli", "y_milli", "size_milli")
 
-    return pages.select(
-        F.col(url_col).alias("url"), F.col(pdf_col).alias("html")
-    ).mapInArrow(run, PDF_SPAN_SCHEMA)
+    def spans(url, raw):
+        raw = raw or b""
+        if not is_pdf(raw):
+            return []
+        return [(url, *fields(sp)) for sp in pdf_spans(raw)]
+
+    rows = pages.select(F.col(url_col).alias("url"), F.col(pdf_col).alias("html"))
+    return map_rows(rows, spans, PDF_SPAN_SCHEMA)
 
 
 def span_right_of_geo(
@@ -236,18 +206,6 @@ PDF_TABLE_SCHEMA = (
     " text string"
 )
 
-_PDF_TABLE_ARROW = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("page", pa.int32()),
-        pa.field("row", pa.int32()),
-        pa.field("col", pa.int32()),
-        pa.field("x_milli", pa.int64()),
-        pa.field("y_milli", pa.int64()),
-        pa.field("text", pa.string()),
-    ]
-)
-
 
 def pdf_table_cells(
     pages: DataFrame,
@@ -262,24 +220,14 @@ def pdf_table_cells(
     pdf_layout_spans; non-PDF / table-free payloads yield no rows."""
     from ..pycore.pdftok import detect_tables, is_pdf, pdf_spans
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            raws = batch.column(1).to_pylist()
-            cols = {name: [] for name in _PDF_TABLE_ARROW.names}
-            for url, raw in zip(urls, raws):
-                raw = raw or b""
-                if not is_pdf(raw):
-                    continue
-                for c in detect_tables(pdf_spans(raw), y_tol_milli, min_rows):
-                    cols["url"].append(url)
-                    for k in ("page", "row", "col", "x_milli", "y_milli", "text"):
-                        cols[k].append(c[k])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _PDF_TABLE_ARROW],
-                schema=_PDF_TABLE_ARROW,
-            )
+    fields = itemgetter("page", "row", "col", "x_milli", "y_milli", "text")
 
-    return pages.select(
-        F.col(url_col).alias("url"), F.col(pdf_col).alias("html")
-    ).mapInArrow(run, PDF_TABLE_SCHEMA)
+    def cells(url, raw):
+        raw = raw or b""
+        if not is_pdf(raw):
+            return []
+        found = detect_tables(pdf_spans(raw), y_tol_milli, min_rows)
+        return [(url, *fields(c)) for c in found]
+
+    rows = pages.select(F.col(url_col).alias("url"), F.col(pdf_col).alias("html"))
+    return map_rows(rows, cells, PDF_TABLE_SCHEMA)

@@ -149,6 +149,9 @@ def _tokenize_packed(
     # array, then ListArray.from_arrays(StructArray.from_arrays(...)).
     # pa.array() on a list-of-dicts hits pyarrow's per-element inference
     # path and was measured at ~2x the cost of the tokenizer itself.
+    # That columnar assembly, plus the zero-copy url/doc_id passthrough,
+    # is why this hot path keeps its own batch loop instead of the
+    # per-row rowmap.map_rows.
     for batch in batches:
         names = batch.schema.names
         # url/doc_id are 1:1 with output rows: pass the Arrow columns

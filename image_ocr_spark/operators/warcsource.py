@@ -33,49 +33,11 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-_RECORD_FIELDS = [
-    pa.field("url", pa.string()),
-    pa.field("warc_ts", pa.int64()),
-    pa.field("content_type", pa.string()),
-    pa.field("payload", pa.binary()),
-]
+from image_ocr_spark.operators.rowmap import map_rows
+
 READ_WARC_SCHEMA = "url string, warc_ts long, content_type string, payload binary"
 WARC_STATS_SCHEMA = "n_records long, n_skipped long, truncated boolean"
 PAGES_TO_WARC_SCHEMA = "chunk binary, n_records long"
-
-
-def _read_batches(n_passthrough: int):
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from image_ocr_spark.pycore.warc import parse_warc
-
-        for b in batches:
-            chunks = b.column(0).to_pylist()
-            urls, tss, cts, payloads = [], [], [], []
-            reps = []  # records per chunk, for passthrough fan-out
-            for chunk in chunks:
-                recs = parse_warc(chunk or b"")["records"]
-                reps.append(len(recs))
-                for rec in recs:
-                    urls.append(rec["url"])
-                    tss.append(rec["warc_ts"])
-                    cts.append(rec["content_type"])
-                    payloads.append(rec["payload"])
-            arrays = [
-                pa.array(urls, pa.string()),
-                pa.array(tss, pa.int64()),
-                pa.array(cts, pa.string()),
-                pa.array(payloads, pa.binary()),
-            ]
-            fields = list(_RECORD_FIELDS)
-            for i in range(n_passthrough):
-                col = b.column(1 + i)
-                vals = col.to_pylist()
-                fanned = [v for v, n in zip(vals, reps) for _ in range(n)]
-                arrays.append(pa.array(fanned, col.type))
-                fields.append(b.schema.field(1 + i))
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
-
-    return gen
 
 
 def read_warc(
@@ -93,47 +55,34 @@ def read_warc(
     records are dropped here (see ``read_warc_stats`` for the quarantine
     counters a production ingest writes to its manifest).
     """
+    from image_ocr_spark.pycore.warc import parse_warc
+
+    def records(chunk, *lineage):
+        return [
+            (r["url"], r["warc_ts"], r["content_type"], r["payload"], *lineage)
+            for r in parse_warc(chunk or b"")["records"]
+        ]
+
     cols = [F.col(chunk_col).alias("chunk")] + [F.col(c) for c in passthrough]
     src = chunks.select(*cols)
     out_schema = READ_WARC_SCHEMA
     for f in src.schema.fields[1:]:
         out_schema += f", {f.name} {f.dataType.simpleString()}"
-    return src.mapInArrow(_read_batches(len(passthrough)), out_schema)
-
-
-def _stats_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from image_ocr_spark.pycore.warc import parse_warc
-
-    schema = pa.schema(
-        [
-            pa.field("n_records", pa.int64()),
-            pa.field("n_skipped", pa.int64()),
-            pa.field("truncated", pa.bool_()),
-        ]
-    )
-    for b in batches:
-        ns, sk, tr = [], [], []
-        for chunk in b.column(0).to_pylist():
-            parsed = parse_warc(chunk or b"")
-            ns.append(len(parsed["records"]))
-            sk.append(parsed["skipped"])
-            tr.append(parsed["truncated"])
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ns, pa.int64()),
-                pa.array(sk, pa.int64()),
-                pa.array(tr, pa.bool_()),
-            ],
-            schema=schema,
-        )
+    return map_rows(src, records, out_schema)
 
 
 def read_warc_stats(chunks: DataFrame, chunk_col: str = "chunk") -> DataFrame:
     """Per-chunk quarantine counters (records parsed / skipped / truncated
     tail) — the ingest-manifest row a resumable 100 TB load persists next
     to each segment (checkpoint.py discipline)."""
-    return chunks.select(F.col(chunk_col).alias("chunk")).mapInArrow(
-        _stats_batches, WARC_STATS_SCHEMA
+    from image_ocr_spark.pycore.warc import parse_warc
+
+    def stats(chunk):
+        parsed = parse_warc(chunk or b"")
+        return [(len(parsed["records"]), parsed["skipped"], parsed["truncated"])]
+
+    return map_rows(
+        chunks.select(F.col(chunk_col).alias("chunk")), stats, WARC_STATS_SCHEMA
     )
 
 

@@ -45,6 +45,32 @@ def test_tokenizer_input_pruned(spark, pages_path):
     assert "warc_ts" not in read_schema and "kind" not in read_schema
 
 
+@pytest.mark.parametrize(
+    "op",
+    [
+        "linkgraph.extract_links",
+        "linkgraph.robots_flags",
+        "linkgraph.canonical_urls",
+        "spans.pdf_layout_spans",
+        "spans.pdf_table_cells",
+    ],
+)
+def test_page_operator_single_arrow_pass(spark, pages_path, op):
+    """Per-page Python operators read only url/html from the scan and run
+    as one MapInArrow in the scan stage: no other column crosses the
+    Arrow boundary and nothing shuffles."""
+    import importlib
+    import re
+
+    module, name = op.split(".")
+    fn = getattr(importlib.import_module(f"image_ocr_spark.operators.{module}"), name)
+    plan = _formatted(fn(spark.read.parquet(pages_path)))
+    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
+    assert re.findall(r"(\w+):", read_schema) == ["url", "html"], read_schema
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert nodes.count("MapInArrow") == 1 and "Exchange" not in nodes, nodes
+
+
 def test_dictionary_join_broadcasts(spark):
     """J6 dictionary-join shape: small dims broadcast, the fact side never
     shuffles (the retired region_customers demo, inlined)."""

@@ -10,7 +10,7 @@ import pytest
 
 from image_ocr_spark.operators.multimodal import (
     _synth_pixels,
-    png_pixel_features,
+    media_pixel_stats,
 )
 from image_ocr_spark.pycore.pngdec import PNG_MAGIC, png_decode, png_encode
 
@@ -55,7 +55,7 @@ def test_pixel_features_closed_form():
     """Feature arithmetic on a hand-computable 1x4 grayscale image."""
     px = bytes([0, 0, 128, 255])
     raw = png_encode(4, 1, 1, px)
-    w, h, ch, mm, em = png_pixel_features(raw)
+    w, h, ch, mm, em = media_pixel_stats(raw)
     assert (w, h, ch) == (4, 1, 1)
     assert mm == [(1_000_000 * (0 + 0 + 128 + 255)) // 4]
     # histogram {0:2, 128:1, 255:1} -> entropy = 1.5 bits -> 1500 milli

@@ -304,11 +304,12 @@ def test_binaryfile_segment_path_matches_chunk_rows(spark, tmp_path):
     .warc.gz segment FILES read via spark.read.format('binaryFile') ->
     read_warc, with the file path fanned onto every record as the
     per-segment lineage key — record-identical to the pre-chunked-rows
-    path over the same bytes."""
-    from image_ocr_spark.operators.warcsource import read_warc
+    path over the same bytes.  An empty and a non-WARC segment sit
+    between the real ones: they yield no records and shift no other
+    segment's lineage."""
+    from image_ocr_spark.operators.warcsource import read_warc, read_warc_stats
 
-    segs = {}
-    for s in range(3):
+    def segment(s):
         recs = [
             build_response_record(
                 f"http://seg{s}.example/p{i}",
@@ -318,8 +319,17 @@ def test_binaryfile_segment_path_matches_chunk_rows(spark, tmp_path):
             )
             for i in range(50)
         ]
-        segs[f"seg{s}.warc.gz"] = build_warc_gz(recs)
-        (tmp_path / f"seg{s}.warc.gz").write_bytes(segs[f"seg{s}.warc.gz"])
+        return build_warc_gz(recs)
+
+    segs = {
+        "seg0.warc.gz": segment(0),
+        "empty.warc.gz": b"",
+        "seg1.warc.gz": segment(1),
+        "junk.warc.gz": b"not a warc segment\r\n" * 40,
+        "seg2.warc.gz": segment(2),
+    }
+    for name, blob in segs.items():
+        (tmp_path / name).write_bytes(blob)
 
     bf = (
         spark.read.format("binaryFile")
@@ -331,9 +341,10 @@ def test_binaryfile_segment_path_matches_chunk_rows(spark, tmp_path):
         (r.url, r.warc_ts, bytes(r.payload)): r.path.rsplit("/", 1)[-1]
         for r in via_files.collect()
     }
+    # one partition in dict order: the empty chunks sit inside one batch
     rows = spark.createDataFrame(
-        [(name, blob) for name, blob in segs.items()], "name string, chunk binary"
-    )
+        list(segs.items()), "name string, chunk binary"
+    ).coalesce(1)
     want = {
         (r.url, r.warc_ts, bytes(r.payload)): r.name
         for r in read_warc(rows, passthrough=("name",)).collect()
@@ -341,6 +352,8 @@ def test_binaryfile_segment_path_matches_chunk_rows(spark, tmp_path):
     assert got == want and len(got) == 150
     # lineage: every record carries ITS OWN segment's path
     assert all(k[0].startswith(f"http://{v.split('.')[0]}") for k, v in got.items())
+    stats = [r.n_records for r in read_warc_stats(rows).collect()]
+    assert stats == [50, 0, 50, 0, 50]
 
 
 @pytest.mark.skipif(
