@@ -5,13 +5,13 @@ classifier.py:218-245).  Occurrence counting uses the substring-length
 identity (len(t) - len(replace(t, kw))) / len(kw) — exact non-overlapping
 count, identical to Python str.count and cheap JVM string ops (no regex,
 stays in whole-stage codegen).  The keyword dictionaries are literal
-expression trees — Catalyst constant-folds the per-keyword constants
-(SURVEY.md §2.3 J6: dictionary "joins" as generated expressions).
+arrays folded by one ``F.aggregate`` per score (SURVEY.md §2.3 J6:
+dictionary "joins" as generated expressions).
 """
 
 from __future__ import annotations
 
-from typing import Dict, List
+from typing import Dict
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,61 +27,16 @@ from ..pycore.classify import (
 from .normalize import fold_alnum_upper
 
 
-def count_occurrences(col: Column, kw: str) -> Column:
-    """Non-overlapping substring count == Python str.count (int)."""
-    kw_len = len(kw)
-    return (F.length(col) - F.length(F.replace(col, F.lit(kw)))) / kw_len
-
-
-def keyword_score_centi(
-    folded: Column, positive_w10: Dict[str, int], negative_w10: Dict[str, int]
-) -> Column:
-    """Integer centi-score: sum w10*(10+3*(cnt-1)) - sum 5*w10, floored at 0."""
-    score: Column = F.lit(0)
-    for kw, w10 in positive_w10.items():
-        cnt = count_occurrences(folded, kw.upper()).cast("long")
-        score = score + F.when(cnt > 0, w10 * (10 + 3 * (cnt - 1))).otherwise(0)
-    for kw, w10 in negative_w10.items():
-        hit = F.contains(folded, F.lit(kw.upper()))
-        score = score - F.when(hit, F.lit(5 * w10)).otherwise(0)
-    return F.greatest(F.lit(0).cast("long"), score.cast("long"))
-
-
-def classify_columns(text_col: Column) -> List[Column]:
-    """[receipt_score_centi, invoice_score_centi, doc_type] columns.
-
-    Argmax + UNKNOWN threshold (conf < 0.3 <=> 100*top < 30*total), exactly
-    as pycore.classify.classify_doc (ref classifier.py:128,187-199).
-
-    NOTE: ``text_col`` is referenced ~130x in the generated tree (once per
-    keyword op).  Pass a plain column reference — materialize any derived
-    expression first (see classify_df) or Catalyst planning time explodes.
-    """
-    folded = fold_alnum_upper(text_col)
-    r = keyword_score_centi(folded, RECEIPT_KEYWORDS_W10, RECEIPT_NEGATIVE_W10)
-    i = keyword_score_centi(folded, INVOICE_KEYWORDS_W10, INVOICE_NEGATIVE_W10)
-    total = r + i
-    top = F.when(r > i, r).otherwise(i)
-    winner = F.when(r > i, F.lit("receipt")).otherwise(F.lit("invoice"))
-    doc_type = F.when(
-        (total == 0) | (THRESHOLD_DEN * top < THRESHOLD_NUM * total),
-        F.lit("unknown"),
-    ).otherwise(winner)
-    return [
-        r.alias("receipt_score_centi"),
-        i.alias("invoice_score_centi"),
-        doc_type.alias("doc_type"),
-    ]
-
-
 def keyword_score_agg(folded: Column, positive_w10: Dict[str, int],
                       negative_w10: Dict[str, int]) -> Column:
-    """keyword_score_centi as ONE F.aggregate over a literal keyword array.
+    """Integer centi-score as ONE F.aggregate over a literal keyword array:
+    sum w10*(10+3*(cnt-1)) over positive keywords minus sum 5*w10 over
+    negative keywords present, floored at 0 (pycore.classify.keyword_score_centi).
 
-    Same integer semantics as keyword_score_centi, but the Catalyst tree is
-    ~130 flat literals + one lambda body instead of ~1000 nested nodes —
-    2.5x faster planning AND ~1.7x faster execution (measured on 500k docs;
-    the dictionary stays a constant-folded literal, SURVEY §2.3 J6).
+    The Catalyst tree is ~130 flat literals + one lambda body rather than
+    one nested term per keyword (~1000 nodes): measured 2.5x faster
+    planning and ~1.7x faster execution on 500k docs; the dictionary stays
+    a constant-folded literal (SURVEY §2.3 J6).
     """
     def lit_arr(d: Dict[str, int]) -> Column:
         return F.array(

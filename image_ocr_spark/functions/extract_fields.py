@@ -1,99 +1,96 @@
 """Receipt/invoice field extraction as native Spark SQL (SURVEY §2.8 F4-F20).
 
-DataFrame-level operators over (key, text) rows.  Line-scoped semantics
-("first line containing keyword K with a positive amount") are expressed as
+Every field is a per-row expression: one output row per input row, no
+group-by-document, join or window.  The text is split into lines ONCE in
+its own projection, and line-scoped semantics ("first line containing
+keyword K with a positive amount") are higher-order array expressions
+over that materialized column:
 
-    posexplode(split(text, '\\n'))  ->  per-line exprs  ->  min_by(value, pos)
+    get(filter(transform(lines, l -> when(cond(l), value(l))), keep), 0)
 
-— one explode + one hash aggregation per document set, keyed identically to
-the upstream rollup so no extra exchange is introduced.  Document-scoped
-regexes (date/phone/tax) are plain column expressions computed pre-explode.
+Receipt items stop at the first total line that is not a 小計 line: an
+``array_position`` over the per-line break flags bounds a ``slice`` of
+the lines.  Document-scoped regexes (date/phone/tax/bank) are plain
+column expressions over the text.
 
-Every expression mirrors its pycore.fields twin; the e2e corpus test asserts
-exact agreement row by row.
+``receipt_fields`` / ``invoice_fields`` return the expressions by name so
+that ``plans.results.assemble_results`` can project both field sets side
+by side; ``extract_*_fields_df`` are the DataFrame entry points.
+
+Every expression mirrors its pycore.fields twin; tests/test_fields_spark.py
+asserts exact agreement row by row.
 """
 
 from __future__ import annotations
 
-from typing import List, Sequence, Tuple
+from typing import Callable, Dict, List, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..pycore import fields as pf
-from .normalize import normalize_amount, era_base, fold_digits
+from .normalize import _extract_int, _fmt_ymd, era_base, normalize_amount
 
 # ---------------------------------------------------------------------------
 # document-scoped scalar builders
 # ---------------------------------------------------------------------------
+#
+# Several builders also run per line inside ``transform`` lambdas, whose
+# bodies are evaluated without codegen's common-subexpression elimination:
+# a subexpression read twice is computed twice.  ``_let`` binds a value to
+# a lambda variable so each regex over a line runs once.
 
 
-def _extract_int(col: Column, pattern: str, group: int) -> Column:
-    g = F.regexp_extract(col, pattern, group)
-    return F.when(g != "", g).cast("int")
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(v)`` with ``v`` = ``value`` evaluated once."""
+    return F.get(F.transform(F.array(value), body), 0)
 
 
-def _is_valid_ymd(y: Column, m: Column, d: Column) -> Column:
-    from .normalize import _is_valid_ymd as impl
+def _group(col: Column, pattern: str, k: int = 1) -> Column:
+    """Group ``k`` of the first match of ``pattern``; NULL when empty."""
+    return _let(F.regexp_extract(col, pattern, k), lambda g: F.when(g != "", g))
 
-    return impl(y, m, d)
+
+def _amount(col: Column, pattern: str) -> Column:
+    """normalize_amount of group 1 of the first match of ``pattern``."""
+    return _let(
+        F.regexp_extract(col, pattern, 1),
+        lambda g: normalize_amount(F.when(g != "", g)),
+    )
 
 
-def _fmt_valid(y: Column, m: Column, d: Column) -> Column:
-    return F.when(_is_valid_ymd(y, m, d), F.format_string("%04d-%02d-%02d", y, m, d))
+def _valid_date(y: Column, m: Column, d: Column) -> Column:
+    ymd = F.struct(y.alias("y"), m.alias("m"), d.alias("d"))
+    return _let(ymd, lambda v: _fmt_ymd(v["y"], v["m"], v["d"]))
+
+
+def _dates(col: Column) -> List[tuple]:
+    """(validated ISO date, pattern) per date pattern, in western > era >
+    compact priority, NO fullwidth fold (mirrors pycore.fields.extract_date
+    / ref receipt.py:96-104,190-199)."""
+
+    def ymd(pattern: str, year: Column, m: int, d: int) -> tuple:
+        month, day = _extract_int(col, pattern, m), _extract_int(col, pattern, d)
+        return _valid_date(year, month, day), pattern
+
+    era_year = era_base(F.regexp_extract(col, pf.P_DATE_ERA, 1)) + _extract_int(
+        col, pf.P_DATE_ERA, 2
+    )
+    return [
+        ymd(pf.P_DATE_WESTERN, _extract_int(col, pf.P_DATE_WESTERN, 1), 2, 3),
+        ymd(pf.P_DATE_ERA, era_year, 3, 4),
+        ymd(pf.P_DATE_COMPACT, _extract_int(col, pf.P_DATE_COMPACT, 1), 2, 3),
+    ]
 
 
 def date_in_text(col: Column) -> Column:
-    """First date -> ISO; western > era > compact priority, NO fullwidth fold
-    (mirrors pycore.fields.extract_date / ref receipt.py:96-104,190-199)."""
-    western = _fmt_valid(
-        _extract_int(col, pf.P_DATE_WESTERN, 1),
-        _extract_int(col, pf.P_DATE_WESTERN, 2),
-        _extract_int(col, pf.P_DATE_WESTERN, 3),
-    )
-    era = _fmt_valid(
-        era_base(F.regexp_extract(col, pf.P_DATE_ERA, 1)) + _extract_int(col, pf.P_DATE_ERA, 2),
-        _extract_int(col, pf.P_DATE_ERA, 3),
-        _extract_int(col, pf.P_DATE_ERA, 4),
-    )
-    compact = _fmt_valid(
-        _extract_int(col, pf.P_DATE_COMPACT, 1),
-        _extract_int(col, pf.P_DATE_COMPACT, 2),
-        _extract_int(col, pf.P_DATE_COMPACT, 3),
-    )
-    return F.coalesce(western, era, compact)
-
-
-def date_raw_in_text(col: Column) -> Column:
-    """Raw matched date string of the winning pattern."""
-    w_ok = _fmt_valid(
-        _extract_int(col, pf.P_DATE_WESTERN, 1),
-        _extract_int(col, pf.P_DATE_WESTERN, 2),
-        _extract_int(col, pf.P_DATE_WESTERN, 3),
-    )
-    e_ok = _fmt_valid(
-        era_base(F.regexp_extract(col, pf.P_DATE_ERA, 1)) + _extract_int(col, pf.P_DATE_ERA, 2),
-        _extract_int(col, pf.P_DATE_ERA, 3),
-        _extract_int(col, pf.P_DATE_ERA, 4),
-    )
-    return F.coalesce(
-        F.when(w_ok.isNotNull(), F.regexp_extract(col, pf.P_DATE_WESTERN, 0)),
-        F.when(e_ok.isNotNull(), F.regexp_extract(col, pf.P_DATE_ERA, 0)),
-        F.when(
-            _fmt_valid(
-                _extract_int(col, pf.P_DATE_COMPACT, 1),
-                _extract_int(col, pf.P_DATE_COMPACT, 2),
-                _extract_int(col, pf.P_DATE_COMPACT, 3),
-            ).isNotNull(),
-            F.regexp_extract(col, pf.P_DATE_COMPACT, 0),
-        ),
-    )
+    """First valid date -> ISO."""
+    return F.coalesce(*[iso for iso, _ in _dates(col)])
 
 
 def first_amount(col: Column) -> Column:
     """First money token (ref receipt.py:263-269)."""
-    g = F.regexp_extract(col, pf.P_AMOUNT_ANY, 1)
-    return normalize_amount(F.when(g != "", g))
+    return _amount(col, pf.P_AMOUNT_ANY)
 
 
 def phone_in_text(col: Column) -> Column:
@@ -114,29 +111,20 @@ def payment_method(col: Column) -> Column:
     return F.coalesce(*branches)
 
 
-def tax_rate(col: Column, pattern: str) -> Column:
-    g = F.regexp_extract(col, pattern, 1)
-    return normalize_amount(F.when(g != "", g))
-
-
 def invoice_number(col: Column) -> Column:
     """Priority regex chain (ref invoice.py:258-272)."""
-    branches = []
-    for pat in pf.P_INVOICE_NO:
-        g = F.regexp_extract(col, pat, 1)
-        branches.append(F.when(g != "", g))
-    return F.coalesce(*branches)
+    return F.coalesce(*[_group(col, pat) for pat in pf.P_INVOICE_NO])
 
 
-def bank_columns(col: Column) -> List[Column]:
-    acct1 = F.regexp_extract(col, pf.P_ACCT_NO, 1)
-    acct2 = F.regexp_extract(col, pf.P_ACCT_NO, 2)
-    return [
-        F.when(F.regexp_extract(col, pf.P_BANK, 1) != "", F.regexp_extract(col, pf.P_BANK, 1)).alias("bank_name"),
-        F.when(F.regexp_extract(col, pf.P_BRANCH, 1) != "", F.regexp_extract(col, pf.P_BRANCH, 1)).alias("branch_name"),
-        F.when(F.regexp_extract(col, pf.P_ACCT_TYPE, 1) != "", F.regexp_extract(col, pf.P_ACCT_TYPE, 1)).alias("account_type"),
-        F.coalesce(F.when(acct1 != "", acct1), F.when(acct2 != "", acct2)).alias("account_number"),
-    ]
+def bank_columns(col: Column) -> Dict[str, Column]:
+    return {
+        "bank_name": _group(col, pf.P_BANK),
+        "branch_name": _group(col, pf.P_BRANCH),
+        "account_type": _group(col, pf.P_ACCT_TYPE),
+        "account_number": F.coalesce(
+            _group(col, pf.P_ACCT_NO, 1), _group(col, pf.P_ACCT_NO, 2)
+        ),
+    }
 
 
 def _contains_any(col: Column, keywords: Sequence[str]) -> Column:
@@ -147,134 +135,59 @@ def _contains_any(col: Column, keywords: Sequence[str]) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# line-scoped: item parse (ref receipt.py:360-400)
+# line-scoped builders (evaluated per line inside a lambda)
 # ---------------------------------------------------------------------------
-
-ITEM_SCHEMA = "struct<name:string, price:bigint, quantity:int, reduced_tax:boolean>"
 
 
 def parse_item_line(line: Column) -> Column:
-    """line -> item struct or NULL — exact mirror of pycore.parse_item_line."""
-    reduced = _contains_any(line, pf.REDUCED_TAX_MARKERS)
-    eol_g = F.regexp_extract(line, pf.P_AMOUNT_EOL, 1)
-    sym_g = F.regexp_extract(line, pf.P_AMOUNT_SYM, 1)
-    amount_str = F.when(eol_g != "", eol_g).otherwise(F.when(sym_g != "", sym_g))
-    price = normalize_amount(amount_str)
-    # name = prefix before the matched amount (match start semantics)
-    name_eol = F.regexp_replace(line, pf.P_AMOUNT_EOL, "")
-    name_sym = F.regexp_extract(line, "^(.*?)" + pf.P_AMOUNT_SYM, 1)
-    name0 = F.trim(F.when(eol_g != "", name_eol).otherwise(name_sym))
-    for mk in pf.REDUCED_TAX_MARKERS:
-        name0 = F.trim(F.replace(name0, F.lit(mk)))
-    qty_g = F.regexp_extract(name0, pf.P_QTY, 1)
-    qty = F.when(qty_g != "", qty_g.cast("int")).otherwise(F.lit(1))
-    name = F.when(
-        qty_g != "", F.trim(F.regexp_extract(name0, "^(.*?)" + pf.P_QTY, 1))
-    ).otherwise(name0)
-    veto = _contains_any(name, pf.ITEM_NAME_VETO)
-    ok = (name != "") & price.isNotNull() & (price > 0) & ~veto
-    return F.when(
-        ok,
-        F.struct(
-            name.alias("name"),
-            price.alias("price"),
-            qty.alias("quantity"),
-            reduced.alias("reduced_tax"),
-        ),
-    )
+    """line -> item struct or NULL — exact mirror of pycore.parse_item_line
+    (ref receipt.py:360-400)."""
 
+    def from_amounts(a: Column) -> Column:
+        eol, sym = a["eol"], a["sym"]
+        price = normalize_amount(F.when(eol != "", eol).otherwise(F.when(sym != "", sym)))
+        # name = prefix before the matched amount (match start semantics)
+        name_eol = F.regexp_replace(line, pf.P_AMOUNT_EOL, "")
+        name_sym = F.regexp_extract(line, "^(.*?)" + pf.P_AMOUNT_SYM, 1)
+        name0 = F.trim(F.when(eol != "", name_eol).otherwise(name_sym))
+        for mk in pf.REDUCED_TAX_MARKERS:
+            name0 = F.trim(F.replace(name0, F.lit(mk)))
+        return _let(F.struct(price.alias("price"), name0.alias("name0")), from_name0)
 
-# ---------------------------------------------------------------------------
-# DataFrame-level extractors
-# ---------------------------------------------------------------------------
+    def from_name0(v: Column) -> Column:
+        name0 = v["name0"]
+        qty_g = F.regexp_extract(name0, pf.P_QTY, 1)
+        qty = F.when(qty_g != "", qty_g.cast("int")).otherwise(F.lit(1))
+        name = F.when(
+            qty_g != "", F.trim(F.regexp_extract(name0, "^(.*?)" + pf.P_QTY, 1))
+        ).otherwise(name0)
+        return _let(F.struct(name.alias("name"), qty.alias("qty")), lambda n: item(v["price"], n))
 
-
-def _lines(df: DataFrame, keys: Sequence[str], text_col: str) -> DataFrame:
-    return df.select(
-        *keys, F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line")
-    )
-
-
-def _minby_line(value: Column, cond: Column) -> Column:
-    """value of the first line (by pos) where cond holds."""
-    return F.min_by(F.when(cond, value), F.when(cond, F.col("pos")))
-
-
-def extract_receipt_fields_df(
-    df: DataFrame, keys: Sequence[str] = ("url",), text_col: str = "text"
-) -> DataFrame:
-    """(keys, text) -> one row per keys with receipt fields + items array.
-
-    Mirrors pycore.fields.extract_receipt_fields (ref receipt.py:144-188).
-    """
-    keys = list(keys)
-    text = F.col(text_col)
-    doc_scalars = df.select(
-        *keys,
-        date_in_text(text).alias("date"),
-        date_raw_in_text(text).alias("date_raw"),
-        phone_in_text(text).alias("store_phone"),
-        payment_method(text).alias("payment_method"),
-        tax_rate(text, pf.P_TAX8).alias("tax_rate_8"),
-        tax_rate(text, pf.P_TAX10).alias("tax_rate_10"),
-        (F.length(text) == 0).alias("_no_content"),
-    )
-
-    lines = _lines(df, keys, text_col).withColumn("line", F.trim(F.col("line")))
-    amt = first_amount(F.col("line"))
-    total_hit = _contains_any(F.col("line"), pf.TOTAL_KEYWORDS)
-    sub_hit = _contains_any(F.col("line"), pf.SUBTOTAL_KEYWORDS)
-    # items stop at the first total line that is not a 小計 line (A6/W5)
-    is_break = total_hit & ~F.contains(F.col("line"), F.lit("小計"))
-    w_doc = Window.partitionBy(*keys)
-    stop_pos = F.min(F.when(is_break, F.col("pos"))).over(w_doc)
-    lines = lines.withColumn(
-        "item",
-        F.when(
-            F.col("pos") < F.coalesce(stop_pos, F.lit(2**31 - 1)),
-            parse_item_line(F.col("line")),
-        ),
-    )
-    # store name: first of top-5 lines passing the veto chain (P6/W2)
-    store_ok = (
-        (F.col("pos") <= 4)
-        & (F.length("line") >= 2)
-        & ~_contains_any(F.col("line"), pf.STORE_NAME_VETO)
-        & ~F.col("line").rlike("[0-9]{4}[年/\\-.]")
-        & ~F.regexp_replace(F.col("line"), " ", "").rlike("^[0-9\\-()]+$")
-    )
-    line_agg = lines.groupBy(*keys).agg(
-        _minby_line(amt, total_hit & amt.isNotNull() & (amt > 0)).alias("total_amount"),
-        _minby_line(amt, sub_hit & amt.isNotNull()).alias("subtotal"),
-        _minby_line(F.col("line"), store_ok).alias("store_name"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("item").isNotNull(),
-                        F.struct(F.col("pos"), F.col("item")),
-                    )
-                )
+    def item(price: Column, n: Column) -> Column:
+        name = n["name"]
+        veto = _contains_any(name, pf.ITEM_NAME_VETO)
+        ok = (name != "") & price.isNotNull() & (price > 0) & ~veto
+        return F.when(
+            ok,
+            F.struct(
+                name.alias("name"),
+                price.alias("price"),
+                n["qty"].alias("quantity"),
+                _contains_any(line, pf.REDUCED_TAX_MARKERS).alias("reduced_tax"),
             ),
-            lambda x: x.getField("item"),
-        ).alias("items"),
+        )
+
+    amounts = F.struct(
+        F.regexp_extract(line, pf.P_AMOUNT_EOL, 1).alias("eol"),
+        F.regexp_extract(line, pf.P_AMOUNT_SYM, 1).alias("sym"),
     )
-    # shuffle-hash, not broadcast: both sides are document-scale relations
-    # (a broadcast here also OOMs a default-heap driver at test scale)
-    joined = doc_scalars.join(line_agg.hint("shuffle_hash"), keys, "left")
-    return joined.withColumn("warnings", receipt_warnings_col()).drop("_no_content")
+    return _let(amounts, from_amounts)
 
 
 def vendor_on_line(line: Column) -> Column:
     """F14: first company pattern on a non-addressee line (ref
     invoice.py:347-369)."""
-    company = F.coalesce(
-        *[
-            F.when(F.regexp_extract(line, pat, 1) != "",
-                   F.regexp_extract(line, pat, 1))
-            for pat in pf.P_COMPANY
-        ]
-    )
+    company = F.coalesce(*[_group(line, pat) for pat in pf.P_COMPANY])
     veto = F.contains(line, F.lit("御中")) | F.contains(line, F.lit("様"))
     return F.when(~veto, F.trim(company))
 
@@ -292,34 +205,128 @@ def customer_on_line(line: Column) -> Column:
     )
 
 
-INVOICE_ITEM_SCHEMA = (
-    "struct<name:string, quantity:int, unit_price:bigint, amount:bigint>"
-)
-
-
 def parse_invoice_item_line(line: Column) -> Column:
     """F20 table-row parse (ref invoice.py:443-475)."""
-    name = F.trim(F.regexp_extract(line, pf.P_ITEM_ROW, 1))
-    qty = F.regexp_extract(line, pf.P_ITEM_ROW, 2)
-    unit = F.regexp_extract(line, pf.P_ITEM_ROW, 3)
-    amt_g = F.regexp_extract(line, pf.P_ITEM_ROW, 4)
-    amount = normalize_amount(F.when(amt_g != "", amt_g))
-    ok = (
-        (qty != "")
-        & (name != "")
-        & ~_contains_any(name, pf.INVOICE_ITEM_VETO)
-        & amount.isNotNull()
-        & (amount != 0)
+
+    def item(g: Column) -> Column:
+        name = F.trim(g["name"])
+        amount = normalize_amount(F.when(g["amount"] != "", g["amount"]))
+        ok = (
+            (g["qty"] != "")
+            & (name != "")
+            & ~_contains_any(name, pf.INVOICE_ITEM_VETO)
+            & amount.isNotNull()
+            & (amount != 0)
+        )
+        return F.when(
+            ok,
+            F.struct(
+                name.alias("name"),
+                g["qty"].cast("int").alias("quantity"),
+                normalize_amount(F.when(g["unit"] != "", g["unit"])).alias("unit_price"),
+                amount.alias("amount"),
+            ),
+        )
+
+    groups = F.struct(
+        *[
+            F.regexp_extract(line, pf.P_ITEM_ROW, k).alias(n)
+            for k, n in enumerate(("name", "qty", "unit", "amount"), 1)
+        ]
     )
-    return F.when(
-        ok,
-        F.struct(
-            name.alias("name"),
-            qty.cast("int").alias("quantity"),
-            normalize_amount(F.when(unit != "", unit)).alias("unit_price"),
-            amount.alias("amount"),
+    # most lines are not table rows: one match test instead of four extracts
+    return F.when(line.rlike(pf.P_ITEM_ROW), _let(groups, item))
+
+
+# ---------------------------------------------------------------------------
+# per-row field sets over a materialized lines column
+# ---------------------------------------------------------------------------
+
+
+def _first(
+    lines: Column, value: Callable, keep: Callable = lambda v: v.isNotNull()
+) -> Column:
+    """value(l) of the first line whose value passes ``keep``; ``value``
+    returns NULL on lines that do not qualify."""
+    return F.get(F.filter(F.transform(lines, value), keep), 0)
+
+
+def _items(lines: Column, parse: Callable) -> Column:
+    return F.filter(F.transform(lines, parse), lambda i: i.isNotNull())
+
+
+def receipt_lines(text: Column) -> Column:
+    """The receipt's lines, trimmed.  A lambda, not ``F.trim`` itself:
+    ``transform`` passes the element index as a second argument, which
+    trim would take as its trim set."""
+    return F.transform(F.split(text, "\n"), lambda l: F.trim(l))
+
+
+def invoice_lines(text: Column) -> Column:
+    return F.split(text, "\n")
+
+
+def receipt_fields(text: Column, lines: Column) -> Dict[str, Column]:
+    """Receipt field expressions by name (ref receipt.py:144-188).
+
+    ``lines`` must reference a column already holding
+    ``receipt_lines(text)``: it is read eight times, and an inlined array
+    expression would be rebuilt at every read."""
+    dates = _dates(text)
+    total_hit = lambda l: _contains_any(l, pf.TOTAL_KEYWORDS)  # noqa: E731
+    sub_hit = lambda l: _contains_any(l, pf.SUBTOTAL_KEYWORDS)  # noqa: E731
+    # items stop at the first total line that is not a 小計 line (A6/W5)
+    is_break = lambda l: total_hit(l) & ~F.contains(l, F.lit("小計"))  # noqa: E731
+    stop = F.array_position(F.transform(lines, is_break), True)
+    n_items = F.when(stop > 0, stop - 1).otherwise(F.size(lines))
+    item_lines = F.slice(lines, 1, n_items.cast("int"))
+    # store name: first of top-5 lines passing the veto chain (P6/W2)
+    store_ok = lambda l: (  # noqa: E731
+        (F.length(l) >= 2)
+        & ~_contains_any(l, pf.STORE_NAME_VETO)
+        & ~l.rlike("[0-9]{4}[年/\\-.]")
+        & ~F.regexp_replace(l, " ", "").rlike("^[0-9\\-()]+$")
+    )
+    return {
+        "date": F.coalesce(*[iso for iso, _ in dates]),
+        "date_raw": F.coalesce(
+            *[F.when(iso.isNotNull(), F.regexp_extract(text, pat, 0)) for iso, pat in dates]
         ),
-    )
+        "store_phone": phone_in_text(text),
+        "payment_method": payment_method(text),
+        "tax_rate_8": _amount(text, pf.P_TAX8),
+        "tax_rate_10": _amount(text, pf.P_TAX10),
+        "total_amount": _first(
+            lines, lambda l: F.when(total_hit(l), first_amount(l)), lambda a: a > 0
+        ),
+        "subtotal": _first(lines, lambda l: F.when(sub_hit(l), first_amount(l))),
+        "store_name": _first(F.slice(lines, 1, 5), lambda l: F.when(store_ok(l), l)),
+        "items": _items(item_lines, parse_item_line),
+        "_no_content": F.length(text) == 0,
+    }
+
+
+def invoice_fields(text: Column, lines: Column) -> Dict[str, Column]:
+    """Invoice field expressions by name (ref invoice.py:164-217); ``lines``
+    references a column holding ``invoice_lines(text)``."""
+    near = lambda kws: lambda l: F.when(_contains_any(l, kws), date_in_text(l))  # noqa: E731
+    return {
+        "invoice_number": invoice_number(text),
+        "subtotal": _amount(text, pf.P_SUBTOTAL_KW),
+        "tax_amount": _amount(text, pf.P_TAXAMT_KW),
+        **bank_columns(text),
+        "invoice_date": _first(lines, near(pf.INVOICE_DATE_KEYWORDS)),
+        "due_date": _first(lines, near(pf.DUE_DATE_KEYWORDS)),
+        "total_amount": _first(
+            lines,
+            lambda l: F.when(_contains_any(l, pf.INVOICE_TOTAL_KEYWORDS), first_amount(l)),
+            lambda a: a > 0,
+        ),
+        "vendor_name": _first(lines, vendor_on_line, lambda v: v != ""),
+        "customer_name": _first(lines, customer_on_line),
+        "items": _items(lines, parse_invoice_item_line),
+        "_no_content": F.length(text) == 0,
+    }
 
 
 def _warnings_array(*pairs) -> Column:
@@ -330,80 +337,69 @@ def _warnings_array(*pairs) -> Column:
     )
 
 
-def receipt_warnings_col() -> Column:
-    """Mirror of pycore.fields.receipt_warnings over the joined fields row
-    (no_content = empty text)."""
-    reduced = F.exists(F.col("items"), lambda i: i["reduced_tax"])
+def receipt_warnings_col(col: Callable[[str], Column] = F.col) -> Column:
+    """Mirror of pycore.fields.receipt_warnings over a fields row whose
+    field ``name`` is ``col(name)`` (no_content = empty text)."""
+    reduced = F.exists(col("items"), lambda i: i["reduced_tax"])
     return _warnings_array(
-        (F.col("date").isNull(), "日付を抽出できませんでした"),
-        (F.col("total_amount").isNull(), "合計金額を抽出できませんでした"),
-        (F.col("store_name").isNull(), "店舗名を抽出できませんでした"),
-        (F.col("_no_content"), "本文を抽出できませんでした"),
+        (col("date").isNull(), "日付を抽出できませんでした"),
+        (col("total_amount").isNull(), "合計金額を抽出できませんでした"),
+        (col("store_name").isNull(), "店舗名を抽出できませんでした"),
+        (col("_no_content"), "本文を抽出できませんでした"),
         (
-            reduced & F.col("tax_rate_8").isNull() & F.col("tax_rate_10").isNull(),
+            reduced & col("tax_rate_8").isNull() & col("tax_rate_10").isNull(),
             "軽減税率対象品目がありますが、税額詳細が見つかりません",
         ),
     )
 
 
-def invoice_warnings_col() -> Column:
+def invoice_warnings_col(col: Callable[[str], Column] = F.col) -> Column:
     return _warnings_array(
-        (F.col("invoice_date").isNull(), "請求日を抽出できませんでした"),
-        (F.col("total_amount").isNull(), "請求総額を抽出できませんでした"),
-        (F.col("vendor_name").isNull(), "発行元名を抽出できませんでした"),
+        (col("invoice_date").isNull(), "請求日を抽出できませんでした"),
+        (col("total_amount").isNull(), "請求総額を抽出できませんでした"),
+        (col("vendor_name").isNull(), "発行元名を抽出できませんでした"),
         (
-            F.col("bank_name").isNull() & F.col("account_number").isNull(),
+            col("bank_name").isNull() & col("account_number").isNull(),
             "振込先口座情報を抽出できませんでした",
         ),
         (
-            (F.col("bank_name").isNotNull() | F.col("account_number").isNotNull())
-            & F.col("account_number").isNull(),
+            (col("bank_name").isNotNull() | col("account_number").isNotNull())
+            & col("account_number").isNull(),
             "口座番号を抽出できませんでした",
         ),
-        (F.col("_no_content"), "本文を抽出できませんでした"),
+        (col("_no_content"), "本文を抽出できませんでした"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# DataFrame-level extractors
+# ---------------------------------------------------------------------------
+
+
+def _extract_df(df, keys, text_col, lines_of, fields_of, warnings_of) -> DataFrame:
+    keys = list(keys)
+    text = F.col(text_col)
+    lined = df.select(*keys, text.alias("_text"), lines_of(text).alias("_lines"))
+    fields = fields_of(F.col("_text"), F.col("_lines"))
+    out = lined.select(*keys, *[c.alias(n) for n, c in fields.items()])
+    return out.withColumn("warnings", warnings_of()).drop("_no_content")
+
+
+def extract_receipt_fields_df(
+    df: DataFrame, keys: Sequence[str] = ("url",), text_col: str = "text"
+) -> DataFrame:
+    """(keys, text) -> one row per input row: keys, receipt fields, items
+    array and warnings.  Mirrors pycore.fields.extract_receipt_fields."""
+    return _extract_df(
+        df, keys, text_col, receipt_lines, receipt_fields, receipt_warnings_col
     )
 
 
 def extract_invoice_fields_df(
     df: DataFrame, keys: Sequence[str] = ("url",), text_col: str = "text"
 ) -> DataFrame:
-    """(keys, text) -> invoice fields + items + warnings (ref
-    invoice.py:164-217)."""
-    keys = list(keys)
-    text = F.col(text_col)
-    sub_g = F.regexp_extract(text, pf.P_SUBTOTAL_KW, 1)
-    tax_g = F.regexp_extract(text, pf.P_TAXAMT_KW, 1)
-    doc_scalars = df.select(
-        *keys,
-        invoice_number(text).alias("invoice_number"),
-        normalize_amount(F.when(sub_g != "", sub_g)).alias("subtotal"),
-        normalize_amount(F.when(tax_g != "", tax_g)).alias("tax_amount"),
-        *bank_columns(text),
-        (F.length(text) == 0).alias("_no_content"),
+    """(keys, text) -> one row per input row: keys, invoice fields, items
+    array and warnings.  Mirrors pycore.fields.extract_invoice_fields."""
+    return _extract_df(
+        df, keys, text_col, invoice_lines, invoice_fields, invoice_warnings_col
     )
-    lines = _lines(df, keys, text_col)
-    line_date = date_in_text(F.col("line"))
-    amt = first_amount(F.col("line"))
-    inv_date_hit = _contains_any(F.col("line"), pf.INVOICE_DATE_KEYWORDS)
-    due_hit = _contains_any(F.col("line"), pf.DUE_DATE_KEYWORDS)
-    total_hit = _contains_any(F.col("line"), pf.INVOICE_TOTAL_KEYWORDS)
-    vendor = vendor_on_line(F.col("line"))
-    customer = customer_on_line(F.col("line"))
-    item = parse_invoice_item_line(F.col("line"))
-    line_agg = lines.groupBy(*keys).agg(
-        _minby_line(line_date, inv_date_hit & line_date.isNotNull()).alias("invoice_date"),
-        _minby_line(line_date, due_hit & line_date.isNotNull()).alias("due_date"),
-        _minby_line(amt, total_hit & amt.isNotNull() & (amt > 0)).alias("total_amount"),
-        _minby_line(vendor, vendor.isNotNull() & (vendor != "")).alias("vendor_name"),
-        _minby_line(customer, customer.isNotNull()).alias("customer_name"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(item.isNotNull(), F.struct(F.col("pos"), item.alias("item")))
-                )
-            ),
-            lambda x: x["item"],
-        ).alias("items"),
-    )
-    joined = doc_scalars.join(line_agg.hint("shuffle_hash"), keys, "left")
-    return joined.withColumn("warnings", invoice_warnings_col()).drop("_no_content")

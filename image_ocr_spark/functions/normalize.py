@@ -90,8 +90,8 @@ def era_base(col: Column) -> Column:
 
 
 def _extract_int(col: Column, pattern: str, group: int) -> Column:
-    g = F.regexp_extract(col, pattern, group)
-    return F.when(g != "", g).cast("int")
+    """Digit-only capture group -> int; NULL when the group is empty."""
+    return F.regexp_extract(col, pattern, group).try_cast("int")
 
 
 def normalize_date(col: Column) -> Column:

@@ -56,30 +56,6 @@ def write_bucketed(
     )
 
 
-def extract_receipt_fields_colocated(
-    spark: SparkSession, extraction_table: str, keys=("url",)
-) -> DataFrame:
-    """Receipt field extraction over a BUCKETED extraction table — the
-    production path for repeated downstream field queries (VERDICT r02
-    item 5).
-
-    With the extraction output persisted ``bucketBy(keys[0])`` (see
-    write_bucketed), every stage of the field chain reuses the scan's
-    hash partitioning: the posexplode preserves it, the stop-flag window
-    and the line aggregation group by the same key, and the
-    doc_scalars x line_agg join sees both sides co-partitioned — the whole
-    chain runs with ZERO Exchange (asserted in tests/test_bucketed_join.py).
-    The ad-hoc DataFrame path (extract_receipt_fields_df on a transient
-    frame) pays one exchange family instead; use this entry point whenever
-    the extraction output is already materialized."""
-    from pyspark.sql import functions as F
-
-    from ..functions.extract_fields import extract_receipt_fields_df
-
-    df = spark.table(extraction_table).filter(F.col("doc_type") == "receipt")
-    return extract_receipt_fields_df(df, keys=keys)
-
-
 def colocated_join(
     spark: SparkSession, left_table: str, right_table: str, key: str = "url"
 ) -> DataFrame:

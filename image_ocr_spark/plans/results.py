@@ -1,9 +1,12 @@
 """Final result assembly + JSON sink (ref pipeline.py:45-95, main.py:192-223).
 
-One row per url: classification + type-dispatched extracted data (receipt
-fields for receipt pages, invoice fields for invoice pages — the X2-style
-branch expressed as two filtered extractors unioned by a left join on the
-same key) + canonical text + warnings, serialized with to_json.
+One row per extraction row: classification + type-dispatched extracted
+data (receipt fields for receipt pages, invoice fields for invoice pages)
++ canonical text + warnings, serialized with to_json.  The dispatch is a
+chain of per-row projections with no join: the text is gated by doc_type
+(``when(doc_type = 'receipt', text)``) before its lines are split, so a
+page pays only for its own field set, and the data structs and warnings
+are ``when(doc_type = ...)`` columns over both field sets.
 
 Field names inside the data structs mirror the reference's Japanese
 to_dict keys (receipt.py:52-89, invoice.py:63-105).  Divergence note:
@@ -15,16 +18,15 @@ equivalent; tests pin this contract.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.extract_fields import (
-    extract_invoice_fields_df,
-    extract_receipt_fields_df,
-)
+from ..functions import extract_fields as ef
 
 
-def _receipt_struct() -> Column:
+def _receipt_struct(col: Callable[[str], Column]) -> Column:
     item = lambda i: F.struct(  # noqa: E731
         i["name"].alias("品名"),
         i["price"].alias("価格"),
@@ -32,25 +34,25 @@ def _receipt_struct() -> Column:
         i["reduced_tax"].alias("軽減税率"),
     )
     tax = F.when(
-        F.col("tax_rate_8").isNotNull() | F.col("tax_rate_10").isNotNull(),
+        col("tax_rate_8").isNotNull() | col("tax_rate_10").isNotNull(),
         F.struct(
-            F.col("tax_rate_8").alias("8%対象額"),
-            F.col("tax_rate_10").alias("10%対象額"),
+            col("tax_rate_8").alias("8%対象額"),
+            col("tax_rate_10").alias("10%対象額"),
         ),
     )
     return F.struct(
-        F.col("date").alias("日付"),
-        F.col("total_amount").alias("合計金額"),
-        F.col("store_name").alias("店舗名"),
-        F.col("subtotal").alias("小計"),
-        F.col("store_phone").alias("店舗電話番号"),
-        F.when(F.size("items") > 0, F.transform(F.col("items"), item)).alias("明細"),
+        col("date").alias("日付"),
+        col("total_amount").alias("合計金額"),
+        col("store_name").alias("店舗名"),
+        col("subtotal").alias("小計"),
+        col("store_phone").alias("店舗電話番号"),
+        F.when(F.size(col("items")) > 0, F.transform(col("items"), item)).alias("明細"),
         tax.alias("税額詳細"),
-        F.col("payment_method").alias("支払方法"),
+        col("payment_method").alias("支払方法"),
     )
 
 
-def _invoice_struct() -> Column:
+def _invoice_struct(col: Callable[[str], Column]) -> Column:
     item = lambda i: F.struct(  # noqa: E731
         i["name"].alias("品名"),
         i["quantity"].alias("数量"),
@@ -58,49 +60,55 @@ def _invoice_struct() -> Column:
         i["amount"].alias("金額"),
     )
     bank = F.when(
-        F.col("bank_name").isNotNull() | F.col("account_number").isNotNull(),
+        col("bank_name").isNotNull() | col("account_number").isNotNull(),
         F.struct(
-            F.col("bank_name").alias("銀行名"),
-            F.col("branch_name").alias("支店名"),
-            F.col("account_type").alias("口座種別"),
-            F.col("account_number").alias("口座番号"),
+            col("bank_name").alias("銀行名"),
+            col("branch_name").alias("支店名"),
+            col("account_type").alias("口座種別"),
+            col("account_number").alias("口座番号"),
         ),
     )
     return F.struct(
-        F.col("invoice_date").alias("請求日"),
-        F.col("due_date").alias("支払期限"),
-        F.col("invoice_number").alias("請求書番号"),
-        F.col("total_amount").alias("請求金額"),
-        F.col("subtotal").alias("税抜金額"),
-        F.col("tax_amount").alias("消費税額"),
-        F.col("vendor_name").alias("発行元"),
-        F.col("customer_name").alias("宛先"),
+        col("invoice_date").alias("請求日"),
+        col("due_date").alias("支払期限"),
+        col("invoice_number").alias("請求書番号"),
+        col("total_amount").alias("請求金額"),
+        col("subtotal").alias("税抜金額"),
+        col("tax_amount").alias("消費税額"),
+        col("vendor_name").alias("発行元"),
+        col("customer_name").alias("宛先"),
         bank.alias("振込先"),
-        F.when(F.size("items") > 0, F.transform(F.col("items"), item)).alias("明細"),
+        F.when(F.size(col("items")) > 0, F.transform(col("items"), item)).alias("明細"),
     )
 
 
 def assemble_results(extracted: DataFrame) -> DataFrame:
     """extraction rows -> final result rows (url, doc_type, confidence
     scores, receipt_data/invoice_data structs, text, title, warnings)."""
-    receipts = extract_receipt_fields_df(
-        extracted.filter(F.col("doc_type") == "receipt"), keys=("url",)
-    ).select(
-        "url", _receipt_struct().alias("receipt_data"),
-        F.col("warnings").alias("_rw"),
+    is_r = F.col("doc_type") == "receipt"
+    is_i = F.col("doc_type") == "invoice"
+    r_text = F.when(is_r, F.col("text"))
+    i_text = F.when(is_i, F.col("text"))
+    # lines in their own projection: the field expressions read them
+    # several times, and an inlined split would run at every read
+    lined = extracted.select(
+        "*",
+        ef.receipt_lines(r_text).alias("_r_lines"),
+        ef.invoice_lines(i_text).alias("_i_lines"),
     )
-    invoices = extract_invoice_fields_df(
-        extracted.filter(F.col("doc_type") == "invoice"), keys=("url",)
-    ).select(
-        "url", _invoice_struct().alias("invoice_data"),
-        F.col("warnings").alias("_iw"),
+    fields = lined.select(
+        "*",
+        *[c.alias("_r_" + n) for n, c in ef.receipt_fields(r_text, F.col("_r_lines")).items()],
+        *[c.alias("_i_" + n) for n, c in ef.invoice_fields(i_text, F.col("_i_lines")).items()],
     )
-    # document-scale join sides: force shuffle joins (see extract_fields)
-    joined = (
-        extracted.join(receipts.hint("shuffle_hash"), "url", "left")
-        .join(invoices.hint("shuffle_hash"), "url", "left")
+    r_col = lambda n: F.col("_r_" + n)  # noqa: E731
+    i_col = lambda n: F.col("_i_" + n)  # noqa: E731
+    warnings = (
+        F.when(is_r, ef.receipt_warnings_col(r_col))
+        .when(is_i, ef.invoice_warnings_col(i_col))
+        .otherwise(F.array().cast("array<string>"))
     )
-    return joined.select(
+    return fields.select(
         "url",
         "doc_id",
         "engine",
@@ -108,16 +116,12 @@ def assemble_results(extracted: DataFrame) -> DataFrame:
         "doc_type",
         "receipt_score_centi",
         "invoice_score_centi",
-        "receipt_data",
-        "invoice_data",
+        F.when(is_r, _receipt_struct(r_col)).alias("receipt_data"),
+        F.when(is_i, _invoice_struct(i_col)).alias("invoice_data"),
         "text",
         "title",
         # warning cap [:20] (ref tesseract_engine.py:195, pipeline.py:200)
-        F.slice(
-            F.coalesce(F.col("_rw"), F.col("_iw"), F.array().cast("array<string>")),
-            1,
-            20,
-        ).alias("warnings"),
+        F.slice(warnings, 1, 20).alias("warnings"),
     )
 
 

@@ -1,8 +1,6 @@
 """Bucketing axis: two tables bucketed by url must join with no Exchange
 (co-located buckets) — the repeated-join layout a crawl pipeline relies on."""
 
-from pyspark.sql import functions as F
-
 from image_ocr_spark.operators.bucketed import colocated_join, write_bucketed
 
 
@@ -25,36 +23,6 @@ def test_bucketed_join_is_exchange_free(spark, extracted):
     expect = left.join(right, "url").count()
     assert joined.count() == expect
     assert expect > 0
-
-
-def test_bucketed_field_extraction_zero_exchange(spark, extracted):
-    """VERDICT r02 item 5: the full receipt-fields chain (posexplode ->
-    stop-flag window -> line agg -> doc_scalars x line_agg join) over a
-    url-bucketed extraction table must add ZERO Exchange."""
-    from image_ocr_spark.functions.extract_fields import extract_receipt_fields_df
-    from image_ocr_spark.operators.bucketed import (
-        extract_receipt_fields_colocated,
-        write_bucketed,
-    )
-
-    write_bucketed(extracted, "t_extraction_b", buckets=8)
-    out = extract_receipt_fields_colocated(spark, "t_extraction_b", keys=("url",))
-    plan = _executed(out)
-    assert "Exchange" not in plan, plan
-
-    # not vacuous: same values as the ad-hoc (shuffling) path
-    direct = extract_receipt_fields_df(
-        extracted.filter(F.col("doc_type") == "receipt"), keys=("url",)
-    )
-    got = {
-        r.url: (r.date, r.total_amount, r.subtotal, r.store_name)
-        for r in out.collect()
-    }
-    want = {
-        r.url: (r.date, r.total_amount, r.subtotal, r.store_name)
-        for r in direct.collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_unbucketed_join_does_shuffle(spark, extracted):

@@ -2,8 +2,6 @@
 (`/root/reference/tests/test_classifier.py:17-139`), plus the Spark SQL
 mirror checked for exact integer-score agreement."""
 
-from pyspark.sql import functions as F
-
 from image_ocr_spark.pycore.classify import (
     classify_doc,
     keyword_score_centi,
@@ -84,7 +82,7 @@ def test_layout_hint_monotonicity():
 
 
 def test_spark_classifier_agrees_exactly(spark):
-    from image_ocr_spark.functions.classify import classify_columns
+    from image_ocr_spark.functions.classify import classify_df
 
     texts = [
         RECEIPT_TEXT,
@@ -96,7 +94,7 @@ def test_spark_classifier_agrees_exactly(spark):
         "領収書 領収書 領収書 レシート TEL 合計",
     ]
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    got = df.select(*classify_columns(F.col("text"))).collect()
+    got = classify_df(df, "text").collect()
     for t, row in zip(texts, got):
         exp = classify_doc(t)
         assert row.receipt_score_centi == exp["receipt_score_centi"], t

@@ -1,5 +1,7 @@
-"""Spark field extraction (explode+agg SQL) must agree with pycore exactly
-across the full fixture corpus — including items, vendor/customer, warnings."""
+"""Spark field extraction (per-row array expressions over the text's
+lines) must agree with pycore exactly across the full fixture corpus —
+including items, vendor/customer, warnings — and return exactly one row
+per input row."""
 
 from pyspark.sql import functions as F
 
@@ -8,8 +10,6 @@ from image_ocr_spark.functions.extract_fields import (
     extract_invoice_fields_df,
     extract_receipt_fields_df,
 )
-from image_ocr_spark.operators.generate import generate_pages
-from image_ocr_spark.plans.pipeline import extract_pages
 from image_ocr_spark.pycore.extractor import extract_page
 
 RECEIPT_SCALARS = [
@@ -76,10 +76,27 @@ def test_invoice_fields_match_pycore(spark, extracted, doc_rows):
 
 
 def test_warnings_on_sparse_text(spark):
-    """Missing fields produce the reference's warning strings."""
+    """Missing fields produce the reference's warning strings; empty and
+    NULL text keep their rows, and rows sharing a key stay separate."""
+    from image_ocr_spark.pycore.fields import extract_receipt_fields, receipt_warnings
+
     df = spark.createDataFrame(
-        [("u1", "領収書だけの内容です 合計 ¥100")], "url string, text string"
+        [
+            ("u1", "領収書だけの内容です 合計 ¥100"),
+            ("u2", ""),
+            ("u3", None),
+            ("u4", "店A\n合計 ¥300"),
+            ("u4", "店B\n合計 ¥700"),
+        ],
+        "url string, text string",
     )
-    row = extract_receipt_fields_df(df).first()
+    rows = extract_receipt_fields_df(df).collect()
+    assert len(rows) == 5
+    row = next(r for r in rows if r.url == "u1")
     assert "日付を抽出できませんでした" in list(row.warnings)
     assert "店舗名を抽出できませんでした" not in list(row.warnings) or row.store_name is None
+    empty = next(r for r in rows if r.url == "u2")
+    assert list(empty.warnings) == receipt_warnings(extract_receipt_fields(""), True)
+    assert len([r for r in rows if r.url == "u3"]) == 1
+    shared = sorted((r.store_name, r.total_amount) for r in rows if r.url == "u4")
+    assert shared == [("店A", 300), ("店B", 700)]

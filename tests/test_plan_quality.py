@@ -98,19 +98,32 @@ def test_classifier_stays_codegen(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path):
+@pytest.mark.parametrize("plan", ["extract_pages", "pages_json", "pages_receipt_fields"])
+def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path, plan):
     """The production (packed) pipeline has exactly ONE exchange total —
-    the salted repartition; tokenize + content selection + classify are
-    per-row from there."""
+    the salted repartition — and ONE Arrow pass; tokenize + content
+    selection + classify are per-row from there, and so are the receipt /
+    invoice fields and the result JSON composed on top of it (no
+    group-by-document, join or window re-running the tokenizer)."""
     import re
 
+    from image_ocr_spark.functions.extract_fields import extract_receipt_fields_df
     from image_ocr_spark.plans.pipeline import extract_pages
+    from image_ocr_spark.plans.results import assemble_results, to_json_rows
 
-    pages = spark.read.parquet(pages_path)
-    plan = _formatted(extract_pages(pages, 8))
-    ops = re.findall(r"^\((\d+)\) (\w+)", plan, re.M)
-    assert sum(1 for _, op in ops if op == "Exchange") == 1, ops
-    assert not any(op in ("Sort", "Window") for _, op in ops), ops
+    extracted = extract_pages(spark.read.parquet(pages_path), 8)
+    df = {
+        "extract_pages": extracted,
+        "pages_json": to_json_rows(assemble_results(extracted)),
+        "pages_receipt_fields": extract_receipt_fields_df(extracted),
+    }[plan]
+    ops = re.findall(r"^\(\d+\) (\w+)", _formatted(df), re.M)
+    assert ops.count("Exchange") == 1, ops
+    assert ops.count("MapInArrow") == 1, ops
+    assert not any(
+        op in ("Sort", "Window", "Generate") or "Join" in op or op == "CartesianProduct"
+        for op in ops
+    ), ops
 
 
 def test_minhash_signatures_no_shuffle(spark, documents):
