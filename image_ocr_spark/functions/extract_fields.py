@@ -83,11 +83,6 @@ def _dates(col: Column) -> List[tuple]:
     ]
 
 
-def date_in_text(col: Column) -> Column:
-    """First valid date -> ISO."""
-    return F.coalesce(*[iso for iso, _ in _dates(col)])
-
-
 def first_amount(col: Column) -> Column:
     """First money token (ref receipt.py:263-269)."""
     return _amount(col, pf.P_AMOUNT_ANY)
@@ -309,7 +304,10 @@ def receipt_fields(text: Column, lines: Column) -> Dict[str, Column]:
 def invoice_fields(text: Column, lines: Column) -> Dict[str, Column]:
     """Invoice field expressions by name (ref invoice.py:164-217); ``lines``
     references a column holding ``invoice_lines(text)``."""
-    near = lambda kws: lambda l: F.when(_contains_any(l, kws), date_in_text(l))  # noqa: E731
+    # western > era only: no compact YYYYMMDD next to a keyword
+    # (pycore.fields.extract_date_near_keywords, ref invoice.py:219-236)
+    near_date = lambda l: F.coalesce(*[iso for iso, _ in _dates(l)[:2]])  # noqa: E731
+    near = lambda kws: lambda l: F.when(_contains_any(l, kws), near_date(l))  # noqa: E731
     return {
         "invoice_number": invoice_number(text),
         "subtotal": _amount(text, pf.P_SUBTOTAL_KW),

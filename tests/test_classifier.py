@@ -6,6 +6,8 @@ from image_ocr_spark.pycore.classify import (
     classify_doc,
     keyword_score_centi,
     score_with_layout_hint,
+    INVOICE_KEYWORDS_W10,
+    INVOICE_NEGATIVE_W10,
     RECEIPT_KEYWORDS_W10,
     RECEIPT_NEGATIVE_W10,
 )
@@ -81,6 +83,37 @@ def test_layout_hint_monotonicity():
     assert r_tall == 120 and i_wide == 110
 
 
+def test_keyword_table_is_the_dictionary_union():
+    """The Spark scorer's one keyword table reproduces every (keyword,
+    weight) pair of the four pycore dictionaries, 0 elsewhere -- no JVM."""
+    from image_ocr_spark.functions.classify import _keyword_table
+
+    dicts = (
+        RECEIPT_KEYWORDS_W10, INVOICE_KEYWORDS_W10,
+        RECEIPT_NEGATIVE_W10, INVOICE_NEGATIVE_W10,
+    )
+    table = {kw: weights for kw, *weights in _keyword_table()}
+    assert len(_keyword_table()) == len(table) == 57
+    for j, d in enumerate(dicts):
+        for kw, weights in table.items():
+            assert weights[j] == d.get(kw, 0), (kw, j)
+        assert {kw.upper() for kw in d} <= set(table), j
+
+
+def _random_texts(n: int, seed: int = 7) -> list:
+    """Whole keywords, their halves and filler, concatenated at random."""
+    import random
+
+    rng = random.Random(seed)
+    kws = sorted(
+        set(RECEIPT_KEYWORDS_W10) | set(INVOICE_KEYWORDS_W10)
+        | set(RECEIPT_NEGATIVE_W10) | set(INVOICE_NEGATIVE_W10)
+    )
+    filler = ["", " ", "\n", "金", "額", "番号", "ｔｅｌ", "ｒｅｃｅｉｐｔ", "Invoice", "¥1,000", "８％"]
+    parts = kws + [k[: len(k) // 2] for k in kws] + [k[len(k) // 2:] for k in kws] + filler
+    return ["".join(rng.choices(parts, k=rng.randint(0, 12))) for _ in range(n)]
+
+
 def test_spark_classifier_agrees_exactly(spark):
     from image_ocr_spark.functions.classify import classify_df
 
@@ -89,12 +122,27 @@ def test_spark_classifier_agrees_exactly(spark):
         INVOICE_TEXT,
         "これは何の文書かわかりません。",
         "",
+        None,
         "領収書兼請求書 合計金額 振込先",
         "ＲＥＣＥＩＰＴ ｔｏｔａｌ",  # fullwidth folding path
         "領収書 領収書 領収書 レシート TEL 合計",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], ["text"])
+        # keywords contained in other keywords
+        "合計金額 合計",
+        "御請求書 請求書請求書",
+        "口座番号口座",
+        # suffix/prefix overlaps
+        "支店舗",
+        "納品目",
+        "内税抜金額",
+        "RECEIPTEL",
+        "請求書 振込先",  # negatives only on the receipt side
+        "※※※",
+        "様様様様",
+        "８％対象",
+    ] + _random_texts(300)
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = classify_df(df, "text").collect()
+    assert len(got) == len(texts)
     for t, row in zip(texts, got):
         exp = classify_doc(t)
         assert row.receipt_score_centi == exp["receipt_score_centi"], t

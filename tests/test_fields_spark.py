@@ -100,3 +100,22 @@ def test_warnings_on_sparse_text(spark):
     assert len([r for r in rows if r.url == "u3"]) == 1
     shared = sorted((r.store_name, r.total_amount) for r in rows if r.url == "u4")
     assert shared == [("店A", 300), ("店B", 700)]
+
+
+def test_invoice_dates_near_keywords_match_pycore(spark):
+    """請求日/支払期限 take a western or era date from the keyword's line,
+    never a compact YYYYMMDD one, as pycore does."""
+    from image_ocr_spark.pycore.fields import extract_invoice_fields
+
+    texts = [
+        "請求書\n請求日 20240115\n株式会社テスト",
+        "請求書\n請求日 2024年1月15日\n支払期限 20240229",
+        "請求書\n請求日 令和6年1月15日\n支払期限 2024/02/29",
+        "請求書\n請求日 2024年13月1日 令和6年1月15日",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "url int, text string")
+    got = {r.url: r for r in extract_invoice_fields_df(df).collect()}
+    for url, text in enumerate(texts):
+        oracle = extract_invoice_fields(text)
+        for k in INVOICE_SCALARS:
+            assert getattr(got[url], k) == oracle[k], (text, k)

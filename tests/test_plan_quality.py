@@ -87,8 +87,9 @@ def test_dictionary_join_broadcasts(spark):
 
 
 def test_classifier_stays_codegen(spark):
-    """Keyword scoring must not fall out of whole-stage codegen into a
-    Python UDF (it is literal-array SQL)."""
+    """Keyword scoring stays in the JVM: no Python eval node.  Its
+    higher-order functions run interpreted (codegen fallback); only the
+    fold and the doc_type threshold are whole-stage codegen'd."""
     from image_ocr_spark.functions.classify import classify_df
 
     df = classify_df(
@@ -124,6 +125,16 @@ def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path, plan):
         op in ("Sort", "Window", "Generate") or "Join" in op or op == "CartesianProduct"
         for op in ops
     ), ops
+
+
+def test_classify_folds_text_once(spark, pages_path):
+    """The fullwidth/upper fold is one projection under the keyword
+    scorer: inlined into its lambdas it would run once per keyword."""
+    from image_ocr_spark.plans.pipeline import extract_pages
+
+    df = extract_pages(spark.read.parquet(pages_path), 8)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("translate(") == 1, plan
 
 
 def test_minhash_signatures_no_shuffle(spark, documents):
