@@ -1878,7 +1878,7 @@ def _sql_kmeans_ivf(
     nprobe: int = 2,
     nq: int = 16,
 ) -> str:
-    """DuckDB replay of operators/similarity.kmeans_centroids + ivf_topk:
+    """DuckDB replay of operators/similarity.kmeans_train + ivf_topk:
     same init (deterministic hash sample + greedy farthest-point k-means++),
     same integer deci-micro centroid sums (order-independent =>
     bit-identical), same tiebreaks."""

@@ -23,11 +23,8 @@ the new one:
 
 Sizing: FPR ~= (1 - e^(-k*n/m))^k; at the defaults (k=7, m/n=16 bits
 per key) that is ~0.3%.  One bitmap broadcast is practical to ~2^36
-bits (8 GiB, ~4*10^9 keys at 16 bits/key); beyond that,
-``incremental_new_sharded`` hash-ranges both snapshots and runs the
-same build+probe per range — each range's bitmap fits, and ranges are
-independent jobs.  The FPR costs nothing in correctness: confirm()
-makes the result exact.
+bits (8 GiB, ~4*10^9 keys at 16 bits/key).  The FPR costs nothing in
+correctness: confirm() makes the result exact.
 
 Hashing is the repo's cross-engine md5 discipline (operators/dedup.py
 hash60: 15 hex chars = 60 bits, signed-BIGINT-safe in Spark AND DuckDB),
@@ -219,58 +216,3 @@ def incremental_new(
         old_df.select(F.col(key_col)).distinct(), on=key_col, how="left_anti"
     )
     return definitely_new.unionByName(confirmed_new)
-
-
-def shard_col(key: Column, n_shards: int) -> Column:
-    """Key-hash shard id in [0, n_shards) — the range-partitioning key of
-    the sharded path.  Deliberately a DIFFERENT md5 stream ('#shard'
-    suffix) from the bloom position hashes, so shard assignment and
-    in-shard positions are independent."""
-    key = F.coalesce(key, F.lit(""))
-    return hash60(F.concat(key, F.lit("#shard"))) % F.lit(n_shards)
-
-
-def incremental_new_sharded(
-    old_df: DataFrame,
-    new_df: DataFrame,
-    key_col: str = "text",
-    n_shards: int = 4,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    confirm: bool = True,
-) -> DataFrame:
-    """The beyond-one-broadcast scale path (module docstring's sizing
-    note made code): when the history is too large for a single bitmap
-    broadcast (~2^36 bits / 8 GiB ~= 4*10^9 keys at 16 bits/key), hash-
-    range both snapshots into ``n_shards`` independent build+probe jobs.
-    Each iteration broadcasts ONE shard's m_bits-bit bitmap, probes only
-    that shard's slice of the new snapshot, and confirms against only
-    that shard's slice of the old — peak broadcast memory is m_bits/8
-    bytes regardless of total history size, and the per-shard anti-join
-    keys are already co-partitioned by construction.
-
-    Result is value-identical to ``incremental_new`` (and to the plain
-    left_anti) for any n_shards: a key's old and new occurrences land in
-    the same shard, so no cross-shard pair is ever missed.
-
-    At 100 TB each shard is its own spark-submit job over snapshots
-    STORED partitioned by this shard id (``shard_col``), so the
-    per-shard filters below prune to one storage partition instead of
-    rescanning; in one session the filters express the same pruning.
-    """
-    if n_shards < 1:
-        raise ValueError("incremental_new_sharded needs n_shards >= 1")
-    old_s = old_df.withColumn("__shard", shard_col(F.col(key_col), n_shards))
-    new_s = new_df.withColumn("__shard", shard_col(F.col(key_col), n_shards))
-    out = None
-    for s in range(n_shards):
-        part = incremental_new(
-            old_s.filter(F.col("__shard") == s).drop("__shard"),
-            new_s.filter(F.col("__shard") == s).drop("__shard"),
-            key_col,
-            m_bits,
-            k,
-            confirm,
-        )
-        out = part if out is None else out.unionByName(part)
-    return out

@@ -91,74 +91,3 @@ def bpe_merges(
     finally:
         base.unpersist()
     return spark.createDataFrame(merges, MERGE_SCHEMA)
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply a learned merge table: (id, n_words, n_subwords, subwords) —
-    the tokenize-with-trained-vocab step.  Pure scan-stage column
-    expressions, ZERO shuffle: the R merges arrive as literal replace
-    chains (R is vocab-budget-sized, the same control-plane scale as the
-    learning loop's driver pulls), each word is rebuilt once per merge
-    (no derived-array-per-element re-evaluation), and word order is
-    preserved through the flatten.  Parity twin: pycore.bpe.encode_text
-    (tests/test_bpe.py)."""
-
-    def subwords_of(w):
-        rep = F.concat(
-            F.lit(" "), F.rtrim(F.regexp_replace(w, "(.)", "$1  ")), F.lit(" ")
-        )
-        for _, l, r, _, _ in merges:
-            rep = F.replace(rep, F.lit(f" {l}  {r} "), F.lit(f" {l}{r} "))
-        return F.split(F.trim(rep), "  ")
-
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, "[ \n\t\r]+"), lambda w: w != "")
-    subs = F.flatten(F.transform(words, subwords_of))
-    return docs.select(
-        F.col(id_col),
-        F.size(words).cast("long").alias("n_words"),
-        F.size(subs).cast("long").alias("n_subwords"),
-        subs.alias("subwords"),
-    )
-
-
-def bpe_merges_local(
-    docs: DataFrame, rounds: int = 8, text_col: str = "text",
-    max_vocab_rows: int = 50_000_000,
-) -> DataFrame:
-    """Same merge table as ``bpe_merges``, hybrid execution: Spark does
-    the corpus-sized reduction (the ONE shuffle that touches 100 TB),
-    then the merge loop runs driver-side over the Zipf-bounded
-    word-count table via pycore.learn_bpe — one round-trip instead of
-    one Spark job per merge.  This is how industrial trainers
-    (SentencePiece, HF tokenizers) actually run at a 30k-100k merge
-    budget: the distinct-word table of even a web-scale corpus is
-    ~10^8-10^9 rows (GBs, not TBs), so the loop is a driver/single-node
-    problem once the corpus has been reduced.  ``max_vocab_rows`` guards
-    the pull: above it, fall back to ``bpe_merges`` (fully distributed,
-    viable for small round budgets) or raise — never collect unbounded.
-    Parity: identical output to bpe_merges and the DuckDB oracle
-    (tests/test_bpe.py)."""
-    from ..pycore.bpe import learn_bpe
-
-    spark = docs.sparkSession
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    wc_df = (
-        docs.select(F.explode(F.split(t, "[ \n\t\r]+")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    n = wc_df.count()
-    if n > max_vocab_rows:
-        raise ValueError(
-            f"word-count table has {n} rows > max_vocab_rows="
-            f"{max_vocab_rows}; raise the cap or use bpe_merges"
-        )
-    wc = {r.w: int(r.cnt) for r in wc_df.collect()}
-    return spark.createDataFrame(learn_bpe(wc, rounds), MERGE_SCHEMA)

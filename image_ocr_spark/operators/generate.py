@@ -54,6 +54,15 @@ def _gen(replicas: int, max_rows: int = 50_000, max_bytes: int = 256 << 20):
     return gen_batches
 
 
+def _num_partitions(df: DataFrame) -> int:
+    """df's partition count without running it.  An exchange fixes the
+    count in the planned output partitioning; asking an adaptive plan for
+    its RDD instead would execute its shuffle stages.  A plain scan plans
+    no count, and its RDD's partitions are the scan splits."""
+    planned = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    return planned.numPartitions() or df.rdd.getNumPartitions()
+
+
 def generate_pages(documents: DataFrame, replicas: int = 1) -> DataFrame:
     """documents(doc_id, text, lang, ...) -> pages (GEN_PAGE_SCHEMA + ts cast).
 
@@ -68,9 +77,11 @@ def generate_pages(documents: DataFrame, replicas: int = 1) -> DataFrame:
     # after it — tokenize, warc serialization — since map stages fuse)
     # into a single task.  The exchange moves only (doc_id, text, lang);
     # hash on doc_id keeps the assignment deterministic under retries and
-    # defaultParallelism keeps it scale-adaptive.
+    # defaultParallelism keeps it scale-adaptive.  An input already split
+    # that wide (a pages-sized scan) keeps its partitioning: the Exchange
+    # would only move rows that are already spread.
     par = documents.sparkSession.sparkContext.defaultParallelism
-    pages = src.repartition(par, F.col("doc_id")).mapInPandas(
-        _gen(replicas), GEN_PAGE_SCHEMA
-    )
+    if _num_partitions(src) < par:
+        src = src.repartition(par, F.col("doc_id"))
+    pages = src.mapInPandas(_gen(replicas), GEN_PAGE_SCHEMA)
     return pages.withColumn("warc_ts", F.timestamp_seconds("warc_ts"))

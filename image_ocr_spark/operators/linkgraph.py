@@ -228,76 +228,6 @@ def host_rank(
     return storage.hold(r)
 
 
-def anchor_term_stats(
-    pages: DataFrame,
-    k: int = 5,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
-    """(dst_host, term, cnt, rank) — the top-k incoming anchor-text terms
-    per target host, the classic "what the web calls this site" curation
-    signal (anchor text is how link-based quality priors describe a
-    target; cf. the anchor-text features of web search ranking and the
-    link-text corpora distilled from Common Crawl).
-
-    Scale shape: link+text extraction rides the scan (one Arrow pass),
-    edge resolution is per-row expressions with the anchor column
-    carried through, and the counting is ONE (dst_host, term) shuffle
-    with map-side combine — hot terms collapse per map partition before
-    moving.  The final top-k is a per-host window over the already
-    aggregated (host, term) relation, which is |hosts| * |distinct
-    terms| — web-vocabulary sized, not corpus sized.
-
-    Terms are exact-space tokens of the anchor text (empties dropped),
-    unfolded — the established cross-engine-identical tokenization;
-    rank ties break term-ascending so the relation is deterministic.
-    """
-    from pyspark.sql import Window
-
-    links = extract_links(pages, url_col, html_col, with_text=True)
-    edges = resolve_edges(links, keep_cols=("anchor",))
-    terms = (
-        edges.select(
-            "dst_host",
-            F.explode(F.split(F.col("anchor"), " ")).alias("term"),
-        )
-        .filter(F.col("term") != "")
-        .groupBy("dst_host", "term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("dst_host").orderBy(
-        F.desc("cnt"), F.asc("term")
-    )
-    return (
-        terms.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("dst_host", "term", "cnt", F.col("rank").cast("long"))
-    )
-
-
-def robots_flags(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """(url, robots_noindex, robots_nofollow) per page — the meta-robots
-    gate (pycore/robots.py) as a scan-stage relation: corpus builders
-    left_anti the noindex urls out before extraction, and the link graph
-    drops a nofollow page's out-edges before resolve_edges (see
-    tests/test_linkgraph.py for both compositions).
-
-    Kept as a slim per-page flags relation (url + 2 booleans) rather
-    than flags-on-pages so the fat html column crosses the Python
-    boundary only here; in a production pipeline the same pycore call
-    folds into the tokenizer's existing Arrow pass — one decode per page
-    total."""
-    from image_ocr_spark.pycore.robots import page_robots
-
-    return map_rows(
-        _url_html(pages, url_col, html_col),
-        lambda u, h: [(u, *page_robots(h or b""))],
-        "url string, robots_noindex boolean, robots_nofollow boolean",
-    )
-
-
 def canonical_urls(
     pages: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:

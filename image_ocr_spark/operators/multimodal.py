@@ -13,9 +13,7 @@ Two feature paths:
   preprocessing, preprocessor.py:81-131.  Unsupported containers are
   skipped, never raised;
 - extract_media_features: byte-level histogram features for payloads
-  with no decoder here (audio/video).  decode_image remains the
-  PIL-gated general-format fallback behind an import-try (the sandbox
-  ships no PIL/cv2/ffmpeg).
+  with no decoder here (audio/video).
 """
 
 from __future__ import annotations
@@ -48,31 +46,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feature_micro", T.ArrayType(T.LongType(), False), False),
     ]
 )
-
-
-def decode_image(raw: bytes):
-    """General-format decode via PIL when available.  PNG, baseline
-    JPEG, BMP, baseline TIFF and lossless WebP (VP8L) decode from
-    scratch (media_pixel_stats); lossy WebP (VP8) binds to the system
-    libwebp when present (pycore/vp8sys.py, r06) — with that, every
-    cell of the reference's allowlist (main.py:169-176) decodes.  A
-    from-scratch VP8 decoder stays a documented non-goal: it is ~95%
-    spec constant tables (RFC 6386 §13), not logic — see vp8sys's
-    module docstring."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - no PIL in sandbox
-        raise NotImplementedError(
-            "general-format decode needs PIL/cv2; sandbox has none — "
-            "PNG/JPEG/BMP/TIFF/VP8L use the from-scratch codecs, other "
-            "payloads use byte_histogram_features (deterministic fake)"
-        ) from exc
-    import io
-
-    from PIL import Image
-
-    img = Image.open(io.BytesIO(raw))
-    return img.width, img.height, img.tobytes()
 
 
 def byte_histogram_features(raw: bytes, dim: int = FEATURE_DIM) -> List[int]:

@@ -45,56 +45,3 @@ def sample_mixture(
     for g, r in sorted(rates.items()):
         rate = F.when(F.col(group_col) == g, F.lit(float(r))).otherwise(rate)
     return docs.filter(u < rate)
-
-
-def chunk_documents(
-    docs,
-    window: int = 256,
-    stride: int = 192,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """(doc_id, chunk_id, start_token, n_chunk_tokens, chunk_text) —
-    sliding token windows with overlap (window - stride tokens), the
-    context-window segmentation step between cleaning and packing in a
-    pretraining pipeline (token_packing plans whole-doc concatenation;
-    this splits docs LONGER than a context).
-
-    Grid: starts at 0, stride, 2*stride, ... up to n - window, plus a
-    final RIGHT-ALIGNED window when the grid doesn't land exactly on the
-    tail — every token appears in at least one chunk and no start is
-    ever duplicated.  Docs with <= window tokens yield exactly one
-    chunk.  Pure JVM array expressions in the scan stage (zero Python,
-    zero shuffle); DuckDB replays the grid and the slices by value
-    (tests/test_dedup_scale.py)."""
-    from pyspark.sql import functions as F
-
-    if not 0 < stride <= window:
-        raise ValueError("need 0 < stride <= window")
-    toks = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    n = F.size(toks)
-    base = F.sequence(
-        F.lit(0), F.greatest(n - window, F.lit(0)), F.lit(stride)
-    )
-    starts = (
-        F.when(n <= window, F.array(F.lit(0)))
-        .when((n - window) % stride == 0, base)
-        .otherwise(F.concat(base, F.array(n - window)))
-    )
-    exploded = docs.select(
-        F.col(id_col),
-        toks.alias("__toks"),
-        n.alias("__n"),
-        F.posexplode(starts).alias("chunk_id", "start_token"),
-    )
-    return exploded.select(
-        id_col,
-        F.col("chunk_id").cast("long").alias("chunk_id"),
-        F.col("start_token").cast("long").alias("start_token"),
-        F.least(F.lit(window), F.col("__n") - F.col("start_token"))
-        .cast("long")
-        .alias("n_chunk_tokens"),
-        F.array_join(
-            F.slice("__toks", F.col("start_token") + 1, F.lit(window)), " "
-        ).alias("chunk_text"),
-    )

@@ -122,8 +122,8 @@ def _pair_sim_arrow(pairs: DataFrame) -> DataFrame:
 def _rank_topk(sim: DataFrame, k: int) -> DataFrame:
     """Shared (query_id, neighbor_id, rank) tail: NULL sims excluded,
     deterministic (sim desc, neighbor_id asc) tiebreak, rank <= k.  The
-    float and int8-quantized brute-force and IVF paths all use THIS
-    function so tiebreak/null policy cannot diverge between them."""
+    brute-force and IVF paths both use THIS function so tiebreak/null
+    policy cannot diverge between them."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("sim"), F.asc("neighbor_id")
     )
@@ -724,21 +724,6 @@ def kmeans_train(
     return cents
 
 
-def kmeans_centroids(
-    embeddings: DataFrame,
-    num_centroids: Optional[int] = None,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(centroid_id, centv array<double>) — DataFrame view of kmeans_train."""
-    cents = kmeans_train(embeddings, num_centroids, iters, id_col, vec_col)
-    return embeddings.sparkSession.createDataFrame(
-        [(cid, cv) for cid, cv in cents],
-        "centroid_id long, centv array<double>",
-    )
-
-
 def _probe_cells(
     queries: DataFrame,
     cents: list,
@@ -748,9 +733,7 @@ def _probe_cells(
 ) -> DataFrame:
     """(query_id, qv, pcell): each query's `nprobe` nearest IVF cells —
     broadcast query x broadcast centroid crossJoin, deterministic
-    (psim desc, centroid_id asc) tiebreak.  The float AND int8-quantized
-    IVF paths share THIS function so they always probe the same cells
-    (the property the recall-bounding comparison test relies on)."""
+    (psim desc, centroid_id asc) tiebreak."""
     spark = queries.sparkSession
     cents_df = spark.createDataFrame(
         [(cid, cv) for cid, cv in cents], "centroid_id long, centv array<double>"
@@ -1057,220 +1040,3 @@ def ivf_recall_at_k(
         .cast("long")
         .alias("recall_milli"),
     )
-
-
-# ---------------------------------------------------------------------------
-# int8 embedding quantization (r06) — the ANN memory/bandwidth lever.
-# At 10^11 vectors x 768 dims, float32 embeddings are ~300 TB; one byte
-# per dimension cuts the scan/broadcast/shuffle volume 4x with a recall
-# cost the gate below MEASURES instead of assumes (the ivf_recall
-# discipline).  Quantization is per-dimension affine (min/max over the
-# corpus — a dim-sized control-plane table, like centroids), storage is
-# a real packed BINARY column (one byte per dim), and scoring
-# dequantizes inside the Arrow batch — floats never cross an engine
-# boundary unscored.
-# ---------------------------------------------------------------------------
-
-
-def embedding_quant_params(
-    emb: DataFrame, vec_col: str = "embedding"
-) -> list:
-    """[(dim, lo, hi)] per dimension — ONE posexplode + map-combined agg
-    (output bounded by dim rows, the control-plane contract)."""
-    rows = (
-        emb.select(F.posexplode(vec_col).alias("dim", "v"))
-        .groupBy("dim")
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .collect()
-    )
-    return sorted((r.dim, float(r.lo), float(r.hi)) for r in rows)
-
-
-def quantize_embeddings(
-    emb: DataFrame,
-    params: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, qvec BINARY) — one byte per dimension:
-    q_d = clip(floor((v - lo_d) * 255 / (hi_d - lo_d)), 0, 255), with
-    degenerate dims (hi == lo) pinned to 0.  One Arrow pass; the packed
-    binary column is the 4x-smaller thing that scans/broadcasts at
-    10^11-vector scale."""
-    import numpy as np
-    import pyarrow as pa
-
-    lo = np.array([p[1] for p in params])
-    span = np.array([max(p[2] - p[1], 0.0) for p in params])
-    scale = np.where(span > 0, 255.0 / np.where(span > 0, span, 1.0), 0.0)
-
-    def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ids = batch.column(0)
-            _, V = _flat_f64(batch.column(1), n)
-            q = np.clip(np.floor((V - lo) * scale), 0, 255).astype(np.uint8)
-            d = q.shape[1]
-            # binary array straight from the contiguous buffer (uniform
-            # offsets) — zero per-row Python on the scan-stage hot path.
-            # pa.binary() carries 32-bit offsets: fail loudly if a batch's
-            # packed payload would wrap them (r07, ADVICE) instead of
-            # silently emitting a corrupt column
-            if (n + 1) * d > np.iinfo(np.int32).max:
-                raise ValueError(
-                    f"quantized batch payload {(n + 1) * d} bytes overflows "
-                    "int32 binary offsets; lower arrow.maxRecordsPerBatch"
-                )
-            offsets = np.arange(0, (n + 1) * d, d, dtype=np.int32)
-            qvec = pa.Array.from_buffers(
-                pa.binary(), n,
-                [None, pa.py_buffer(offsets.tobytes()),
-                 pa.py_buffer(np.ascontiguousarray(q).tobytes())],
-            )
-            yield pa.RecordBatch.from_arrays([ids, qvec], ["vec_id", "qvec"])
-
-    return emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    ).mapInArrow(fn, "vec_id long, qvec binary")
-
-
-def _flat_u8(col, n: int, expect_dim: int):
-    """(dim, (n, dim) uint8 view) from an Arrow binary column of packed
-    qvecs — the binary analog of _flat_f64: zero-copy via the offsets +
-    data child buffers, LOUD on nulls, ragged widths, or a width that
-    disagrees with the quant params (a mixed-params union would otherwise
-    score shifted bytes silently)."""
-    import numpy as np
-    import pyarrow as pa
-
-    if col.null_count:
-        raise ValueError("null qvec row reached the quantized scorer")
-    off_width = 8 if pa.types.is_large_binary(col.type) else 4
-    off_dtype = np.int64 if off_width == 8 else np.int32
-    offsets = np.frombuffer(
-        col.buffers()[1], dtype=off_dtype,
-        count=n + 1, offset=col.offset * off_width,
-    )
-    widths = np.diff(offsets)
-    if n and not (widths == expect_dim).all():
-        raise ValueError(
-            f"qvec widths {sorted(set(widths.tolist()))} != quant dim "
-            f"{expect_dim} — quantized under different params?"
-        )
-    data = np.frombuffer(col.buffers()[2], dtype=np.uint8)
-    V = data[offsets[0] : offsets[0] + n * expect_dim].reshape(n, expect_dim)
-    return expect_dim, V
-
-
-def _dequant_pair_sim_arrow(
-    pairs: DataFrame, params: list, left_is_float: bool
-) -> DataFrame:
-    """(query_id, neighbor_id, sim) over (query_id, neighbor_id, left,
-    right) where `right` is always a packed qvec and `left` is either a
-    float array (left_is_float=True — the IVF query side) or another
-    packed qvec (the symmetric brute-force path).  ONE implementation of
-    the dequantize/einsum/zero-norm-mask policy so the quantized scorers
-    cannot diverge."""
-    import numpy as np
-    import pyarrow as pa
-
-    lo = np.array([p[1] for p in params])
-    step = np.array([max(p[2] - p[1], 0.0) / 255.0 for p in params])
-    dim = len(params)
-
-    def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            qid, nid = batch.column(0), batch.column(1)
-            if left_is_float:
-                _, A = _flat_f64(batch.column(2), n)
-            else:
-                _, QA = _flat_u8(batch.column(2), n, dim)
-                A = QA.astype(np.float64) * step + lo
-            _, QB = _flat_u8(batch.column(3), n, dim)
-            B = QB.astype(np.float64) * step + lo
-            dot = np.einsum("ij,ij->i", A, B)
-            n2 = np.einsum("ij,ij->i", A, A) * np.einsum("ij,ij->i", B, B)
-            ok = n2 > 0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = np.where(ok, dot / np.sqrt(n2), 0.0)
-            yield pa.RecordBatch.from_arrays(
-                [qid, nid, pa.array(sim, pa.float64(), mask=~ok)],
-                ["query_id", "neighbor_id", "sim"],
-            )
-
-    return pairs.mapInArrow(fn, "query_id long, neighbor_id long, sim double")
-
-
-def brute_force_topk_quantized(
-    qvecs: DataFrame,
-    query_qvecs: DataFrame,
-    params: list,
-    k: int = 10,
-) -> DataFrame:
-    """(query_id, neighbor_id, rank) — exact cosine top-k over the
-    DEQUANTIZED int8 vectors (v^ = lo + q * span/255): same join shape as
-    brute_force_topk and the SAME _rank_topk tail (tiebreak/null policy
-    cannot diverge), but the corpus side streams 1-byte-per-dim rows
-    decoded zero-copy from the Arrow binary buffers.  Recall vs the float
-    path is a measured gate (tests/test_similarity.py), not an
-    assumption."""
-    q = query_qvecs.select(
-        F.col("vec_id").alias("query_id"), F.col("qvec").alias("qq")
-    )
-    c = qvecs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("qvec").alias("cq")
-    )
-    joined = F.broadcast(q).crossJoin(c).select(
-        "query_id", "neighbor_id", "qq", "cq"
-    )
-    sim = _dequant_pair_sim_arrow(joined, params, left_is_float=False)
-    return _rank_topk(sim, k)
-
-
-def ivf_topk_quantized(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    params: list,
-    k: int = 5,
-    num_centroids: int = 8,
-    iters: int = 2,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF pruning x int8 storage — the production ANN combination at
-    10^11-vector scale: the STORED relation is (vid, cell, packed qvec —
-    one byte per dim, 4x less scan/shuffle volume), while float
-    centroids remain the O(C*dim) control plane (index-BUILD quantizes
-    and assigns in one pass off the float vectors; queries stay float —
-    only the corpus side pays storage).  The candidate join hauls packed
-    bytes only; scoring dequantizes inside the Arrow batch against the
-    float query and feeds the shared _rank_topk tail.  Recall vs the
-    float brute force is a measured gate (tests/test_similarity.py)."""
-    cents = kmeans_train(embeddings, num_centroids, iters, id_col, vec_col)
-    vecs = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
-    )
-    # index build: (vid, cell) + (vid, qvec) — written once in production;
-    # the equi-join here stands in for that one-off write
-    assigned = assign_cells_arrow(vecs, cents).select("vid", "cell")
-    stored = assigned.join(
-        quantize_embeddings(embeddings, params, id_col, vec_col),
-        assigned.vid == F.col("vec_id"),
-    ).select("vid", "cell", "qvec")
-
-    probes = _probe_cells(queries, cents, nprobe, id_col, vec_col)
-    matched = (
-        F.broadcast(probes)
-        .join(stored, F.col("pcell") == F.col("cell"))
-        .select(
-            "query_id", F.col("vid").alias("neighbor_id"), "qv", "qvec"
-        )
-    )
-    sim = _dequant_pair_sim_arrow(matched, params, left_is_float=True)
-    return _rank_topk(sim, k)

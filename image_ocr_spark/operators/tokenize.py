@@ -62,11 +62,6 @@ ENGINES = {"html": scan_html_cols, "pdf": _pdf_cols}
 _SENT_COLS = ([-1], ["empty"], [""], [0], [0], [0])
 
 
-def detect_engine(raw: bytes) -> str:
-    """Magic-byte strategy pick (the 'auto' branch)."""
-    return "pdf" if is_pdf(raw) else "html"
-
-
 def available_engines() -> list:
     """Registry availability probe (ref engines/__init__.py:53-109): an
     engine is available iff it tokenizes a trivial fixture without raising.

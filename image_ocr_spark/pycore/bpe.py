@@ -72,23 +72,3 @@ def learn_bpe(wc: Dict[str, int], rounds: int) -> List[Merge]:
         pat, new = f" {l}  {r} ", f" {l}{r} "
         reps = [(rep.replace(pat, new), cnt) for rep, cnt in reps]
     return merges
-
-
-def encode_word(word: str, merges: List[Merge]) -> List[str]:
-    """word -> subword symbols by replaying the learned merges IN ORDER —
-    the apply side of BPE.  Same replace semantics as learning, so a
-    word seen in training segments exactly as its final training rep."""
-    rep = to_rep(word)
-    for _, l, r, _, _ in merges:
-        rep = rep.replace(f" {l}  {r} ", f" {l}{r} ")
-    return rep.strip().split("  ")
-
-
-def encode_text(text: str, merges: List[Merge]) -> List[str]:
-    """text -> flat subword stream (word order preserved, no word
-    markers — the caller owns special tokens)."""
-    out: List[str] = []
-    for w in WS.split(text or ""):
-        if w:
-            out.extend(encode_word(w, merges))
-    return out

@@ -9,7 +9,6 @@ local-mode-specific except the master default.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -57,12 +56,6 @@ ENGINE_CONFS = {
     "spark.sql.parquet.compression.codec": "zstd",
     # timestamps in fixtures are UTC
     "spark.sql.session.timeZone": "UTC",
-    # bucketed-table warehouse (in-memory catalog): keep it off the repo cwd
-    # in local mode and per-user so concurrent runs on a shared host don't
-    # clobber each other; a cluster deployment overrides via --conf
-    "spark.sql.warehouse.dir": os.path.join(
-        tempfile.gettempdir(), f"image_ocr_spark-warehouse-{os.getuid()}"
-    ),
 }
 
 

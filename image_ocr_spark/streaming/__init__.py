@@ -1,1 +1,1 @@
-"""Structured Streaming ingest (optional batch-equivalent micro-batch path)."""
+"""Stateful Structured Streaming operators (windowed counts, cross-batch dedup)."""

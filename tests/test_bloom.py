@@ -188,36 +188,11 @@ def test_probe_plan_is_shuffle_free(spark, documents):
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan
 
 
-def test_sharded_matches_unsharded(spark, documents):
-    """Range-sharded build+probe (the beyond-one-broadcast scale path) is
-    value-identical to the single-bitmap path — and to the exact
-    anti-join — for any shard count, including shards with no rows."""
-    from image_ocr_spark.operators.bloom import incremental_new_sharded
-
-    old, new = _snapshots(spark, documents)
-    want = sorted(
-        (r.doc_id, r.text)
-        for r in incremental_new(old, new, "text", M_BITS, K).collect()
-    )
-    for n_shards in (1, 3, 64):
-        got = sorted(
-            (r.doc_id, r.text)
-            for r in incremental_new_sharded(
-                old, new, "text", n_shards, M_BITS, K
-            ).collect()
-        )
-        assert got == want, n_shards
-
-
-def test_sharded_cheap_mode_never_keeps_duplicates(spark, documents):
-    """confirm=False across shards: may over-drop (per-shard false
-    positives) but never keeps a row whose text exists in old."""
-    from image_ocr_spark.operators.bloom import incremental_new_sharded
-
+def test_cheap_mode_never_keeps_duplicates(spark, documents):
+    """confirm=False: may over-drop (bloom false positives) but never
+    keeps a row whose text exists in old."""
     old, new = _snapshots(spark, documents)
     old_texts = {r.text for r in old.select("text").distinct().collect()}
-    kept = incremental_new_sharded(
-        old, new, "text", 3, M_BITS, K, confirm=False
-    ).collect()
+    kept = incremental_new(old, new, "text", M_BITS, K, confirm=False).collect()
     assert kept  # non-degenerate
     assert all(r.text not in old_texts for r in kept)

@@ -2,8 +2,6 @@
 semantics corner cases the two-space representation exists for."""
 
 import duckdb
-import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from image_ocr_spark.operators.bpe import bpe_merges
@@ -100,39 +98,3 @@ def test_median_by_type_oracle_preserved(spark):
     want = sorted(tuple(r) for r in con.execute(entrymod.MEDIAN_ORACLE_SQL).fetchall())
     con.close()
     assert got == want and len(got) > 0
-
-
-def test_encode_applies_merges_scan_stage(spark, documents):
-    """Train on the fixture corpus, encode with the learned table:
-    Spark == pycore per doc, subwords reconstruct the original words,
-    and the encode plan has no Exchange (pure scan stage)."""
-    from image_ocr_spark.operators.bpe import bpe_encode
-    from image_ocr_spark.pycore.bpe import WS, encode_text
-
-    texts = [(r.doc_id, r.text) for r in documents.select("doc_id", "text").collect()]
-    merges = learn_bpe(word_counts(t for _, t in texts), 6)
-    docs = documents.select("doc_id", "text")
-    enc = bpe_encode(docs, merges)
-    assert "Exchange" not in enc._jdf.queryExecution().executedPlan().toString()
-    got = {r.doc_id: (r.n_words, r.n_subwords, list(r.subwords)) for r in enc.collect()}
-    for doc_id, t in texts:
-        want = encode_text(t, merges)
-        n_words, n_subwords, subs = got[doc_id]
-        assert subs == want and n_subwords == len(want)
-        # lossless: concatenating subwords reproduces the word stream
-        assert "".join(subs) == "".join(w for w in WS.split(t or "") if w)
-        assert n_words == sum(1 for w in WS.split(t or "") if w)
-
-
-def test_local_loop_matches_distributed(spark, documents):
-    """bpe_merges_local (Spark reduction + driver-side loop — the
-    industrial 30k-merge-budget execution) is row-identical to the fully
-    distributed loop on the fixture corpus."""
-    from image_ocr_spark.operators.bpe import bpe_merges, bpe_merges_local
-
-    docs = documents.select("doc_id", "text")
-    a = [tuple(r) for r in bpe_merges(docs, rounds=6).collect()]
-    b = [tuple(r) for r in bpe_merges_local(docs, rounds=6).collect()]
-    assert a == b and len(a) == 6
-    with pytest.raises(ValueError):
-        bpe_merges_local(docs, rounds=2, max_vocab_rows=10)

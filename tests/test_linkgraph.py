@@ -9,7 +9,6 @@
 """
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
@@ -347,10 +346,10 @@ ANCHOR_LINK_ROWS = [
 ]
 
 
-def test_anchor_term_stats_counting_matches_oracle(spark):
-    """The counting+ranking half on literal links: resolve with anchor
-    passthrough, one (host, term) count, per-host top-k with the
-    deterministic tie-break — replayed by DuckDB by value."""
+def test_resolve_edges_carries_anchor_through(spark):
+    """resolve_edges carries the anchor column through (keep_cols): a
+    per-(host, term) count and per-host top-k over the resolved edges,
+    with the deterministic tie-break, replayed by DuckDB by value."""
     from image_ocr_spark.operators.linkgraph import resolve_edges
     from pyspark.sql import Window
 
@@ -419,30 +418,6 @@ FROM counted QUALIFY rank <= 2
     assert top[("t.example", 1)] == "great"
 
 
-def test_anchor_term_stats_end_to_end(spark, documents):
-    """Full chain over fixture pages: every reported term must actually
-    appear in some page's anchor text (pycore recount), ranks are
-    contiguous from 1, and counts are positive."""
-    from image_ocr_spark.operators.generate import generate_pages
-    from image_ocr_spark.operators.linkgraph import anchor_term_stats
-    from image_ocr_spark.pycore.links import find_links
-
-    pages = generate_pages(documents.limit(100))
-    rows = anchor_term_stats(pages, k=3).collect()
-    assert rows
-    seen_terms = set()
-    for r in pages.select("html").collect():
-        for _, text in find_links(r.html or b""):
-            seen_terms.update(t for t in text.split(" ") if t)
-    by_host = {}
-    for r in rows:
-        assert r.cnt > 0
-        assert r.term in seen_terms
-        by_host.setdefault(r.dst_host, []).append(r.rank)
-    for host, ranks in by_host.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), host
-
-
 def test_find_links_linear_on_hostile_many_anchors():
     """20k href anchors sharing ONE distant close tag: the memoized
     next-close pointer keeps the scan O(n) (a naive per-anchor find
@@ -459,111 +434,6 @@ def test_find_links_linear_on_hostile_many_anchors():
     assert elapsed < 3.0, elapsed
 
 
-# ------------------------------------------------------------ meta-robots
-
-
-def test_page_robots_semantics():
-    from image_ocr_spark.pycore.robots import page_robots
-
-    cases = [
-        (b"<html><head></head><body>x</body></html>", (False, False)),
-        (b"<meta name='robots' content='noindex'>", (True, False)),
-        (b'<META NAME="ROBOTS" CONTENT="NOFOLLOW">', (False, True)),
-        (b"<meta name=robots content=none>", (True, True)),
-        (b"<meta name='robots' content=' noindex , nofollow '>", (True, True)),
-        (b"<meta name='robots' content='all'>", (False, False)),
-        (b"<meta name='robots' content='noarchive, nosnippet'>", (False, False)),
-        # multiple metas OR together (restrictive union)
-        (
-            b"<meta name='robots' content='noindex'>"
-            b"<meta name='robots' content='nofollow'>",
-            (True, True),
-        ),
-        # other meta names never fire
-        (b"<meta name='googlebot' content='noindex'>", (False, False)),
-        (b"<meta charset='utf-8'><meta name='viewport' content='x'>", (False, False)),
-        # commented-out meta is stripped before scanning
-        (b"<!-- <meta name='robots' content='noindex'> -->", (False, False)),
-        # content before name, bare values, self-closing
-        (b"<meta content='noindex' name='robots' />", (True, False)),
-    ]
-    for raw, want in cases:
-        assert page_robots(raw) == want, raw
-
-
-def test_page_robots_never_raises_on_garbage():
-    from image_ocr_spark.pycore.robots import page_robots
-
-    for raw in (b"", b"\xff\xfe\x00garbage", b"<meta name=", b"<" * 4096):
-        assert page_robots(raw) == (False, False)
-
-
-ROBOTS_PAGES = [
-    ("http://a.example/keep", b"<html><body><a href='/x'>link</a></body></html>"),
-    (
-        "http://a.example/noindex",
-        b"<html><head><meta name='robots' content='noindex'></head>"
-        b"<body><a href='/y'>link</a></body></html>",
-    ),
-    (
-        "http://b.example/nofollow",
-        b"<html><head><meta name='robots' content='nofollow'></head>"
-        b"<body><a href='http://t.example/z'>out</a></body></html>",
-    ),
-    (
-        "http://b.example/none",
-        b"<html><head><meta name='robots' content='none'></head>"
-        b"<body><a href='/w'>link</a></body></html>",
-    ),
-]
-
-
-def test_robots_flags_matches_pycore_and_composes(spark):
-    """Spark flags == pycore per page; the two compositions the operator
-    exists for: noindex pages drop out of the corpus, nofollow (and
-    none) pages contribute zero link-graph edges."""
-    from image_ocr_spark.operators.linkgraph import robots_flags
-    from image_ocr_spark.pycore.robots import page_robots
-
-    pages = spark.createDataFrame(ROBOTS_PAGES, "url string, html binary")
-    flags = robots_flags(pages)
-    got = {r.url: (r.robots_noindex, r.robots_nofollow) for r in flags.collect()}
-    want = {u: page_robots(h) for u, h in ROBOTS_PAGES}
-    assert got == want
-
-    # corpus gate: anti-join the noindex urls
-    kept = pages.join(
-        flags.filter(F.col("robots_noindex")).select("url"),
-        on="url",
-        how="left_anti",
-    )
-    assert {r.url for r in kept.collect()} == {
-        "http://a.example/keep",
-        "http://b.example/nofollow",
-    }
-
-    # link-graph gate: drop nofollow pages' out-edges before resolution
-    followable = pages.join(
-        flags.filter(F.col("robots_nofollow")).select("url"),
-        on="url",
-        how="left_anti",
-    )
-    edges = resolve_edges(extract_links(followable)).collect()
-    srcs = {r.src_host for r in edges}
-    assert srcs == {"a.example"}  # both b.example pages are nofollow/none
-
-
-def test_robots_flags_plan_is_scan_stage(spark):
-    from image_ocr_spark.operators.linkgraph import robots_flags
-
-    pages = spark.createDataFrame(ROBOTS_PAGES, "url string, html binary")
-    plan = (
-        robots_flags(pages)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "MapInArrow" in plan or "ArrowEvalPython" in plan
-
-
 def test_find_links_close_tag_name_boundary():
     """r05 review regression: </abbr> (and any other a-prefixed close
     tag) must NOT end an anchor's text, and data-href= must not count as
@@ -577,20 +447,3 @@ def test_find_links_close_tag_name_boundary():
     assert find_links(b"<a data-href='/wrong'>t</a>") == []
     (href2, _), = find_links(b"<a data-href='/wrong' href='/right'>t</a>")
     assert href2 == "/right"
-
-
-def test_page_robots_attribute_name_boundary():
-    """r05 review regression: data-name=/data-content= never count as
-    the robots name/content attributes."""
-    from image_ocr_spark.pycore.robots import page_robots
-
-    assert page_robots(b"<meta data-name='robots' content='noindex'>") == (
-        False,
-        False,
-    )
-    assert page_robots(
-        b"<meta data-name='x' name='robots' content='noindex'>"
-    ) == (True, False)
-    assert page_robots(
-        b"<meta name='robots' data-content='all' content='nofollow'>"
-    ) == (False, True)

@@ -49,7 +49,6 @@ def test_tokenizer_input_pruned(spark, pages_path):
     "op",
     [
         "linkgraph.extract_links",
-        "linkgraph.robots_flags",
         "linkgraph.canonical_urls",
         "spans.pdf_layout_spans",
         "spans.pdf_table_cells",
@@ -69,6 +68,30 @@ def test_page_operator_single_arrow_pass(spark, pages_path, op):
     assert re.findall(r"(\w+):", read_schema) == ["url", "html"], read_schema
     nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
     assert nodes.count("MapInArrow") == 1 and "Exchange" not in nodes, nodes
+
+
+@pytest.mark.parametrize("wide", [True, False])
+def test_generate_pages_spreads_only_narrow_input(spark, documents, tmp_path, wide):
+    """generate_pages repartitions its input only when it has fewer
+    partitions than defaultParallelism: a scan already split that wide
+    gets no Exchange, a 1-partition input gets exactly one."""
+    import re
+
+    from image_ocr_spark.operators.generate import generate_pages
+
+    par = spark.sparkContext.defaultParallelism
+    if wide:
+        documents.repartition(par).write.parquet(str(tmp_path / "docs"))
+        src = spark.read.parquet(str(tmp_path / "docs"))
+        assert src.rdd.getNumPartitions() >= par
+    else:
+        src = documents.coalesce(1)
+
+    def exchanges(df):
+        return re.findall(r"^\(\d+\) (\w+)", _formatted(df), re.M).count("Exchange")
+
+    added = exchanges(generate_pages(src)) - exchanges(src)
+    assert added == (0 if wide else 1)
 
 
 def test_dictionary_join_broadcasts(spark):

@@ -1,4 +1,4 @@
-"""Checkpoint manifests + resume, streaming ingest, multimodal plumbing."""
+"""Checkpoint manifests + resume, multimodal plumbing."""
 
 import json
 import os
@@ -84,27 +84,6 @@ def test_checkpoint_rerun_is_noop(spark, pages, tmp_path):
     assert ck.run(pages, extract_pages) == []  # nothing pending
 
 
-def test_streaming_ingest_matches_batch(spark, pages, tmp_path):
-    from image_ocr_spark.streaming.ingest import read_extracted, run_ingest
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    pages.write.parquet(pages_dir)
-
-    run_ingest(spark, pages_dir, out_dir, ck_dir, available_now=True)
-    ext = read_extracted(spark, out_dir)
-    # the canonical reader returns the BATCH schema (no _batch_id leak)
-    assert sorted(ext.columns) == sorted(extract_pages(pages).columns)
-    streamed = {r.url: r.text for r in ext.collect()}
-    batch = {r.url: r.text for r in extract_pages(pages).collect()}
-    assert streamed == batch
-
-    # drain again with the same checkpoint: no new files -> no duplicates
-    run_ingest(spark, pages_dir, out_dir, ck_dir, available_now=True)
-    assert spark.read.parquet(out_dir).count() == len(batch)
-
-
 def test_checkpoint_input_counters_single_pass(spark, pages, tmp_path, monkeypatch):
     """Input counters must ride the write job via observe(), not a second
     collect() over the raw source per batch (VERDICT r01 item 8).  The only
@@ -126,24 +105,6 @@ def test_checkpoint_input_counters_single_pass(spark, pages, tmp_path, monkeypat
     assert m["output_rows"] == m["input_rows"]
 
 
-def test_streaming_replay_is_idempotent(spark, pages, tmp_path):
-    """Crash-replay contract: re-running foreachBatch for the SAME batch_id
-    (what Structured Streaming does after a crash between sink write and
-    checkpoint commit) must not duplicate rows (ADVICE r01)."""
-    from image_ocr_spark.streaming.ingest import make_batch_writer
-
-    out_dir = str(tmp_path / "out_replay")
-    proc = make_batch_writer(out_dir)
-    proc(pages, 7)
-    first = spark.read.parquet(out_dir).count()
-    assert first == pages.count()
-    proc(pages, 7)  # replay of the same micro-batch
-    assert spark.read.parquet(out_dir).count() == first
-    # a NEW batch id still appends (separate partition)
-    proc(pages.limit(5), 8)
-    assert spark.read.parquet(out_dir).count() == first + 5
-
-
 def test_multimodal_feature_plumbing(spark, documents):
     from image_ocr_spark.operators.multimodal import (
         byte_histogram_features,
@@ -162,13 +123,6 @@ def test_multimodal_feature_plumbing(spark, documents):
         expected = byte_histogram_features(raw[mid])
         assert list(row.feature_micro) == expected
     assert {r.media_type for r in feats} == {"image", "audio", "video"}
-
-
-def test_multimodal_decode_is_stubbed():
-    from image_ocr_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG fake")
 
 
 def test_checkpoint_resume_after_kill_between_write_and_commit(
@@ -207,60 +161,6 @@ def test_checkpoint_resume_after_kill_between_write_and_commit(
     assert m["buckets"] == 8
     assert m["output_rows"] == len(direct)
     assert m["input_rows"] == len(direct)  # redone buckets counted ONCE
-
-
-def test_streaming_resume_replays_uncommitted_batch_exactly_once(
-    spark, pages, tmp_path
-):
-    """Failure injection for the streaming path: crash between the
-    foreachBatch sink write and the streaming checkpoint commit = the
-    offsets record exists but the commits record does not.  On restart
-    Structured Streaming replays that batch with the SAME batch_id; the
-    dynamic-overwrite sink makes the replay idempotent, so the drained
-    output equals the batch run exactly."""
-    from image_ocr_spark.streaming.ingest import (
-        make_batch_writer,
-        read_extracted,
-        stream_pages,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ck_dir = str(tmp_path / "ck")
-    # several input files -> several micro-batches (1 file per trigger)
-    pages.repartition(3).write.parquet(pages_dir)
-
-    def drain():
-        q = (
-            stream_pages(spark, pages_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(make_batch_writer(out_dir))
-            .option("checkpointLocation", ck_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain()
-    batch = {r.url: r.text for r in extract_pages(pages).collect()}
-    assert {r.url: r.text for r in read_extracted(spark, out_dir).collect()} == batch
-
-    # crash injection: the last batch's sink write landed, its checkpoint
-    # commit did not
-    commits = os.path.join(ck_dir, "commits")
-    batch_ids = sorted(int(f) for f in os.listdir(commits) if f.isdigit())
-    assert len(batch_ids) >= 2, "need multiple micro-batches for this test"
-    os.remove(os.path.join(commits, str(batch_ids[-1])))
-    # ...and its Hadoop checksum sidecar: a crashed run wrote NEITHER file
-    # (leaving only the .crc would be a different corruption, which Spark
-    # rejects loudly as a concurrent-writer conflict)
-    crc = os.path.join(commits, f".{batch_ids[-1]}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    drain()  # restart: replays ONLY the uncommitted batch, same batch_id
-    out = read_extracted(spark, out_dir)
-    assert {r.url: r.text for r in out.collect()} == batch  # no dupes/losses
-    assert out.count() == len(batch)
 
 
 def test_generate_pages_bounds_output_batches():

@@ -88,14 +88,13 @@ def test_ivf_recall_vs_bruteforce(spark):
 def test_kmeans_centroids_deterministic(spark):
     """Integer-exact accumulation: same centroids regardless of input
     partitioning (the property the SQL oracle depends on)."""
-    from image_ocr_spark.operators.similarity import kmeans_centroids
+    from image_ocr_spark.operators.similarity import kmeans_train
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    c1 = kmeans_centroids(emb.repartition(13), num_centroids=8, iters=2).collect()
-    c2 = kmeans_centroids(emb.coalesce(1), num_centroids=8, iters=2).collect()
-    m1 = {r.centroid_id: list(r.centv) for r in c1}
-    m2 = {r.centroid_id: list(r.centv) for r in c2}
-    assert m1 == m2  # bitwise-equal doubles
+    c1 = kmeans_train(emb.repartition(13), num_centroids=8, iters=2)
+    c2 = kmeans_train(emb.coalesce(1), num_centroids=8, iters=2)
+    assert len(c1) == 8
+    assert c1 == c2  # bitwise-equal doubles
 
 
 def _boundary_corpus(spark):
@@ -577,100 +576,3 @@ def test_grouped_hot_cell_cap_parity(spark):
         .count()
     )
     assert n_groups > n_cells  # oversized cells fanned out into sub-blocks
-
-
-def test_int8_quantized_recall_gate(spark):
-    """int8 embedding quantization (r06): packed qvec is exactly one
-    byte per dim (the 4x memory story made literal), quantization is
-    deterministic, and brute-force recall@5 over dequantized int8
-    vectors stays >= 0.9 vs the float path on both the fixture corpus
-    and the clustered synthesis."""
-    from pyspark.sql import functions as F
-
-    from image_ocr_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_quantized,
-        embedding_quant_params,
-        quantize_embeddings,
-        synth_clustered_embeddings,
-    )
-    from tests.conftest import SF_DIR
-
-    emb = (
-        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .filter(F.col("embedding").isNotNull())
-    )
-    clustered = synth_clustered_embeddings(
-        spark.range(300).select(F.col("id").alias("vec_id"))
-    )
-    for corpus in (emb, clustered):
-        params = embedding_quant_params(corpus)
-        dim = len(params)
-        qv = quantize_embeddings(corpus, params).persist()
-        lens = qv.select(F.octet_length("qvec").alias("n")).distinct().collect()
-        assert [r.n for r in lens] == [dim]  # one byte per dimension
-        # determinism: re-quantizing yields identical bytes
-        again = {r.vec_id: bytes(r.qvec) for r in
-                 quantize_embeddings(corpus, params).collect()}
-        assert {r.vec_id: bytes(r.qvec) for r in qv.collect()} == again
-
-        queries = corpus.filter(F.col("vec_id") % 37 == 0).limit(12)
-        qq = quantize_embeddings(queries, params)
-        want = {
-            (r.query_id, r.neighbor_id)
-            for r in brute_force_topk(corpus, queries, k=5).collect()
-        }
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in brute_force_topk_quantized(qv, qq, params, k=5).collect()
-        }
-        n_q = len({q for q, _ in want})
-        recall = len(got & want) / len(want)
-        assert n_q > 0 and recall >= 0.9, (n_q, recall)
-        qv.unpersist()
-
-
-def test_ivf_quantized_recall_gate(spark):
-    """IVF pruning x int8 storage (r06): the stored relation is
-    (vid, cell, packed qvec); recall@5 vs the FLOAT brute force stays
-    >= 0.85 on the clustered corpus at C=16/nprobe=2 — pruning error and
-    quantization error compose without collapsing."""
-    from pyspark.sql import functions as F
-
-    from image_ocr_spark.operators.similarity import (
-        brute_force_topk,
-        embedding_quant_params,
-        ivf_topk,
-        ivf_topk_quantized,
-        synth_clustered_embeddings,
-    )
-
-    corpus = synth_clustered_embeddings(
-        spark.range(400).select(F.col("id").alias("vec_id"))
-    ).persist()
-    queries = corpus.filter(F.col("vec_id") % 29 == 0).limit(12)
-    params = embedding_quant_params(corpus)
-
-    want = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(corpus, queries, k=5).collect()
-    }
-    got_q = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk_quantized(
-            corpus, queries, params, k=5, num_centroids=16, nprobe=2
-        ).collect()
-    }
-    recall_q = len(got_q & want) / len(want)
-    assert recall_q >= 0.85, recall_q
-    # the float IVF at the same geometry bounds the quantization cost
-    got_f = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk(
-            corpus, queries, k=5, num_centroids=16, nprobe=2
-        ).collect()
-    }
-    recall_f = len(got_f & want) / len(want)
-    assert recall_f - recall_q <= 0.1, (recall_f, recall_q)
-    corpus.unpersist()

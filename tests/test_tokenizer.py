@@ -127,13 +127,12 @@ def test_engine_registry_and_fallback():
     from image_ocr_spark.operators.tokenize import (
         _run_engine_cols,
         available_engines,
-        detect_engine,
     )
 
     assert available_engines() == ["html", "pdf"]
     html = b"<p>hello world from the html branch</p>"
     pdf = make_pdf(["hello pdf"])
-    assert detect_engine(html) == "html" and detect_engine(pdf) == "pdf"
+    assert not is_pdf(html) and is_pdf(pdf)
 
     def nodes(cols):
         """(used_engine, node tuples) from the flat-column result."""

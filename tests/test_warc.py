@@ -204,48 +204,6 @@ def test_read_warc_plan_is_scan_stage_only(spark, documents):
     assert explained.count("Exchange") == n_in
 
 
-def test_stream_warc_chunks_equals_batch(spark, documents, tmp_path):
-    """SURVEY §7 stretch closed: availableNow drain over arriving WARC
-    chunk partitions parses record-identically to the batch path, with
-    warc_ts as an event-time timestamp ready for watermarking."""
-    from image_ocr_spark.operators.generate import generate_pages
-    from image_ocr_spark.operators.warcsource import pages_to_warc, read_warc
-    from image_ocr_spark.streaming.ingest import stream_warc_chunks
-
-    pages = generate_pages(documents.limit(120))
-    chunks = pages_to_warc(pages, max_chunk_bytes=8 << 10)
-    chunks_dir = str(tmp_path / "chunks")
-    # two "arrivals": a backfill file and a tail file
-    chunks.filter(F.col("n_records") % 2 == 0).write.parquet(
-        chunks_dir, mode="overwrite"
-    )
-    chunks.filter(F.col("n_records") % 2 == 1).write.parquet(
-        chunks_dir, mode="append"
-    )
-
-    out_dir, ck_dir = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = (
-        stream_warc_chunks(spark, chunks_dir, max_files_per_trigger=1)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = spark.read.parquet(out_dir)
-    want = read_warc(spark.read.parquet(chunks_dir))
-    key = lambda r: r.url  # noqa: E731
-    grows = sorted(got.collect(), key=key)
-    wrows = sorted(want.collect(), key=key)
-    assert len(grows) == len(wrows) > 0
-    for g, w in zip(grows, wrows):
-        assert g.url == w.url and bytes(g.payload) == bytes(w.payload)
-        assert int(g.warc_ts.timestamp()) == w.warc_ts  # ts->timestamp cast
-
-
 def test_binaryfile_source_feeds_read_warc(spark, documents, tmp_path):
     """The documented 100 TB path, literally: real `.warc.gz` segment
     files on disk, read via the binaryFile source, parsed by the same
