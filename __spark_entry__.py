@@ -1811,7 +1811,7 @@ def _sql_batched_init_seeds(num_centroids: int = 32, batch: int = 8) -> str:
     non-degenerate first seed, then ceil((C-1)/batch) rounds each taking
     the `batch` rows with smallest (max cosine to seed set, vid) among
     not-yet-chosen rows.  max() over the per-seed fold-order cosines is
-    order-independent, so values are bit-identical to maxcos_arrow."""
+    order-independent, so values are bit-identical to similarity._maxcos_update_arrow."""
     ctes = [
         "s0 AS MATERIALIZED (SELECT vec_id AS vid, "
         "list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings "

@@ -374,30 +374,22 @@ def invoice_warnings_col(col: Callable[[str], Column] = F.col) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _extract_df(df, keys, text_col, lines_of, fields_of, warnings_of) -> DataFrame:
+def _extract_df(df, keys, lines_of, fields_of, warnings_of) -> DataFrame:
     keys = list(keys)
-    text = F.col(text_col)
+    text = F.col("text")
     lined = df.select(*keys, text.alias("_text"), lines_of(text).alias("_lines"))
     fields = fields_of(F.col("_text"), F.col("_lines"))
     out = lined.select(*keys, *[c.alias(n) for n, c in fields.items()])
     return out.withColumn("warnings", warnings_of()).drop("_no_content")
 
 
-def extract_receipt_fields_df(
-    df: DataFrame, keys: Sequence[str] = ("url",), text_col: str = "text"
-) -> DataFrame:
+def extract_receipt_fields_df(df: DataFrame, keys: Sequence[str] = ("url",)) -> DataFrame:
     """(keys, text) -> one row per input row: keys, receipt fields, items
     array and warnings.  Mirrors pycore.fields.extract_receipt_fields."""
-    return _extract_df(
-        df, keys, text_col, receipt_lines, receipt_fields, receipt_warnings_col
-    )
+    return _extract_df(df, keys, receipt_lines, receipt_fields, receipt_warnings_col)
 
 
-def extract_invoice_fields_df(
-    df: DataFrame, keys: Sequence[str] = ("url",), text_col: str = "text"
-) -> DataFrame:
+def extract_invoice_fields_df(df: DataFrame, keys: Sequence[str] = ("url",)) -> DataFrame:
     """(keys, text) -> one row per input row: keys, invoice fields, items
     array and warnings.  Mirrors pycore.fields.extract_invoice_fields."""
-    return _extract_df(
-        df, keys, text_col, invoice_lines, invoice_fields, invoice_warnings_col
-    )
+    return _extract_df(df, keys, invoice_lines, invoice_fields, invoice_warnings_col)

@@ -24,7 +24,7 @@ the new one:
 Sizing: FPR ~= (1 - e^(-k*n/m))^k; at the defaults (k=7, m/n=16 bits
 per key) that is ~0.3%.  One bitmap broadcast is practical to ~2^36
 bits (8 GiB, ~4*10^9 keys at 16 bits/key).  The FPR costs nothing in
-correctness: confirm() makes the result exact.
+correctness: the confirm join makes the result exact.
 
 Hashing is the repo's cross-engine md5 discipline (operators/dedup.py
 hash60: 15 hex chars = 60 bits, signed-BIGINT-safe in Spark AND DuckDB),
@@ -41,7 +41,7 @@ dedup; Broder-style sketching).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -141,9 +141,8 @@ def flag_maybe_seen(
     key_col: str = "text",
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    out_col: str = "maybe_seen",
 ) -> DataFrame:
-    """``new_df`` + a boolean ``out_col``: True iff every one of the
+    """``new_df`` + a boolean ``maybe_seen``: True iff every one of the
     row's k bloom positions is set in ``bitmap`` (so False is a PROOF
     the key is absent from the old snapshot).  Positions are computed by
     scan-stage JVM expressions; the bit test is one vectorized Arrow
@@ -158,7 +157,7 @@ def flag_maybe_seen(
         "__bloom_pos", bloom_positions_col(F.col(key_col), m_bits, k)
     )
     out_schema = StructType(
-        new_df.schema.fields + [StructField(out_col, BooleanType(), False)]
+        new_df.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
     )
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -180,7 +179,7 @@ def flag_maybe_seen(
             yield pa.RecordBatch.from_arrays(
                 [batch.column(i) for i in range(batch.num_columns - 1)]
                 + [pa.array(seen)],
-                in_cols + [out_col],
+                in_cols + ["maybe_seen"],
             )
 
     return probed.mapInArrow(probe, out_schema)
@@ -192,25 +191,14 @@ def incremental_new(
     key_col: str = "text",
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    confirm: bool = True,
-    bitmap=None,
 ) -> DataFrame:
     """Rows of ``new_df`` whose key does NOT appear in ``old_df`` —
     exact semantics (identical to a plain left_anti on the key), but the
     anti-join's probe side is only the bloom-suspect minority.
-
-    With confirm=False the result may additionally drop false-positive
-    rows (at the ~0.3% default rate) but never keeps a true duplicate —
-    the cheap mode for pipelines that tolerate slight over-dedup.
-    Pass ``bitmap`` (from bloom_build) to reuse a sketch across many
-    incoming batches without rebuilding it.
     """
-    if bitmap is None:
-        bitmap = bloom_build(old_df, key_col, m_bits, k)
+    bitmap = bloom_build(old_df, key_col, m_bits, k)
     flagged = flag_maybe_seen(new_df, bitmap, key_col, m_bits, k)
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    if not confirm:
-        return definitely_new
     suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     confirmed_new = suspects.join(
         old_df.select(F.col(key_col)).distinct(), on=key_col, how="left_anti"

@@ -39,15 +39,13 @@ MERGE_SCHEMA = T.StructType(
 )
 
 
-def bpe_merges(
-    docs: DataFrame, rounds: int = 8, text_col: str = "text"
-) -> DataFrame:
-    """The learned merge table: ``rounds`` rows of (merge_round, sym_left,
+def bpe_merges(docs: DataFrame, rounds: int = 8) -> DataFrame:
+    """The learned merge table over docs(text): ``rounds`` rows of (merge_round, sym_left,
     sym_right, merged, pair_count), most-frequent-pair-first by round.
     Ties break (count DESC, left ASC, right ASC) — identical to
     pycore.bpe.learn_bpe and the DuckDB oracle's ORDER BY ... LIMIT 1."""
     spark = docs.sparkSession
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     words = docs.select(
         F.explode(F.split(t, "[ \n\t\r]+")).alias("w")
     ).filter(F.col("w") != "")

@@ -64,14 +64,10 @@ def bucket_col(gram: Column, n_buckets: int = DEFAULT_BUCKETS) -> Column:
     return F.pmod(hash32(gram), F.lit(n_buckets)).cast("long")
 
 
-def ngram_bucket_counts(
-    docs: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    text_col: str = "text",
-) -> DataFrame:
-    """(bucket, cnt): hashed-ngram occurrence counts over the corpus.
+def ngram_bucket_counts(docs: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """(bucket, cnt): hashed-ngram occurrence counts over docs(text).
     One map-combined shuffle; output bounded by n_buckets rows."""
-    g = docs.select(F.explode(_grams(F.col(text_col))).alias("gram"))
+    g = docs.select(F.explode(_grams(F.col("text"))).alias("gram"))
     return (
         g.select(bucket_col(F.col("gram"), n_buckets).alias("bucket"))
         .groupBy("bucket")
@@ -105,10 +101,9 @@ def dsir_weights(
     docs: DataFrame,
     log_table: List[Tuple[int, int]],
     n_buckets: int = DEFAULT_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(doc_id, n_feats, weight_milli): per-document importance weight as
+    """(doc_id, n_feats, weight_milli): per-document importance weight of
+    docs(doc_id, text) as
     an exact integer sum of bucket scores over the doc's feature
     occurrences.  The score table broadcasts (n_buckets rows); the only
     shuffle is the doc_id re-agg, map-side combined."""
@@ -117,11 +112,11 @@ def dsir_weights(
         spark.createDataFrame(log_table, "bucket long, score_milli long")
     )
     g = docs.select(
-        F.col(id_col), F.explode(_grams(F.col(text_col))).alias("gram")
-    ).select(id_col, bucket_col(F.col("gram"), n_buckets).alias("bucket"))
+        "doc_id", F.explode(_grams(F.col("text"))).alias("gram")
+    ).select("doc_id", bucket_col(F.col("gram"), n_buckets).alias("bucket"))
     return (
         g.join(lt, "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
             F.sum("score_milli").alias("weight_milli"),

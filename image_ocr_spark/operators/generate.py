@@ -1,57 +1,25 @@
 """Spark-side deterministic page synthesis: documents table -> pages table.
 
-Wraps fixtures.gen_pages.build_page in an Arrow-batched mapInPandas (the
-fixture analog of the reference's TestImageGenerator, gui.py:48-1016).
-Optionally replicates each document REPLICAS times (distinct urls) to scale
-the corpus for benchmarking — replica_id is part of the url and of doc_id'
-(doc_id * replicas + r) so every page stays a pure function of its ids.
+Runs fixtures.gen_pages.build_page once per document through the per-row
+Arrow boundary (rowmap.map_rows) — the fixture analog of the reference's
+TestImageGenerator, gui.py:48-1016.  Every page is a pure function of its
+doc_id, text and lang.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..fixtures.gen_pages import build_page
 from ..schemas import GEN_PAGE_SCHEMA
+from .rowmap import map_rows
 
 
-def _gen(replicas: int, max_rows: int = 50_000, max_bytes: int = 256 << 20):
-    """Output batches are re-chunked at max_rows OR max_bytes of html,
-    whichever hits first: the replica fan-out amplifies one input batch
-    by `replicas`, and a single yielded frame whose html column exceeds
-    Arrow's 2 GiB array limit becomes a ChunkedArray the serializer
-    rejects (hit at replicas=1200, r05).  The byte bound matters because
-    the failing quantity is bytes — 50k rows alone would still overflow
-    past ~43 KB/page (review r5)."""
-
-    def gen_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in GEN_PAGE_SCHEMA.fields]
-        out = {c: [] for c in cols}
-        n = nbytes = 0
-        for b in batches:
-            for row in b.itertuples(index=False):
-                for r in range(replicas):
-                    doc_id = int(row.doc_id) * replicas + r
-                    page = build_page(doc_id, row.text, row.lang)
-                    out["doc_id"].append(doc_id)
-                    out["url"].append(page["url"])
-                    out["warc_ts"].append(page["warc_ts"])
-                    out["html"].append(page["html"])
-                    out["lang"].append(page["lang"])
-                    out["kind"].append(page["kind"])
-                    n += 1
-                    nbytes += len(page["html"])
-                    if n >= max_rows or nbytes >= max_bytes:
-                        yield pd.DataFrame(out, columns=cols)
-                        out = {c: [] for c in cols}
-                        n = nbytes = 0
-        if n:
-            yield pd.DataFrame(out, columns=cols)
-
-    return gen_batches
+def _page_row(doc_id: int, text: str, lang: str) -> list:
+    page = build_page(doc_id, text, lang)
+    return [
+        (doc_id, page["url"], page["warc_ts"], page["html"], page["lang"], page["kind"])
+    ]
 
 
 def _num_partitions(df: DataFrame) -> int:
@@ -63,7 +31,7 @@ def _num_partitions(df: DataFrame) -> int:
     return planned.numPartitions() or df.rdd.getNumPartitions()
 
 
-def generate_pages(documents: DataFrame, replicas: int = 1) -> DataFrame:
+def generate_pages(documents: DataFrame) -> DataFrame:
     """documents(doc_id, text, lang, ...) -> pages (GEN_PAGE_SCHEMA + ts cast).
 
     At 100 TB the real input is an Iceberg/parquet pages table; this operator
@@ -83,5 +51,5 @@ def generate_pages(documents: DataFrame, replicas: int = 1) -> DataFrame:
     par = documents.sparkSession.sparkContext.defaultParallelism
     if _num_partitions(src) < par:
         src = src.repartition(par, F.col("doc_id"))
-    pages = src.mapInPandas(_gen(replicas), GEN_PAGE_SCHEMA)
+    pages = map_rows(src, _page_row, GEN_PAGE_SCHEMA)
     return pages.withColumn("warc_ts", F.timestamp_seconds("warc_ts"))

@@ -48,37 +48,23 @@ from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
 from image_ocr_spark.operators.rowmap import map_rows
-from image_ocr_spark.pycore.links import find_links
+from image_ocr_spark.pycore.links import find_hrefs
 
 DEFAULT_ROUNDS = 8
 DEFAULT_DAMPING_MILLI = 850
 RANK_SCALE = 1_000_000  # one host's initial rank, in micro-rank units
 
 
-def extract_links(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    with_text: bool = False,
-) -> DataFrame:
-    """(url, href[, anchor]) — one row per anchor with a non-empty href,
-    in document order; with_text=True adds the anchor's visible text
-    (pycore find_links window semantics).  One Arrow pass over
-    (url, html); everything else is pruned before the Python boundary
-    (the fat-column discipline of the tokenizer)."""
-
-    def links(u, h):
-        if with_text:
-            return [(u, href, text) for href, text in find_links(h or b"")]
-        return [(u, href) for href, _ in find_links(h or b"")]
-
-    schema = "url string, href string" + (", anchor string" if with_text else "")
-    return map_rows(_url_html(pages, url_col, html_col), links, schema)
-
-
-def _url_html(pages: DataFrame, url_col: str, html_col: str) -> DataFrame:
-    """(url, html) — the only columns a per-page pass sends to Python."""
-    return pages.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
+def extract_links(pages: DataFrame) -> DataFrame:
+    """(url, href) — one row per anchor with a non-empty href, in document
+    order.  One Arrow pass over (url, html); everything else is pruned
+    before the Python boundary (the fat-column discipline of the
+    tokenizer)."""
+    return map_rows(
+        pages.select("url", "html"),
+        lambda u, h: [(u, href) for href in find_hrefs(h or b"")],
+        "url string, href string",
+    )
 
 
 def _strip_default_port(hostport: Column, scheme: Column) -> Column:
@@ -91,14 +77,9 @@ def _strip_default_port(hostport: Column, scheme: Column) -> Column:
     )
 
 
-def resolve_edges(
-    links: DataFrame,
-    url_col: str = "url",
-    href_col: str = "href",
-    keep_cols: tuple = (),
-) -> DataFrame:
-    """(src_host, dst_host) per link — pure per-row string expressions
-    (scan stage, shuffle-free, DuckDB-replayable).
+def resolve_edges(links: DataFrame) -> DataFrame:
+    """(src_host, dst_host) per link(url, href) — pure per-row string
+    expressions (scan stage, shuffle-free, DuckDB-replayable).
 
     Branches, in order:
     - non-navigational schemes (any '^scheme:' href without '://':
@@ -114,11 +95,9 @@ def resolve_edges(
       host.
     Rows whose src url has no parseable host are dropped.
     """
-    href = F.btrim(F.col(href_col))
-    src_scheme = F.lower(F.regexp_extract(F.col(url_col), "^([A-Za-z]+)://", 1))
-    src_host = F.lower(
-        F.regexp_extract(F.col(url_col), "^[A-Za-z]+://([^/?#]+)", 1)
-    )
+    href = F.btrim(F.col("href"))
+    src_scheme = F.lower(F.regexp_extract(F.col("url"), "^([A-Za-z]+)://", 1))
+    src_host = F.lower(F.regexp_extract(F.col("url"), "^[A-Za-z]+://([^/?#]+)", 1))
     src_host = _strip_default_port(src_host, src_scheme)
 
     href_scheme = F.lower(
@@ -157,7 +136,6 @@ def resolve_edges(
             F.when(dropped, F.lit(None).cast("string")).otherwise(dst).alias(
                 "dst_host"
             ),
-            *[F.col(c) for c in keep_cols],
         )
         .filter(
             F.col("dst_host").isNotNull()
@@ -167,27 +145,23 @@ def resolve_edges(
     )
 
 
-def host_rank(
-    edges: DataFrame,
-    rounds: int = DEFAULT_ROUNDS,
-    damping_milli: int = DEFAULT_DAMPING_MILLI,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-) -> DataFrame:
-    """(host, rank) — damped PageRank over the host multigraph after
-    ``rounds`` synchronous iterations, in exact micro-rank integers.
+def host_rank(edges: DataFrame, rounds: int = DEFAULT_ROUNDS) -> DataFrame:
+    """(host, rank) — damped PageRank over the host multigraph of
+    edges(src_host, dst_host) after ``rounds`` synchronous iterations, in
+    exact micro-rank integers.
 
     r_0(v) = RANK_SCALE for every host seen as a source or target;
-    r_{t+1}(v) = base + (damping_milli * contrib_t(v)) div 1000, where
+    r_{t+1}(v) = base + (d * contrib_t(v)) div 1000, where
+    d = DEFAULT_DAMPING_MILLI,
     contrib_t(v) = sum over in-edges (u,v) of (r_t(u) * w_uv) div W_u,
-    base = ((1000 - damping_milli) * RANK_SCALE) div 1000, w_uv = link
+    base = ((1000 - d) * RANK_SCALE) div 1000, w_uv = link
     multiplicity and W_u = total out-weight of u (column ``tw``).  All divisions are
     integer `div` on longs — deterministic across partitionings and
     engines, so the unrolled DuckDB oracle matches value-for-value.
     """
     if rounds < 1:
         raise ValueError("host_rank needs rounds >= 1")
-    src, dst = F.col(src_col), F.col(dst_col)
+    src, dst = F.col("src_host"), F.col("dst_host")
     # static per-edge relation: weight + source out-weight, checkpointed
     # once (it is re-joined every round)
     w = edges.groupBy(src.alias("src"), dst.alias("dst")).agg(
@@ -201,7 +175,7 @@ def host_rank(
         .distinct()
     )
 
-    base = ((1000 - damping_milli) * RANK_SCALE) // 1000
+    base = ((1000 - DEFAULT_DAMPING_MILLI) * RANK_SCALE) // 1000
     r = nodes.withColumn("rank", F.lit(RANK_SCALE).cast("long"))
     prev = None
     for _ in range(rounds):
@@ -215,7 +189,7 @@ def host_rank(
             "host",
             (
                 F.lit(base)
-                + F.expr(f"({damping_milli} * coalesce(contrib, 0L)) div 1000")
+                + F.expr(f"({DEFAULT_DAMPING_MILLI} * coalesce(contrib, 0L)) div 1000")
             ).alias("rank"),
         )
         # eager checkpoint = this round's materialization AND plan
@@ -228,24 +202,20 @@ def host_rank(
     return storage.hold(r)
 
 
-def canonical_urls(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def canonical_urls(pages: DataFrame) -> DataFrame:
     """(url, canonical) — the page's declared rel=canonical target ('' if
     none).  Same one-Arrow-pass shape as extract_links; pycore
     (pycore/canonical.py) is the single source of truth."""
     from ..pycore.canonical import canonical_url
 
     return map_rows(
-        _url_html(pages, url_col, html_col),
+        pages.select("url", "html"),
         lambda u, h: [(u, canonical_url(h or b""))],
         "url string, canonical string",
     )
 
 
-def canonical_groups(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def canonical_groups(pages: DataFrame) -> DataFrame:
     """(canon_key, n_pages, representative): pages collapsed onto their
     declared canonical target — the dedup the web hands you for free,
     run BEFORE content hashing so variant URLs (tracking params,
@@ -253,7 +223,7 @@ def canonical_groups(
     the declared target when present else the page's own url; the
     representative is the url that IS its own canonical when one exists
     (else min url, deterministic).  One shuffle, map-side combined."""
-    c = canonical_urls(pages, url_col, html_col)
+    c = canonical_urls(pages)
     keyed = c.select(
         F.when(F.col("canonical") != "", F.col("canonical"))
         .otherwise(F.col("url"))

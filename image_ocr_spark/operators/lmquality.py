@@ -25,8 +25,6 @@ like dedup/ANN, built from the public CCNet/C4 recipe.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,45 +43,31 @@ def bigrams_col(toks: Column) -> Column:
     )
 
 
-def train_bigram_vocab(
-    docs: DataFrame,
-    vocab_size: int = 4096,
-    text_col: str = "text",
-) -> DataFrame:
+def train_bigram_vocab(docs: DataFrame, vocab_size: int = 4096) -> DataFrame:
     """(gram, cnt) — the `vocab_size` most frequent word bigrams across
-    the corpus, ties broken gram-ascending (deterministic, so the DuckDB
-    replay selects the identical vocabulary).  Tokens are exact-space
+    the docs(text) corpus, ties broken gram-ascending (deterministic, so
+    the DuckDB replay selects the identical vocabulary).  Tokens are exact-space
     splits: corpus text is whitespace-collapsed by the extractor, and
     split-on-one-space is the established cross-engine-identical
     tokenization (functions/textstats.py tokens())."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     grams = docs.select(F.explode(bigrams_col(toks)).alias("gram"))
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("cnt"))
     # orderBy+limit compiles to TakeOrdered — no full sort of the vocab
     return counts.orderBy(F.desc("cnt"), F.asc("gram")).limit(vocab_size)
 
 
-def familiarity_scores(
-    docs: DataFrame,
-    vocab: Optional[list] = None,
-    vocab_size: int = 4096,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def familiarity_scores(docs: DataFrame, vocab_size: int = 4096) -> DataFrame:
     """(doc_id, n_grams, n_known, familiarity_micro) — per-document
-    bigram familiarity against the corpus vocabulary, scored in the scan
-    stage with zero shuffle (one broadcast of the vocab set).
+    bigram familiarity of docs(doc_id, text) against the corpus
+    vocabulary, scored in the scan stage with zero shuffle (one broadcast
+    of the vocab set).
 
     familiarity_micro = floor(1e6 * n_known / n_grams), 0 when the doc
-    has <2 tokens — exact integers end to end.  ``vocab`` is a list of
-    gram strings (pass one to reuse a trained model across corpora);
-    when None the vocabulary is trained on ``docs`` itself first.
+    has <2 tokens — exact integers end to end.  The vocabulary is trained
+    on ``docs`` itself first (train_bigram_vocab, one collect job).
     """
-    if vocab is None:
-        vocab = [
-            r.gram
-            for r in train_bigram_vocab(docs, vocab_size, text_col).collect()
-        ]
+    vocab = [r.gram for r in train_bigram_vocab(docs, vocab_size).collect()]
     bc = docs.sparkSession.sparkContext.broadcast(frozenset(vocab))
 
     def score(doc_id, t):
@@ -101,9 +85,7 @@ def familiarity_scores(
         return [(doc_id, n, k, (1_000_000 * k) // n)]
 
     return map_rows(
-        docs.select(
-            F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("t")
-        ),
+        docs.select(F.col("doc_id").cast("long"), F.col("text")),
         score,
         "doc_id long, n_grams long, n_known long, familiarity_micro long",
     )
@@ -115,10 +97,9 @@ def familiarity_scores(
 CCNET_BUCKETS = ("tail", "middle", "head")
 
 
-def quality_cutoffs(
-    scores: DataFrame, n_buckets: int = 3, score_col: str = "familiarity_micro"
-) -> list:
-    """The n_buckets-1 exact type-1 quantile cutoffs of ``score_col``:
+def quality_cutoffs(scores: DataFrame, n_buckets: int = 3) -> list:
+    """The n_buckets-1 exact type-1 quantile cutoffs of
+    ``familiarity_micro``:
     cutoff_j = min{v : #(score <= v) >= ceil(j*N/n_buckets)}.
 
     Computed from ONE histogram aggregation whose output is bounded by
@@ -132,7 +113,7 @@ def quality_cutoffs(
         raise ValueError("quality_cutoffs needs n_buckets >= 2")
     hist = sorted(
         (r[0], r[1])
-        for r in scores.groupBy(score_col)
+        for r in scores.groupBy("familiarity_micro")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
     )
@@ -160,45 +141,34 @@ def bucket_label_col(score: Column, cutoffs: list) -> Column:
     return F.element_at(labels, idx + F.lit(1))
 
 
-def quality_mixture(
-    docs: DataFrame,
-    rates: Optional[dict] = None,
-    vocab: Optional[list] = None,
-    vocab_size: int = 4096,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "qmix",
-) -> DataFrame:
+# kept fraction per bucket: the fluent head whole, the gibberish tail
+# decimated
+QUALITY_RATES = {"head": 1.0, "middle": 0.5, "tail": 0.1}
+
+
+def quality_mixture(docs: DataFrame, vocab_size: int = 4096) -> DataFrame:
     """The CCNet selection step end to end: score every document's
     familiarity, split the corpus into head/middle/tail thirds at exact
-    corpus quantiles, and keep each bucket at its mixture rate via the
-    deterministic hash-threshold rule (operators/sampling.py) — the
-    fluent third kept whole, the gibberish third decimated.
+    corpus quantiles, and keep each bucket at its QUALITY_RATES rate via
+    the deterministic hash-threshold rule (operators/sampling.py, salt
+    "qmix") — the fluent third kept whole, the gibberish third decimated.
 
     Returns (doc_id, familiarity_micro, bucket) for kept rows.  Scale
     shape: scoring is scan-stage (broadcast vocab), the cutoffs cost one
     distinct-value histogram, and the final keep/drop is a pure per-row
     filter — no global sort anywhere, resumable by construction.  The
     corpus is scored twice (once into the histogram, once under the
-    filter); at 100 TB pass a pre-trained ``vocab`` and persist the
-    scored relation — or accept the second scan, it is cheaper than
-    materializing per-doc scores for a 10^12-row corpus.
+    filter); the second scan is cheaper than materializing per-doc scores
+    for a 10^12-row corpus.
     """
     from image_ocr_spark.operators.sampling import sample_mixture
 
-    if rates is None:
-        rates = {"head": 1.0, "middle": 0.5, "tail": 0.1}
-    if not set(rates) <= set(CCNET_BUCKETS):
-        raise ValueError(f"rates keys must be among {CCNET_BUCKETS}")
-    # vocab=None falls back inside familiarity_scores (single source of
-    # truth for the training path); both uses below share ONE scores plan
-    scores = familiarity_scores(docs, vocab, vocab_size, id_col, text_col)
+    # both uses below share ONE scores plan
+    scores = familiarity_scores(docs, vocab_size)
     cutoffs = quality_cutoffs(scores, len(CCNET_BUCKETS))
     labeled = scores.select(
         "doc_id",
         "familiarity_micro",
         bucket_label_col(F.col("familiarity_micro"), cutoffs).alias("bucket"),
     )
-    return sample_mixture(
-        labeled, rates, group_col="bucket", id_col="doc_id", salt=salt
-    )
+    return sample_mixture(labeled, QUALITY_RATES, group_col="bucket", salt="qmix")

@@ -48,17 +48,17 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def byte_histogram_features(raw: bytes, dim: int = FEATURE_DIM) -> List[int]:
-    """DETERMINISTIC FAKE feature: byte histogram over `dim` equal-width
+def byte_histogram_features(raw: bytes) -> List[int]:
+    """DETERMINISTIC FAKE feature: byte histogram over FEATURE_DIM equal-width
     byte-value bins, normalized to integer micro-units (floor(1e6*c/total))
     so the value is bit-identical across Python, Spark, and the DuckDB
     oracle — no float rounding-mode hazards.  Stands in for a
     decoder+embedder; the Spark plumbing around it (Arrow batches, schema,
     partitioning) is real.
     """
-    counts = [0] * dim
+    counts = [0] * FEATURE_DIM
     for byte in raw:
-        counts[byte * dim // 256] += 1
+        counts[byte * FEATURE_DIM // 256] += 1
     total = max(1, len(raw))
     return [(1_000_000 * c) // total for c in counts]
 
@@ -75,11 +75,16 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     )
 
 
-def synth_media(docs: DataFrame, bytes_per_item: int = 256) -> DataFrame:
+SYNTH_MEDIA_BYTES = 256
+
+
+def synth_media(docs: DataFrame) -> DataFrame:
     """Deterministic fake media table from doc ids (no external data):
-    content bytes are a pure function of media_id."""
+    content bytes (SYNTH_MEDIA_BYTES per item) are a pure function of
+    media_id."""
+    n = SYNTH_MEDIA_BYTES
     pattern = F.sha2(F.concat(F.lit("media"), F.col("doc_id").cast("string")), 256)
-    blob = F.repeat(pattern, bytes_per_item // 64 + 1).substr(1, bytes_per_item)
+    blob = F.repeat(pattern, n // 64 + 1).substr(1, n)
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 3 == 0, "image")

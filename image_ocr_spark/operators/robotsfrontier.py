@@ -28,14 +28,10 @@ RULES_DDL = (
 
 
 def robots_rules(
-    robots: DataFrame,
-    agent: str = "*",
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-    max_rules: int = 5000,
+    robots: DataFrame, agent: str = "*", max_rules: int = 5000
 ) -> DataFrame:
-    """(host, rules): the crawler-selected rule group per host, rule
-    paths pre-compiled to LIKE patterns, capped at ``max_rules`` per host
+    """robots(host, robots_txt) -> (host, rules): the crawler-selected rule
+    group per host, rule paths pre-compiled to LIKE patterns, capped at ``max_rules`` per host
     (first rules win — the adversarial-robots bound every real parser
     applies).  Scan-stage, zero shuffle; output is host-count-sized."""
     from ..pycore.robotstxt import parse_robots_txt, select_group, to_like
@@ -49,10 +45,7 @@ def robots_rules(
         kept = group[:max_rules]
         return [(host, [(allow, to_like(pat), len(pat)) for allow, pat in kept])]
 
-    rows = robots.select(
-        F.col(host_col).alias("host"), F.col(txt_col).alias("robots_txt")
-    )
-    return map_rows(rows, rules, RULES_DDL)
+    return map_rows(robots.select("host", "robots_txt"), rules, RULES_DDL)
 
 
 def url_path(url: Column) -> Column:
@@ -62,19 +55,13 @@ def url_path(url: Column) -> Column:
     return F.when(p == "", F.lit("/")).otherwise(p)
 
 
-def apply_robots(
-    urls: DataFrame,
-    rules: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-    out_col: str = "robots_allowed",
-) -> DataFrame:
-    """urls + boolean ``out_col``.  One equi-join on host (broadcast the
-    rules side when it fits — at 10^7 hosts, bucket or let AQE decide),
+def apply_robots(urls: DataFrame, rules: DataFrame) -> DataFrame:
+    """urls(url, host, ...) + boolean ``robots_allowed``.  One equi-join on
+    host (broadcast the rules side when it fits — at 10^7 hosts, bucket or let AQE decide),
     then a per-row array expression: filter the rules whose LIKE pattern
     matches the url's path, take array_max(struct(plen, is_allow)).
     Unknown host or no matching rule = allowed (RFC default)."""
-    path = url_path(F.col(url_col))
+    path = url_path(F.col("url"))
     matched = F.filter(
         F.col("rules"),
         lambda r: F.like(path, r["like_pat"], F.lit("\\")),
@@ -87,22 +74,18 @@ def apply_robots(
             ),
         )
     )["is_allow"]).otherwise(F.lit(True))
-    joined = urls.join(rules, on=host_col, how="left")
+    joined = urls.join(rules, on="host", how="left")
     return joined.withColumn(
-        out_col, F.when(F.col("rules").isNull(), F.lit(True)).otherwise(verdict)
+        "robots_allowed", F.when(F.col("rules").isNull(), F.lit(True)).otherwise(verdict)
     ).drop("rules")
 
 
 META_DDL = "host string, crawl_delay_milli long, sitemaps array<string>"
 
-def robots_host_meta(
-    robots: DataFrame,
-    agent: str = "*",
-    host_col: str = "host",
-    txt_col: str = "robots_txt",
-) -> DataFrame:
-    """(host, crawl_delay_milli, sitemaps): the per-host politeness /
-    discovery table a frontier scheduler joins against.  Scan-stage,
+def robots_host_meta(robots: DataFrame, agent: str = "*") -> DataFrame:
+    """robots(host, robots_txt) -> (host, crawl_delay_milli, sitemaps): the
+    per-host politeness / discovery table a frontier scheduler joins
+    against.  Scan-stage,
     zero shuffle, host-count-sized output; delay 0 = none declared for
     this crawler."""
     from ..pycore.robotstxt import parse_robots_extras, select_crawl_delay
@@ -111,10 +94,7 @@ def robots_host_meta(
         sitemaps, delays = parse_robots_extras(txt or "")
         return [(host, select_crawl_delay(delays, agent), sitemaps)]
 
-    rows = robots.select(
-        F.col(host_col).alias("host"), F.col(txt_col).alias("robots_txt")
-    )
-    return map_rows(rows, meta, META_DDL)
+    return map_rows(robots.select("host", "robots_txt"), meta, META_DDL)
 
 
 SITEMAP_DDL = (
@@ -123,11 +103,10 @@ SITEMAP_DDL = (
 )
 
 
-def sitemap_entries(
-    sitemaps: DataFrame, host_col: str = "host", xml_col: str = "sitemap_xml"
-) -> DataFrame:
-    """Exploded sitemap/sitemapindex entries per host — the discovery
-    feed a frontier unions with the link graph.  Scan-stage mapInArrow
+def sitemap_entries(sitemaps: DataFrame) -> DataFrame:
+    """Exploded sitemap/sitemapindex entries per sitemaps(host,
+    sitemap_xml) row — the discovery feed a frontier unions with the link
+    graph.  Scan-stage mapInArrow
     (pycore/sitemap.py single source of truth), zero shuffle; `kind` is
     'url' for page entries, 'sitemap' for index children (crawl those
     next round — the same resumable-frontier shape as WARC segments)."""
@@ -143,7 +122,4 @@ def sitemap_entries(
             for loc, lastmod in parsed["sitemaps"]
         ]
 
-    rows = sitemaps.select(
-        F.col(host_col).alias("host"), F.col(xml_col).alias("sitemap_xml")
-    )
-    return map_rows(rows, entries, SITEMAP_DDL)
+    return map_rows(sitemaps.select("host", "sitemap_xml"), entries, SITEMAP_DDL)

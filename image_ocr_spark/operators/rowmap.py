@@ -1,8 +1,8 @@
 """The one Arrow boundary for per-row Python operators.
 
 Link, canonical, robots.txt, sitemap, WARC, PDF span/table, pixel,
-LM-quality and dedup-signature operators all run a pure-Python function
-per input row.  ``map_rows`` owns how those
+LM-quality, dedup-signature and page-synthesis operators all run a
+pure-Python function per input row.  ``map_rows`` owns how those
 rows cross into Python and how the results become typed Arrow columns:
 the input batch's columns are converted once, ``fn`` runs per row, and
 its output tuples become one struct array typed by the declared schema.

@@ -32,14 +32,13 @@ def sample_mixture(
     docs: DataFrame,
     rates: Dict[str, float],
     group_col: str = "lang",
-    id_col: str = "doc_id",
     salt: str = "mix",
 ) -> DataFrame:
     """Rows kept with their group's probability (exactly the docs whose
-    per-id uniform falls under rate(group)); groups missing from `rates`
-    are dropped (rate 0.0).  Per-row expression, zero shuffle."""
+    per-doc_id uniform falls under rate(group)); groups missing from
+    `rates` are dropped (rate 0.0).  Per-row expression, zero shuffle."""
     u = hash32(
-        F.concat(F.lit(salt), F.col(id_col).cast("string"))
+        F.concat(F.lit(salt), F.col("doc_id").cast("string"))
     ) / F.lit(HASH_SPACE)
     rate = F.lit(0.0)
     for g, r in sorted(rates.items()):

@@ -56,8 +56,8 @@ def _spans_for_pattern(text: Column, label: str, pattern: str) -> Column:
     return F.aggregate(matches, init, step)["spans"]
 
 
-def label_spans_sql(extracted: DataFrame, key: str = "url") -> DataFrame:
-    """(key, text) -> span rows (url, start, end, label, value)."""
+def label_spans_sql(extracted: DataFrame) -> DataFrame:
+    """(url, text) -> span rows (url, start, end, label, value)."""
     text = F.col("text")
     all_spans = F.flatten(
         F.array(
@@ -76,9 +76,7 @@ def label_spans_sql(extracted: DataFrame, key: str = "url") -> DataFrame:
             ),
         )
     )
-    rows = extracted.select(
-        F.col(key).alias("url"), F.explode(ordered).alias("s")
-    )
+    rows = extracted.select("url", F.explode(ordered).alias("s"))
     return rows.select(
         "url",
         F.col("s.start").alias("start"),
@@ -104,12 +102,11 @@ PDF_SPAN_SCHEMA = (
 )
 
 
-def pdf_layout_spans(
-    pages: DataFrame, url_col: str = "url", pdf_col: str = "html"
-) -> DataFrame:
+def pdf_layout_spans(pages: DataFrame) -> DataFrame:
     """(url, span_id, page, text, x_milli, y_milli, size_milli) — one
-    row per positioned text span of each PDF payload, stream-sequence
-    span_id, content-stream index as page (geometry is only comparable
+    row per positioned text span of each PDF payload in pages(url, html),
+    stream-sequence span_id, content-stream index as page (geometry is
+    only comparable
     WITHIN a page).
     One scan-stage Arrow pass (the tokenizer discipline: only the two
     needed columns cross the boundary, zero shuffle); non-PDF or
@@ -124,16 +121,19 @@ def pdf_layout_spans(
             return []
         return [(url, *fields(sp)) for sp in pdf_spans(raw)]
 
-    rows = pages.select(F.col(url_col).alias("url"), F.col(pdf_col).alias("html"))
-    return map_rows(rows, spans, PDF_SPAN_SCHEMA)
+    return map_rows(pages.select("url", "html"), spans, PDF_SPAN_SCHEMA)
 
 
-def span_right_of_geo(
-    spans: DataFrame, keyword: str, y_tol_milli: int = 3000
-) -> DataFrame:
+# same-line tolerance (span_right_of_geo) and same-column tolerance
+# (span_below_geo), in milli text-space units
+SAME_LINE_TOL_MILLI = 3000
+SAME_COLUMN_TOL_MILLI = 50_000
+
+
+def span_right_of_geo(spans: DataFrame, keyword: str) -> DataFrame:
     """(url, keyword_text, value): for each span containing ``keyword``,
     the NEAREST span strictly to its right on the same visual line of the SAME page
-    (|dy| <= y_tol_milli, x greater) — the reference's
+    (|dy| <= SAME_LINE_TOL_MILLI, x greater) — the reference's
     get_text_right_of on real coordinates.  One equi-join on url + a
     min_by over dx; deterministic tiebreak by (dx, span_id).  DuckDB
     replays the join by value (tests/test_pdflayout.py)."""
@@ -151,7 +151,7 @@ def span_right_of_geo(
     )
     j = kw.join(cand, ["url", "page"]).filter(
         (F.col("span_id") != F.col("kw_id"))
-        & (F.abs(F.col("y_milli") - F.col("ky")) <= y_tol_milli)
+        & (F.abs(F.col("y_milli") - F.col("ky")) <= SAME_LINE_TOL_MILLI)
         & (F.col("x_milli") > F.col("kx"))
     )
     return j.groupBy("url", "kw_id", "keyword_text").agg(
@@ -165,12 +165,10 @@ def span_right_of_geo(
     ).drop("kw_id")
 
 
-def span_below_geo(
-    spans: DataFrame, keyword: str, x_tol_milli: int = 50_000
-) -> DataFrame:
+def span_below_geo(spans: DataFrame, keyword: str) -> DataFrame:
     """(url, keyword_text, value): for each span containing ``keyword``,
     the nearest span BELOW it on the SAME page (smaller y) whose x is within
-    ``x_tol_milli`` of the keyword's — get_text_below on real
+    SAME_COLUMN_TOL_MILLI of the keyword's — get_text_below on real
     coordinates; nearest by (dy, |dx|, span_id)."""
     kw = spans.filter(F.col("text").contains(keyword)).select(
         "url",
@@ -187,7 +185,7 @@ def span_below_geo(
     j = kw.join(cand, ["url", "page"]).filter(
         (F.col("span_id") != F.col("kw_id"))
         & (F.col("y_milli") < F.col("ky"))
-        & (F.abs(F.col("x_milli") - F.col("kx")) <= x_tol_milli)
+        & (F.abs(F.col("x_milli") - F.col("kx")) <= SAME_COLUMN_TOL_MILLI)
     )
     return j.groupBy("url", "kw_id", "keyword_text").agg(
         F.min_by(
@@ -207,16 +205,11 @@ PDF_TABLE_SCHEMA = (
 )
 
 
-def pdf_table_cells(
-    pages: DataFrame,
-    url_col: str = "url",
-    pdf_col: str = "html",
-    y_tol_milli: int = 3000,
-    min_rows: int = 3,
-) -> DataFrame:
+def pdf_table_cells(pages: DataFrame) -> DataFrame:
     """(url, page, row, col, x_milli, y_milli, text) — column-aligned
-    table cells per PDF payload (pycore.pdftok.detect_tables, the
-    PP-Structure analog).  Same scan-stage Arrow shape as
+    table cells per PDF payload of pages(url, html)
+    (pycore.pdftok.detect_tables at its default row tolerance and minimum
+    row count, the PP-Structure analog).  Same scan-stage Arrow shape as
     pdf_layout_spans; non-PDF / table-free payloads yield no rows."""
     from ..pycore.pdftok import detect_tables, is_pdf, pdf_spans
 
@@ -226,8 +219,6 @@ def pdf_table_cells(
         raw = raw or b""
         if not is_pdf(raw):
             return []
-        found = detect_tables(pdf_spans(raw), y_tol_milli, min_rows)
-        return [(url, *fields(c)) for c in found]
+        return [(url, *fields(c)) for c in detect_tables(pdf_spans(raw))]
 
-    rows = pages.select(F.col(url_col).alias("url"), F.col(pdf_col).alias("html"))
-    return map_rows(rows, cells, PDF_TABLE_SCHEMA)
+    return map_rows(pages.select("url", "html"), cells, PDF_TABLE_SCHEMA)

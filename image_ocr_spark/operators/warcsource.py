@@ -71,19 +71,17 @@ def read_warc(
     return map_rows(src, records, out_schema)
 
 
-def read_warc_stats(chunks: DataFrame, chunk_col: str = "chunk") -> DataFrame:
-    """Per-chunk quarantine counters (records parsed / skipped / truncated
-    tail) — the ingest-manifest row a resumable 100 TB load persists next
-    to each segment (checkpoint.py discipline)."""
+def read_warc_stats(chunks: DataFrame) -> DataFrame:
+    """Per-chunk quarantine counters of chunks(chunk) (records parsed /
+    skipped / truncated tail) — the ingest-manifest row a resumable 100 TB
+    load persists next to each segment (checkpoint.py discipline)."""
     from image_ocr_spark.pycore.warc import parse_warc
 
     def stats(chunk):
         parsed = parse_warc(chunk or b"")
         return [(len(parsed["records"]), parsed["skipped"], parsed["truncated"])]
 
-    return map_rows(
-        chunks.select(F.col(chunk_col).alias("chunk")), stats, WARC_STATS_SCHEMA
-    )
+    return map_rows(chunks.select("chunk"), stats, WARC_STATS_SCHEMA)
 
 
 def _write_batches(max_chunk_bytes: int):

@@ -26,23 +26,17 @@ from ..operators.blocks import extract_text_packed
 from ..operators.tokenize import tokenize_packed
 
 
-def salt_repartition(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def salt_repartition(pages: DataFrame) -> DataFrame:
     """Spread url-space uniformly (defuses host-level skew in crawl order).
 
-    xxhash64(url) is uniform regardless of host distribution; at cluster
-    scale pass an explicit num_partitions sized to executors*cores*2-3.
+    xxhash64(url) is uniform regardless of host distribution; the
+    partition count is the session's spark.sql.shuffle.partitions, which
+    get_spark sizes from the host's cores.
     """
-    key = F.xxhash64("url")
-    if num_partitions:
-        return pages.repartition(num_partitions, key)
-    return pages.repartition(key)
+    return pages.repartition(F.xxhash64("url"))
 
 
-def extract_pages(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    engine: str = "auto",
-) -> DataFrame:
+def extract_pages(pages: DataFrame) -> DataFrame:
     """pages(url, html[, doc_id]) -> one extraction row per url.
 
     Output: url, doc_id, engine, text, title, n_nodes, n_content_nodes,
@@ -50,11 +44,10 @@ def extract_pages(
     Pages yielding zero nodes (empty/broken) come back with text='' —
     never-raise semantics (ref pipeline.py:251-271).
 
-    ``engine`` is the pipeline-level strategy switch (ref set_engine,
-    pipeline.py:120-146): 'auto' picks per row by magic bytes, a named
-    engine forces it with per-row registry fallback.
+    The tokenizer picks the engine per row by magic bytes (the 'auto'
+    strategy of the reference's set_engine, pipeline.py:120-146); forcing
+    a named engine is tokenize_packed's ``engine`` option.
     """
-    pages = salt_repartition(pages, num_partitions)
-    packed = tokenize_packed(pages, engine=engine)  # one row per doc
+    packed = tokenize_packed(salt_repartition(pages))  # one row per doc
     per_url = extract_text_packed(packed)  # per-row exprs, NO shuffle
     return classify_df(per_url, "text")

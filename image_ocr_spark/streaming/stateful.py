@@ -35,18 +35,19 @@ DEDUP_OUT_SCHEMA = T.StructType(
 DEDUP_STATE_SCHEMA = T.StructType([T.StructField("seen", T.IntegerType(), False)])
 
 
-def windowed_page_counts(
-    pages: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Event-time tumbling-window counts per lang, late rows admitted up to
-    `watermark` behind the max seen ``warc_ts``.  Works on both batch and
-    streaming DataFrames (same plan text — asserted in tests)."""
+WINDOW = "10 minutes"
+WATERMARK = "30 minutes"
+
+
+def windowed_page_counts(pages: DataFrame) -> DataFrame:
+    """Event-time tumbling-window (WINDOW) counts per lang, late rows
+    admitted up to WATERMARK behind the max seen ``warc_ts``.  Works on
+    both batch and streaming DataFrames (same plan text — asserted in
+    tests)."""
     df = pages.select(F.col("warc_ts").cast("timestamp").alias("ts"), "lang", "html")
     if df.isStreaming:
-        df = df.withWatermark("ts", watermark)
-    return df.groupBy(F.window("ts", window).alias("win"), "lang").agg(
+        df = df.withWatermark("ts", WATERMARK)
+    return df.groupBy(F.window("ts", WINDOW).alias("win"), "lang").agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.sum(F.octet_length("html")).alias("html_bytes"),
     ).select(

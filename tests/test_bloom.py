@@ -186,13 +186,3 @@ def test_probe_plan_is_shuffle_free(spark, documents):
     )
     assert "Exchange" not in plan, plan
     assert "MapInArrow" in plan or "ArrowEvalPython" in plan
-
-
-def test_cheap_mode_never_keeps_duplicates(spark, documents):
-    """confirm=False: may over-drop (bloom false positives) but never
-    keeps a row whose text exists in old."""
-    old, new = _snapshots(spark, documents)
-    old_texts = {r.text for r in old.select("text").distinct().collect()}
-    kept = incremental_new(old, new, "text", M_BITS, K, confirm=False).collect()
-    assert kept  # non-degenerate
-    assert all(r.text not in old_texts for r in kept)

@@ -469,10 +469,10 @@ def test_ngram_signature_slot_holds_one_call(spark):
         [(i, f"alpha beta gamma delta epsilon w{i % 7} zeta eta") for i in range(20)],
         "doc_id long, text string",
     )
-    for n in (3, 3, 2):
-        assert ngram_jaccard_pairs(docs, n=n).collect()
+    for i, d in enumerate((docs, docs, docs.filter("doc_id < 10"))):
+        assert ngram_jaccard_pairs(d).collect()
         after = storage.persisted_ids(sc)
-        assert start <= after and len(after - start) == 1, (n, start, after)
+        assert start <= after and len(after - start) == 1, (i, start, after)
     storage.release()
     assert storage.persisted_ids(sc) == start
 

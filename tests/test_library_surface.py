@@ -1,6 +1,8 @@
 """Library surface guard: every public top-level def in the operator,
 function, plan and streaming packages is reached from a production entry
-point, or is listed in KEEP with the reason it stays.
+point, or is listed in KEEP with the reason it stays; and every optional
+parameter of a top-level def there is set by some production call site,
+or is listed in KEEP_OPTIONS with the reason it stays.
 
 Production entry points are the driver contract (`__spark_entry__.py`),
 the packaging script (`package.py`) and the benchmark (`perfbench/`).
@@ -9,6 +11,13 @@ library module-level code, are followed through the bodies of the library
 defs they name until nothing new is reached.  Matching by bare name can
 only over-approximate (two defs sharing a name are reached together), so
 a def reported here is certainly reached by nothing but tests.
+
+Options are matched the same way: a call whose function is named like the
+def (bare name or attribute) sets a parameter when it passes it by keyword
+or reaches its position; a `*args` or `**kwargs` call sets them all.  The
+call sites are the entry points above and all library code.  Methods are
+not checked: the one class in the checked packages, BucketedCheckpoint,
+has no production caller at all (it is in KEEP).
 
 No JVM: the check only parses source files.
 """
@@ -40,6 +49,36 @@ KEEP = {
     "release": "storage lifecycle API that tests use to check for leaks",
     "scope": "storage lifecycle API that tests use to check for leaks",
     "persisted_ids": "storage lifecycle API that tests use to check for leaks",
+}
+
+# Optional parameters that no production call site sets, each with the
+# reason it stays.  Caps and thresholds stay where a test moves them so
+# that a fixture-sized input crosses them: the cap tests are the safety
+# checks that the capped path is exact or bounded.  Any other option that
+# production leaves at its default is deleted and its default becomes code.
+_CAP = "a test moves this cap so a fixture-sized input crosses it"
+KEEP_OPTIONS = {
+    ("minhash_lsh_pairs", "max_bucket"): _CAP + " (star edges == clique components)",
+    ("dedup_lines", "max_df"): _CAP + " (boilerplate in <= max_df docs survives)",
+    ("ngram_jaccard_pairs", "max_df"): _CAP + " (df-capped candidate join)",
+    ("ngram_jaccard_pairs", "threshold_milli"): (
+        "a test lowers the threshold to see every candidate pair, capped "
+        "and uncapped"
+    ),
+    ("dedup_substrings", "max_dup_starts"): _CAP + " (per-row rebuild bound)",
+    ("embedding_dup_pairs", "max_cell"): _CAP + " (hot-cell split parity)",
+    ("robots_rules", "max_rules"): _CAP + " (adversarial robots.txt bound)",
+    ("bloom_build", "seg_bits"): _CAP + " (one, many and a short last segment)",
+    ("pages_to_warc", "max_chunk_bytes"): _CAP + " (multi-chunk WARC output)",
+    ("kmeans_batched_init", "batch"): (
+        "batch=1 is the greedy-sweep parity reference for the batched init"
+    ),
+    ("read_warc", "chunk_col"): (
+        "WARC files read through binaryFile, and resume lineage"
+    ),
+    ("read_warc", "passthrough"): (
+        "WARC files read through binaryFile, and resume lineage"
+    ),
 }
 
 # Library code outside the checked packages, and why it is not checked.
@@ -141,3 +180,78 @@ def test_keep_lists_only_unreached_defs():
     reached = _reachable(defs, module_level)
     stale = sorted(n for n in KEEP if n not in public or n in reached)
     assert not stale, f"stale KEEP entries: {stale}"
+
+
+def _optional_params() -> dict:
+    """{(def, param): position or None for keyword-only} over the optional
+    parameters of the checked packages' top-level defs."""
+    out = {}
+    for pkg in CHECKED:
+        for path in sorted((LIB / pkg).glob("*.py")):
+            for node in ast.parse(path.read_text(), str(path)).body:
+                if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                a = node.args
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                for i, arg in enumerate(pos[first:], first):
+                    out[(node.name, arg.arg)] = i
+                for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+                    if default is not None:
+                        out[(node.name, arg.arg)] = None
+    return out
+
+
+def _production_calls():
+    """(keywords, positions): the (name, keyword) pairs and the largest
+    positional-argument count per called name over every production call
+    site.  A `**kwargs` call records keyword None (sets every keyword); a
+    `*args` call records an unbounded positional count."""
+    paths = [ROOT / "__spark_entry__.py", ROOT / "package.py"]
+    paths += sorted((ROOT / "perfbench").glob("*.py"))
+    paths += sorted(LIB.rglob("*.py"))
+    keywords, positions = set(), {}
+    for path in paths:
+        for n in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(n, ast.Call):
+                continue
+            if isinstance(n.func, ast.Name):
+                name = n.func.id
+            elif isinstance(n.func, ast.Attribute):
+                name = n.func.attr
+            else:
+                continue
+            starred = any(isinstance(a, ast.Starred) for a in n.args)
+            npos = float("inf") if starred else len(n.args)
+            positions[name] = max(positions.get(name, 0), npos)
+            keywords |= {(name, k.arg) for k in n.keywords}
+    return keywords, positions
+
+
+def _unset_options() -> set:
+    keywords, positions = _production_calls()
+    return {
+        (fn, param)
+        for (fn, param), i in _optional_params().items()
+        if (fn, param) not in keywords
+        and (fn, None) not in keywords
+        and (i is None or positions.get(fn, 0) <= i)
+    }
+
+
+def test_every_option_has_a_production_setter_or_a_reason():
+    missing = sorted(_unset_options() - KEEP_OPTIONS.keys())
+    assert not missing, (
+        f"optional parameters no production call site sets: {missing}; "
+        "make each default the code, give it a production caller, or add it "
+        "to KEEP_OPTIONS with the reason it stays"
+    )
+
+
+def test_keep_options_lists_only_unset_options():
+    """A KEEP_OPTIONS entry that is no longer an optional parameter, or
+    that a production call site now sets, is stale and goes."""
+    options = _optional_params()
+    unset = _unset_options()
+    stale = sorted(k for k in KEEP_OPTIONS if k not in options or k not in unset)
+    assert not stale, f"stale KEEP_OPTIONS entries: {stale}"

@@ -317,107 +317,6 @@ def test_find_hrefs_unchanged_by_text_extraction():
     assert find_hrefs(html) == ["/one", "http://x.com/two", "bare/three"]
 
 
-def test_extract_links_with_text_matches_pycore(spark, documents):
-    from image_ocr_spark.operators.generate import generate_pages
-    from image_ocr_spark.operators.linkgraph import extract_links
-    from image_ocr_spark.pycore.links import find_links
-
-    pages = generate_pages(documents.limit(150))
-    got = {}
-    for r in extract_links(pages, with_text=True).collect():
-        got.setdefault(r.url, []).append((r.href, r.anchor))
-    want = {}
-    for r in pages.select("url", "html").collect():
-        links = find_links(r.html or b"")
-        if links:
-            want[r.url] = links
-    assert got == want
-
-
-ANCHOR_LINK_ROWS = [
-    # (src url, href, anchor text) — term counting across resolution branches
-    ("http://s1.example/p", "http://t.example/x", "great docs"),
-    ("http://s1.example/p", "https://t.example:443/y", "great api"),
-    ("http://s2.example/p", "//t.example/z", "docs"),
-    ("http://s2.example/p", "/local", "self link"),
-    ("http://s2.example/p", "mailto:a@b.c", "dropped entirely"),
-    ("http://s3.example/p", "http://t.example/w", "great"),
-    ("http://s3.example/p", "http://t.example/v", ""),
-]
-
-
-def test_resolve_edges_carries_anchor_through(spark):
-    """resolve_edges carries the anchor column through (keep_cols): a
-    per-(host, term) count and per-host top-k over the resolved edges,
-    with the deterministic tie-break, replayed by DuckDB by value."""
-    from image_ocr_spark.operators.linkgraph import resolve_edges
-    from pyspark.sql import Window
-
-    links = spark.createDataFrame(
-        ANCHOR_LINK_ROWS, "url string, href string, anchor string"
-    )
-    edges = resolve_edges(links, keep_cols=("anchor",))
-    terms = (
-        edges.select("dst_host", F.explode(F.split("anchor", " ")).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("dst_host", "term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("dst_host").orderBy(F.desc("cnt"), F.asc("term"))
-    got = sorted(
-        tuple(r)
-        for r in terms.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 2)
-        .select("dst_host", "term", "cnt", F.col("rank").cast("long"))
-        .collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW links AS SELECT * FROM (VALUES "
-        + ", ".join(f"('{u}', '{h}', '{a}')" for u, h, a in ANCHOR_LINK_ROWS)
-        + ") t(url, href, anchor)"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            """
-WITH resolved AS (
-  SELECT lower(regexp_extract(url, '^[A-Za-z]+://([^/?#]+)', 1)) AS src_host,
-         trim(href) AS h, anchor
-  FROM links
-), branched AS (
-  SELECT CASE
-      WHEN h = '' OR h LIKE '#%'
-           OR (regexp_matches(h, '^[A-Za-z][A-Za-z0-9+.-]*:')
-               AND regexp_extract(h, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1) = '')
-        THEN NULL
-      WHEN regexp_extract(h, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1) <> ''
-        THEN regexp_replace(lower(regexp_extract(h, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)), ':(80|443)$', '')
-      WHEN h LIKE '//%' THEN lower(regexp_extract(h, '^//([^/?#]+)', 1))
-      ELSE src_host END AS dst_host,
-    anchor
-  FROM resolved
-), terms AS (
-  SELECT dst_host, unnest(string_split(anchor, ' ')) AS term FROM branched
-  WHERE dst_host IS NOT NULL
-), counted AS (
-  SELECT dst_host, term, count(*)::BIGINT AS cnt FROM terms
-  WHERE term <> '' GROUP BY 1, 2
-)
-SELECT dst_host, term, cnt,
-       row_number() OVER (PARTITION BY dst_host ORDER BY cnt DESC, term ASC)::BIGINT
-         AS rank
-FROM counted QUALIFY rank <= 2
-"""
-        ).fetchall()
-    )
-    con.close()
-    assert got == want
-    # the aggregate signal: t.example's dominant incoming term is 'great'
-    top = {(h, r): t for h, t, _, r in got}
-    assert top[("t.example", 1)] == "great"
-
-
 def test_find_links_linear_on_hostile_many_anchors():
     """20k href anchors sharing ONE distant close tag: the memoized
     next-close pointer keeps the scan O(n) (a naive per-anchor find

@@ -5,6 +5,7 @@ physical plan is asserted shuffle-free on the scoring side."""
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
@@ -107,13 +108,13 @@ def test_degenerate_rows(spark):
 
 
 def test_scoring_is_shuffle_free(spark, documents):
-    """With a pre-trained vocab the scoring pass must plan to a scan +
+    """Once the vocab is trained the scoring pass must plan to a scan +
     one Arrow eval — no Exchange anywhere (the model ships by broadcast,
     not by join)."""
     from image_ocr_spark.operators.lmquality import familiarity_scores
 
     plan = (
-        familiarity_scores(documents, vocab=["a b", "b c"])
+        familiarity_scores(documents, vocab_size=VOCAB)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -174,25 +175,37 @@ def test_quality_mixture_matches_oracle(spark, documents):
 
 
 def test_quality_buckets_are_thirds_and_ordered(spark, documents):
-    """With every rate at 1.0 the bucket masses are N/3 up to tie spill,
-    and the buckets are value-ordered: max(tail) <= min(middle) <= ...;
-    the head bucket must out-score the tail on average."""
-    from image_ocr_spark.operators.lmquality import quality_mixture
+    """Before sampling (the labels quality_mixture filters) the bucket
+    masses are N/3 up to tie spill, and the buckets are value-ordered:
+    max(tail) <= min(middle) <= ...; the head bucket must out-score the
+    tail on average.  The sampled output keeps that order."""
+    from image_ocr_spark.operators.lmquality import (
+        bucket_label_col,
+        familiarity_scores,
+        quality_cutoffs,
+        quality_mixture,
+    )
 
-    rows = quality_mixture(
-        documents, rates={"tail": 1.0, "middle": 1.0, "head": 1.0},
-        vocab_size=VOCAB,
+    def ordered_buckets(rows):
+        by = {}
+        for r in rows:
+            by.setdefault(r.bucket, []).append(r.familiarity_micro)
+        assert set(by) == {"tail", "middle", "head"}
+        assert not by["middle"] or max(by["tail"]) <= min(by["middle"])
+        assert max(by["middle"]) <= min(by["head"])
+        assert sum(by["head"]) / len(by["head"]) > sum(by["tail"]) / len(by["tail"])
+        return by
+
+    scores = familiarity_scores(documents, vocab_size=VOCAB)
+    cutoffs = quality_cutoffs(scores, 3)
+    rows = scores.select(
+        "familiarity_micro",
+        bucket_label_col(F.col("familiarity_micro"), cutoffs).alias("bucket"),
     ).collect()
     n = len(rows)
-    by = {}
-    for r in rows:
-        by.setdefault(r.bucket, []).append(r.familiarity_micro)
-    assert set(by) == {"tail", "middle", "head"}
-    for b, vals in by.items():
+    for b, vals in ordered_buckets(rows).items():
         assert n // 6 <= len(vals) <= 2 * n // 3 + 1, (b, len(vals))
-    assert not by["middle"] or max(by["tail"]) <= min(by["middle"])
-    assert max(by["middle"]) <= min(by["head"])
-    assert sum(by["head"]) / len(by["head"]) > sum(by["tail"]) / len(by["tail"])
+    ordered_buckets(quality_mixture(documents, vocab_size=VOCAB).collect())
 
 
 def test_quality_mixture_filter_is_scan_stage(spark, documents):

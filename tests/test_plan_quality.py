@@ -135,7 +135,7 @@ def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path, plan):
     from image_ocr_spark.plans.pipeline import extract_pages
     from image_ocr_spark.plans.results import assemble_results, to_json_rows
 
-    extracted = extract_pages(spark.read.parquet(pages_path), 8)
+    extracted = extract_pages(spark.read.parquet(pages_path))
     df = {
         "extract_pages": extracted,
         "pages_json": to_json_rows(assemble_results(extracted)),
@@ -155,7 +155,7 @@ def test_classify_folds_text_once(spark, pages_path):
     scorer: inlined into its lambdas it would run once per keyword."""
     from image_ocr_spark.plans.pipeline import extract_pages
 
-    df = extract_pages(spark.read.parquet(pages_path), 8)
+    df = extract_pages(spark.read.parquet(pages_path))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("translate(") == 1, plan
 

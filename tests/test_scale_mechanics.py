@@ -161,22 +161,3 @@ def test_checkpoint_resume_after_kill_between_write_and_commit(
     assert m["buckets"] == 8
     assert m["output_rows"] == len(direct)
     assert m["input_rows"] == len(direct)  # redone buckets counted ONCE
-
-
-def test_generate_pages_bounds_output_batches():
-    """Replica fan-out must re-chunk OUTPUT batches (r05: one input batch
-    x1200 replicas built a >2 GiB Arrow array and the serializer rejected
-    the ChunkedArray); a driver-side call with a tiny max_rows must yield
-    multiple bounded frames covering every (doc, replica) exactly once."""
-    import pandas as pd
-
-    from image_ocr_spark.operators.generate import _gen
-
-    src = pd.DataFrame(
-        {"doc_id": [0, 1, 2], "text": ["a", "b", "c"], "lang": ["en"] * 3}
-    )
-    frames = list(_gen(replicas=5, max_rows=4)([src]))
-    assert len(frames) == 4  # 15 rows at <=4/frame
-    assert all(len(f) <= 4 for f in frames)
-    ids = [d for f in frames for d in f["doc_id"]]
-    assert ids == list(range(15))

@@ -311,7 +311,7 @@ def test_batched_init_driver_work_is_bounded(spark):
     """VERDICT r03 #1 'done' gate: init at large C on a bigger-than-sample
     synthetic corpus completes with O(C*dim) driver traffic and ZERO
     driver-side sweep math — the selection happens in the scan stage
-    (maxcos_arrow) + TakeOrdered.  The old sweep at this C would collect
+    (_maxcos_update_arrow) + TakeOrdered.  The old sweep at this C would collect
     2*C vectors and run S*C Python cosines."""
     import time
 
@@ -559,7 +559,7 @@ def test_grouped_hot_cell_cap_parity(spark):
     # trivially — review r5 finding)
     from image_ocr_spark.operators.similarity import _salted_subblocks
 
-    cents = kmeans_train(corpus, 6, 1, "vec_id", "embedding")
+    cents = kmeans_train(corpus, 6, 1)
     assigned = assign_cells_arrow(
         corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v")),
         cents,
