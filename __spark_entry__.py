@@ -20,14 +20,16 @@ from pyspark.sql import functions as F
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table, spread when its scan is narrow.  This is the
+    one place the driver decides to spread input before a Python pass:
+    the fixture table is one small parquet file -> one scan split, which
+    would serialize every per-row expression/Arrow stage downstream
+    (page synthesis, media encode, PDF spans) onto a single core.
+    Repartition ONLY when the scan yields fewer splits than the
+    cluster's parallelism — at real corpus scale the scan has thousands
+    of splits and this is a no-op (no Exchange in the plan); the hash
+    key is deterministic under retries."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # Scale-adaptive spread (r07, guide §2.5 input skew): the fixture
-    # table is one small parquet file -> one scan split, which serialized
-    # every per-row expression/Arrow stage downstream onto a single core.
-    # Repartition ONLY when the scan yields fewer splits than the
-    # cluster's parallelism — at real corpus scale the scan has thousands
-    # of splits and this is a no-op (no Exchange in the plan); the hash
-    # key is deterministic under retries.
     par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par, F.xxhash64("doc_id"))
@@ -261,43 +263,28 @@ def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_pixel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel stats through BOTH from-scratch codecs (VERDICT r03 item
-    3 + r04 item 7, graft of the reference's pixel-level preprocessing,
-    preprocessor.py:81-131 over its 7 accepted raster formats,
-    main.py:169-176): the fixtures encode deterministic pixels into actual
-    filtered+zlib-compressed baseline PNGs (all five filter types,
-    gray/RGB/RGBA) AND actual Huffman-entropy-coded baseline JPEGs
-    (constant 8x8 blocks — the bit-exact subset of lossy JPEG); Spark
-    DECODES them back out (pycore/pngdec.py, pycore/jpegdec.py) and
-    computes per-channel means + histogram entropy in integer units; the
-    DuckDB oracle computes the same stats straight from the generative
-    formulas — equality proves both codecs, not just the arithmetic.
-    Round-5 late: real BMP (padded/BGR/bottom-up+top-down,
-    pycore/bmpdec.py), real baseline TIFF (both endians, multi-strip,
-    none+PackBits, pycore/tiffdec.py) and real lossless WebP (RIFF/VP8L,
-    canonical prefix codes, pycore/webpdec.py) fixtures join the union —
-    every format of the reference's raster allowlist (main.py:169)
-    decodes from scratch; lossy VP8 is the one documented boundary.
-    Per-format media ids are offset by k*10^12 — disjoint from any
-    realistic doc_id space (review r5: a 1e6 offset collides at the
-    sf1.0 tier's 6M docs)."""
+    """REAL pixel stats through the from-scratch codecs (graft of the
+    reference's pixel-level preprocessing, preprocessor.py:81-131, over
+    its raster allowlist, main.py:169-176).  One synth pass
+    (multimodal.synth_raster_media) encodes deterministic pixels into a
+    real image per format per doc: filtered+zlib PNG (all five filter
+    types, gray/RGB/RGBA), Huffman-coded baseline JPEG (constant 8x8
+    blocks, the bit-exact subset of lossy JPEG), padded BMP (bottom-up
+    and top-down), baseline TIFF (both endians, multi-strip,
+    none+PackBits) and lossless WebP (RIFF/VP8L, canonical prefix
+    codes); format k's media_id is doc_id + k*10^12, disjoint from any
+    realistic doc_id space.  One decode pass then computes per-channel
+    means + histogram entropy in integer units; the DuckDB oracle
+    computes the same stats straight from the generative formulas, so
+    equality proves the codecs, not just the arithmetic.  Lossy VP8 is
+    the one documented boundary.  Two Arrow passes over one documents
+    scan, spread only by _docs."""
     from image_ocr_spark.operators.multimodal import (
         extract_pixel_features,
-        synth_bmp_media,
-        synth_jpeg_media,
-        synth_png_media,
-        synth_tiff_media,
-        synth_webp_media,
+        synth_raster_media,
     )
 
-    docs = _docs(spark, sf_dir)
-    media = (
-        synth_png_media(docs)
-        .unionByName(synth_jpeg_media(docs, id_offset=10**12))
-        .unionByName(synth_bmp_media(docs, id_offset=2 * 10**12))
-        .unionByName(synth_tiff_media(docs, id_offset=3 * 10**12))
-        .unionByName(synth_webp_media(docs, id_offset=4 * 10**12))
-    )
+    media = synth_raster_media(_docs(spark, sf_dir))
     feats = extract_pixel_features(media)
     return feats.select(
         "media_id",
@@ -1390,20 +1377,19 @@ def q_frontier_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pdf_span_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PDF LAYOUT geometry end to end (r06: pycore/pdftok.pdf_spans +
-    operators/spans.span_right_of_geo/span_below_geo): per-doc PDF
-    content streams synthesized closed-form (Tm absolute positioning, Td
-    line moves), parsed into positioned spans, then the reference's
-    bounding-box predicates — value-right-of on the same visual line,
-    nearest-below within a column tolerance — resolved by min_by joins.
-    The oracle restates each leg's answer from the synthesis formula, so
-    equality proves parse + state machine + geometry.  Three legs per
-    doc: Date:'s right neighbor, Total:'s right neighbor, Invoice's
-    below neighbor."""
+    """PDF LAYOUT geometry end to end (pycore/pdftok.pdf_spans +
+    operators/spans.span_neighbors_geo): per-doc PDF content streams
+    synthesized closed-form (Tm absolute positioning, Td line moves),
+    parsed into positioned spans, then the reference's bounding-box
+    predicates — value-right-of on the same visual line, nearest-below
+    within a column tolerance — resolved by one min_by join for all
+    legs.  The oracle restates each leg's answer from the synthesis
+    formula, so equality proves parse + state machine + geometry.  Three
+    legs per doc: Date:'s right neighbor, Total:'s right neighbor,
+    Invoice's below neighbor."""
     from image_ocr_spark.operators.spans import (
         pdf_layout_spans,
-        span_below_geo,
-        span_right_of_geo,
+        span_neighbors_geo,
     )
 
     d = _docs(spark, sf_dir).select("doc_id")
@@ -1424,22 +1410,8 @@ def q_pdf_span_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("http://pdf.example/d"), sid).alias("url"),
         F.encode(pdf, "UTF-8").alias("html"),
     )
-    spans = pdf_layout_spans(pages)
-    legs = [
-        span_right_of_geo(spans, "Date:").select(
-            "url", F.lit("right_of").alias("rel"), "keyword_text", "value"
-        ),
-        span_right_of_geo(spans, "Total:").select(
-            "url", F.lit("right_of").alias("rel"), "keyword_text", "value"
-        ),
-        span_below_geo(spans, "Invoice").select(
-            "url", F.lit("below").alias("rel"), "keyword_text", "value"
-        ),
-    ]
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    legs = [("Date:", "right_of"), ("Total:", "right_of"), ("Invoice", "below")]
+    return span_neighbors_geo(pdf_layout_spans(pages), legs)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -14,6 +14,12 @@ Two feature paths:
   skipped, never raised;
 - extract_media_features: byte-level histogram features for payloads
   with no decoder here (audio/video).
+
+Fixtures: synth_raster_media encodes closed-form pixels into all five
+from-scratch formats in one per-row pass over the doc ids; the DuckDB
+oracle replays the same pixel formulas, so equal stats prove the codec
+pair.  No builder here repartitions: spreading a narrow scan is the
+caller's decision, made once where the scan is read.
 """
 
 from __future__ import annotations
@@ -25,6 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from image_ocr_spark.operators.rowmap import map_rows
+from image_ocr_spark.pycore.bmpdec import bmp_encode
+from image_ocr_spark.pycore.jpegdec import jpeg_encode
+from image_ocr_spark.pycore.pngdec import png_encode
+from image_ocr_spark.pycore.tiffdec import tiff_encode
+from image_ocr_spark.pycore.webpdec import webp_encode
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -219,63 +230,25 @@ def extract_pixel_features(media: DataFrame) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# raster fixtures: every allowlisted format, real encoded bytes, one pass
+# ---------------------------------------------------------------------------
+
+
+def _ramp(media_id: int, n: int) -> bytes:
+    """The byte ramp the four lossless fixtures share: pixel byte i of
+    image media_id is (media_id*31 + i*7) % 256."""
+    return bytes((media_id * 31 + i * 7) % 256 for i in range(n))
+
+
 def _synth_pixels(media_id: int):
-    """Deterministic pixel formula shared with the DuckDB oracle: the
-    oracle computes stats straight from this closed form while Spark
-    decodes them back out of a real filtered+compressed PNG."""
+    """PNG pixel formula shared with the DuckDB oracle: the oracle
+    computes stats straight from this closed form while Spark decodes
+    them back out of a real filtered+compressed PNG."""
     w = 8 + media_id % 9
     h = 8 + media_id % 7
     ch = (1, 3, 4)[media_id % 3]
-    px = bytes((media_id * 31 + i * 7) % 256 for i in range(w * h * ch))
-    return w, h, ch, px
-
-
-def _synth_media_df(
-    docs: DataFrame, pixels_fn, encode_fn, id_offset: int = 0
-) -> DataFrame:
-    """Shared fixture builder for every real-codec format: one per-row
-    Arrow pass where ``pixels_fn(media_id) -> (w, h, ch, px)`` is the
-    closed-form pixel formula the DuckDB oracle replays and
-    ``encode_fn(media_id, w, h, ch, px) -> bytes`` is the from-scratch
-    encoder (per-format options — row order, endianness, compression —
-    keyed off media_id inside the lambda)."""
-
-    def gen(mid):
-        w, h, ch, px = pixels_fn(mid)
-        return [(mid, "image", encode_fn(mid, w, h, ch, px), w, h)]
-
-    # Spread ids across the cluster BEFORE the encode pass (r07, guide
-    # §2.5 input skew): the docs scan often yields one or few partitions
-    # (a single small parquet at fixture scale; a handful of splits per
-    # branch at any scale), which serializes the Python encoders.  The
-    # exchange moves only 8-byte ids, so salting to defaultParallelism is
-    # free and scale-adaptive (no constant tuned to local core counts);
-    # hash on media_id keeps the assignment deterministic under retries.
-    ids = docs.select((F.col("doc_id") + F.lit(id_offset)).alias("media_id"))
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return map_rows(
-        ids.repartition(par, F.col("media_id")),
-        gen,
-        "media_id long, media_type string, content binary, "
-        "meta_width int, meta_height int",
-    )
-
-
-def synth_png_media(docs: DataFrame) -> DataFrame:
-    """MEDIA_SCHEMA rows whose content is a REAL baseline PNG (deterministic
-    pixels, per-row filter cycling through all five filter types) — the
-    fixture for the decoded-pixel feature path.  Grayscale/RGB/RGBA cycle
-    by media_id % 3."""
-    from image_ocr_spark.pycore.pngdec import png_encode
-
-    return _synth_media_df(
-        docs, _synth_pixels, lambda mid, w, h, ch, px: png_encode(w, h, ch, px)
-    )
-
-
-# ---------------------------------------------------------------------------
-# real JPEG fixtures (from-scratch baseline JPEG — r05, VERDICT r04 item 7)
-# ---------------------------------------------------------------------------
+    return w, h, ch, _ramp(media_id, w * h * ch)
 
 
 def _synth_jpeg_pixels(media_id: int):
@@ -299,77 +272,52 @@ def _synth_jpeg_pixels(media_id: int):
     return w, h, 3, bytes(v for g in gray for v in (g, g, g))
 
 
-def synth_jpeg_media(docs: DataFrame, id_offset: int = 0) -> DataFrame:
-    """MEDIA_SCHEMA rows whose content is a REAL baseline JPEG (Huffman
-    entropy coding, DC prediction, all-ones quant tables) built from the
-    constant-block formula — the bit-exact fixture for the decoded-pixel
-    feature path.  Gray/RGB alternate by media_id parity."""
-    from image_ocr_spark.pycore.jpegdec import jpeg_encode
-
-    return _synth_media_df(
-        docs,
-        _synth_jpeg_pixels,
-        lambda mid, w, h, ch, px: jpeg_encode(w, h, ch, px),
-        id_offset,
-    )
-
-
-# ---------------------------------------------------------------------------
-# real BMP / TIFF fixtures (from-scratch lossless codecs — r05 late,
-# closing the reference's raster allowlist except WebP, main.py:169-176)
-# ---------------------------------------------------------------------------
-
-
 def _synth_bmp_pixels(media_id: int):
-    """Deterministic pixel formula shared with the DuckDB oracle — the
-    same per-byte closed form as the PNG fixture (BMP is lossless, so
-    the replay is exact) with its own width/height cycle; widths 5..10
-    force non-trivial 4-byte row padding."""
+    """BMP pixel formula (the lossless ramp, exact on replay) with its own
+    width/height cycle; widths 5..10 force non-trivial 4-byte row
+    padding."""
     w = 5 + media_id % 6
     h = 4 + media_id % 5
     ch = (1, 3, 4)[media_id % 3]
-    px = bytes((media_id * 31 + i * 7) % 256 for i in range(w * h * ch))
-    return w, h, ch, px
-
-
-def synth_bmp_media(docs: DataFrame, id_offset: int = 0) -> DataFrame:
-    """MEDIA_SCHEMA rows whose content is a REAL BMP (BITMAPINFOHEADER,
-    palette/BGR/BGRA, 4-byte row padding; bottom-up and top-down
-    alternate by media_id parity) — the lossless fixture for the
-    decoded-pixel feature path.  Gray/RGB/RGBA cycle by media_id % 3."""
-    from image_ocr_spark.pycore.bmpdec import bmp_encode
-
-    return _synth_media_df(
-        docs,
-        _synth_bmp_pixels,
-        lambda mid, w, h, ch, px: bmp_encode(
-            w, h, ch, px, top_down=bool(mid % 2)
-        ),
-        id_offset,
-    )
+    return w, h, ch, _ramp(media_id, w * h * ch)
 
 
 def _synth_tiff_pixels(media_id: int):
-    """Deterministic pixel formula shared with the DuckDB oracle — the
-    same per-byte closed form as the PNG/BMP fixtures (baseline TIFF is
-    lossless) with its own width/height cycle."""
+    """Baseline-TIFF pixel formula (the lossless ramp) with its own
+    width/height cycle."""
     w = 6 + media_id % 7
     h = 3 + media_id % 6
     ch = (1, 3, 4)[media_id % 3]
-    px = bytes((media_id * 31 + i * 7) % 256 for i in range(w * h * ch))
-    return w, h, ch, px
+    return w, h, ch, _ramp(media_id, w * h * ch)
 
 
-def synth_tiff_media(docs: DataFrame, id_offset: int = 0) -> DataFrame:
-    """MEDIA_SCHEMA rows whose content is a REAL baseline TIFF (single
-    IFD, multi-strip; little/big endian alternate by media_id parity,
-    none/PackBits compression by (media_id//2) parity) — the lossless
-    fixture for the decoded-pixel feature path.  Gray/RGB/RGBA cycle by
-    media_id % 3."""
-    from image_ocr_spark.pycore.tiffdec import tiff_encode
+def _synth_webp_pixels(media_id: int):
+    """Lossless-WebP pixel formula (the ramp; literal VP8L coding is
+    lossless) with its own width/height cycle; RGB/RGBA alternate by
+    parity (VP8L has no grayscale mode)."""
+    w = 4 + media_id % 8
+    h = 2 + media_id % 5
+    ch = 3 + media_id % 2
+    return w, h, ch, _ramp(media_id, w * h * ch)
 
-    return _synth_media_df(
-        docs,
+
+# (pixel formula, encoder) per raster format, in media-id order: format k
+# of doc d is media_id d + k*10**12, the ids the DuckDB oracle replays
+# (disjoint from any realistic doc_id space).  Encoders take
+# (media_id, w, h, ch, px); per-format options are keyed off media_id.
+_RASTER_FORMATS = (
+    # baseline PNG, per-row filter cycling through all five filter types
+    (_synth_pixels, lambda mid, w, h, ch, px: png_encode(w, h, ch, px)),
+    # baseline JPEG: Huffman entropy coding, DC prediction, all-ones quant
+    (_synth_jpeg_pixels, lambda mid, w, h, ch, px: jpeg_encode(w, h, ch, px)),
+    # BMP: palette/BGR/BGRA, 4-byte row padding; bottom-up/top-down by parity
+    (
+        _synth_bmp_pixels,
+        lambda mid, w, h, ch, px: bmp_encode(w, h, ch, px, top_down=bool(mid % 2)),
+    ),
+    # baseline TIFF: single IFD, 2-row strips; little/big endian by parity,
+    # none/PackBits by (mid // 2) parity
+    (
         _synth_tiff_pixels,
         lambda mid, w, h, ch, px: tiff_encode(
             w,
@@ -380,33 +328,28 @@ def synth_tiff_media(docs: DataFrame, id_offset: int = 0) -> DataFrame:
             packbits=bool((mid // 2) % 2),
             rows_per_strip=2,
         ),
-        id_offset,
-    )
+    ),
+    # lossless WebP: RIFF + VP8L, simple and normal prefix-code forms
+    (_synth_webp_pixels, lambda mid, w, h, ch, px: webp_encode(w, h, ch, px)),
+)
 
 
-def _synth_webp_pixels(media_id: int):
-    """Deterministic pixel formula shared with the DuckDB oracle — the
-    same per-byte closed form as the PNG/BMP/TIFF fixtures (literal VP8L
-    coding is lossless) with its own width/height cycle; RGB/RGBA
-    alternate by parity (VP8L has no grayscale mode)."""
-    w = 4 + media_id % 8
-    h = 2 + media_id % 5
-    ch = 3 + media_id % 2
-    px = bytes((media_id * 31 + i * 7) % 256 for i in range(w * h * ch))
-    return w, h, ch, px
+def synth_raster_media(docs: DataFrame) -> DataFrame:
+    """MEDIA_SCHEMA rows whose content is a REAL encoded image: five per
+    doc, one per format of _RASTER_FORMATS (PNG, JPEG, BMP, TIFF, WebP),
+    media_id = doc_id + k*10**12 — the fixture for the decoded-pixel
+    feature path.  One per-row Arrow pass over doc_id; it runs on
+    docs' partitioning as given (the caller spreads a narrow scan)."""
 
+    def gen(doc_id):
+        for k, (pixels, encode) in enumerate(_RASTER_FORMATS):
+            mid = doc_id + k * 10**12
+            w, h, ch, px = pixels(mid)
+            yield (mid, "image", encode(mid, w, h, ch, px), w, h)
 
-def synth_webp_media(docs: DataFrame, id_offset: int = 0) -> DataFrame:
-    """MEDIA_SCHEMA rows whose content is a REAL lossless WebP (RIFF +
-    VP8L chunk, canonical prefix codes — simple AND normal forms appear
-    across the id cycle since low-cardinality channels compress to the
-    2-symbol simple form) — the lossless fixture for the decoded-pixel
-    feature path.  RGB/RGBA alternate by media_id parity."""
-    from image_ocr_spark.pycore.webpdec import webp_encode
-
-    return _synth_media_df(
-        docs,
-        _synth_webp_pixels,
-        lambda mid, w, h, ch, px: webp_encode(w, h, ch, px),
-        id_offset,
+    return map_rows(
+        docs.select("doc_id"),
+        gen,
+        "media_id long, media_type string, content binary, "
+        "meta_width int, meta_height int",
     )

@@ -11,6 +11,12 @@ pycore.extractor.label_spans.  Cost: the fold is an interpreted
 O(matches x text) on match-dense documents.
 
 Span rows: (url, start, end, label, value), ordered by (start, label).
+
+PDF layout spans carry real page coordinates: ``pdf_layout_spans`` parses
+them in one scan-stage Arrow pass, and ``span_neighbors_geo`` resolves
+any number of (keyword, right_of|below) legs over them with one
+(url, page) join and one ``min_by`` — two Python passes in all, however
+many legs.
 """
 
 from __future__ import annotations
@@ -93,7 +99,8 @@ def label_spans_sql(extracted: DataFrame) -> DataFrame:
 # bounding boxes; the HTML graft approximates them with token positions
 # (entry:span_neighbors).  For the PDF branch the coordinates are REAL:
 # pycore.pdftok.pdf_spans tracks Tm/Td/TD/T*/TL line origins, so the
-# same nearest-neighbor predicates run on page geometry.
+# same nearest-neighbor predicates run on page geometry, every leg in
+# one join (span_neighbors_geo).
 # ---------------------------------------------------------------------------
 
 PDF_SPAN_SCHEMA = (
@@ -124,79 +131,67 @@ def pdf_layout_spans(pages: DataFrame) -> DataFrame:
     return map_rows(pages.select("url", "html"), spans, PDF_SPAN_SCHEMA)
 
 
-# same-line tolerance (span_right_of_geo) and same-column tolerance
-# (span_below_geo), in milli text-space units
+# same-line tolerance (right_of) and same-column tolerance (below), in
+# milli text-space units
 SAME_LINE_TOL_MILLI = 3000
 SAME_COLUMN_TOL_MILLI = 50_000
 
 
-def span_right_of_geo(spans: DataFrame, keyword: str) -> DataFrame:
-    """(url, keyword_text, value): for each span containing ``keyword``,
-    the NEAREST span strictly to its right on the same visual line of the SAME page
-    (|dy| <= SAME_LINE_TOL_MILLI, x greater) — the reference's
-    get_text_right_of on real coordinates.  One equi-join on url + a
-    min_by over dx; deterministic tiebreak by (dx, span_id).  DuckDB
-    replays the join by value (tests/test_pdflayout.py)."""
-    kw = spans.filter(F.col("text").contains(keyword)).select(
+def span_neighbors_geo(spans: DataFrame, legs) -> DataFrame:
+    """(url, rel, keyword_text, value): for each leg (keyword, rel) and
+    each span containing keyword, the NEAREST other span of the SAME page
+    in direction rel — the reference's get_text_right_of /
+    get_text_below on real coordinates:
+
+    - right_of: same visual line (|dy| <= SAME_LINE_TOL_MILLI), x
+      greater; nearest by (dx, span_id);
+    - below: y smaller, |dx| <= SAME_COLUMN_TOL_MILLI; nearest by
+      (dy, |dx|, span_id).
+
+    A span matching several legs answers each.  Every leg resolves in
+    one pass over each side: the keyword side explodes the legs whose
+    keyword a span contains, one (url, page) equi-join meets the
+    candidate spans, and one min_by over (d, d2, span_id) picks the
+    neighbor — (dx, 0) for right_of, (dy, |dx|) for below.  DuckDB
+    replays both directions by value (tests/test_pdflayout.py)."""
+    leg_table = F.array(
+        *[
+            F.struct(F.lit(i).alias("leg"), F.lit(kw).alias("kw"), F.lit(rel).alias("rel"))
+            for i, (kw, rel) in enumerate(legs)
+        ]
+    )
+    kw = spans.select(
         "url",
         "page",
         F.col("span_id").alias("kw_id"),
         F.col("text").alias("keyword_text"),
         F.col("x_milli").alias("kx"),
         F.col("y_milli").alias("ky"),
-    )
+        F.explode(
+            F.filter(leg_table, lambda leg: F.col("text").contains(leg["kw"]))
+        ).alias("l"),
+    ).select("url", "page", "kw_id", "keyword_text", "kx", "ky", "l.leg", "l.rel")
     cand = spans.select(
         "url", "page", "span_id", F.col("text").alias("value"),
         "x_milli", "y_milli",
     )
+    dx = F.col("x_milli") - F.col("kx")
+    dy = F.col("ky") - F.col("y_milli")
+    right = F.col("rel") == "right_of"
+    near = F.when(
+        right, (F.abs(dy) <= SAME_LINE_TOL_MILLI) & (dx > 0)
+    ).otherwise((dy > 0) & (F.abs(dx) <= SAME_COLUMN_TOL_MILLI))
     j = kw.join(cand, ["url", "page"]).filter(
-        (F.col("span_id") != F.col("kw_id"))
-        & (F.abs(F.col("y_milli") - F.col("ky")) <= SAME_LINE_TOL_MILLI)
-        & (F.col("x_milli") > F.col("kx"))
+        (F.col("span_id") != F.col("kw_id")) & near
     )
-    return j.groupBy("url", "kw_id", "keyword_text").agg(
-        F.min_by(
-            "value",
-            F.struct(
-                (F.col("x_milli") - F.col("kx")).alias("dx"),
-                F.col("span_id").alias("sid"),
-            ),
-        ).alias("value")
-    ).drop("kw_id")
-
-
-def span_below_geo(spans: DataFrame, keyword: str) -> DataFrame:
-    """(url, keyword_text, value): for each span containing ``keyword``,
-    the nearest span BELOW it on the SAME page (smaller y) whose x is within
-    SAME_COLUMN_TOL_MILLI of the keyword's — get_text_below on real
-    coordinates; nearest by (dy, |dx|, span_id)."""
-    kw = spans.filter(F.col("text").contains(keyword)).select(
-        "url",
-        "page",
-        F.col("span_id").alias("kw_id"),
-        F.col("text").alias("keyword_text"),
-        F.col("x_milli").alias("kx"),
-        F.col("y_milli").alias("ky"),
+    key = F.struct(
+        F.when(right, dx).otherwise(dy).alias("d"),
+        F.when(right, F.lit(0)).otherwise(F.abs(dx)).alias("d2"),
+        F.col("span_id").alias("sid"),
     )
-    cand = spans.select(
-        "url", "page", "span_id", F.col("text").alias("value"),
-        "x_milli", "y_milli",
-    )
-    j = kw.join(cand, ["url", "page"]).filter(
-        (F.col("span_id") != F.col("kw_id"))
-        & (F.col("y_milli") < F.col("ky"))
-        & (F.abs(F.col("x_milli") - F.col("kx")) <= SAME_COLUMN_TOL_MILLI)
-    )
-    return j.groupBy("url", "kw_id", "keyword_text").agg(
-        F.min_by(
-            "value",
-            F.struct(
-                (F.col("ky") - F.col("y_milli")).alias("dy"),
-                F.abs(F.col("x_milli") - F.col("kx")).alias("adx"),
-                F.col("span_id").alias("sid"),
-            ),
-        ).alias("value")
-    ).drop("kw_id")
+    return j.groupBy("url", "kw_id", "leg", "rel", "keyword_text").agg(
+        F.min_by("value", key).alias("value")
+    ).select("url", "rel", "keyword_text", "value")
 
 
 PDF_TABLE_SCHEMA = (

@@ -44,68 +44,20 @@ _HREF_RE = re.compile(
 )
 
 
-# anchor-TEXT window cap: each anchor's visible text is read from at most
-# this many chars after its open tag, so k anchors sharing one distant
-# close tag cost O(k * CAP), not O(k * n) — the linearity discipline
-ANCHOR_TEXT_MAX = 512
-
-# the anchor CLOSE tag: like the open tag, the name must be exactly "a"
-# (</abbr>, </article>, </aside>… must NOT end an anchor's text — r05
-# review fix for the bare "</a" prefix scan)
-_A_CLOSE_RE = re.compile(r"</[Aa](?=[\s>])")
-
-# inner markup stripped from anchor text; a truncated trailing "<..." (cut
-# mid-tag by the window cap) is stripped by the $-anchored second pattern
-_TAG_STRIP_RE = re.compile(r"<[^>]*>|<[^>]*$")
-_WS_RUN_RE = re.compile(r"\s+")
-
-
 def find_hrefs(raw: bytes) -> List[str]:
     """href values of every anchor tag in a raw HTML page, in document
     order.  Anchors without href (or with an empty/whitespace href) are
     skipped.  Never raises: garbage bytes decode best-effort and simply
     yield no anchors."""
-    return [href for href, _ in find_links(raw, want_text=False)]
-
-
-def find_links(raw: bytes, want_text: bool = True) -> List[tuple]:
-    """(href, anchor_text) per anchor, in document order — find_hrefs
-    plus each link's visible text (the classic curation signal: what the
-    WEB calls the target).  anchor_text is the segment between the open
-    tag and the nearest following anchor close tag, inner markup
-    stripped, whitespace collapsed, trimmed, read through an
-    ANCHOR_TEXT_MAX-char window; an unclosed anchor yields ''.  The href
-    list is byte-identical to the pre-text find_hrefs by construction
-    (same tag scan, same attribute regex); want_text=False skips all
-    text work (the href-only fast path find_hrefs rides)."""
     html = decode_html(raw)
     html = _COMMENT_RE.sub(" ", html)
     html = _DECL_RE.sub(" ", html)
-    out: List[tuple] = []
-    # memoized next-close position: each close search resumes where the
-    # last close was passed, so the total scan across ALL anchors is
-    # O(n) even when many anchors share one distant (or missing) close
-    nc = -2  # -2 = not yet searched; -1 = no close ahead (sticky)
+    out: List[str] = []
     for tag in _A_TAG_RE.finditer(html):
         m = _HREF_RE.search(tag.group(0))
         if m is None:
             continue
         href = (m.group(1) or m.group(2) or m.group(3) or "").strip()
-        if not href:
-            continue
-        if not want_text:
-            out.append((href, ""))
-            continue
-        start = tag.end()
-        if nc != -1 and nc < start:
-            cm = _A_CLOSE_RE.search(html, start)
-            nc = cm.start() if cm else -1
-        if nc < 0:
-            seg = ""  # unclosed to end of document: no visible text
-        elif nc - start <= ANCHOR_TEXT_MAX:
-            seg = html[start:nc]
-        else:
-            seg = html[start : start + ANCHOR_TEXT_MAX]
-        text = _WS_RUN_RE.sub(" ", _TAG_STRIP_RE.sub(" ", seg)).strip()
-        out.append((href, text))
+        if href:
+            out.append(href)
     return out

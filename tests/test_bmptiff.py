@@ -217,23 +217,24 @@ def test_operator_decodes_bmp_and_tiff_rows(spark):
 
     from image_ocr_spark.operators.multimodal import (
         extract_pixel_features,
-        synth_bmp_media,
-        synth_tiff_media,
+        synth_raster_media,
     )
 
     docs = spark.range(12).select(F.col("id").alias("doc_id"))
-    media = synth_bmp_media(docs).unionByName(
-        synth_tiff_media(docs, id_offset=1000)
+    # BMP ids are doc_id + 2*10**12, TIFF ids doc_id + 3*10**12
+    media = synth_raster_media(docs).filter(
+        F.col("media_id").between(2 * 10**12, 4 * 10**12 - 1)
     )
     rows = extract_pixel_features(media).collect()
     assert len(rows) == 24  # every row decodes; nothing skipped
     by_id = {r.media_id: r for r in rows}
-    for mid in range(12):
-        w, h, ch, px = _synth_bmp_pixels(mid)
-        r = by_id[mid]
-        assert (r.width, r.height, r.channels) == (w, h, ch)
-        n = w * h
-        sums = [0] * ch
-        for i, v in enumerate(px):
-            sums[i % ch] += v
-        assert r.mean_micro == [(1_000_000 * s) // n for s in sums]
+    for base, pixels in ((2 * 10**12, _synth_bmp_pixels), (3 * 10**12, _synth_tiff_pixels)):
+        for mid in range(base, base + 12):
+            w, h, ch, px = pixels(mid)
+            r = by_id[mid]
+            assert (r.width, r.height, r.channels) == (w, h, ch)
+            n = w * h
+            sums = [0] * ch
+            for i, v in enumerate(px):
+                sums[i % ch] += v
+            assert r.mean_micro == [(1_000_000 * s) // n for s in sums]

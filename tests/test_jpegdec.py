@@ -131,14 +131,12 @@ def test_operator_decodes_png_and_jpeg_rows(spark):
 
     from image_ocr_spark.operators.multimodal import (
         extract_pixel_features,
-        synth_jpeg_media,
-        synth_png_media,
+        synth_raster_media,
     )
 
     docs = spark.range(6).select(F.col("id").alias("doc_id"))
-    media = synth_png_media(docs).unionByName(
-        synth_jpeg_media(docs, id_offset=1_000_000)
-    )
+    # PNG ids are doc_id, JPEG ids doc_id + 10**12
+    media = synth_raster_media(docs).filter(F.col("media_id") < 2 * 10**12)
     junk = spark.createDataFrame(
         [(999, "image", b"neither png nor jpeg", 0, 0)],
         "media_id long, media_type string, content binary, "
@@ -146,7 +144,7 @@ def test_operator_decodes_png_and_jpeg_rows(spark):
     )
     rows = extract_pixel_features(media.unionByName(junk)).collect()
     assert {r.media_id for r in rows} == set(range(6)) | {
-        1_000_000 + i for i in range(6)
+        10**12 + i for i in range(6)
     }
     for r in rows:
         assert len(r.mean_micro) == r.channels

@@ -45,6 +45,23 @@ def test_find_hrefs_semantics():
         "bare/three",
         "/newline",
     ]
+    # data-href= is another attribute, never the anchor's href
+    assert find_hrefs(b"<a data-href='/wrong'>t</a>") == []
+    assert find_hrefs(b"<a data-href='/wrong' href='/right'>t</a>") == ["/right"]
+
+
+def test_find_hrefs_linear_on_hostile_many_anchors():
+    """20k href anchors in one unclosed run: the scan stays linear (the
+    tag regex consumes [^>]* and the attribute alternatives are
+    first-char-disjoint)."""
+    import time
+
+    raw = b"<a href='/x'>t " * 20000 + b"</a>"
+    t0 = time.time()
+    hrefs = find_hrefs(raw)
+    elapsed = time.time() - t0
+    assert hrefs == ["/x"] * 20000
+    assert elapsed < 3.0, elapsed
 
 
 def test_find_hrefs_never_raises_on_garbage():
@@ -267,82 +284,3 @@ def test_pages_to_rank_end_to_end(spark, documents):
     assert len(ranks) > 0
     assert all(r.rank > 0 for r in ranks)
     storage.release()
-
-
-# ----------------------------------------------------------- anchor text
-
-
-def test_find_links_semantics():
-    from image_ocr_spark.pycore.links import ANCHOR_TEXT_MAX, find_links
-
-    html = (
-        b"<html><body>"
-        b"<a href='/a'>plain text</a>"
-        b"<a href='/b'>with <b>inner</b> <i>markup</i></a>"
-        b"<a href='/c'>  spaced \n out  </a>"
-        b"<a href='/d'><img src='x.png'></a>"
-        b"<a href='/e'>outer <a href='/f'>inner</a></a>"
-        b"<a href='/g'>never closed"
-        b"</body></html>"
-    )
-    links = find_links(html)
-    assert [h for h, _ in links] == ["/a", "/b", "/c", "/d", "/e", "/f", "/g"]
-    texts = dict(links)
-    assert texts["/a"] == "plain text"
-    assert texts["/b"] == "with inner markup"  # tags stripped, ws collapsed
-    assert texts["/c"] == "spaced out"
-    assert texts["/d"] == ""  # image-only anchor
-    # overlapping (illegal-HTML) anchors each read to their nearest
-    # close; the inner open tag is stripped as markup, so the outer
-    # anchor's text includes the inner's — deterministic, documented
-    assert texts["/e"] == "outer inner"
-    assert texts["/f"] == "inner"
-    assert texts["/g"] == ""  # unclosed to EOF -> no text
-    # window cap: a close beyond ANCHOR_TEXT_MAX truncates, and a tag cut
-    # mid-way by the cap does not leak into the text
-    far = b"<a href='/far'>" + b"word " * 200 + b"<img src='y'></a>"
-    (href, text), = find_links(far)
-    assert href == "/far"
-    assert len(text) <= ANCHOR_TEXT_MAX
-    assert "<" not in text and text.startswith("word word")
-
-
-def test_find_hrefs_unchanged_by_text_extraction():
-    """find_hrefs delegates to find_links: href extraction is literally
-    the same scan (regression pin for the r05 refactor)."""
-    html = (
-        b"<a href='/one'>1</a><A HREF=\"http://x.com/two\">2</A>"
-        b"<a class='z' href=bare/three>3</a><a name='nohref'>4</a>"
-    )
-    assert find_hrefs(html) == ["/one", "http://x.com/two", "bare/three"]
-
-
-def test_find_links_linear_on_hostile_many_anchors():
-    """20k href anchors sharing ONE distant close tag: the memoized
-    next-close pointer keeps the scan O(n) (a naive per-anchor find
-    would be O(k*n) ~ 10^9 char touches here)."""
-    import time
-
-    from image_ocr_spark.pycore.links import find_links
-
-    raw = b"<a href='/x'>t " * 20000 + b"</a>"
-    t0 = time.time()
-    links = find_links(raw)
-    elapsed = time.time() - t0
-    assert len(links) == 20000
-    assert elapsed < 3.0, elapsed
-
-
-def test_find_links_close_tag_name_boundary():
-    """r05 review regression: </abbr> (and any other a-prefixed close
-    tag) must NOT end an anchor's text, and data-href= must not count as
-    an href attribute."""
-    from image_ocr_spark.pycore.links import find_links
-
-    (href, text), = find_links(
-        b"<a href='/x'>read the <abbr>REP</abbr> spec today</a>"
-    )
-    assert (href, text) == ("/x", "read the REP spec today")
-    assert find_links(b"<a data-href='/wrong'>t</a>") == []
-    (href2, _), = find_links(b"<a data-href='/wrong' href='/right'>t</a>")
-    assert href2 == "/right"

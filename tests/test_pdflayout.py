@@ -9,11 +9,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from image_ocr_spark.operators.spans import (
-    pdf_layout_spans,
-    span_below_geo,
-    span_right_of_geo,
-)
+from image_ocr_spark.operators.spans import pdf_layout_spans, span_neighbors_geo
 from image_ocr_spark.pycore.pdftok import make_pdf, pdf_spans, tokenize_pdf
 
 
@@ -200,23 +196,21 @@ def test_spark_spans_match_pycore(spark, span_rows):
 
 
 def test_geometric_predicates_match_duckdb(spark, span_rows):
-    """right_of / below on real coordinates — value-replayed by DuckDB
-    from the exported span relation (the engine-parity discipline)."""
+    """right_of / below on real coordinates, both legs in one
+    span_neighbors_geo call — value-replayed by DuckDB from the exported
+    span relation (the engine-parity discipline)."""
     _, df = span_rows
     rows = [
         (r.url, r.span_id, r.text, r.x_milli, r.y_milli) for r in df.collect()
     ]
+    got = span_neighbors_geo(
+        df, [("Date:", "right_of"), ("INVOICE", "below")]
+    ).collect()
     right = sorted(
-        tuple(r)
-        for r in span_right_of_geo(df, "Date:").select(
-            "url", "keyword_text", "value"
-        ).collect()
+        (r.url, r.keyword_text, r.value) for r in got if r.rel == "right_of"
     )
     below = sorted(
-        tuple(r)
-        for r in span_below_geo(df, "INVOICE").select(
-            "url", "keyword_text", "value"
-        ).collect()
+        (r.url, r.keyword_text, r.value) for r in got if r.rel == "below"
     )
     assert right == [("http://a.example/inv", "Date:", "2026-01-15")]
     # nearest below INVOICE within x tolerance is the Date: line

@@ -71,27 +71,47 @@ def test_page_operator_single_arrow_pass(spark, pages_path, op):
 
 
 @pytest.mark.parametrize("wide", [True, False])
-def test_generate_pages_spreads_only_narrow_input(spark, documents, tmp_path, wide):
-    """generate_pages repartitions its input only when it has fewer
-    partitions than defaultParallelism: a scan already split that wide
-    gets no Exchange, a 1-partition input gets exactly one."""
+def test_docs_spreads_only_narrow_input(spark, documents, tmp_path, wide):
+    """The driver's _docs, the one place that spreads input before a
+    Python pass, repartitions only a scan with fewer splits than
+    defaultParallelism: a one-split scan gets exactly one Exchange, a
+    scan already split that wide gets none."""
     import re
 
-    from image_ocr_spark.operators.generate import generate_pages
+    import __spark_entry__ as entry
 
     par = spark.sparkContext.defaultParallelism
-    if wide:
-        documents.repartition(par).write.parquet(str(tmp_path / "docs"))
-        src = spark.read.parquet(str(tmp_path / "docs"))
-        assert src.rdd.getNumPartitions() >= par
-    else:
-        src = documents.coalesce(1)
+    src = documents.repartition(par) if wide else documents.coalesce(1)
+    src.write.parquet(str(tmp_path / "documents.parquet"))
+    n_splits = spark.read.parquet(str(tmp_path / "documents.parquet")).rdd.getNumPartitions()
+    assert n_splits >= par if wide else n_splits == 1
 
-    def exchanges(df):
-        return re.findall(r"^\(\d+\) (\w+)", _formatted(df), re.M).count("Exchange")
+    ops = re.findall(r"^\(\d+\) (\w+)", _formatted(entry._docs(spark, str(tmp_path))), re.M)
+    assert ops.count("Exchange") == (0 if wide else 1), ops
 
-    added = exchanges(generate_pages(src)) - exchanges(src)
-    assert added == (0 if wide else 1)
+
+@pytest.mark.parametrize(
+    "query, scans", [("media_pixel_features", 1), ("pdf_span_geometry", 2)]
+)
+def test_fixture_queries_one_python_pass_per_relation(spark, query, scans):
+    """The media fixture is synthesized in one Arrow pass for all five
+    raster formats and decoded in one more; the PDF span relation is
+    parsed once per side of one neighbor join for all three legs.  Each
+    plan has two MapInArrow, no Union, and reads documents once per
+    Python pass that needs it."""
+    import re
+
+    import __spark_entry__ as entry
+
+    from tests.conftest import SF_DIR
+
+    plan = _formatted(entry.queries()[query](spark, SF_DIR))
+    ops = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert ops.count("MapInArrow") == 2, ops
+    assert "Union" not in ops, ops
+    scanned = re.findall(r"^Location: .*$", plan, re.M)
+    assert len(scanned) == scans, scanned
+    assert all("/documents.parquet" in loc for loc in scanned), scanned
 
 
 def test_dictionary_join_broadcasts(spark):

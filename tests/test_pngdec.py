@@ -67,11 +67,11 @@ def test_operator_skips_non_png_rows(spark):
 
     from image_ocr_spark.operators.multimodal import (
         extract_pixel_features,
-        synth_png_media,
+        synth_raster_media,
     )
 
     docs = spark.range(6).select(F.col("id").alias("doc_id"))
-    media = synth_png_media(docs)
+    media = synth_raster_media(docs).filter(F.col("media_id") < 10**12)  # PNG
     junk = spark.createDataFrame(
         [(999, "image", b"not a png at all", 0, 0)],
         "media_id long, media_type string, content binary, "

@@ -212,14 +212,15 @@ def test_operator_decodes_webp_rows(spark):
 
     from image_ocr_spark.operators.multimodal import (
         extract_pixel_features,
-        synth_webp_media,
+        synth_raster_media,
     )
 
     docs = spark.range(10).select(F.col("id").alias("doc_id"))
-    rows = extract_pixel_features(synth_webp_media(docs)).collect()
+    webp = synth_raster_media(docs).filter(F.col("media_id") >= 4 * 10**12)
+    rows = extract_pixel_features(webp).collect()
     assert len(rows) == 10
     by_id = {r.media_id: r for r in rows}
-    for mid in range(10):
+    for mid in range(4 * 10**12, 4 * 10**12 + 10):
         w, h, ch, px = _synth_webp_pixels(mid)
         r = by_id[mid]
         assert (r.width, r.height, r.channels) == (w, h, ch)
