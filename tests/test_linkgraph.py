@@ -45,7 +45,16 @@ def test_find_hrefs_semantics():
         "bare/three",
         "/newline",
     ]
-    # data-href= is another attribute, never the anchor's href
+
+
+def test_find_links_close_tag_name_boundary():
+    """Name boundaries in the href scan: a-prefixed tags (<abbr>, </abbr>)
+    are not anchors and do not disturb the anchors around them, and
+    data-href= must not count as an href attribute."""
+    assert find_hrefs(
+        b"<a href='/x'>read the <abbr href='/no'>REP</abbr> spec</a>"
+        b"<a href='/y'>next</a>"
+    ) == ["/x", "/y"]
     assert find_hrefs(b"<a data-href='/wrong'>t</a>") == []
     assert find_hrefs(b"<a data-href='/wrong' href='/right'>t</a>") == ["/right"]
 
