@@ -396,7 +396,7 @@ def q_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(t)
     )
     corpus = _docs(spark, sf_dir).select("doc_id", injected.alias("text"))
-    return dedup_substrings(corpus, window=8)
+    return dedup_substrings(corpus)
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,10 +481,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from image_ocr_spark.operators.similarity import ivf_topk
 
     emb = _emb(spark, sf_dir)
-    return ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 16),
-        k=5, num_centroids=8, iters=2, nprobe=2,
-    )
+    return ivf_topk(emb, emb.filter(F.col("vec_id") < 16), num_centroids=8)
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,9 +701,7 @@ def q_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation, same scale shape as ngram_jaccard)."""
     from image_ocr_spark.operators.dedup import fingerprint_match_pairs, with_variants
 
-    return fingerprint_match_pairs(
-        with_variants(_docs(spark, sf_dir)), min_shared=5
-    )
+    return fingerprint_match_pairs(with_variants(_docs(spark, sf_dir)))
 
 
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,13 +718,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup = emb.select(
         (F.col("vec_id") + VARIANT_OFFSET).alias("vec_id"), "embedding"
     )
-    return embedding_dup_pairs(
-        emb.unionByName(dup),
-        threshold_milli=990,
-        num_centroids=32,
-        iters=1,
-        nprobe=2,
-    )
+    return embedding_dup_pairs(emb.unionByName(dup), num_centroids=32)
 
 
 def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -741,12 +730,7 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     return ivf_recall_at_k(
-        emb,
-        emb.filter(F.col("vec_id") < 16),
-        k=5,
-        num_centroids=12,
-        iters=2,
-        nprobe=8,
+        emb, emb.filter(F.col("vec_id") < 16), num_centroids=12, nprobe=8
     )
 
 
@@ -847,7 +831,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
-    out = contamination_flags(docs, bench, min_overlap=2)
+    out = contamination_flags(docs, bench)
     return out.select(F.col("id").alias("doc_id"), "n_overlap")
 
 
@@ -1076,9 +1060,7 @@ def q_ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_q = ivf_recall_at_k(
         cemb,
         cemb.filter(F.col("vec_id") < 16),
-        k=5,
         num_centroids=22,  # isqrt(500), the fixture corpus size
-        iters=2,
         nprobe=2,
     )
     return per_q.groupBy().agg(
@@ -1110,7 +1092,7 @@ def q_stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per distinct url with its first-seen timestamp."""
     from image_ocr_spark.streaming.stateful import dedup_first_seen_replay
 
-    out = dedup_first_seen_replay(spark, _pages(spark, sf_dir), copies=2)
+    out = dedup_first_seen_replay(spark, _pages(spark, sf_dir))
     return out.select(
         "url", F.col("first_ts").cast("long").alias("first_ts_epoch")
     )

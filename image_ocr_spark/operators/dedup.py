@@ -11,9 +11,12 @@ Scale design:
   than the vectorized batch at sf0.1.  The semantic reference is the
   DuckDB oracle (`__spark_entry__.oracle_sql`), whose signature SQL the
   tests replay against these batches bit for bit.
-- Shuffles happen only where semantically required: LSH band bucketing
-  (groupBy band key — bounded fan-in per bucket), candidate-pair
-  verification (equi-join on shingle hash), exact dedup (groupBy hash).
+- Shuffles happen only where semantically required: candidate pairs
+  (_pairs_sharing, the one shuffle_hash self-join on a signature key —
+  LSH band bucket, SimHash chunk, rare shingle or fingerprint — after an
+  optional document-frequency cap), n-gram verification (the candidates
+  joined back to their shingle arrays), line and substring dedup
+  (groupBy hash).
 - Hash primitives are engine-portable: md5-prefix for token/shingle
   hashes (xxhash64/murmur differ across engines; md5 doesn't) and a
   codepoint Rabin-Karp polynomial for the winnowed fingerprints — both
@@ -34,7 +37,7 @@ Aiken, SIGMOD 2003.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
@@ -95,14 +98,58 @@ def with_variants(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", t.alias("text")).unionByName(mutant)
 
 
+def _pairs_sharing(
+    keyed: DataFrame, keys: list, max_df: "int | None" = None
+) -> DataFrame:
+    """(id_a, id_b, n_shared, <col>_a, <col>_b per carried column): the
+    candidate pairs of keyed(id, *keys, *carried) — two ids holding the
+    same key, id_a < id_b — with the number of keys they share.  Every
+    near-duplicate operator below makes its candidates here.
+
+    ``max_df`` first drops keys held by more than max_df rows, so no
+    key's pair fan-out exceeds max_df^2 (a boilerplate key in millions of
+    docs would otherwise be one near-quadratic bucket).
+
+    The self-join is hinted shuffle_hash (r07): a broadcast self-join
+    evaluates the whole signature pipeline on BOTH sides (there is no
+    exchange to reuse), and broadcasting a corpus-sized side fails at
+    scale anyway.  Measured 4.7-11.4 s -> 2.2-3.1 s for the n-gram
+    candidates at sf0.1 / 16 cores.
+    """
+    if max_df is not None:
+        rare = (
+            keyed.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") <= max_df)
+            .select(*keys)
+        )
+        keyed = keyed.join(rare, keys)
+    carried = [c for c in keyed.columns if c != "id" and c not in keys]
+    keyed = keyed.hint("shuffle_hash")
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (
+        a.join(
+            b,
+            [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+            + [F.col("a.id") < F.col("b.id")],
+        )
+        .groupBy(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carried],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carried],
+        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+
+
 def minhash_lsh_pairs(docs: DataFrame, max_bucket: "int | None" = None) -> DataFrame:
     """Candidate near-dup pairs via MinHash banding over docs(doc_id, text).
 
     sig -> split into DEFAULT_BANDS bands of DEFAULT_NUM_PERM/DEFAULT_BANDS
-    rows -> band bucket key -> equi-join within (band, key) -> distinct
-    (a < b) pairs.  The join is a
-    shuffle on the band key; bucket sizes are bounded by similarity structure
-    (AQE skew-split covers pathological buckets).
+    rows -> band bucket key -> the distinct pairs sharing a (band, key)
+    bucket (_pairs_sharing).  Bucket sizes are bounded by similarity
+    structure (AQE skew-split covers pathological buckets).
 
     ``max_bucket`` (VERDICT r03 item 7): a boilerplate TEMPLATE owning a big
     slice of the corpus puts its whole slice in ONE band bucket, and the
@@ -133,45 +180,24 @@ def minhash_lsh_pairs(docs: DataFrame, max_bucket: "int | None" = None) -> DataF
                 ),
             )
         ).alias("band", "key"),
-    ).hint("shuffle_hash")  # r07: self-joins below would otherwise broadcast
-    # one side and re-evaluate the signature pipeline on both (see
-    # simhash_hamming_pairs); the band-key shuffle is the scale path anyway
-    if max_bucket is not None:
-        # one agg on the SAME (band, key) the join shuffles on, so the
-        # stats ride the shuffle the join needed anyway
-        stats = banded.groupBy("band", "key").agg(
-            F.count(F.lit(1)).alias("_n"), F.min("id").alias("_hub")
-        )
-        banded = banded.join(stats, ["band", "key"])
-        small = banded.filter(F.col("_n") <= max_bucket)
-        a = small.alias("a")
-        b = small.alias("b")
-        clique = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        )
-        star = (
-            banded.filter((F.col("_n") > max_bucket) & (F.col("id") != F.col("_hub")))
-            .select(F.col("_hub").alias("id_a"), F.col("id").alias("id_b"))
-        )
-        return clique.unionByName(star).distinct()
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
     )
+    if max_bucket is None:
+        return _pairs_sharing(banded, ["band", "key"]).select("id_a", "id_b")
+    # bucket size and hub over the SAME (band, key) partitioning the
+    # candidate join needs, so the stats ride the shuffle it needed anyway
+    bucket = Window.partitionBy("band", "key")
+    banded = banded.select(
+        "*",
+        F.count(F.lit(1)).over(bucket).alias("_n"),
+        F.min("id").over(bucket).alias("_hub"),
+    )
+    small = banded.filter(F.col("_n") <= max_bucket).select("id", "band", "key")
+    clique = _pairs_sharing(small, ["band", "key"]).select("id_a", "id_b")
+    star = (
+        banded.filter((F.col("_n") > max_bucket) & (F.col("id") != F.col("_hub")))
+        .select(F.col("_hub").alias("id_a"), F.col("id").alias("id_b"))
+    )
+    return clique.unionByName(star).distinct()
 
 
 DEFAULT_SHINGLE_MAX_DF = 64
@@ -224,27 +250,10 @@ def ngram_jaccard_pairs(
     # storage.release() frees the last one on demand (unpersist is always
     # correctness-safe: consumers just recompute).
     sh = storage.hold(sh, slot="ngram_sigs").persist()
-    exploded = sh.select("id", F.explode("hs").alias("h"))
-    rare = (
-        exploded.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
-        .select("h")
-    )
-    # shuffle on h (same key as the groupBy); shuffle_hash (r07) keeps the
-    # candidate self-join off the broadcast path, which evaluated the whole
-    # explode+df-filter pipeline on BOTH sides — measured 4.7-11.4 s ->
-    # 2.2-3.1 s at sf0.1/16 cores — and is the only strategy that survives
-    # when the rare-shingle relation outgrows the broadcast cap anyway
-    rare_ex = exploded.join(rare, "h").hint("shuffle_hash")
-    a = rare_ex.alias("a")
-    b = rare_ex.alias("b")
     cand = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("_n_shared"))
-        .filter(F.col("_n_shared") >= min_shared)
-        .drop("_n_shared")
+        _pairs_sharing(sh.select("id", F.explode("hs").alias("h")), ["h"], max_df)
+        .filter(F.col("n_shared") >= min_shared)
+        .select("id_a", "id_b")
     )
     sa = sh.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
     sb = sh.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
@@ -264,15 +273,8 @@ def simhash_hamming_pairs(docs: DataFrame) -> DataFrame:
     SIMHASH_CHUNKS-1 guarantees a shared chunk), verified by exact popcount
     distance <= SIMHASH_MAX_HAMMING.  With 60-bit fingerprints
     each chunk key spans 2^15 buckets, keeping per-bucket candidate counts
-    ~N/32768 at corpus scale.
-
-    r07: fingerprints come from the Arrow batch (simhash_arrow) and the
-    self-join is hinted shuffle_hash — the broadcast self-join evaluated
-    the whole fingerprint pipeline on BOTH sides (no exchange to reuse)
-    and broadcasting one full side caps out at scale anyway; measured
-    5.75 s (array expressions + broadcast) -> 1.2 s (arrow +
-    shuffle_hash) for 10k sf0.1 docs at 16 cores, identical 5,417 output
-    rows."""
+    ~N/32768 at corpus scale.  The candidate pairs carry both
+    fingerprints (fp_a, fp_b), so the distance check needs no join back."""
     bits_per = SIMHASH_BITS // SIMHASH_CHUNKS
     fp = simhash_arrow(docs)
     chunk_arr = F.array(
@@ -285,25 +287,9 @@ def simhash_hamming_pairs(docs: DataFrame) -> DataFrame:
     )
     chunked = fp.select(
         "id", "fp", F.posexplode(chunk_arr).alias("chunk", "ckey")
-    ).hint("shuffle_hash")
-    a = chunked.alias("a")
-    b = chunked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ckey") == F.col("b.ckey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.fp").alias("fa"),
-            F.col("b.fp").alias("fb"),
-        )
-        .distinct()
     )
-    ham = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
+    cand = _pairs_sharing(chunked, ["chunk", "ckey"])
+    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
     return cand.select(
         "id_a", "id_b", ham.cast("int").alias("hamming")
     ).filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
@@ -326,40 +312,18 @@ POLY_B = 257              # rolling-hash base; gram hash is the Rabin-Karp
                           # polynomial sum(cp[i+j] * B^j) mod MERSENNE31
 
 
-def with_fingerprints(docs: DataFrame) -> DataFrame:
-    """(doc_id, fp) rows: one row per winnowed fingerprint of each document."""
-    return winnow_arrow(docs).withColumnRenamed("id", "doc_id")
+FINGERPRINT_MIN_SHARED = 5  # shared fingerprints that make a local match
 
 
-def fingerprint_match_pairs(docs: DataFrame, min_shared: int = 5) -> DataFrame:
-    """(id_a, id_b, n_shared): document pairs sharing >= min_shared winnowed
-    fingerprints — the MOSS-style local-match detector over the rolling-hash
-    fingerprints.  Same scale shape as ngram_jaccard_pairs: fingerprints
-    with document frequency > DEFAULT_SHINGLE_MAX_DF are dropped before the
-    candidate join so corpus-common fragments (boilerplate) cannot create
-    hot keys."""
-    fps = with_fingerprints(docs)
-    rare = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= DEFAULT_SHINGLE_MAX_DF)
-        .select("fp")
-    )
-    # shuffle_hash (r07): same rationale as ngram_jaccard_pairs — the
-    # broadcast self-join re-evaluates the fingerprint pipeline per side
-    # and cannot survive a corpus-sized fingerprint relation
-    rare_fps = fps.join(rare, "fp").hint("shuffle_hash")
-    a = rare_fps.alias("a")
-    b = rare_fps.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+def fingerprint_match_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_shared): document pairs sharing >=
+    FINGERPRINT_MIN_SHARED winnowed fingerprints — the MOSS-style
+    local-match detector over the rolling-hash fingerprints.  Same scale
+    shape as ngram_jaccard_pairs: fingerprints with document frequency >
+    DEFAULT_SHINGLE_MAX_DF are dropped before the candidate join so
+    corpus-common fragments (boilerplate) cannot create hot keys."""
+    return _pairs_sharing(winnow_arrow(docs), ["fp"], DEFAULT_SHINGLE_MAX_DF).filter(
+        F.col("n_shared") >= FINGERPRINT_MIN_SHARED
     )
 
 
@@ -671,11 +635,12 @@ def dedup_components(pairs: DataFrame, ids: DataFrame) -> DataFrame:
     )
 
 
-def contamination_flags(
-    docs: DataFrame, benchmark: DataFrame, min_overlap: int = 2
-) -> DataFrame:
-    """(id, n_overlap): docs(doc_id, text) sharing >= min_overlap word
-    trigrams with ANY benchmark item — eval-set decontamination, the
+CONTAMINATION_MIN_OVERLAP = 2  # shared word trigrams that flag a document
+
+
+def contamination_flags(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """(id, n_overlap): docs(doc_id, text) sharing >=
+    CONTAMINATION_MIN_OVERLAP word trigrams with ANY benchmark item — eval-set decontamination, the
     training-data gate
     that keeps test sets out of the corpus (cf. GPT-3 appendix C / PaLM
     §B.3 n-gram overlap decontamination).
@@ -696,7 +661,7 @@ def contamination_flags(
     return (
         hits.groupBy("id")
         .agg(F.count_distinct("h").alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
+        .filter(F.col("n_overlap") >= CONTAMINATION_MIN_OVERLAP)
     )
 
 
@@ -752,18 +717,19 @@ def dedup_lines(docs: DataFrame, max_df: int = 1) -> DataFrame:
     )
 
 
-def dedup_substrings(
-    docs: DataFrame, window: int = 8, max_dup_starts: int = 4096
-) -> DataFrame:
+SUBSTRING_WINDOW = 8  # tokens per exact-substring dedup window
+
+
+def dedup_substrings(docs: DataFrame, max_dup_starts: int = 4096) -> DataFrame:
     """(doc_id, n_tokens, n_windows, n_dup_windows, clean_text): EXACT
     SUBSTRING deduplication at token-window granularity — every token
-    of docs(doc_id, text) covered by a `window`-token span whose hash
+    of docs(doc_id, text) covered by a SUBSTRING_WINDOW-token span whose hash
     occurs at least twice ANYWHERE in the corpus (across documents or
     repeated within one) is removed from every document, the Spark-first
     graft of the
     suffix-array substring dedup in Lee et al., "Deduplicating Training
     Data Makes Language Models Better" (ACL 2022; they use 50-token
-    spans — `window` scales with real corpus token counts).  Finer than
+    spans — the window scales with real corpus token counts).  Finer than
     dedup_lines (catches mid-line boilerplate and templated sentences),
     stricter than minhash (exact spans only).
 
@@ -788,7 +754,7 @@ def dedup_substrings(
     bound (~10^8 distinct spans, the dedup_lines argument)."""
     toks = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
     base = docs.select(F.col("doc_id").alias("id"), toks.alias("toks"))
-    w = window
+    w = SUBSTRING_WINDOW
     idx = F.when(
         F.size("toks") >= w, F.sequence(F.lit(1), F.size("toks") - (w - 1))
     ).otherwise(F.array().cast("array<int>"))

@@ -50,6 +50,10 @@ from image_ocr_spark.operators import storage
 
 CENT_SCALE = 10_000_000  # deci-micro accumulation unit for centroid means
 DEFAULT_SAMPLE_SIZE = 64  # k-means++ init sample (collected to the driver)
+IVF_K = 5  # neighbours per IVF query
+IVF_TRAIN_ITERS = 2  # Lloyd iterations behind the IVF search centroids
+DUP_COS_MILLI = 990  # floor(1000*cos) at which two embeddings are near-dups
+DUP_TRAIN_ITERS = 1  # Lloyd iterations behind the near-dup blocking cells
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
@@ -683,17 +687,16 @@ def _probe_cells(queries: DataFrame, cents: list, nprobe: int) -> DataFrame:
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     num_centroids: int = 8,
-    iters: int = 2,
     nprobe: int = 2,
 ) -> DataFrame:
-    """(query_id, neighbor_id, rank) searching the query's `nprobe` nearest
-    IVF cells (trained centroids, multi-probe — VERDICT r01 item 6).
+    """(query_id, neighbor_id, rank) of the IVF_K nearest neighbours found
+    in the query's `nprobe` nearest IVF cells (centroids trained with
+    IVF_TRAIN_ITERS Lloyd iterations, multi-probe — VERDICT r01 item 6).
 
     Corpus-side cell assignment is shuffle-free (assign_cells_arrow); the
     only corpus exchange is the broadcast-probe join's output."""
-    cents = kmeans_train(embeddings, num_centroids, iters)
+    cents = kmeans_train(embeddings, num_centroids, IVF_TRAIN_ITERS)
     assigned = assign_cells_arrow(_vecs(embeddings), cents)
     probes = _probe_cells(queries, cents, nprobe)
     matched = F.broadcast(probes).join(assigned, F.col("pcell") == F.col("cell"))
@@ -705,7 +708,7 @@ def ivf_topk(
             F.col("v").alias("cv"),
         )
     )
-    return _rank_topk(sim, k)
+    return _rank_topk(sim, IVF_K)
 
 
 def _blocked_cos_pairs(
@@ -874,14 +877,12 @@ def _salted_subblocks(
 
 def embedding_dup_pairs(
     embeddings: DataFrame,
-    threshold_milli: int = 990,
     num_centroids: Optional[int] = None,
-    iters: int = 1,
     nprobe: int = 2,
     max_cell: Optional[int] = 4096,
 ) -> DataFrame:
     """(id_a, id_b, cos_milli): embedding-cosine near-duplicate pairs of
-    (vec_id, embedding) rows.
+    (vec_id, embedding) rows, cos_milli >= DUP_COS_MILLI.
 
     Scoring is per cell (_dup_pairs_grouped, r04): it shuffles each vector
     once (N*dim) instead of every candidate pair with both vectors
@@ -891,9 +892,10 @@ def embedding_dup_pairs(
     reference.
 
     Blocking: every vector is assigned to its `nprobe` nearest IVF cells
-    (trained centroids); candidates are pairs sharing any cell.  With
-    nprobe >= 2 a near-dup pair straddling one Voronoi boundary still shares
-    a cell — the r02 single-cell blocking missed exactly those pairs
+    (centroids after DUP_TRAIN_ITERS Lloyd iterations); candidates are
+    pairs sharing any cell.  With nprobe >= 2 a near-dup pair straddling
+    one Voronoi boundary still shares a cell — the r02 single-cell
+    blocking missed exactly those pairs
     (tests/test_similarity.py::test_boundary_near_dup_pair_caught injects
     one).  A pair can meet in up to nprobe cells, so candidates are
     deduplicated after the exact-cosine verify (cos is deterministic —
@@ -906,22 +908,20 @@ def embedding_dup_pairs(
     blocked apart — raise nprobe for higher recall at linearly more
     candidate volume (the standard IVF trade).
     """
-    cents = kmeans_train(embeddings, num_centroids, iters)
+    cents = kmeans_train(embeddings, num_centroids, DUP_TRAIN_ITERS)
     assigned = assign_cells_arrow(_vecs(embeddings), cents, nprobe)
     return _dup_pairs_grouped(
-        assigned, threshold_milli, max_cell=max_cell
+        assigned, DUP_COS_MILLI, max_cell=max_cell
     ).distinct()
 
 
 def ivf_recall_at_k(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     num_centroids: int = 12,
-    iters: int = 2,
     nprobe: int = 8,
 ) -> DataFrame:
-    """(query_id, n_hit, recall_milli): IVF recall@k vs exact brute force,
+    """(query_id, n_hit, recall_milli): IVF recall@IVF_K vs exact brute force,
     surfaced as a checked metric (VERDICT r02 item 8) instead of a pytest
     constant.
 
@@ -930,20 +930,17 @@ def ivf_recall_at_k(
     reaching 0.9 there requires probing ~2/3 of the cells; real embedding
     corpora cluster, so production settings probe far fewer.
     """
-    bf = brute_force_topk(embeddings, queries, k=k)
+    bf = brute_force_topk(embeddings, queries, k=IVF_K)
     iv = ivf_topk(
-        embeddings,
-        queries,
-        k=k,
-        num_centroids=num_centroids,
-        iters=iters,
-        nprobe=nprobe,
+        embeddings, queries, num_centroids=num_centroids, nprobe=nprobe
     ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     j = bf.join(iv, ["query_id", "neighbor_id"], "left")
     return j.groupBy("query_id").agg(
         F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias("n_hit"),
         F.floor(
-            F.lit(1000) * F.sum(F.coalesce(F.col("hit"), F.lit(0))) / F.lit(k)
+            F.lit(1000)
+            * F.sum(F.coalesce(F.col("hit"), F.lit(0)))
+            / F.lit(IVF_K)
         )
         .cast("long")
         .alias("recall_milli"),

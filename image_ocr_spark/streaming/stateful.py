@@ -107,13 +107,11 @@ def dedup_first_seen(pages: DataFrame) -> DataFrame:
     )
 
 
-def dedup_first_seen_replay(
-    spark, pages: DataFrame, copies: int = 2
-) -> DataFrame:
+def dedup_first_seen_replay(spark, pages: DataFrame) -> DataFrame:
     """Batch-replay harness for the driver's correctness gate (VERDICT r02
-    item 4): materialize `copies` identical crawls of `pages` as separate
+    item 4): materialize two identical crawls of `pages` as separate
     files, drain them through the REAL streaming dedup (maxFilesPerTrigger=1
-    forces >= `copies` micro-batches, so the cross-batch GroupState path is
+    forces >= two micro-batches, so the cross-batch GroupState path is
     exercised, not a single-batch degenerate), and return the parquet sink's
     content as a batch DataFrame.  Fresh temp dirs per call keep the replay
     idempotent (a reused checkpoint would suppress every url); the bulky
@@ -129,7 +127,7 @@ def dedup_first_seen_replay(
     out = os.path.join(base, "out")
     ck = os.path.join(base, "ck")
     p = pages.select("url", F.col("warc_ts").cast("timestamp").alias("warc_ts"))
-    for _ in range(copies):
+    for _ in range(2):
         p.coalesce(1).write.mode("append").parquet(src)
     stream = (
         spark.readStream.schema("url string, warc_ts timestamp")

@@ -238,10 +238,10 @@ def test_simhash_arrow_matches_duckdb(spark, documents):
 
 
 def test_winnow_arrow_matches_duckdb(spark, documents):
-    """Winnowed Rabin-Karp fingerprints (with_fingerprints) == the oracle's
+    """Winnowed Rabin-Karp fingerprints (winnow_arrow) == the oracle's
     _sql_winnow_fps_cte, fingerprint for fingerprint."""
     import __spark_entry__ as e
-    from image_ocr_spark.operators.dedup import with_fingerprints
+    from image_ocr_spark.operators.dedup import winnow_arrow
 
     sql = (
         f"WITH {e._sql_winnow_fps_cte('src')} "
@@ -249,7 +249,7 @@ def test_winnow_arrow_matches_duckdb(spark, documents):
     )
     for df, con in _signature_cases(spark, documents):
         want = sorted(con.execute(sql).fetchall())
-        got = sorted((r.doc_id, r.fp) for r in with_fingerprints(df).collect())
+        got = sorted((r.id, r.fp) for r in winnow_arrow(df).collect())
         assert got == want and len({d for d, _ in got}) == df.count()
 
 
@@ -370,7 +370,7 @@ def test_dedup_substrings_semantics(spark):
         (5, "short"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in dedup_substrings(df, window=8).collect()}
+    got = {r.doc_id: r for r in dedup_substrings(df).collect()}
     assert got[1].clean_text == "unique tail of doc one here"
     assert got[2].clean_text == "different head words and more"
     assert got[3].clean_text == rows[2][1] and got[3].n_dup_windows == 0
@@ -386,16 +386,16 @@ def test_dedup_substrings_pathological_cap(spark):
     0..cap+window-2, the tail is RETAINED (under-deletion), and
     n_dup_windows reports the UNCAPPED count so the capping is
     detectable.  A normal doc in the same corpus is unaffected."""
-    from image_ocr_spark.operators.dedup import dedup_substrings
+    from image_ocr_spark.operators.dedup import SUBSTRING_WINDOW, dedup_substrings
 
-    n, cap, w = 20_000, 64, 8
+    n, cap, w = 20_000, 64, SUBSTRING_WINDOW
     unique = " ".join(f"u{i}" for i in range(30))
     df = spark.createDataFrame(
         [(0, " ".join(["tok"] * n)), (1, unique)], "doc_id long, text string"
     )
     got = {
         r.doc_id: r
-        for r in dedup_substrings(df, window=w, max_dup_starts=cap).collect()
+        for r in dedup_substrings(df, max_dup_starts=cap).collect()
     }
     assert got[0].n_dup_windows == n - (w - 1)  # uncapped count
     kept = n - (cap + w - 1)

@@ -13,8 +13,9 @@ only over-approximate (two defs sharing a name are reached together), so
 a def reported here is certainly reached by nothing but tests.
 
 Options are matched the same way: a call whose function is named like the
-def (bare name or attribute) sets a parameter when it passes it by keyword
-or reaches its position; a `*args` or `**kwargs` call sets them all.  The
+def (bare name or attribute) sets a parameter when it passes it, by keyword
+or position, anything but the default's own source (`k=5` against
+`k: int = 5` sets nothing); a `*args` or `**kwargs` call sets them all.  The
 call sites are the entry points above and all library code.  Methods are
 not checked: the one class in the checked packages, BucketedCheckpoint,
 has no production caller at all (it is in KEEP).
@@ -67,6 +68,10 @@ KEEP_OPTIONS = {
     ),
     ("dedup_substrings", "max_dup_starts"): _CAP + " (per-row rebuild bound)",
     ("embedding_dup_pairs", "max_cell"): _CAP + " (hot-cell split parity)",
+    ("embedding_dup_pairs", "nprobe"): (
+        "a test moves it 2 -> 1 so a near-dup pair across a cell boundary "
+        "is missed: the check that multi-probe blocking catches it"
+    ),
     ("robots_rules", "max_rules"): _CAP + " (adversarial robots.txt bound)",
     ("bloom_build", "seg_bits"): _CAP + " (one, many and a short last segment)",
     ("pages_to_warc", "max_chunk_bytes"): _CAP + " (multi-chunk WARC output)",
@@ -78,6 +83,10 @@ KEEP_OPTIONS = {
     ),
     ("read_warc", "passthrough"): (
         "WARC files read through binaryFile, and resume lineage"
+    ),
+    ("classify_df", "text_col"): (
+        "the benchmark's rollup passes it (perfbench/workloads.py); it goes "
+        "with the next change to the benchmark"
     ),
 }
 
@@ -183,8 +192,10 @@ def test_keep_lists_only_unreached_defs():
 
 
 def _optional_params() -> dict:
-    """{(def, param): position or None for keyword-only} over the optional
-    parameters of the checked packages' top-level defs."""
+    """{(def, param): (position or None for keyword-only, defaults)} over
+    the optional parameters of the checked packages' top-level defs;
+    defaults holds the source (ast.dump) of the default of each def of
+    that name."""
     out = {}
     for pkg in CHECKED:
         for path in sorted((LIB / pkg).glob("*.py")):
@@ -194,23 +205,30 @@ def _optional_params() -> dict:
                 a = node.args
                 pos = a.posonlyargs + a.args
                 first = len(pos) - len(a.defaults)
-                for i, arg in enumerate(pos[first:], first):
-                    out[(node.name, arg.arg)] = i
-                for arg, default in zip(a.kwonlyargs, a.kw_defaults):
-                    if default is not None:
-                        out[(node.name, arg.arg)] = None
+                params = [
+                    (arg.arg, i, d)
+                    for (i, arg), d in zip(enumerate(pos[first:], first), a.defaults)
+                ]
+                params += [
+                    (arg.arg, None, d)
+                    for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                ]
+                for name, i, d in params:
+                    _, defaults = out.get((node.name, name), (i, set()))
+                    out[(node.name, name)] = (i, defaults | {ast.dump(d)})
     return out
 
 
-def _production_calls():
-    """(keywords, positions): the (name, keyword) pairs and the largest
-    positional-argument count per called name over every production call
-    site.  A `**kwargs` call records keyword None (sets every keyword); a
-    `*args` call records an unbounded positional count."""
+def _production_args() -> dict:
+    """{(called name, keyword or position): {ast.dump of each value}} over
+    every production call site.  A `**kwargs` call is recorded under
+    keyword None (it sets every keyword), a `*args` call under position
+    "*" (it sets every position)."""
     paths = [ROOT / "__spark_entry__.py", ROOT / "package.py"]
     paths += sorted((ROOT / "perfbench").glob("*.py"))
     paths += sorted(LIB.rglob("*.py"))
-    keywords, positions = set(), {}
+    out = {}
     for path in paths:
         for n in ast.walk(ast.parse(path.read_text(), str(path))):
             if not isinstance(n, ast.Call):
@@ -221,22 +239,33 @@ def _production_calls():
                 name = n.func.attr
             else:
                 continue
-            starred = any(isinstance(a, ast.Starred) for a in n.args)
-            npos = float("inf") if starred else len(n.args)
-            positions[name] = max(positions.get(name, 0), npos)
-            keywords |= {(name, k.arg) for k in n.keywords}
-    return keywords, positions
+            passed = [(k.arg, k.value) for k in n.keywords]
+            for i, a in enumerate(n.args):
+                if isinstance(a, ast.Starred):
+                    passed.append(("*", a))
+                    break
+                passed.append((i, a))
+            for key, value in passed:
+                out.setdefault((name, key), set()).add(ast.dump(value))
+    return out
 
 
 def _unset_options() -> set:
-    keywords, positions = _production_calls()
-    return {
-        (fn, param)
-        for (fn, param), i in _optional_params().items()
-        if (fn, param) not in keywords
-        and (fn, None) not in keywords
-        and (i is None or positions.get(fn, 0) <= i)
-    }
+    """Options that no production call site sets to anything but their
+    default: passing the default's own source (`k=5` where the def says
+    `k: int = 5`) does not count.  Where defs sharing a name differ in a
+    default, any passed value counts."""
+    args = _production_args()
+    unset = set()
+    for (fn, param), (i, defaults) in _optional_params().items():
+        if (fn, None) in args or (i is not None and (fn, "*") in args):
+            continue
+        passed = args.get((fn, param), set())
+        if i is not None:
+            passed = passed | args.get((fn, i), set())
+        if not passed or (len(defaults) == 1 and passed <= defaults):
+            unset.add((fn, param))
+    return unset
 
 
 def test_every_option_has_a_production_setter_or_a_reason():

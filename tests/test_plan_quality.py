@@ -206,13 +206,32 @@ def test_brute_force_knn_broadcasts_queries(spark):
     assert n_hash_exchanges <= 1, plan
 
 
-def test_ngram_candidate_join_on_shingle_hash(spark, documents):
-    """The candidate join keys on the shingle hash (equi-join, not a cross
-    product), and the df-cap aggregation shares that key."""
-    from image_ocr_spark.operators.dedup import ngram_jaccard_pairs
+# MapInArrow nodes in each pair operator's formatted plan
+_PAIR_ARROW_PASSES = {
+    "minhash_lsh_pairs": 2,
+    "simhash_hamming_pairs": 2,
+    "ngram_jaccard_pairs": 1,
+    "fingerprint_match_pairs": 4,
+}
 
-    plan = _formatted(ngram_jaccard_pairs(documents.limit(50)))
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+@pytest.mark.parametrize("op", list(_PAIR_ARROW_PASSES))
+def test_pair_candidates_one_shuffle_hash_join(spark, documents, op):
+    """Each near-duplicate operator makes its candidates in one
+    shuffle_hash self-join on the signature key: no cross product and no
+    sort-merge join.  The MapInArrow count pins the plan shape: joining a
+    signature back onto the pairs (instead of carrying it through the
+    self-join) adds signature passes."""
+    import re
+
+    from image_ocr_spark.operators import dedup
+
+    plan = _formatted(getattr(dedup, op)(documents.limit(50)))
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"):
+        assert bad not in nodes, nodes
+    assert nodes.count("ShuffledHashJoin") == 1, nodes
+    assert nodes.count("MapInArrow") == _PAIR_ARROW_PASSES[op], nodes
 
 
 def test_decontamination_broadcasts_benchmark(spark, documents):
@@ -225,7 +244,7 @@ def test_decontamination_broadcasts_benchmark(spark, documents):
     docs = documents.select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     plan = (
-        contamination_flags(docs, bench, min_overlap=2)
+        contamination_flags(docs, bench)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

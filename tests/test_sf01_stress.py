@@ -109,7 +109,7 @@ def test_dedup_embedding_sqrt_blocking_at_sf01(spark, duck):
     t0 = time.time()
     dup = emb.select((F.col("vec_id") + VARIANT_OFFSET).alias("vec_id"), "embedding")
     sdf = embedding_dup_pairs(
-        emb.unionByName(dup), threshold_milli=990, num_centroids=None, iters=1
+        emb.unionByName(dup), num_centroids=None
     )
     srows = [tuple(r) for r in sdf.collect()]
     spark_s = time.time() - t0

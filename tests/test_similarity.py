@@ -69,10 +69,10 @@ def test_ivf_recall_vs_bruteforce(spark):
     q = emb.filter(F.col("vec_id") < 16)
     bf = _recall_maps(brute_force_topk(emb, q, k=5).collect())
     iv2 = _recall_maps(
-        ivf_topk(emb, q, k=5, num_centroids=8, iters=2, nprobe=2).collect()
+        ivf_topk(emb, q, num_centroids=8, nprobe=2).collect()
     )
     iv1 = _recall_maps(
-        ivf_topk(emb, q, k=5, num_centroids=8, iters=2, nprobe=1).collect()
+        ivf_topk(emb, q, num_centroids=8, nprobe=1).collect()
     )
     rec2 = sum(len(bf[i] & iv2.get(i, set())) / 5 for i in bf) / len(bf)
     rec1 = sum(len(bf[i] & iv1.get(i, set())) / 5 for i in bf) / len(bf)
@@ -121,13 +121,13 @@ def test_boundary_near_dup_pair_caught(spark):
     pairs2 = {
         (r.id_a, r.id_b)
         for r in embedding_dup_pairs(
-            emb, threshold_milli=990, num_centroids=3, iters=1, nprobe=2
+            emb, num_centroids=3, nprobe=2
         ).collect()
     }
     pairs1 = {
         (r.id_a, r.id_b)
         for r in embedding_dup_pairs(
-            emb, threshold_milli=990, num_centroids=3, iters=1, nprobe=1
+            emb, num_centroids=3, nprobe=1
         ).collect()
     }
     assert (30, 31) in pairs2, f"boundary pair missed with nprobe=2: {pairs2}"
@@ -159,7 +159,7 @@ def test_embedding_dup_pairs_sqrt_default(spark):
     )
     dup = emb.select((F.col("vec_id") + VARIANT_OFFSET).alias("vec_id"), "embedding")
     out = embedding_dup_pairs(
-        emb.unionByName(dup), threshold_milli=1000, num_centroids=None, iters=1
+        emb.unionByName(dup), num_centroids=None
     )
     n_emb = emb.count()
     exact = {(r.id_a, r.id_b) for r in out.collect() if r.cos_milli == 1000}
@@ -227,7 +227,7 @@ def test_knn_matches_duckdb(spark):
     got = key(brute_force_topk(emb, q, k=5))
     assert got == _rank_key(con.execute(_sql_bruteforce(5, 16)).fetchall())
     assert len(got) == 16 * 5
-    got = key(ivf_topk(emb, q, k=5, num_centroids=8, iters=2, nprobe=2))
+    got = key(ivf_topk(emb, q, num_centroids=8, nprobe=2))
     want = con.execute(
         e._sql_kmeans_ivf(k=5, num_centroids=8, iters=2, nprobe=2, nq=16)
     ).fetchall()
@@ -259,7 +259,7 @@ def test_zero_norm_vectors_excluded_not_fatal(spark):
     assert all(r.neighbor_id != 3 for r in top), top
     assert {r.query_id for r in top} == {0, 1}
     pairs = embedding_dup_pairs(
-        emb, threshold_milli=900, num_centroids=2, iters=1, nprobe=2
+        emb, num_centroids=2, nprobe=2
     ).collect()
     assert all(3 not in (r.id_a, r.id_b) for r in pairs), pairs
     assert (0, 1) in {(r.id_a, r.id_b) for r in pairs}
@@ -382,9 +382,7 @@ def test_clustered_corpus_recall_gate(spark):
     rows = ivf_recall_at_k(
         cemb,
         cemb.filter(F.col("vec_id") < 16),
-        k=5,
         num_centroids=math.isqrt(n),
-        iters=2,
         nprobe=2,
     ).collect()
     mean = sum(r.recall_milli for r in rows) / len(rows)
@@ -469,7 +467,7 @@ def test_ivf_double_corpus_matches_duckdb(spark):
     q = emb.filter(F.col("vec_id") < 8)
     got = sorted(
         (r.query_id, r.rank, r.neighbor_id)
-        for r in ivf_topk(emb, q, k=5, num_centroids=6, iters=2, nprobe=2).collect()
+        for r in ivf_topk(emb, q, num_centroids=6, nprobe=2).collect()
     )
     con = _duck([(r.vec_id, r.embedding) for r in emb.collect()])
     want = con.execute(
@@ -495,7 +493,7 @@ def test_embedding_dup_pairs_match_duckdb(spark):
     got = {
         (r.id_a, r.id_b): r.cos_milli
         for r in embedding_dup_pairs(
-            corpus, threshold_milli=990, num_centroids=8, iters=1, nprobe=2
+            corpus, num_centroids=8, nprobe=2
         ).collect()
     }
     con = _duck()
@@ -539,7 +537,7 @@ def test_grouped_hot_cell_cap_parity(spark):
         ).alias("embedding"),
     )
     corpus = emb.unionByName(copies)
-    kw = dict(threshold_milli=990, num_centroids=6, iters=1, nprobe=2)
+    kw = dict(num_centroids=6, nprobe=2)
 
     def pairs(max_cell):
         return {

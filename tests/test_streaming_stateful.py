@@ -90,7 +90,7 @@ def test_dedup_replay_harness_suppresses_second_crawl(spark, small_pages):
     micro-batches -> exactly one row per distinct url."""
     from image_ocr_spark.streaming.stateful import dedup_first_seen_replay
 
-    out = dedup_first_seen_replay(spark, small_pages, copies=2)
+    out = dedup_first_seen_replay(spark, small_pages)
     rows = out.collect()
     urls = [r.url for r in rows]
     assert len(urls) == len(set(urls)) == small_pages.count()
