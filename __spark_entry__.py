@@ -265,27 +265,23 @@ def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_pixel_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel stats through the from-scratch codecs (graft of the
     reference's pixel-level preprocessing, preprocessor.py:81-131, over
-    its raster allowlist, main.py:169-176).  One synth pass
-    (multimodal.synth_raster_media) encodes deterministic pixels into a
-    real image per format per doc: filtered+zlib PNG (all five filter
+    its raster allowlist, main.py:169-176).  One per-row Arrow pass
+    (multimodal.fixture_pixel_features) encodes deterministic pixels into
+    a real image per format per doc: filtered+zlib PNG (all five filter
     types, gray/RGB/RGBA), Huffman-coded baseline JPEG (constant 8x8
     blocks, the bit-exact subset of lossy JPEG), padded BMP (bottom-up
     and top-down), baseline TIFF (both endians, multi-strip,
     none+PackBits) and lossless WebP (RIFF/VP8L, canonical prefix
     codes); format k's media_id is doc_id + k*10^12, disjoint from any
-    realistic doc_id space.  One decode pass then computes per-channel
-    means + histogram entropy in integer units; the DuckDB oracle
-    computes the same stats straight from the generative formulas, so
-    equality proves the codecs, not just the arithmetic.  Lossy VP8 is
-    the one documented boundary.  Two Arrow passes over one documents
-    scan, spread only by _docs."""
-    from image_ocr_spark.operators.multimodal import (
-        extract_pixel_features,
-        synth_raster_media,
-    )
+    realistic doc_id space.  The same pass decodes each image and
+    computes per-channel means + histogram entropy in integer units; the
+    DuckDB oracle computes the same stats straight from the generative
+    formulas, so equality proves the codecs, not just the arithmetic.
+    Lossy VP8 is the one documented boundary.  One Arrow pass over one
+    documents scan, spread only by _docs."""
+    from image_ocr_spark.operators.multimodal import fixture_pixel_features
 
-    media = synth_raster_media(_docs(spark, sf_dir))
-    feats = extract_pixel_features(media)
+    feats = fixture_pixel_features(_docs(spark, sf_dir))
     return feats.select(
         "media_id",
         "width",

@@ -15,11 +15,13 @@ Two feature paths:
 - extract_media_features: byte-level histogram features for payloads
   with no decoder here (audio/video).
 
-Fixtures: synth_raster_media encodes closed-form pixels into all five
-from-scratch formats in one per-row pass over the doc ids; the DuckDB
-oracle replays the same pixel formulas, so equal stats prove the codec
-pair.  No builder here repartitions: spreading a narrow scan is the
-caller's decision, made once where the scan is read.
+Fixture: fixture_pixel_features encodes closed-form pixels into all five
+from-scratch formats and decodes each image back in the same per-row
+pass over the doc ids, through the same per-row decode as
+extract_pixel_features; the encoded bytes never leave the Python
+worker.  The DuckDB oracle replays the same pixel formulas, so equal
+stats prove the codec pair.  No builder here repartitions: spreading a
+narrow scan is the caller's decision, made once where the scan is read.
 """
 
 from __future__ import annotations
@@ -209,6 +211,16 @@ def media_pixel_stats(raw: bytes):
     return w, h, ch, mean_micro, int(math.floor(-1000.0 * acc))
 
 
+def _pixel_row(mid, raw):
+    """The per-row decode: one feature row for a container
+    media_pixel_stats decodes, none for one it rejects (never-raise
+    pipeline policy)."""
+    try:
+        return [(mid, *media_pixel_stats(raw or b""))]
+    except ValueError:
+        return []  # unsupported or corrupt container: skipped, not fatal
+
+
 def extract_pixel_features(media: DataFrame) -> DataFrame:
     """(media_id, width, height, channels, mean_micro, entropy_milli) from
     DECODED pixels via one Arrow boundary — the real-decode upgrade of
@@ -218,15 +230,8 @@ def extract_pixel_features(media: DataFrame) -> DataFrame:
     from-scratch codecs, lossy WebP via the gated libwebp binding;
     containers media_pixel_stats rejects are skipped (never-raise
     pipeline policy)."""
-
-    def featurize(mid, raw):
-        try:
-            return [(mid, *media_pixel_stats(raw or b""))]
-        except ValueError:
-            return []  # unsupported or corrupt container: skipped, not fatal
-
     return map_rows(
-        media.select("media_id", "content"), featurize, PIXEL_FEATURE_SCHEMA
+        media.select("media_id", "content"), _pixel_row, PIXEL_FEATURE_SCHEMA
     )
 
 
@@ -334,22 +339,26 @@ _RASTER_FORMATS = (
 )
 
 
-def synth_raster_media(docs: DataFrame) -> DataFrame:
-    """MEDIA_SCHEMA rows whose content is a REAL encoded image: five per
-    doc, one per format of _RASTER_FORMATS (PNG, JPEG, BMP, TIFF, WebP),
-    media_id = doc_id + k*10**12 — the fixture for the decoded-pixel
-    feature path.  One per-row Arrow pass over doc_id; it runs on
-    docs' partitioning as given (the caller spreads a narrow scan)."""
+def _raster_media(doc_id: int):
+    """(media_id, content) for the five fixture images of one doc, one per
+    format of _RASTER_FORMATS (PNG, JPEG, BMP, TIFF, WebP): content is a
+    REAL encoded image, media_id = doc_id + k*10**12."""
+    for k, (pixels, encode) in enumerate(_RASTER_FORMATS):
+        mid = doc_id + k * 10**12
+        w, h, ch, px = pixels(mid)
+        yield mid, encode(mid, w, h, ch, px)
 
-    def gen(doc_id):
-        for k, (pixels, encode) in enumerate(_RASTER_FORMATS):
-            mid = doc_id + k * 10**12
-            w, h, ch, px = pixels(mid)
-            yield (mid, "image", encode(mid, w, h, ch, px), w, h)
 
-    return map_rows(
-        docs.select("doc_id"),
-        gen,
-        "media_id long, media_type string, content binary, "
-        "meta_width int, meta_height int",
-    )
+def _fixture_pixel_rows(doc_id: int):
+    """One doc's fixture images, encoded and decoded: its feature rows."""
+    return [row for mid, raw in _raster_media(doc_id) for row in _pixel_row(mid, raw)]
+
+
+def fixture_pixel_features(docs: DataFrame) -> DataFrame:
+    """extract_pixel_features' rows for the raster fixture of every doc:
+    each doc's five images are encoded (_raster_media) and decoded
+    (_pixel_row) in ONE per-row Arrow pass over doc_id, so a task runs
+    one Python worker and the encoded bytes never cross into the JVM.  It
+    runs on docs' partitioning as given (the caller spreads a narrow
+    scan)."""
+    return map_rows(docs.select("doc_id"), _fixture_pixel_rows, PIXEL_FEATURE_SCHEMA)

@@ -29,9 +29,22 @@ from ..operators.tokenize import tokenize_packed
 def salt_repartition(pages: DataFrame) -> DataFrame:
     """Spread url-space uniformly (defuses host-level skew in crawl order).
 
-    xxhash64(url) is uniform regardless of host distribution; the
-    partition count is the session's spark.sql.shuffle.partitions, which
-    get_spark sizes from the host's cores.
+    xxhash64(url) is uniform regardless of host distribution.  The
+    exchange is planned with spark.sql.shuffle.partitions (get_spark sizes
+    it from the host's cores), but a repartition by column alone is
+    REPARTITION_BY_COL, which AQE may coalesce: the target partition size
+    is total bytes / default parallelism, raised to
+    spark.sql.adaptive.coalescePartitions.minPartitionSize (1 MB).  The
+    9,990-page perfbench table shuffles about 2.2 MB, so on a 4-core host
+    the stage this exchange feeds (tokenizer, rollup, classify, sink)
+    runs as 2 tasks, not 4.
+
+    It stays that way because every task of that stage holds its own
+    Python worker of about 134 MB RSS (the pyspark, pyarrow and pandas
+    imports alone are about 115 MB).  An explicit
+    repartition(4, xxhash64(url)), which AQE leaves alone, measured
+    pages_extract job_s 2.2 -> 1.8 s but Python RSS 355 -> 625 MB on a
+    4-core host.
     """
     return pages.repartition(F.xxhash64("url"))
 

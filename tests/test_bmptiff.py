@@ -213,17 +213,28 @@ def test_media_pixel_stats_sniffs_all_containers():
 
 
 def test_operator_decodes_bmp_and_tiff_rows(spark):
-    from pyspark.sql import functions as F
+    from image_ocr_spark.operators.multimodal import extract_pixel_features
 
-    from image_ocr_spark.operators.multimodal import (
-        extract_pixel_features,
-        synth_raster_media,
-    )
-
-    docs = spark.range(12).select(F.col("id").alias("doc_id"))
-    # BMP ids are doc_id + 2*10**12, TIFF ids doc_id + 3*10**12
-    media = synth_raster_media(docs).filter(
-        F.col("media_id").between(2 * 10**12, 4 * 10**12 - 1)
+    # the fixture's ids and per-id options: BMP doc_id + 2*10**12 (row
+    # order by parity), TIFF doc_id + 3*10**12 (byte order by parity,
+    # PackBits by (mid // 2) parity, 2-row strips)
+    bmp = [2 * 10**12 + i for i in range(12)]
+    tiff = [3 * 10**12 + i for i in range(12)]
+    media = spark.createDataFrame(
+        [(m, bmp_encode(*_synth_bmp_pixels(m), top_down=bool(m % 2))) for m in bmp]
+        + [
+            (
+                m,
+                tiff_encode(
+                    *_synth_tiff_pixels(m),
+                    big_endian=bool(m % 2),
+                    packbits=bool((m // 2) % 2),
+                    rows_per_strip=2,
+                ),
+            )
+            for m in tiff
+        ],
+        "media_id long, content binary",
     )
     rows = extract_pixel_features(media).collect()
     assert len(rows) == 24  # every row decodes; nothing skipped

@@ -127,22 +127,20 @@ def test_media_pixel_stats_sniffs_both_containers():
 
 
 def test_operator_decodes_png_and_jpeg_rows(spark):
-    from pyspark.sql import functions as F
-
     from image_ocr_spark.operators.multimodal import (
+        _synth_pixels,
         extract_pixel_features,
-        synth_raster_media,
     )
+    from image_ocr_spark.pycore.pngdec import png_encode
 
-    docs = spark.range(6).select(F.col("id").alias("doc_id"))
-    # PNG ids are doc_id, JPEG ids doc_id + 10**12
-    media = synth_raster_media(docs).filter(F.col("media_id") < 2 * 10**12)
-    junk = spark.createDataFrame(
-        [(999, "image", b"neither png nor jpeg", 0, 0)],
-        "media_id long, media_type string, content binary, "
-        "meta_width int, meta_height int",
+    # the fixture's ids: PNG doc_id, JPEG doc_id + 10**12
+    png = [(m, png_encode(*_synth_pixels(m))) for m in range(6)]
+    jpeg = [(m, jpeg_encode(*_synth_jpeg_pixels(m))) for m in range(10**12, 10**12 + 6)]
+    media = spark.createDataFrame(
+        png + jpeg + [(999, b"neither png nor jpeg")],
+        "media_id long, content binary",
     )
-    rows = extract_pixel_features(media.unionByName(junk)).collect()
+    rows = extract_pixel_features(media).collect()
     assert {r.media_id for r in rows} == set(range(6)) | {
         10**12 + i for i in range(6)
     }

@@ -45,6 +45,11 @@ KEEP = {
     ),
     "extract_links": "the only path from page HTML into host_rank",
     "pdf_table_cells": "PP-Structure table branch of the reference",
+    "extract_pixel_features": (
+        "the reference's pixel-level preprocessing over a real image table "
+        "(preprocessor.py:81-131); the driver's fixture query decodes in "
+        "its encode pass"
+    ),
     "fix_company_name": "reference field normalization F10",
     "available_engines": "reference engine registry probe X2",
     "release": "storage lifecycle API that tests use to check for leaks",

@@ -3,8 +3,12 @@ of the fat html column, broadcast dictionary joins, codegen coverage.
 These guard the scale properties the judge grades — a plan that reads all
 columns for a 2-column projection is a bug even when results are right."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
+
+from perfbench.workloads import QUERIES as CURATE_QUERIES
 
 
 @pytest.fixture(scope="module")
@@ -59,7 +63,6 @@ def test_page_operator_single_arrow_pass(spark, pages_path, op):
     as one MapInArrow in the scan stage: no other column crosses the
     Arrow boundary and nothing shuffles."""
     import importlib
-    import re
 
     module, name = op.split(".")
     fn = getattr(importlib.import_module(f"image_ocr_spark.operators.{module}"), name)
@@ -76,8 +79,6 @@ def test_docs_spreads_only_narrow_input(spark, documents, tmp_path, wide):
     Python pass, repartitions only a scan with fewer splits than
     defaultParallelism: a one-split scan gets exactly one Exchange, a
     scan already split that wide gets none."""
-    import re
-
     import __spark_entry__ as entry
 
     par = spark.sparkContext.defaultParallelism
@@ -91,27 +92,110 @@ def test_docs_spreads_only_narrow_input(spark, documents, tmp_path, wide):
 
 
 @pytest.mark.parametrize(
-    "query, scans", [("media_pixel_features", 1), ("pdf_span_geometry", 2)]
+    "query, passes", [("media_pixel_features", 1), ("pdf_span_geometry", 2)]
 )
-def test_fixture_queries_one_python_pass_per_relation(spark, query, scans):
-    """The media fixture is synthesized in one Arrow pass for all five
-    raster formats and decoded in one more; the PDF span relation is
-    parsed once per side of one neighbor join for all three legs.  Each
-    plan has two MapInArrow, no Union, and reads documents once per
-    Python pass that needs it."""
-    import re
-
+def test_fixture_queries_one_python_pass_per_relation(spark, query, passes):
+    """The media fixture is encoded and decoded in one Arrow pass for all
+    five raster formats; the PDF span relation is parsed once per side of
+    one neighbor join for all three legs.  Neither plan has a Union, and
+    each reads documents once per Python pass."""
     import __spark_entry__ as entry
 
     from tests.conftest import SF_DIR
 
     plan = _formatted(entry.queries()[query](spark, SF_DIR))
     ops = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
-    assert ops.count("MapInArrow") == 2, ops
+    assert ops.count("MapInArrow") == passes, ops
     assert "Union" not in ops, ops
     scanned = re.findall(r"^Location: .*$", plan, re.M)
-    assert len(scanned) == scans, scanned
+    assert len(scanned) == passes, scanned
     assert all("/documents.parquet" in loc for loc in scanned), scanned
+
+
+_PYTHON_NODE = re.compile(r"InArrow|InPandas|EvalPython")
+_STAGE_EDGE = ("Exchange", "BroadcastExchange")
+
+
+def _python_nodes_per_task(plan: str) -> int:
+    """The most Python plan nodes any one task runs, read off the tree of
+    a formatted plan.  Spark starts a Python worker per Python node in a
+    task.  An exchange starts a new stage; the nodes of one stage run in
+    one task, except that each child of a Union is a task of its own."""
+    tree = plan.split("== Physical Plan ==\n", 1)[1].split("\n\n", 1)[0]
+    children = {None: []}
+    stack = []  # (column, node id) of the open ancestors
+    names = {}
+    for i, line in enumerate(tree.splitlines()):
+        m = re.match(r"([ :]*(?:[+:]- )?)(?:\* )?(\w+)", line)
+        col, names[i] = len(m.group(1)), m.group(2)
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        children.setdefault(stack[-1][1] if stack else None, []).append(i)
+        children[i] = []
+        stack.append((col, i))
+
+    def task(node) -> int:
+        """Python nodes in one task from `node` down to its stage's edges;
+        stage roots met on the way go to `roots`."""
+        below = []
+        for c in children[node]:
+            if names[c] in _STAGE_EDGE:
+                roots.extend(children[c])
+            else:
+                below.append(task(c))
+        own = 1 if _PYTHON_NODE.search(names[node]) else 0
+        if names[node] == "Union":
+            return own + max(below, default=0)
+        return own + sum(below)
+
+    roots, worst = list(children[None]), 0
+    while roots:
+        worst = max(worst, task(roots.pop()))
+    return worst
+
+
+def test_python_nodes_per_task_reads_stages():
+    """The stage reader on hand-written trees: Python nodes stack within
+    a stage (across a codegen'd node), an exchange ends the stage, Union
+    children are separate tasks and the two sides of an in-stage join
+    are one task."""
+    head = "== Physical Plan ==\n"
+    stacked = (
+        "MapInArrow (3)\n+- * Project (4)\n   +- MapInArrow (2)\n"
+        "      +- Scan parquet  (1)\n"
+    )
+    split = "MapInArrow (3)\n+- Exchange (2)\n   +- MapInArrow (1)\n"
+    union = (
+        "Union (3)\n:- MapInArrow (1)\n:  +- Scan parquet  (4)\n"
+        "+- MapInArrow (2)\n   +- Scan parquet  (5)\n"
+    )
+    join = (
+        "BroadcastHashJoin (5)\n:- MapInArrow (1)\n:  +- Scan parquet  (4)\n"
+        "+- Project (2)\n   +- ArrowEvalPython (6)\n      +- Scan parquet  (7)\n"
+    )
+    broadcast = (
+        "BroadcastHashJoin (5)\n:- MapInArrow (1)\n:  +- Scan parquet  (4)\n"
+        "+- BroadcastExchange (2)\n   +- MapInArrow (6)\n      +- Scan parquet  (7)\n"
+    )
+    got = [
+        _python_nodes_per_task(head + t + "\n\n(1) Scan parquet")
+        for t in (stacked, split, union, join, broadcast)
+    ]
+    assert got == [2, 1, 1, 2, 1]
+
+
+@pytest.mark.parametrize("query", CURATE_QUERIES)
+def test_curate_queries_one_python_worker_per_task(spark, query):
+    """Every query of the perfbench curate_docs workload runs at most one
+    Python node per task: chained Python passes in one stage hold one
+    Python worker each per task (about 134 MB RSS each) and pay the
+    Arrow transfer between them."""
+    import __spark_entry__ as entry
+
+    from tests.conftest import SF_DIR
+
+    plan = _formatted(entry.queries()[query](spark, SF_DIR))
+    assert _python_nodes_per_task(plan) <= 1, plan
 
 
 def test_dictionary_join_broadcasts(spark):
@@ -149,8 +233,6 @@ def test_packed_pipeline_zero_rollup_shuffles(spark, pages_path, plan):
     selection + classify are per-row from there, and so are the receipt /
     invoice fields and the result JSON composed on top of it (no
     group-by-document, join or window re-running the tokenizer)."""
-    import re
-
     from image_ocr_spark.functions.extract_fields import extract_receipt_fields_df
     from image_ocr_spark.plans.pipeline import extract_pages
     from image_ocr_spark.plans.results import assemble_results, to_json_rows
@@ -222,8 +304,6 @@ def test_pair_candidates_one_shuffle_hash_join(spark, documents, op):
     sort-merge join.  The MapInArrow count pins the plan shape: joining a
     signature back onto the pairs (instead of carrying it through the
     self-join) adds signature passes."""
-    import re
-
     from image_ocr_spark.operators import dedup
 
     plan = _formatted(getattr(dedup, op)(documents.limit(50)))
@@ -285,8 +365,6 @@ def test_capped_grouped_verify_plan_shape(spark):
     would move the N*dim vectors a second time), and the whole capped
     path must add exactly the counts-agg and final-grouping exchanges —
     no sort, no cartesian."""
-    import re
-
     from pyspark.sql import functions as F
 
     from image_ocr_spark.operators.similarity import _dup_pairs_grouped

@@ -63,21 +63,14 @@ def test_pixel_features_closed_form():
 
 
 def test_operator_skips_non_png_rows(spark):
-    from pyspark.sql import functions as F
+    from image_ocr_spark.operators.multimodal import extract_pixel_features
 
-    from image_ocr_spark.operators.multimodal import (
-        extract_pixel_features,
-        synth_raster_media,
+    media = spark.createDataFrame(
+        [(mid, png_encode(*_synth_pixels(mid))) for mid in range(6)]
+        + [(999, b"not a png at all")],
+        "media_id long, content binary",
     )
-
-    docs = spark.range(6).select(F.col("id").alias("doc_id"))
-    media = synth_raster_media(docs).filter(F.col("media_id") < 10**12)  # PNG
-    junk = spark.createDataFrame(
-        [(999, "image", b"not a png at all", 0, 0)],
-        "media_id long, media_type string, content binary, "
-        "meta_width int, meta_height int",
-    )
-    rows = extract_pixel_features(media.unionByName(junk)).collect()
+    rows = extract_pixel_features(media).collect()
     assert {r.media_id for r in rows} == set(range(6))  # junk skipped
     for r in rows:
         assert len(r.mean_micro) == r.channels

@@ -208,15 +208,16 @@ def test_stats_parity_with_png():
 
 
 def test_operator_decodes_webp_rows(spark):
-    from pyspark.sql import functions as F
+    from image_ocr_spark.operators.multimodal import extract_pixel_features
 
-    from image_ocr_spark.operators.multimodal import (
-        extract_pixel_features,
-        synth_raster_media,
+    # the fixture's WebP ids: doc_id + 4*10**12
+    webp = spark.createDataFrame(
+        [
+            (m, webp_encode(*_synth_webp_pixels(m)))
+            for m in range(4 * 10**12, 4 * 10**12 + 10)
+        ],
+        "media_id long, content binary",
     )
-
-    docs = spark.range(10).select(F.col("id").alias("doc_id"))
-    webp = synth_raster_media(docs).filter(F.col("media_id") >= 4 * 10**12)
     rows = extract_pixel_features(webp).collect()
     assert len(rows) == 10
     by_id = {r.media_id: r for r in rows}
