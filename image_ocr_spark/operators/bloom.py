@@ -41,13 +41,12 @@ dedup; Broder-style sketching).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from image_ocr_spark.operators.dedup import hash60
+from image_ocr_spark.operators.rowmap import map_batches
 
 # 2^20 bits = 128 KiB bitmap: ~65k keys at 16 bits/key, right-sized for
 # the fixture corpora.  Production sizing is m ~= 16 * |old| bits.
@@ -152,7 +151,6 @@ def flag_maybe_seen(
     import pyarrow as pa
 
     bc = new_df.sparkSession.sparkContext.broadcast(bitmap)
-    in_cols = list(new_df.columns)
     probed = new_df.withColumn(
         "__bloom_pos", bloom_positions_col(F.col(key_col), m_bits, k)
     )
@@ -160,29 +158,21 @@ def flag_maybe_seen(
         new_df.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
     )
 
-    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def probe(*cols: pa.Array) -> list:
+        *keep, pos_list = cols
+        # fixed k positions per row, never null (key is coalesced):
+        # flatten is zero-copy, reshape restores the (rows, k) matrix
+        flat = pos_list.flatten().to_numpy(zero_copy_only=False)
+        if len(flat) != k * len(pos_list):  # ragged/null row => bug
+            raise ValueError(
+                f"bloom positions not fixed-k: {len(flat)} values "
+                f"for {len(pos_list)} rows at k={k}"
+            )
         bm = bc.value
-        for batch in batches:
-            pos_list = batch.column(batch.num_columns - 1)
-            # fixed k positions per row, never null (key is coalesced):
-            # flatten is zero-copy, reshape restores the (rows, k) matrix
-            flat = pos_list.flatten().to_numpy(zero_copy_only=False)
-            if len(flat) != k * batch.num_rows:  # ragged/null row => bug
-                raise ValueError(
-                    f"bloom positions not fixed-k: {len(flat)} values "
-                    f"for {batch.num_rows} rows at k={k}"
-                )
-            bits = (bm[flat >> 3] >> (flat & 7).astype(np.uint8)) & 1
-            seen = bits.reshape(-1, k).all(axis=1) if len(flat) else np.zeros(
-                0, dtype=bool
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns - 1)]
-                + [pa.array(seen)],
-                in_cols + ["maybe_seen"],
-            )
+        bits = (bm[flat >> 3] >> (flat & 7).astype(np.uint8)) & 1
+        return keep + [pa.array(bits.reshape(-1, k).all(axis=1))]
 
-    return probed.mapInArrow(probe, out_schema)
+    return map_batches(probed, probe, out_schema)
 
 
 def incremental_new(

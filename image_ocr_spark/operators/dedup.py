@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
-from image_ocr_spark.operators.rowmap import map_rows
+from image_ocr_spark.operators.rowmap import map_batches, map_rows
 
 # 32-bit token/shingle hash, identical in Spark and DuckDB:
 #   Spark : conv(substring(md5(s), 1, 8), 16, 10)::long
@@ -99,7 +99,10 @@ def with_variants(docs: DataFrame) -> DataFrame:
 
 
 def _pairs_sharing(
-    keyed: DataFrame, keys: list, max_df: "int | None" = None
+    keyed: DataFrame,
+    keys: list,
+    max_df: "int | None" = None,
+    sides: "tuple[str, str] | None" = None,
 ) -> DataFrame:
     """(id_a, id_b, n_shared, <col>_a, <col>_b per carried column): the
     candidate pairs of keyed(id, *keys, *carried) — two ids holding the
@@ -109,6 +112,11 @@ def _pairs_sharing(
     ``max_df`` first drops keys held by more than max_df rows, so no
     key's pair fan-out exceeds max_df^2 (a boilerplate key in millions of
     docs would otherwise be one near-quadratic bucket).
+
+    ``sides`` names two boolean columns of keyed, neither carried: the
+    rows that may take the id_a side of a pair, and those that may take
+    the id_b side.  Both sides still read the one keyed relation, so its
+    exchange is computed once and reused.
 
     The self-join is hinted shuffle_hash (r07): a broadcast self-join
     evaluates the whole signature pipeline on BOTH sides (there is no
@@ -124,9 +132,12 @@ def _pairs_sharing(
             .select(*keys)
         )
         keyed = keyed.join(rare, keys)
-    carried = [c for c in keyed.columns if c != "id" and c not in keys]
+    skip = ["id", *keys, *(sides or ())]
+    carried = [c for c in keyed.columns if c not in skip]
     keyed = keyed.hint("shuffle_hash")
     a, b = keyed.alias("a"), keyed.alias("b")
+    if sides is not None:
+        a, b = a.filter(F.col(f"a.{sides[0]}")), b.filter(F.col(f"b.{sides[1]}"))
     return (
         a.join(
             b,
@@ -181,23 +192,27 @@ def minhash_lsh_pairs(docs: DataFrame, max_bucket: "int | None" = None) -> DataF
             )
         ).alias("band", "key"),
     )
-    if max_bucket is None:
-        return _pairs_sharing(banded, ["band", "key"]).select("id_a", "id_b")
-    # bucket size and hub over the SAME (band, key) partitioning the
-    # candidate join needs, so the stats ride the shuffle it needed anyway
-    bucket = Window.partitionBy("band", "key")
-    banded = banded.select(
-        "*",
-        F.count(F.lit(1)).over(bucket).alias("_n"),
-        F.min("id").over(bucket).alias("_hub"),
-    )
-    small = banded.filter(F.col("_n") <= max_bucket).select("id", "band", "key")
-    clique = _pairs_sharing(small, ["band", "key"]).select("id_a", "id_b")
-    star = (
-        banded.filter((F.col("_n") > max_bucket) & (F.col("id") != F.col("_hub")))
-        .select(F.col("_hub").alias("id_a"), F.col("id").alias("id_b"))
-    )
-    return clique.unionByName(star).distinct()
+    sides = None
+    if max_bucket is not None:
+        # bucket size and hub over the SAME (band, key) partitioning the
+        # candidate join needs, so the stats ride the shuffle it needed
+        # anyway.  Every member of a bucket of at most max_bucket rows
+        # takes the id_a side (the clique); in a larger bucket only the hub
+        # does, pairing with each other member (the star).  The hub is its
+        # bucket's minimum id, so it is never id_b.
+        bucket = Window.partitionBy("band", "key")
+        hub = F.min("id").over(bucket)
+        sides = ("_as_a", "_as_b")
+        banded = banded.select(
+            "id",
+            "band",
+            "key",
+            (
+                (F.count(F.lit(1)).over(bucket) <= max_bucket) | (F.col("id") == hub)
+            ).alias(sides[0]),
+            (F.col("id") != hub).alias(sides[1]),
+        )
+    return _pairs_sharing(banded, ["band", "key"], sides=sides).select("id_a", "id_b")
 
 
 DEFAULT_SHINGLE_MAX_DF = 64
@@ -404,10 +419,8 @@ def simhash_arrow(docs: DataFrame) -> DataFrame:
     r07 measured 0.69 s here vs 2.16 s for the same votes as Spark array
     expressions (10k sf0.1 docs, 16 cores) — 60 interpreted aggregate
     folds per row dominate, not the md5.  A per-batch token cache
-    dedupes md5 calls (natural-language tokens repeat heavily); it is
-    cleared between batches so worker memory stays bounded.  That cache
-    is batch-scoped state, which is why this pass keeps its own batch
-    loop instead of the per-row rowmap.map_rows."""
+    dedupes md5 calls (natural-language tokens repeat heavily); it lives
+    for one batch (rowmap.map_batches), so worker memory stays bounded."""
     import hashlib
 
     import pyarrow as pa
@@ -430,17 +443,12 @@ def simhash_arrow(docs: DataFrame) -> DataFrame:
         votes = (((h[:, None] >> shifts) & 1) * 2 - 1).sum(axis=0)
         return int(((votes > 0).astype(np.int64) << shifts).sum())
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            cache: dict = {}
-            fps = [fp_of(t, cache) for t in texts]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(fps, pa.int64())], ["id", "fp"]
-            )
+    def fn(ids, texts):
+        cache: dict = {}
+        fps = [fp_of(t, cache) for t in texts.to_pylist()]
+        return [ids, pa.array(fps, pa.int64())]
 
-    return _id_text(docs).mapInArrow(fn, "id long, fp long")
+    return map_batches(_id_text(docs), fn, "id long, fp long")
 
 
 def _winnow_list(text: str, powers) -> list:

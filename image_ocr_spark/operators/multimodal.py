@@ -39,16 +39,6 @@ from image_ocr_spark.pycore.pngdec import png_encode
 from image_ocr_spark.pycore.tiffdec import tiff_encode
 from image_ocr_spark.pycore.webpdec import webp_encode
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), False),
-        T.StructField("meta_width", T.IntegerType(), True),
-        T.StructField("meta_height", T.IntegerType(), True),
-    ]
-)
-
 FEATURE_DIM = 8
 
 FEATURE_SCHEMA = T.StructType(
@@ -77,7 +67,8 @@ def byte_histogram_features(raw: bytes) -> List[int]:
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
-    """media (MEDIA_SCHEMA) -> per-item feature rows via one Arrow boundary."""
+    """media(media_id, media_type, content) -> per-item feature rows via one
+    Arrow boundary."""
 
     def featurize(mid, kind, raw):
         raw = raw or b""

@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
+from image_ocr_spark.operators.rowmap import map_batches
 
 CENT_SCALE = 10_000_000  # deci-micro accumulation unit for centroid means
 DEFAULT_SAMPLE_SIZE = 64  # k-means++ init sample (collected to the driver)
@@ -91,35 +92,29 @@ def _pair_sim_arrow(pairs: DataFrame) -> DataFrame:
     import pyarrow as pa
     import numpy as np
 
-    def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            qid = batch.column(0)
-            nid = batch.column(1)
-            _, A = _flat_f64(batch.column(2), n)
-            _, B = _flat_f64(batch.column(3), n)
-            d = A.shape[1]
-            na = np.zeros(n)
-            nb = np.zeros(n)
-            dot = np.zeros(n)
-            for j in range(d):
-                x, y = A[:, j], B[:, j]
-                na = na + x * x
-                nb = nb + y * y
-                dot = dot + x * y
-            n2 = na * nb
-            ok = n2 > 0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = np.where(ok, dot / np.sqrt(n2), 0.0)
-            yield pa.RecordBatch.from_arrays(
-                [qid, nid, pa.array(sim, pa.float64(), mask=~ok)],
-                ["query_id", "neighbor_id", "sim"],
-            )
+    def fn(qid, nid, qv, cv):
+        n = len(qid)
+        _, A = _flat_f64(qv, n)
+        _, B = _flat_f64(cv, n)
+        d = A.shape[1]
+        na = np.zeros(n)
+        nb = np.zeros(n)
+        dot = np.zeros(n)
+        for j in range(d):
+            x, y = A[:, j], B[:, j]
+            na = na + x * x
+            nb = nb + y * y
+            dot = dot + x * y
+        n2 = na * nb
+        ok = n2 > 0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sim = np.where(ok, dot / np.sqrt(n2), 0.0)
+        return [qid, nid, pa.array(sim, pa.float64(), mask=~ok)]
 
-    return pairs.select("query_id", "neighbor_id", "qv", "cv").mapInArrow(
-        fn, "query_id long, neighbor_id long, sim double"
+    return map_batches(
+        pairs.select("query_id", "neighbor_id", "qv", "cv"),
+        fn,
+        "query_id long, neighbor_id long, sim double",
     )
 
 
@@ -254,64 +249,56 @@ def assign_cells_arrow(
         bc = vecs.sparkSession.sparkContext.broadcast(cents)
     ncents = len(cents)
 
-    def fn(batches):
+    def fn(vid_col, v):
         cents_v = bc.value
         cids = np.array([int(cid) for cid, _ in cents_v], dtype=np.int64)
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            vid = batch.column(0).to_numpy(zero_copy_only=False)
-            _, V = _flat_f64(batch.column(1), n)
-            sims = _cos_matrix(V, cents_v)
-            k = min(nprobe, ncents)
-            # degenerate rows (zero-norm vector, or every centroid
-            # zero-norm) have no direction: cell -1 when nprobe == 1
-            # (kept, and skipped by _update_centroids), NO rows when
-            # nprobe > 1 (excluded from candidates)
-            deg = np.all(np.isneginf(sims), axis=1)
-            if not np.isneginf(sims).any():
-                # fast path: stable argsort of -sims = sim desc, ties keep
-                # column order (= cid asc, the fold/ROW_NUMBER tiebreak)
-                top = np.argsort(-sims, axis=1, kind="stable")[:, :k]
-                rows = np.repeat(np.arange(n), k)
-                out_cell = cids[top.ravel()]
-            else:
-                rows_l: list = []
-                cell_l: list = []
-                order = np.argsort(-sims, axis=1, kind="stable")
-                for i in range(n):
-                    if deg[i]:
-                        if nprobe == 1:
-                            rows_l.append(i)
-                            cell_l.append(-1)
-                        continue
-                    taken = 0
-                    for ci in order[i]:
-                        if taken >= k or np.isneginf(sims[i, ci]):
-                            break
+        n = len(vid_col)
+        vid = vid_col.to_numpy(zero_copy_only=False)
+        _, V = _flat_f64(v, n)
+        sims = _cos_matrix(V, cents_v)
+        k = min(nprobe, ncents)
+        # degenerate rows (zero-norm vector, or every centroid
+        # zero-norm) have no direction: cell -1 when nprobe == 1
+        # (kept, and skipped by _update_centroids), NO rows when
+        # nprobe > 1 (excluded from candidates)
+        deg = np.all(np.isneginf(sims), axis=1)
+        if not np.isneginf(sims).any():
+            # fast path: stable argsort of -sims = sim desc, ties keep
+            # column order (= cid asc, the fold/ROW_NUMBER tiebreak)
+            top = np.argsort(-sims, axis=1, kind="stable")[:, :k]
+            rows = np.repeat(np.arange(n), k)
+            out_cell = cids[top.ravel()]
+        else:
+            rows_l: list = []
+            cell_l: list = []
+            order = np.argsort(-sims, axis=1, kind="stable")
+            for i in range(n):
+                if deg[i]:
+                    if nprobe == 1:
                         rows_l.append(i)
-                        cell_l.append(int(cids[ci]))
-                        taken += 1
-                rows = np.array(rows_l, dtype=np.int64)
-                out_cell = np.array(cell_l, dtype=np.int64)
-            # pass vectors through in their ORIGINAL Arrow type (take
-            # handles the row repetition of nprobe > 1): a float32 re-emit
-            # silently rounded array<double> corpora (review r4, same fix
-            # as _maxcos_update_arrow)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(vid[rows], pa.int64()),
-                    batch.column(1).take(pa.array(rows, pa.int64())),
-                    pa.array(out_cell, pa.int64()),
-                ],
-                ["vid", "v", "cell"],
-            )
+                        cell_l.append(-1)
+                    continue
+                taken = 0
+                for ci in order[i]:
+                    if taken >= k or np.isneginf(sims[i, ci]):
+                        break
+                    rows_l.append(i)
+                    cell_l.append(int(cids[ci]))
+                    taken += 1
+            rows = np.array(rows_l, dtype=np.int64)
+            out_cell = np.array(cell_l, dtype=np.int64)
+        # pass vectors through in their ORIGINAL Arrow type (take
+        # handles the row repetition of nprobe > 1): a float32 re-emit
+        # silently rounded array<double> corpora (review r4, same fix
+        # as _maxcos_update_arrow)
+        return [
+            pa.array(vid[rows], pa.int64()),
+            v.take(pa.array(rows, pa.int64())),
+            pa.array(out_cell, pa.int64()),
+        ]
 
     vtype = vecs.schema["v"].dataType.simpleString()
-    return vecs.select("vid", "v").mapInArrow(
-        fn, f"vid long, v {vtype}, cell long"
-    )
+    return map_batches(vecs.select("vid", "v"), fn, f"vid long, v {vtype}, cell long")
 
 
 def _update_centroids(assigned: DataFrame) -> DataFrame:
@@ -520,26 +507,14 @@ def _maxcos_update_arrow(state: DataFrame, new_seeds: list) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    def fn(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            _, V = _flat_f64(batch.column(1), n)
-            old = batch.column(2).to_numpy(zero_copy_only=False)
-            sims = _cos_matrix(V, new_seeds)
-            mc = np.maximum(old, np.max(sims, axis=1))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    batch.column(1),
-                    pa.array(mc, pa.float64()),
-                ],
-                ["vid", "v", "maxcos"],
-            )
+    def fn(vid, v, maxcos):
+        _, V = _flat_f64(v, len(vid))
+        old = maxcos.to_numpy(zero_copy_only=False)
+        mc = np.maximum(old, np.max(_cos_matrix(V, new_seeds), axis=1))
+        return [vid, v, pa.array(mc, pa.float64())]
 
     vtype = state.schema["v"].dataType.simpleString()
-    return state.mapInArrow(fn, f"vid long, v {vtype}, maxcos double")
+    return map_batches(state, fn, f"vid long, v {vtype}, maxcos double")
 
 
 def _batched_farthest_points(

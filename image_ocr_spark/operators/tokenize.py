@@ -16,9 +16,11 @@ no engine produced nodes => "none"), the per-row analog of the reference's
 fallback warning.  ``available_engines()`` is the registry probe.
 
 Scale notes:
-- `mapInArrow` (not mapInPandas): each output row carries its document's
-  node array, assembled columnar from flat Python lists (no per-node dict
-  or pandas round-trip).  A document's nodes never leave their producing
+- One Arrow batch pass through ``rowmap.map_batches`` (not mapInPandas,
+  and not the per-row ``map_rows``): each output row carries its
+  document's node array, assembled columnar from flat Python lists (no
+  per-node dict or pandas round-trip), and url/doc_id pass through as
+  the input's Arrow columns.  A document's nodes never leave their producing
   task, so the downstream rollup (blocks.extract_text_packed) needs no
   shuffle: the whole extraction is per-row expressions after the single
   salted repartition.
@@ -30,13 +32,14 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..pycore.htmltok import scan_html_cols
 from ..pycore.pdftok import is_pdf, tokenize_pdf
+from .rowmap import map_batches
 
 
 def _pdf_cols(raw: bytes):
@@ -110,26 +113,6 @@ def _run_engine_cols(raw, engine: str):
     return ("none",) + _SENT_COLS
 
 
-_NODE_STRUCT = pa.struct(
-    [
-        pa.field("node_id", pa.int32()),
-        pa.field("tag_class", pa.string()),
-        pa.field("text", pa.string()),
-        pa.field("n_chars", pa.int32()),
-        pa.field("n_link_chars", pa.int32()),
-        pa.field("n_words", pa.int32()),
-    ]
-)
-
-_PACKED_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("doc_id", pa.int64()),
-        pa.field("engine", pa.string()),
-        pa.field("nodes", pa.list_(_NODE_STRUCT)),
-    ]
-)
-
 PACKED_DDL = (
     "url string, doc_id long, engine string, "
     "nodes array<struct<node_id:int, tag_class:string, text:string, "
@@ -138,73 +121,62 @@ PACKED_DDL = (
 
 
 def _tokenize_packed(
-    batches: Iterator[pa.RecordBatch], engine: str = "auto"
-) -> Iterator[pa.RecordBatch]:
-    # Output is assembled COLUMNAR: six flat field buffers + a list-offset
-    # array, then ListArray.from_arrays(StructArray.from_arrays(...)).
-    # pa.array() on a list-of-dicts hits pyarrow's per-element inference
-    # path and was measured at ~2x the cost of the tokenizer itself.
-    # That columnar assembly, plus the zero-copy url/doc_id passthrough,
-    # is why this hot path keeps its own batch loop instead of the
-    # per-row rowmap.map_rows.
-    for batch in batches:
-        names = batch.schema.names
-        # url/doc_id are 1:1 with output rows: pass the Arrow columns
-        # through zero-copy (r07) — only html crosses into Python objects
-        url_col = batch.column(names.index("url"))
-        if url_col.type != pa.string():
-            url_col = url_col.cast(pa.string())
-        htmls = batch.column(names.index("html")).to_pylist()
-        if "doc_id" in names:
-            doc_col = batch.column(names.index("doc_id"))
-            if doc_col.type != pa.int64():
-                doc_col = doc_col.cast(pa.int64())
-        else:
-            doc_col = pa.nulls(len(htmls), pa.int64())
-        engines: list = []
-        offsets: list = [0]
-        f_nid: list = []
-        f_tag: list = []
-        f_txt: list = []
-        f_nch: list = []
-        f_nlk: list = []
-        f_nwd: list = []
-        for raw in htmls:
-            used, nid, tag, txt, nch, nlk, nwd = _run_engine_cols(raw, engine)
-            engines.append(used)
-            f_nid.extend(nid)
-            f_tag.extend(tag)
-            f_txt.extend(txt)
-            f_nch.extend(nch)
-            f_nlk.extend(nlk)
-            f_nwd.extend(nwd)
-            offsets.append(len(f_nid))
-        struct = pa.StructArray.from_arrays(
-            [
-                pa.array(f_nid, pa.int32()),
-                pa.array(f_tag, pa.string()),
-                pa.array(f_txt, pa.string()),
-                pa.array(f_nch, pa.int32()),
-                pa.array(f_nlk, pa.int32()),
-                pa.array(f_nwd, pa.int32()),
-            ],
-            fields=list(_NODE_STRUCT),
-        )
-        nodes_arr = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
-        yield pa.RecordBatch.from_arrays(
-            [
-                url_col,
-                doc_col,
-                pa.array(engines, pa.string()),
-                nodes_arr,
-            ],
-            schema=_PACKED_SCHEMA,
-        )
+    node_fields: list,
+    engine: str,
+    url_col: pa.Array,
+    html_col: pa.Array,
+    doc_col: "pa.Array | None" = None,
+) -> list:
+    """One batch's (url, html[, doc_id]) columns -> its PACKED_DDL columns.
+
+    The nodes are assembled COLUMNAR: six flat field buffers + a
+    list-offset array, then ListArray.from_arrays(StructArray.from_arrays
+    (...)), typed by ``node_fields`` (derived from PACKED_DDL on the
+    driver).  pa.array() on a list-of-dicts hits pyarrow's per-element
+    inference path and was measured at ~2x the cost of the tokenizer
+    itself.  url/doc_id are 1:1 with output rows: the Arrow columns pass
+    through zero-copy (r07) — only html crosses into Python objects."""
+    if url_col.type != pa.string():
+        url_col = url_col.cast(pa.string())
+    htmls = html_col.to_pylist()
+    if doc_col is None:
+        doc_col = pa.nulls(len(htmls), pa.int64())
+    elif doc_col.type != pa.int64():
+        doc_col = doc_col.cast(pa.int64())
+    engines: list = []
+    offsets: list = [0]
+    f_nid: list = []
+    f_tag: list = []
+    f_txt: list = []
+    f_nch: list = []
+    f_nlk: list = []
+    f_nwd: list = []
+    for raw in htmls:
+        used, nid, tag, txt, nch, nlk, nwd = _run_engine_cols(raw, engine)
+        engines.append(used)
+        f_nid.extend(nid)
+        f_tag.extend(tag)
+        f_txt.extend(txt)
+        f_nch.extend(nch)
+        f_nlk.extend(nlk)
+        f_nwd.extend(nwd)
+        offsets.append(len(f_nid))
+    fields = (f_nid, f_tag, f_txt, f_nch, f_nlk, f_nwd)
+    struct = pa.StructArray.from_arrays(
+        [pa.array(v, f.type) for v, f in zip(fields, node_fields)],
+        fields=node_fields,
+    )
+    nodes_arr = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
+    return [url_col, doc_col, pa.array(engines, pa.string()), nodes_arr]
 
 
 def tokenize_packed(pages: DataFrame, engine: str = "auto") -> DataFrame:
     """pages -> one row per document: (url, doc_id, engine, nodes array)."""
     cols = ["url", "html"] + (["doc_id"] if "doc_id" in pages.columns else [])
-    return pages.select(*cols).mapInArrow(
-        lambda batches: _tokenize_packed(batches, engine), PACKED_DDL
+    packed = StructType.fromDDL(PACKED_DDL)
+    node_fields = list(to_arrow_schema(packed).field("nodes").type.value_type)
+    return map_batches(
+        pages.select(*cols),
+        lambda *c: _tokenize_packed(node_fields, engine, *c),
+        packed,
     )

@@ -32,6 +32,8 @@ from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from image_ocr_spark.operators.rowmap import map_rows
 
@@ -84,7 +86,7 @@ def read_warc_stats(chunks: DataFrame) -> DataFrame:
     return map_rows(chunks.select("chunk"), stats, WARC_STATS_SCHEMA)
 
 
-def _write_batches(max_chunk_bytes: int):
+def _write_batches(max_chunk_bytes: int, schema: pa.Schema):
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from image_ocr_spark.pycore.warc import (
             build_response_record,
@@ -92,25 +94,22 @@ def _write_batches(max_chunk_bytes: int):
             build_warcinfo_record,
         )
 
-        schema = pa.schema(
-            [pa.field("chunk", pa.binary()), pa.field("n_records", pa.int64())]
-        )
         pending: list = []
         nbytes = 0
 
-        def flush():
+        def flush() -> pa.RecordBatch:
             nonlocal pending, nbytes
-            if not pending:
-                return None
             # warcinfo leads the segment (real file shape; parser skips it);
             # its date is the first response's date — deterministic, no clock
             first_ts = pending[0][1]
             records = [
                 build_warcinfo_record(first_ts, {"software": "image-ocr-spark"})
             ] + [build_response_record(u, t, p, c) for (u, t, p, c) in pending]
-            out = (build_warc_gz(records), len(pending))
+            row = (build_warc_gz(records), len(pending))
             pending, nbytes = [], 0
-            return out
+            return pa.RecordBatch.from_arrays(
+                [pa.array([v], f.type) for v, f in zip(row, schema)], schema=schema
+            )
 
         for b in batches:
             urls = b.column(0).to_pylist()
@@ -122,17 +121,9 @@ def _write_batches(max_chunk_bytes: int):
                 pending.append((u, int(t), p, c))
                 nbytes += len(p)
                 if nbytes >= max_chunk_bytes:
-                    chunk, nrec = flush()
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([chunk], pa.binary()), pa.array([nrec], pa.int64())],
-                        schema=schema,
-                    )
-        done = flush()
-        if done is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([done[0]], pa.binary()), pa.array([done[1]], pa.int64())],
-                schema=schema,
-            )
+                    yield flush()
+        if pending:
+            yield flush()
 
     return gen
 
@@ -163,4 +154,8 @@ def pages_to_warc(
         .otherwise(F.lit("text/html"))
         .alias("content_type"),
     )
-    return rows.mapInArrow(_write_batches(max_chunk_bytes), PAGES_TO_WARC_SCHEMA)
+    # not rowmap.map_batches: a chunk carries records across input batches
+    struct = StructType.fromDDL(PAGES_TO_WARC_SCHEMA)
+    return rows.mapInArrow(
+        _write_batches(max_chunk_bytes, to_arrow_schema(struct)), struct
+    )

@@ -28,14 +28,3 @@ GEN_PAGE_SCHEMA = T.StructType(
         T.StructField("kind", T.StringType(), False),
     ]
 )
-
-SPAN_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start", T.IntegerType(), False),
-            T.StructField("end", T.IntegerType(), False),
-            T.StructField("label", T.StringType(), False),
-            T.StructField("value", T.StringType(), False),
-        ]
-    )
-)

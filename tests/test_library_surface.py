@@ -1,8 +1,9 @@
-"""Library surface guard: every public top-level def in the operator,
-function, plan and streaming packages is reached from a production entry
-point, or is listed in KEEP with the reason it stays; and every optional
-parameter of a top-level def there is set by some production call site,
-or is listed in KEEP_OPTIONS with the reason it stays.
+"""Library surface guard: every public top-level def and every public
+module-level UPPER_CASE constant in the operator, function, plan and
+streaming packages (and in `schemas.py`) is reached from a production
+entry point, or is listed in KEEP with the reason it stays; and every
+optional parameter of a top-level def there is set by some production
+call site, or is listed in KEEP_OPTIONS with the reason it stays.
 
 Production entry points are the driver contract (`__spark_entry__.py`),
 the packaging script (`package.py`) and the benchmark (`perfbench/`).
@@ -10,7 +11,8 @@ Reachability is by name: the names those files use, and the names used by
 library module-level code, are followed through the bodies of the library
 defs they name until nothing new is reached.  Matching by bare name can
 only over-approximate (two defs sharing a name are reached together), so
-a def reported here is certainly reached by nothing but tests.
+a def reported here is certainly reached by nothing but tests.  A name
+that is only assigned (a constant's own definition) is not a use.
 
 Options are matched the same way: a call whose function is named like the
 def (bare name or attribute) sets a parameter when it passes it, by keyword
@@ -24,14 +26,16 @@ No JVM: the check only parses source files.
 """
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 LIB = ROOT / "image_ocr_spark"
 CHECKED = ("operators", "functions", "plans", "streaming")
+CONSTANT = re.compile(r"[A-Z][A-Z0-9_]*$")
 
-# Public defs that no production entry point reaches, each with the reason
-# it stays.  A new entry needs a reason of the same kind: a requirement of
+# Public defs and constants that no production entry point reaches, each
+# with the reason it stays.  A new entry needs a reason of the same kind: a requirement of
 # the reference or of the resume/observability rules, or a test-facing API
 # the suite cannot do without.  Anything else gets a caller or is deleted.
 KEEP = {
@@ -55,6 +59,10 @@ KEEP = {
     "release": "storage lifecycle API that tests use to check for leaks",
     "scope": "storage lifecycle API that tests use to check for leaks",
     "persisted_ids": "storage lifecycle API that tests use to check for leaks",
+    "PAGE_SCHEMA": (
+        "the input-table contract (url, warc_ts, html, text, lang); the "
+        "streaming tests read their page files with it"
+    ),
 }
 
 # Optional parameters that no production call site sets, each with the
@@ -120,9 +128,9 @@ def _used_names(nodes) -> set:
                 for a in n.names:
                     if a.asname:
                         aliases[a.asname] = a.name.rsplit(".", 1)[-1]
-            elif isinstance(n, ast.Name):
+            elif isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
                 names.add(n.id)
-            elif isinstance(n, ast.Attribute):
+            elif isinstance(n, ast.Attribute) and not isinstance(n.ctx, ast.Store):
                 names.add(n.attr)
     return names | {aliases[a] for a in names & aliases.keys()}
 
@@ -164,22 +172,37 @@ def _reachable(defs, module_level) -> set:
     return seen
 
 
-def _checked_public_defs() -> set:
+def _checked_public_names() -> set:
+    """Public top-level defs of the checked packages, and the public
+    module-level UPPER_CASE constants of those packages and of
+    `schemas.py`."""
     out = set()
-    for pkg in CHECKED:
-        for path in sorted((LIB / pkg).glob("*.py")):
-            for node in ast.parse(path.read_text(), str(path)).body:
-                if isinstance(
-                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                ) and not node.name.startswith("_"):
-                    out.add(node.name)
+    paths = [p for pkg in CHECKED for p in sorted((LIB / pkg).glob("*.py"))]
+    for path in paths + [LIB / "schemas.py"]:
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name] if path.name != "schemas.py" else []
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [
+                    t.id
+                    for t in targets
+                    if isinstance(t, ast.Name) and CONSTANT.match(t.id)
+                ]
+            else:
+                names = []
+            out |= {n for n in names if not n.startswith("_")}
     return out
 
 
 def test_every_public_def_has_a_production_caller_or_a_reason():
     defs, module_level = _library()
-    unreached = _checked_public_defs() - _reachable(defs, module_level)
-    missing = sorted(unreached - KEEP.keys())
+    unreached = _checked_public_names() - _reachable(defs, module_level)
+    # a kept def keeps the constants it reads
+    kept = _reachable(defs, module_level | {n for n in KEEP if not CONSTANT.match(n)})
+    missing = sorted(
+        n for n in unreached - KEEP.keys() if not (CONSTANT.match(n) and n in kept)
+    )
     assert not missing, (
         f"reached only by tests: {missing}; give each a production caller, "
         "delete it, or add it to KEEP with the reason it stays"
@@ -190,7 +213,7 @@ def test_keep_lists_only_unreached_defs():
     """A KEEP entry that is no longer a def, or that gained a production
     caller, is stale and goes."""
     defs, module_level = _library()
-    public = _checked_public_defs()
+    public = _checked_public_names()
     reached = _reachable(defs, module_level)
     stale = sorted(n for n in KEEP if n not in public or n in reached)
     assert not stale, f"stale KEEP entries: {stale}"

@@ -314,6 +314,19 @@ def test_pair_candidates_one_shuffle_hash_join(spark, documents, op):
     assert nodes.count("MapInArrow") == _PAIR_ARROW_PASSES[op], nodes
 
 
+def test_capped_minhash_one_signature_pass(spark, documents):
+    """With max_bucket the clique and star edges come out of one self-join
+    over one windowed relation, so the executed plan computes the MinHash
+    signatures once (both join sides read one exchange)."""
+    from image_ocr_spark.operators.dedup import minhash_lsh_pairs, with_variants
+
+    df = minhash_lsh_pairs(with_variants(documents), max_bucket=2)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, final
+
+
 def test_decontamination_broadcasts_benchmark(spark, documents):
     """The benchmark shingle side must broadcast (corpus never self-joins
     or shuffles against a big build side)."""
