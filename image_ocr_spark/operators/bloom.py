@@ -9,10 +9,10 @@ the new one:
 
 - **build** — each old key sets k bit positions in an m-bit bitmap.
   Positions are hash-grouped by bitmap SEGMENT and packed into byte
-  chunks executor-side (one applyInPandas shuffle), so the driver
-  receives exactly m/8 payload bytes — packed bits, never position
-  rows — regardless of history size; the bitmap ships once per
-  executor as a Spark broadcast.
+  chunks executor-side (one shuffle into a grouped Arrow pass,
+  ``rowmap.map_groups``), so the driver receives exactly m/8 payload
+  bytes — packed bits, never position rows — regardless of history
+  size; the bitmap ships once per executor as a Spark broadcast.
 - **probe** — every new row computes its k positions in the scan stage
   (JVM md5 expressions) and a vectorized Arrow pass tests the bits:
   all-set -> "maybe seen", any-clear -> **definitely new** (a bloom
@@ -46,13 +46,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from image_ocr_spark.operators.dedup import hash60
-from image_ocr_spark.operators.rowmap import map_batches
+from image_ocr_spark.operators.rowmap import map_batches, map_groups
 
 # 2^20 bits = 128 KiB bitmap: ~65k keys at 16 bits/key, right-sized for
 # the fixture corpora.  Production sizing is m ~= 16 * |old| bits.
 DEFAULT_M_BITS = 1 << 20
 DEFAULT_K = 7
-# Build-stage segment width: each applyInPandas group packs one 1 MiB
+# Build-stage segment width: each map_groups group packs one 1 MiB
 # bitmap slice.  At production sizing (m = 16n bits) a segment's group
 # holds ~ k*seg_bits/16 ~= 3.7M position rows INDEPENDENT of snapshot
 # size (segment count grows with n), so per-task memory is bounded.
@@ -100,29 +100,30 @@ def bloom_build(
     DuckDB replay of the positions, packed in the test, at one, many and
     a short last segment."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     if m_bits % 8 or seg_bits % 8:
         raise ValueError("m_bits and seg_bits must be multiples of 8")
     seg_bits = min(seg_bits, m_bits)
     seg_bytes = seg_bits // 8
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = int(pdf["seg"].iloc[0])
+    def pack(pos: pa.Array, seg: pa.Array) -> list:
+        s = seg[0].as_py()
         base = s * seg_bits
         hi = min(seg_bits, m_bits - base)  # last segment may be short
-        rel = pdf["pos"].to_numpy(dtype=np.int64) - base
+        rel = pos.to_numpy() - base
         chunk = np.zeros(hi // 8, dtype=np.uint8)
         np.bitwise_or.at(chunk, rel >> 3, np.uint8(1) << (rel & 7).astype(np.uint8))
-        return pd.DataFrame({"seg": [s], "chunk": [chunk.tobytes()]})
+        return [pa.array([s], pa.int64()), pa.array([chunk.tobytes()], pa.binary())]
 
     pos = df.select(
         F.explode(bloom_positions_col(F.col(key_col), m_bits, k)).alias("pos")
     )
-    packed = (
-        pos.withColumn("seg", F.expr(f"pos div {seg_bits}"))
-        .groupBy("seg")
-        .applyInPandas(pack, "seg long, chunk binary")
+    packed = map_groups(
+        pos.withColumn("seg", F.expr(f"pos div {seg_bits}")),
+        ["seg"],
+        pack,
+        "seg long, chunk binary",
     )
     bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
     # toLocalIterator streams chunk rows (m/8 bytes total) instead of
@@ -170,7 +171,7 @@ def flag_maybe_seen(
             )
         bm = bc.value
         bits = (bm[flat >> 3] >> (flat & 7).astype(np.uint8)) & 1
-        return keep + [pa.array(bits.reshape(-1, k).all(axis=1))]
+        return keep + [pa.array(bits.reshape(-1, k).all(axis=1), pa.bool_())]
 
     return map_batches(probed, probe, out_schema)
 

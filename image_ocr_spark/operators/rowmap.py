@@ -13,19 +13,69 @@ sitemap, WARC, PDF span/table, pixel, LM-quality, dedup-signature and
 page-synthesis operators run a pure-Python function per input row, whose
 output tuples become one struct array typed by the declared schema.
 
+``map_groups`` is the grouped form (``groupBy(...).applyInArrow``): ``fn``
+gets one group's columns and returns its output columns.  The bloom
+bitmap build and the per-cell embedding pair scoring run through it.
+
 The one other ``mapInArrow`` is ``warcsource.pages_to_warc``: its output
 chunk carries records across input batches, so it is not a function of
-one batch.
+one batch.  It builds each chunk under ``no_pandas`` too.
+
+No kernel uses pandas, but pyarrow 16's ``pa.array`` / ``pa.scalar``
+import it on their first call to probe for pandas inputs, which costs a
+Python worker about 41 MB RSS it never uses.  So every kernel call runs
+under ``no_pandas``, which makes every pandas import fail meanwhile.
+Inside it pyarrow records "pandas absent" and converts lists, ndarrays
+and scalars without it; an untyped ``pa.array`` retries the blocked
+import on every call, so kernels pass the Arrow type.
+
+The trade-off: Spark reuses a Python worker across passes, and pyarrow
+keeps that "pandas absent" answer after the guard is gone.  A later
+pandas pass in the same worker (the streaming state operator in
+``streaming/stateful.py``, the one left) then imports pandas itself,
+but an untyped ``pa.Array.from_pandas`` made before any ``to_pandas``
+would convert a categorical to ``string`` instead of ``dictionary`` and
+a tz-aware ``ns`` timestamp to ``us``; a ``to_pandas`` call clears the
+stale answer.  Spark's pandas passes convert their input with
+``to_pandas`` and cast their output to the declared Spark type, so they
+return the same types and values (tests/test_arrow_boundary.py checks
+this in a reused worker).
 """
 
 from __future__ import annotations
 
+import sys
+from contextlib import contextmanager
 from typing import Callable, Iterable, Iterator, Sequence, Union
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+
+class _NoPandasFinder:
+    """A ``sys.meta_path`` finder that fails every import of pandas.
+    ``sys.modules["pandas"] = None`` would not do: pyarrow's Cython import
+    then gets ``None`` and raises ``AttributeError``."""
+
+    @staticmethod
+    def find_spec(name, path=None, target=None):
+        if name == "pandas" or name.startswith("pandas."):
+            raise ImportError(f"{name} is kept out of Python batch passes")
+        return None
+
+
+@contextmanager
+def no_pandas() -> Iterator[None]:
+    """Make every import of pandas in this process fail for the ``with``
+    body (or the decorated call).  A pandas already imported stays
+    usable."""
+    sys.meta_path.insert(0, _NoPandasFinder)
+    try:
+        yield
+    finally:
+        sys.meta_path.remove(_NoPandasFinder)
 
 
 def _struct(schema: Union[str, StructType]) -> StructType:
@@ -48,7 +98,11 @@ def map_batches(
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows:
-                yield pa.RecordBatch.from_arrays(fn(*batch.columns), schema=arrow)
+                with no_pandas():
+                    out = pa.RecordBatch.from_arrays(
+                        fn(*batch.columns), schema=arrow
+                    )
+                yield out  # unguarded: Spark's own code runs until the next batch
 
     run.__name__ = fn.__name__  # the plan's MapInArrow node names the kernel
     return df.mapInArrow(run, struct)
@@ -76,3 +130,25 @@ def map_rows(
 
     rows.__name__ = fn.__name__
     return map_batches(df, rows, struct)
+
+
+def map_groups(
+    df: DataFrame,
+    keys: Sequence[str],
+    fn: Callable[..., Sequence[pa.Array]],
+    schema: Union[str, StructType],
+) -> DataFrame:
+    """``fn(*columns)`` once per group of ``df`` by the ``keys`` columns,
+    the group's columns of ``df`` in order as the positional arguments.
+    ``fn`` returns the output columns in ``schema`` order, of any length.
+    One shuffle brings each group's rows to one task."""
+    struct = _struct(schema)
+    arrow = to_arrow_schema(struct)
+
+    def run(table):
+        with no_pandas():
+            cols = [c.combine_chunks() for c in table.columns]
+            return pa.Table.from_arrays(fn(*cols), schema=arrow)
+
+    run.__name__ = fn.__name__  # names the FlatMapGroupsInArrow node
+    return df.groupBy(*keys).applyInArrow(run, struct)

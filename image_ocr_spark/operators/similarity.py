@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from image_ocr_spark.operators import storage
-from image_ocr_spark.operators.rowmap import map_batches
+from image_ocr_spark.operators.rowmap import map_batches, map_groups
 
 CENT_SCALE = 10_000_000  # deci-micro accumulation unit for centroid means
 DEFAULT_SAMPLE_SIZE = 64  # k-means++ init sample (collected to the driver)
@@ -734,9 +734,10 @@ PAIR_BLOCK = 2048  # vectors per side of one blocked numpy pair tile
 def _dup_pairs_grouped(
     assigned: DataFrame, threshold_milli: int, max_cell: Optional[int] = 4096
 ) -> DataFrame:
-    """(id_a, id_b, cos_milli >= threshold) scored PER CELL via
-    applyInPandas.  Grouping shuffles each vector ONCE (N * dim) and
-    scores the cell's pairs in place with blocked numpy; a candidate
+    """(id_a, id_b, cos_milli >= threshold) scored PER CELL in one grouped
+    Arrow pass (``rowmap.map_groups``).  Grouping shuffles each vector
+    ONCE (N * dim) and scores the cell's pairs in place with blocked
+    numpy; a candidate
     equi-join would shuffle every candidate pair with BOTH its vectors
     (pairs * 2 * dim floats — ~6 GB at the sf1.0 battery).  Arithmetic
     replays the oracle's fold cosine: per-vector norms and the pair dot
@@ -757,54 +758,47 @@ def _dup_pairs_grouped(
     The pair set is bit-identical with or without the cap
     (tests/test_similarity.py::test_grouped_hot_cell_cap_parity)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    def _side(pdf):
-        pdf = pdf.sort_values("vid")
-        ids = pdf["vid"].to_numpy()
-        V = np.array(
-            [np.asarray(x, dtype=np.float64) for x in pdf["v"]],
-            dtype=np.float64,
-        )
+    def _side(ids: np.ndarray, V: np.ndarray):
+        order = np.argsort(ids, kind="stable")
+        ids, V = ids[order], V[order]
         nvec = np.zeros(len(ids))
         for j in range(V.shape[1]):
             nvec = nvec + V[:, j] * V[:, j]
         return ids, V, nvec
 
-    empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_milli": []}).astype(
-        {"id_a": "int64", "id_b": "int64", "cos_milli": "int64"}
-    )
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return empty
+    def score(vid, v, cell, sb=None, lo=None, hi=None) -> list:
         out_a: list = []
         out_b: list = []
         out_c: list = []
-        if "lo" in pdf.columns and pdf["lo"].iat[0] != pdf["hi"].iat[0]:
-            a_pdf = pdf[pdf["sb"] == pdf["lo"].iat[0]]
-            b_pdf = pdf[pdf["sb"] == pdf["hi"].iat[0]]
-            if len(a_pdf) == 0 or len(b_pdf) == 0:
-                return empty
-            ids_a, VA, nv_a = _side(a_pdf)
-            ids_b, VB, nv_b = _side(b_pdf)
+        ids = vid.to_numpy()
+        V = v.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+        V = V.reshape(len(ids), -1)
+        if lo is not None and lo[0].as_py() != hi[0].as_py():
+            sbs = sb.to_numpy()
+            a, b = sbs == lo[0].as_py(), sbs == hi[0].as_py()
+            if a.any() and b.any():
+                _blocked_cos_pairs(
+                    *_side(ids[a], V[a]), *_side(ids[b], V[b]), False,
+                    PAIR_BLOCK, threshold_milli, out_a, out_b, out_c,
+                )
+        elif len(ids) >= 2:
+            side = _side(ids, V)
             _blocked_cos_pairs(
-                ids_a, VA, nv_a, ids_b, VB, nv_b, False, PAIR_BLOCK,
+                *side, *side, True, PAIR_BLOCK,
                 threshold_milli, out_a, out_b, out_c,
             )
-        else:
-            ids, V, nvec = _side(pdf)
-            _blocked_cos_pairs(
-                ids, V, nvec, ids, V, nvec, True, PAIR_BLOCK,
-                threshold_milli, out_a, out_b, out_c,
-            )
-        return pd.DataFrame(
-            {"id_a": out_a, "id_b": out_b, "cos_milli": out_c}
-        ).astype({"id_a": "int64", "id_b": "int64", "cos_milli": "int64"})
+        return [
+            pa.array(np.asarray(c, dtype=np.int64), pa.int64())
+            for c in (out_a, out_b, out_c)
+        ]
 
     out_schema = "id_a long, id_b long, cos_milli long"
     if max_cell is None:
-        return assigned.groupBy("cell").applyInPandas(score, out_schema)
+        return map_groups(
+            assigned.select("vid", "v", "cell"), ["cell"], score, out_schema
+        )
     # the counts pre-pass and the main pass both consume `assigned`; an
     # uncached assignment (a full N*C*dim mapInArrow scan) would execute
     # TWICE (review r5 finding).  Cache it for the pair of passes in a
@@ -813,7 +807,12 @@ def _dup_pairs_grouped(
     assigned = storage.hold(assigned, slot="ivf_assign").persist()
     counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("m"))
     salted = _salted_subblocks(assigned, counts, max_cell)
-    return salted.groupBy("cell", "lo", "hi").applyInPandas(score, out_schema)
+    return map_groups(
+        salted.select("vid", "v", "cell", "sb", "lo", "hi"),
+        ["cell", "lo", "hi"],
+        score,
+        out_schema,
+    )
 
 
 def _salted_subblocks(

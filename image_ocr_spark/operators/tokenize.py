@@ -16,7 +16,7 @@ no engine produced nodes => "none"), the per-row analog of the reference's
 fallback warning.  ``available_engines()`` is the registry probe.
 
 Scale notes:
-- One Arrow batch pass through ``rowmap.map_batches`` (not mapInPandas,
+- One Arrow batch pass through ``rowmap.map_batches`` (not a pandas UDF,
   and not the per-row ``map_rows``): each output row carries its
   document's node array, assembled columnar from flat Python lists (no
   per-node dict or pandas round-trip), and url/doc_id pass through as

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from image_ocr_spark.operators.rowmap import map_rows
+from image_ocr_spark.operators.rowmap import map_rows, no_pandas
 
 READ_WARC_SCHEMA = "url string, warc_ts long, content_type string, payload binary"
 WARC_STATS_SCHEMA = "n_records long, n_skipped long, truncated boolean"
@@ -97,6 +97,7 @@ def _write_batches(max_chunk_bytes: int, schema: pa.Schema):
         pending: list = []
         nbytes = 0
 
+        @no_pandas()  # as rowmap's kernels: this worker needs no pandas
         def flush() -> pa.RecordBatch:
             nonlocal pending, nbytes
             # warcinfo leads the segment (real file shape; parser skips it);

@@ -40,8 +40,9 @@ def salt_repartition(pages: DataFrame) -> DataFrame:
     runs as 2 tasks, not 4.
 
     It stays that way because every task of that stage holds its own
-    Python worker of about 134 MB RSS (the pyspark, pyarrow and pandas
-    imports alone are about 115 MB).  An explicit
+    Python worker: about 96 MB RSS after the tokenizer has run over the
+    9,990 perfbench pages (the pyspark daemon it forks from holds 62 MB;
+    pandas stays out, see operators/rowmap.py).  An explicit
     repartition(4, xxhash64(url)), which AQE leaves alone, measured
     pages_extract job_s 2.2 -> 1.8 s but Python RSS 355 -> 625 MB on a
     4-core host.

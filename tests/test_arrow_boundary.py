@@ -1,9 +1,17 @@
 """The one Arrow boundary (operators/rowmap.py).
 
 Every Python batch pass goes through ``rowmap.map_batches`` (or its
-per-row adapter ``map_rows``); the one other ``mapInArrow`` is the WARC
-writer, whose output chunks carry records across input batches.  The
-guard parses the library source (no JVM).
+per-row adapter ``map_rows``, or the grouped ``map_groups``); the one
+other ``mapInArrow`` is the WARC writer, whose output chunks carry
+records across input batches.  The guards parse the library source (no
+JVM): that one ``mapInArrow``, no pandas pass outside the streaming
+state operator, and a type on every ``pa.array`` / ``pa.scalar`` call.
+
+No batch-pass worker imports pandas (``rowmap.no_pandas``).  That is
+checked in a separate Spark process (tests/worker_probe.py), so that each
+pass starts in a fresh worker, and so is the one trade-off it makes: a
+pandas pass in a worker that a guarded pass left behind returns the same
+types and values as in a fresh worker.
 
 ``map_batches`` skips empty input batches, so no kernel sees one: the
 numpy kernels in ``similarity`` divide by a batch's row count.  Each
@@ -12,6 +20,10 @@ row spread over four partitions (three of them empty).
 """
 
 import ast
+import json
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -43,6 +55,94 @@ def test_map_in_arrow_only_at_the_boundary():
         f"mapInArrow outside rowmap.map_batches: {found}; "
         "route the pass through rowmap.map_batches or map_rows"
     )
+
+
+# the one pandas pass left: streaming state (applyInPandasWithState; its
+# Arrow successor transformWithState needs protobuf, not installed here)
+PANDAS_ALLOWED = {Path("streaming/stateful.py")}
+
+
+def test_pandas_only_in_the_streaming_state_operator():
+    found = []
+    for path in sorted(LIB.rglob("*.py")):
+        rel = path.relative_to(LIB)
+        for n in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(n, ast.Import):
+                hit = any(a.name.split(".")[0] == "pandas" for a in n.names)
+            elif isinstance(n, ast.ImportFrom):
+                hit = (n.module or "").split(".")[0] == "pandas"
+            else:
+                hit = isinstance(n, ast.Attribute) and n.attr in (
+                    "applyInPandas",
+                    "mapInPandas",
+                )
+            if hit and rel not in PANDAS_ALLOWED:
+                found.append(f"{rel}:{n.lineno}")
+    assert not found, (
+        f"pandas outside streaming/stateful.py: {found}; "
+        "use rowmap.map_batches, map_rows or map_groups"
+    )
+
+
+def test_kernel_arrow_conversions_are_typed():
+    """Under ``rowmap.no_pandas`` an untyped ``pa.array`` retries the
+    blocked pandas import on every call; a typed one does not."""
+    found = []
+    for path in sorted((LIB / "operators").rglob("*.py")):
+        for n in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("array", "scalar")
+                and isinstance(n.func.value, ast.Name)
+                and n.func.value.id == "pa"
+                and len(n.args) < 2
+                and not any(k.arg == "type" for k in n.keywords)
+            ):
+                found.append(f"{path.relative_to(LIB)}:{n.lineno}")
+    assert not found, f"pa.array / pa.scalar without a type: {found}"
+
+
+@pytest.fixture(scope="module")
+def probe():
+    """tests/worker_probe.py's report, from its own small Spark process."""
+    repo = Path(__file__).resolve().parents[1]
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-m", "tests.worker_probe"],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+@pytest.mark.parametrize("boundary", ["map_batches", "map_rows", "map_groups"])
+def test_python_workers_never_load_pandas(probe, boundary):
+    got = probe[boundary]
+    assert got["pandas"] and not any(got["pandas"]), got
+
+
+def test_pandas_pass_in_a_reused_guarded_worker(probe):
+    """applyInPandas in the worker a guarded map_batches pass left behind
+    (same pid) returns what it returns in a worker that ran no guarded
+    pass: the declared Spark types, the same values, and the same Arrow
+    types for an untyped ``pa.Array.from_pandas`` inside the UDF."""
+    reused, fresh = probe["reused"], probe["fresh"]
+    assert reused["then"]["pids"] == reused["pids"], reused
+    assert reused["then"]["schema"] == fresh["schema"]
+    assert reused["then"]["rows"] == fresh["rows"]
+    arrow = (
+        "dictionary<values=string, indices=int8, ordered=0>"
+        "|timestamp[ns, tz=Europe/Paris]"
+    )
+    assert fresh["rows"] == [
+        ["b", "2024-03-01T11:00:00.123456", arrow],
+        ["a", "2024-03-01T23:00:00.000001", arrow],
+    ]
 
 
 def _spread(df, rows):
