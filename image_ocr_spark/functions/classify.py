@@ -1,4 +1,4 @@
-"""Keyword-weight document classification as native Spark SQL columns.
+"""Keyword-weight document classification as native Spark SQL.
 
 Mirror of pycore.classify (integer centi-unit scoring, ref
 classifier.py:218-245) in one keyword pass per document: ``filter`` one
@@ -10,15 +10,26 @@ counted with the substring-length identity (len(t) - len(replace(t, kw)))
 / len(kw), i.e. Python's non-overlapping ``str.count``; an absent keyword
 adds 0 everywhere, so overlapping keywords (合計/合計金額) stay exact.
 The higher-order functions run interpreted (codegen fallback): the work
-is in proportion to the hits, not to the dictionary.
+is in proportion to the table a row is filtered against and to its hits.
+
+ASCII gate: one test per row, ``length(t) = octet_length(t)``, tells
+pure-ASCII text apart.  Such a row folds as ``upper(t)`` and is filtered
+against the table's pure-ASCII keywords only (RECEIPT, TEL, INVOICE),
+not all 57; every other row takes the full fold and table.  This is
+exact: the fullwidth->ASCII ``translate`` is the identity on ASCII text,
+``upper`` of ASCII text is ASCII, and an ASCII string contains no
+substring that holds a non-ASCII character.  80% of the perfbench pages
+are pure ASCII; on them the gate measured pages_extract job_s 2.04 ->
+1.81 s and cpu_s 5.48 -> 4.81 s (4-core host, 3 alternating pairs).
+
+The three projections are SQL text, assembled once at import from the
+pycore constants (see operators/blocks.py for the Py4J cost of Column
+trees); each is applied with one ``selectExpr``.
 """
 
 from __future__ import annotations
 
 from typing import List, Tuple
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from ..pycore.classify import (
     INVOICE_KEYWORDS_W10,
@@ -28,7 +39,8 @@ from ..pycore.classify import (
     THRESHOLD_DEN,
     THRESHOLD_NUM,
 )
-from .normalize import fold_alnum_upper
+from ..pycore.normalize import FULLWIDTH_ALNUM, HALFWIDTH_ALNUM
+from .normalize import sql_literal
 
 _DICTS = (RECEIPT_KEYWORDS_W10, INVOICE_KEYWORDS_W10, RECEIPT_NEGATIVE_W10, INVOICE_NEGATIVE_W10)
 
@@ -40,51 +52,64 @@ def _keyword_table() -> List[Tuple[str, int, int, int, int]]:
     return [(k.upper(), *(d.get(k, 0) for d in _DICTS)) for k in union]
 
 
+def _table_sql(rows) -> str:
+    return "array(%s)" % ", ".join(
+        "named_struct('kw', %s, 'rp', %d, 'ip', %d, 'rn', %d, 'ineg', %d)"
+        % (sql_literal(kw), *weights)
+        for kw, *weights in rows
+    )
+
+
+_TABLE = _keyword_table()
+_ASCII_TABLE = [row for row in _TABLE if row[0].isascii()]
+
+
+def _fold_sql(text: str) -> Tuple[str, str]:
+    """The ASCII gate and the fold (pycore.normalize.fold_alnum_upper) of
+    the column ``text``; the fold skips ``translate`` on ASCII rows."""
+    gate = f"length({text}) = octet_length({text})"
+    fold = "CASE WHEN %s THEN upper(%s) ELSE upper(translate(%s, %s, %s)) END" % (
+        gate, text, text, sql_literal(FULLWIDTH_ALNUM), sql_literal(HALFWIDTH_ALNUM),
+    )
+    return f"{gate} AS _ascii", f"{fold} AS _folded"
+
+
+# Per keyword hit: r += rp*(10+3*(cnt-1)) - 5*rn, and the same with ip/ineg
+# for i.  The bonus is bound in its own transform: a lambda body has no
+# common-subexpression elimination, and the merge reads it twice.
+_SCORES = f"""aggregate(
+    transform(
+        filter(IF(_ascii, {_table_sql(_ASCII_TABLE)}, {_table_sql(_TABLE)}),
+               x -> contains(_folded, x.kw)),
+        x -> named_struct('rp', x.rp, 'ip', x.ip, 'rn', x.rn, 'ineg', x.ineg,
+            'b', 10 + 3 * ((length(_folded) - length(replace(_folded, x.kw)))
+                           div length(x.kw) - 1))),
+    named_struct('r', 0L, 'i', 0L),
+    (acc, x) -> named_struct('r', acc.r + x.rp * x.b - 5 * x.rn,
+                             'i', acc.i + x.ip * x.b - 5 * x.ineg)) AS _scores"""
+
+# each score floored at 0 (pycore.classify.keyword_score_centi), then the
+# argmax and the UNKNOWN threshold of pycore.classify.classify_doc
+_R, _I = "greatest(0L, _scores.r)", "greatest(0L, _scores.i)"
+_RESULT = (
+    "*",
+    f"{_R} AS receipt_score_centi",
+    f"{_I} AS invoice_score_centi",
+    f"""CASE WHEN {_R} + {_I} = 0
+              OR {THRESHOLD_DEN} * greatest({_R}, {_I}) < {THRESHOLD_NUM} * ({_R} + {_I})
+         THEN 'unknown' WHEN {_R} > {_I} THEN 'receipt' ELSE 'invoice' END AS doc_type""",
+)
+
+
 def classify_df(df, text_col: str = "text"):
     """Append receipt_score_centi, invoice_score_centi and doc_type.
 
-    Per keyword hit: r += rp*(10+3*(cnt-1)) - 5*rn, and the same with
-    ip/in for i; each score is floored at 0
-    (pycore.classify.keyword_score_centi).  ``_folded`` is its own
-    projection: the fold subtree must not be replicated into the lambdas.
-    """
-    # one SQL literal: built from F.lit/alias/struct Columns it costs ~600
-    # Py4J calls, about 0.5 s per plan on a 4-core host
-    table = F.expr("array(%s)" % ", ".join(
-        "named_struct('kw', '%s', 'rp', %d, 'ip', %d, 'rn', %d, 'in', %d)" % row
-        for row in _keyword_table()
-    ))
-    folded = F.col("_folded")
-    hits = F.filter(table, lambda x: F.contains(folded, x["kw"]))
-
-    def with_bonus(x: Column) -> Column:
-        # its own transform: a lambda body has no common-subexpression
-        # elimination, and ``step`` reads the bonus twice
-        cnt = (F.length(folded) - F.length(F.replace(folded, x["kw"]))) / F.length(x["kw"])
-        return x.withField("b", 10 + 3 * (cnt.cast("long") - 1))
-
-    def step(acc: Column, x: Column) -> Column:
-        return F.struct(
-            (acc["r"] + x["rp"] * x["b"] - 5 * x["rn"]).alias("r"),
-            (acc["i"] + x["ip"] * x["b"] - 5 * x["in"]).alias("i"),
-        )
-
-    zero = F.lit(0).cast("long")
-    acc0 = F.struct(zero.alias("r"), zero.alias("i"))
-    scores = F.aggregate(F.transform(hits, with_bonus), acc0, step)
-    rc, ic = F.greatest(zero, F.col("_scores.r")), F.greatest(zero, F.col("_scores.i"))
-    total = rc + ic
-    top = F.when(rc > ic, rc).otherwise(ic)
-    winner = F.when(rc > ic, F.lit("receipt")).otherwise(F.lit("invoice"))
-    doc_type = F.when(
-        (total == 0) | (THRESHOLD_DEN * top < THRESHOLD_NUM * total),
-        F.lit("unknown"),
-    ).otherwise(winner)
+    ``_ascii``/``_folded`` are their own projection: the fold subtree must
+    not be replicated into the keyword lambdas, and the gate is tested
+    once per row."""
     return (
-        df.withColumn("_folded", fold_alnum_upper(F.col(text_col)))
-        .withColumn("_scores", scores)
-        .withColumns(
-            {"receipt_score_centi": rc, "invoice_score_centi": ic, "doc_type": doc_type}
-        )
-        .drop("_folded", "_scores")
+        df.selectExpr("*", *_fold_sql(f"`{text_col}`"))
+        .selectExpr("*", _SCORES)
+        .selectExpr(*_RESULT)
+        .drop("_ascii", "_folded", "_scores")
     )

@@ -139,21 +139,41 @@ _PY_STRIP_CHARS = (
 )
 
 
+# F11's regexp_replace steps, in pycore.normalize.clean_text's order.
+# (?d) = Java UNIX_LINES: ^/$ anchor only at '\n', matching Python's
+# multiline semantics — without it Java also anchors at NEL/LS/PS
+# (\x85 
+_CLEAN_STEPS = (
+    ("[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]", ""),
+    ("\r\n", "\n"),
+    ("\r", "\n"),
+    ("[ \t]+", " "),
+    ("\n{3,}", "\n\n"),
+    ("(?dm)^[ \t]+|[ \t]+$", ""),
+)
+
+
 def clean_text(col: Column) -> Column:
     """F11: the byte-identity canonicalization (ref normalizer.py:294-319).
 
     Same step order as pycore.normalize.clean_text.
     """
-    c = F.regexp_replace(col, "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]", "")
-    c = F.regexp_replace(c, "\r\n", "\n")
-    c = F.regexp_replace(c, "\r", "\n")
-    c = F.regexp_replace(c, "[ \t]+", " ")
-    c = F.regexp_replace(c, "\n{3,}", "\n\n")
-    # (?d) = Java UNIX_LINES: ^/$ anchor only at '\n', matching Python's
-    # multiline semantics — without it Java also anchors at NEL/LS/PS
-    # (\x85    ) and strips spaces Python keeps (fuzz-caught)
-    c = F.regexp_replace(c, "(?dm)^[ \t]+|[ \t]+$", "")
-    return F.btrim(c, F.lit(_PY_STRIP_CHARS))
+    for pattern, repl in _CLEAN_STEPS:
+        col = F.regexp_replace(col, pattern, repl)
+    return F.btrim(col, F.lit(_PY_STRIP_CHARS))
+
+
+def sql_literal(s: str) -> str:
+    """``s`` as a Spark SQL string literal (the parser unescapes ``\\``
+    and ``\'``; every other character stands for itself)."""
+    return "'%s'" % s.replace("\\", "\\\\").replace("'", "\\'")
+
+
+def clean_text_sql(expr: str) -> str:
+    """``clean_text`` as SQL text over the SQL expression ``expr``."""
+    for pattern, repl in _CLEAN_STEPS:
+        expr = "regexp_replace(%s, %s, %s)" % (expr, sql_literal(pattern), sql_literal(repl))
+    return "btrim(%s, %s)" % (expr, sql_literal(_PY_STRIP_CHARS))
 
 
 def fix_company_name(col: Column) -> Column:

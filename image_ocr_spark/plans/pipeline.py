@@ -44,8 +44,9 @@ def salt_repartition(pages: DataFrame) -> DataFrame:
     9,990 perfbench pages (the pyspark daemon it forks from holds 62 MB;
     pandas stays out, see operators/rowmap.py).  An explicit
     repartition(4, xxhash64(url)), which AQE leaves alone, measured
-    pages_extract job_s 2.2 -> 1.8 s but Python RSS 355 -> 625 MB on a
-    4-core host.
+    pages_extract job_s 1.51 -> 1.35 s but Python RSS 258 -> 451 MB and
+    cpu_s 4.49 -> 4.75 s on a 4-core host (medians of 2 alternating
+    pairs).
     """
     return pages.repartition(F.xxhash64("url"))
 

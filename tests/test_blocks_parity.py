@@ -40,7 +40,7 @@ def test_rollup_matches_pycore_every_column(extracted, doc_rows):
 
 
 def test_clean_text_guard_on_control_chars(spark):
-    """r07 `_clean_collapsed` guard: documents whose node text carries a
+    """r07 `blocks._TEXT` guard: documents whose node text carries a
     non-whitespace control byte must route through the FULL clean_text
     chain (the rlike branch), staying byte-identical to the pycore rollup;
     clean documents take the no-op branch with the same output either

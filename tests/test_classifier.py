@@ -148,3 +148,30 @@ def test_spark_classifier_agrees_exactly(spark):
         assert row.receipt_score_centi == exp["receipt_score_centi"], t
         assert row.invoice_score_centi == exp["invoice_score_centi"], t
         assert row.doc_type == exp["doc_type"], t
+
+
+def test_spark_classifier_ascii_gate(spark):
+    """Rows on both sides of classify_df's ASCII gate score as pycore does:
+    pure-ASCII text is matched against the ASCII keywords only, so a
+    keyword the gate must still see (fullwidth text that folds to ASCII,
+    ASCII next to CJK, ``8%`` without 対象) sits in a non-ASCII row."""
+    from image_ocr_spark.functions.classify import classify_df
+
+    texts = [
+        "TEL 03-1234-5678", "TELTEL", "RECEIPT", "INVOICE no. 7",
+        "Receipt tel: 1 invoice", "RECEIPT TEL TEL INVOICE INVOICE",
+        "ＴＥＬ", "ＩＮＶＯＩＣＥ", "ｔｅｌ ｒｅｃｅｉｐｔ",
+        "TEL電話", "領収書 RECEIPT", "INVOICE請求書", "ＴＥＬ TEL",
+        "8% off", "8%", "８％", "10% TEL",
+        "", None,
+    ]
+    assert {t.isascii() for t in texts if t is not None} == {True, False}
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = classify_df(df, "text").collect()
+    assert len(got) == len(texts)
+    for t, row in zip(texts, got):
+        exp = classify_doc(t)
+        got_row = (row.receipt_score_centi, row.invoice_score_centi, row.doc_type)
+        assert got_row == (
+            exp["receipt_score_centi"], exp["invoice_score_centi"], exp["doc_type"]
+        ), t

@@ -322,6 +322,35 @@ def test_classify_folds_text_once(spark, pages_path):
     assert plan.count("translate(") == 1, plan
 
 
+def test_flagship_plan_py4j_calls(spark, pages_path, monkeypatch):
+    """Building the flagship plan over an already-read table takes a few
+    hundred Py4J round trips: the rollup and classify projections are SQL
+    text, one selectExpr each.  As Column trees (one call per lambda,
+    literal and alias) they took about 2,000.  Memory-delete commands are
+    not counted: py4j sends one whenever Python's garbage collector frees
+    a proxy, including proxies left by earlier code.  The rest of the count
+    is deterministic where a build time is not."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    from image_ocr_spark.plans.pipeline import extract_pages
+
+    pages = spark.read.parquet(pages_path)
+    send, calls = GatewayClient.send_command, []
+    delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counted(self, command, *args, **kwargs):
+        if not command.startswith(delete):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    extract_pages(pages)
+    monkeypatch.undo()
+    n_calls = len(calls)
+    assert n_calls <= 400, n_calls
+
+
 def test_minhash_signatures_no_shuffle(spark, documents):
     """Signatures are per-row Arrow batches: computed in the scan stage,
     zero Exchange (at 100 TB the signature pass is free with the scan)."""
