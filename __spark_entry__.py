@@ -324,7 +324,9 @@ def q_date_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return d.select("doc_id", raw.alias("raw"), normalize_date(raw).alias("iso"))
+    return d.select("doc_id", raw.alias("raw")).selectExpr(
+        "doc_id", "raw", f"{normalize_date('raw')} AS iso"
+    )
 
 
 def q_amount_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,7 +351,9 @@ def q_amount_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.translate(grouped, "0123456789", "０１２３４５６７８９")
         )
     )
-    return d.select("doc_id", normalize_amount_ocr(raw).alias("amount"))
+    return d.select("doc_id", raw.alias("raw")).selectExpr(
+        "doc_id", f"{normalize_amount_ocr('raw')} AS amount"
+    )
 
 
 def q_text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,8 +365,8 @@ def q_text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), " ", "   "),
         F.lit("\n\n\n\n tail \t"),
     )
-    return _docs(spark, sf_dir).select(
-        "doc_id", clean_text(noised).alias("cleaned")
+    return _docs(spark, sf_dir).select("doc_id", noised.alias("noised")).selectExpr(
+        "doc_id", f"{clean_text('noised')} AS cleaned"
     )
 
 
@@ -600,8 +604,8 @@ def q_classify_reasoning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from image_ocr_spark.functions.normalize import fold_alnum_upper
     from image_ocr_spark.pycore.classify import RECEIPT_KEYWORDS_W10, INVOICE_KEYWORDS_W10
 
-    df = _extracted(spark, sf_dir).withColumn(
-        "_folded", fold_alnum_upper(F.col("text"))
+    df = _extracted(spark, sf_dir).selectExpr(
+        "*", f"{fold_alnum_upper('text')} AS _folded"
     )
     total = F.col("receipt_score_centi") + F.col("invoice_score_centi")
     top = F.greatest("receipt_score_centi", "invoice_score_centi")

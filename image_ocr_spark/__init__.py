@@ -12,8 +12,10 @@ Common-Crawl-style page tables ``(url, warc_ts, html:binary, text, lang)``:
 - ``operators`` — Spark operators: tokenize (mapInArrow), block scoring &
                   content selection, span joins, dedup, similarity search,
                   checkpoint manifests.
-- ``functions`` — native Spark SQL column builders (dates, amounts, phones,
-                  classifier scoring, text stats) mirroring pycore exactly.
+- ``functions`` — native Spark SQL expressions mirroring pycore exactly:
+                  SQL text for normalization (dates, amounts), field
+                  extraction and classifier scoring; column builders for
+                  text stats, PII, scripts and URLs.
 - ``fixtures``  — deterministic synthetic page generator (seeded; derives
                   pages from the driver's ``documents`` table).
 - ``plans``     — end-to-end pipeline assembly (the flagship query).

@@ -1,1 +1,2 @@
-"""Native Spark SQL column builders mirroring pycore semantics exactly."""
+"""Native Spark SQL expressions (SQL text or columns) mirroring pycore
+semantics exactly."""

@@ -39,8 +39,7 @@ from ..pycore.classify import (
     THRESHOLD_DEN,
     THRESHOLD_NUM,
 )
-from ..pycore.normalize import FULLWIDTH_ALNUM, HALFWIDTH_ALNUM
-from .normalize import sql_literal
+from .normalize import fold_alnum_upper, sql_literal
 
 _DICTS = (RECEIPT_KEYWORDS_W10, INVOICE_KEYWORDS_W10, RECEIPT_NEGATIVE_W10, INVOICE_NEGATIVE_W10)
 
@@ -65,12 +64,10 @@ _ASCII_TABLE = [row for row in _TABLE if row[0].isascii()]
 
 
 def _fold_sql(text: str) -> Tuple[str, str]:
-    """The ASCII gate and the fold (pycore.normalize.fold_alnum_upper) of
-    the column ``text``; the fold skips ``translate`` on ASCII rows."""
+    """The ASCII gate and the fold (normalize.fold_alnum_upper) of the
+    column ``text``; the fold skips ``translate`` on ASCII rows."""
     gate = f"length({text}) = octet_length({text})"
-    fold = "CASE WHEN %s THEN upper(%s) ELSE upper(translate(%s, %s, %s)) END" % (
-        gate, text, text, sql_literal(FULLWIDTH_ALNUM), sql_literal(HALFWIDTH_ALNUM),
-    )
+    fold = f"CASE WHEN {gate} THEN upper({text}) ELSE {fold_alnum_upper(text)} END"
     return f"{gate} AS _ascii", f"{fold} AS _folded"
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..functions.normalize import clean_text_sql, sql_literal
+from ..functions.normalize import clean_text, sql_literal
 from ..pycore import blocks as pyblocks
 
 
@@ -81,7 +81,7 @@ _TEXT = (
     "url",
     "doc_id",
     "engine",
-    f"CASE WHEN _raw RLIKE {sql_literal(_CTRL_CLASS)} THEN {clean_text_sql('_raw')}"
+    f"CASE WHEN _raw RLIKE {sql_literal(_CTRL_CLASS)} THEN {clean_text('_raw')}"
     " ELSE _raw END AS text",
     "title",
     "n_nodes",

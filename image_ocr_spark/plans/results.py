@@ -4,9 +4,15 @@ One row per extraction row: classification + type-dispatched extracted
 data (receipt fields for receipt pages, invoice fields for invoice pages)
 + canonical text + warnings, serialized with to_json.  The dispatch is a
 chain of per-row projections with no join: the text is gated by doc_type
-(``when(doc_type = 'receipt', text)``) before its lines are split, so a
-page pays only for its own field set, and the data structs and warnings
-are ``when(doc_type = ...)`` columns over both field sets.
+(``CASE WHEN doc_type = 'receipt' THEN text END``) before its lines are
+split, so a page pays only for its own field set, and the data structs
+and warnings are ``CASE WHEN doc_type = ...`` columns over both field
+sets.
+
+Each projection is a tuple of SQL text assembled once at import from
+functions/extract_fields.py's field expressions (see its docstring for
+the ``_let`` / ``nullif`` rule inside lambdas) and applied with one
+``selectExpr``: the gated lines, both field sets, and the result row.
 
 Field names inside the data structs mirror the reference's Japanese
 to_dict keys (receipt.py:52-89, invoice.py:63-105).  Divergence note:
@@ -18,127 +24,87 @@ equivalent; tests pin this contract.
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions import extract_fields as ef
 
+_IS_R, _IS_I = "doc_type = 'receipt'", "doc_type = 'invoice'"
+_R_TEXT = f"CASE WHEN {_IS_R} THEN text END"
+_I_TEXT = f"CASE WHEN {_IS_I} THEN text END"
 
-def _receipt_struct(col: Callable[[str], Column]) -> Column:
-    item = lambda i: F.struct(  # noqa: E731
-        i["name"].alias("品名"),
-        i["price"].alias("価格"),
-        i["quantity"].alias("数量"),
-        i["reduced_tax"].alias("軽減税率"),
-    )
-    tax = F.when(
-        col("tax_rate_8").isNotNull() | col("tax_rate_10").isNotNull(),
-        F.struct(
-            col("tax_rate_8").alias("8%対象額"),
-            col("tax_rate_10").alias("10%対象額"),
-        ),
-    )
-    return F.struct(
-        col("date").alias("日付"),
-        col("total_amount").alias("合計金額"),
-        col("store_name").alias("店舗名"),
-        col("subtotal").alias("小計"),
-        col("store_phone").alias("店舗電話番号"),
-        F.when(F.size(col("items")) > 0, F.transform(col("items"), item)).alias("明細"),
-        tax.alias("税額詳細"),
-        col("payment_method").alias("支払方法"),
-    )
+# lines in their own projection: the field expressions read them several
+# times, and an inlined split would run at every read
+_LINES = (
+    "*",
+    f"{ef.receipt_lines(_R_TEXT)} AS _r_lines",
+    f"{ef.invoice_lines(_I_TEXT)} AS _i_lines",
+)
 
+_FIELDS = (
+    "*",
+    *[f"{sql} AS _r_{n}" for n, sql in ef.receipt_fields(_R_TEXT, "_r_lines").items()],
+    *[f"{sql} AS _i_{n}" for n, sql in ef.invoice_fields(_I_TEXT, "_i_lines").items()],
+)
 
-def _invoice_struct(col: Callable[[str], Column]) -> Column:
-    item = lambda i: F.struct(  # noqa: E731
-        i["name"].alias("品名"),
-        i["quantity"].alias("数量"),
-        i["unit_price"].alias("単価"),
-        i["amount"].alias("金額"),
-    )
-    bank = F.when(
-        col("bank_name").isNotNull() | col("account_number").isNotNull(),
-        F.struct(
-            col("bank_name").alias("銀行名"),
-            col("branch_name").alias("支店名"),
-            col("account_type").alias("口座種別"),
-            col("account_number").alias("口座番号"),
-        ),
-    )
-    return F.struct(
-        col("invoice_date").alias("請求日"),
-        col("due_date").alias("支払期限"),
-        col("invoice_number").alias("請求書番号"),
-        col("total_amount").alias("請求金額"),
-        col("subtotal").alias("税抜金額"),
-        col("tax_amount").alias("消費税額"),
-        col("vendor_name").alias("発行元"),
-        col("customer_name").alias("宛先"),
-        bank.alias("振込先"),
-        F.when(F.size(col("items")) > 0, F.transform(col("items"), item)).alias("明細"),
-    )
+_RECEIPT_DATA = """named_struct(
+    '日付', _r_date, '合計金額', _r_total_amount, '店舗名', _r_store_name,
+    '小計', _r_subtotal, '店舗電話番号', _r_store_phone,
+    '明細', CASE WHEN size(_r_items) > 0 THEN transform(_r_items, i -> named_struct(
+        '品名', i.name, '価格', i.price, '数量', i.quantity, '軽減税率', i.reduced_tax)) END,
+    '税額詳細', CASE WHEN _r_tax_rate_8 IS NOT NULL OR _r_tax_rate_10 IS NOT NULL
+        THEN named_struct('8%対象額', _r_tax_rate_8, '10%対象額', _r_tax_rate_10) END,
+    '支払方法', _r_payment_method)"""
+
+_INVOICE_DATA = """named_struct(
+    '請求日', _i_invoice_date, '支払期限', _i_due_date, '請求書番号', _i_invoice_number,
+    '請求金額', _i_total_amount, '税抜金額', _i_subtotal, '消費税額', _i_tax_amount,
+    '発行元', _i_vendor_name, '宛先', _i_customer_name,
+    '振込先', CASE WHEN _i_bank_name IS NOT NULL OR _i_account_number IS NOT NULL
+        THEN named_struct('銀行名', _i_bank_name, '支店名', _i_branch_name,
+                          '口座種別', _i_account_type, '口座番号', _i_account_number) END,
+    '明細', CASE WHEN size(_i_items) > 0 THEN transform(_i_items, i -> named_struct(
+        '品名', i.name, '数量', i.quantity, '単価', i.unit_price, '金額', i.amount)) END)"""
+
+_WARNINGS = (
+    f"CASE WHEN {_IS_R} THEN {ef.receipt_warnings('_r_')}"
+    f" WHEN {_IS_I} THEN {ef.invoice_warnings('_i_')}"
+    " ELSE CAST(array() AS ARRAY<STRING>) END"
+)
+
+_RESULT = (
+    "url",
+    "doc_id",
+    "engine",
+    "doc_type != 'unknown' AS success",
+    "doc_type",
+    "receipt_score_centi",
+    "invoice_score_centi",
+    f"CASE WHEN {_IS_R} THEN {_RECEIPT_DATA} END AS receipt_data",
+    f"CASE WHEN {_IS_I} THEN {_INVOICE_DATA} END AS invoice_data",
+    "text",
+    "title",
+    # warning cap [:20] (ref tesseract_engine.py:195, pipeline.py:200)
+    f"slice({_WARNINGS}, 1, 20) AS warnings",
+)
+
+# the _debug analog (engine/scores) is left out, matching the reference's
+# debug-section strip (pipeline.py:89-95)
+_JSON = """to_json(named_struct(
+    '成功', success, '文書タイプ', doc_type, '領収書データ', receipt_data,
+    '請求書データ', invoice_data, '抽出テキスト', text, 'タイトル', title,
+    '警告', warnings)) AS json"""
 
 
 def assemble_results(extracted: DataFrame) -> DataFrame:
-    """extraction rows -> final result rows (url, doc_type, confidence
-    scores, receipt_data/invoice_data structs, text, title, warnings)."""
-    is_r = F.col("doc_type") == "receipt"
-    is_i = F.col("doc_type") == "invoice"
-    r_text = F.when(is_r, F.col("text"))
-    i_text = F.when(is_i, F.col("text"))
-    # lines in their own projection: the field expressions read them
-    # several times, and an inlined split would run at every read
-    lined = extracted.select(
-        "*",
-        ef.receipt_lines(r_text).alias("_r_lines"),
-        ef.invoice_lines(i_text).alias("_i_lines"),
-    )
-    fields = lined.select(
-        "*",
-        *[c.alias("_r_" + n) for n, c in ef.receipt_fields(r_text, F.col("_r_lines")).items()],
-        *[c.alias("_i_" + n) for n, c in ef.invoice_fields(i_text, F.col("_i_lines")).items()],
-    )
-    r_col = lambda n: F.col("_r_" + n)  # noqa: E731
-    i_col = lambda n: F.col("_i_" + n)  # noqa: E731
-    warnings = (
-        F.when(is_r, ef.receipt_warnings_col(r_col))
-        .when(is_i, ef.invoice_warnings_col(i_col))
-        .otherwise(F.array().cast("array<string>"))
-    )
-    return fields.select(
-        "url",
-        "doc_id",
-        "engine",
-        (F.col("doc_type") != "unknown").alias("success"),
-        "doc_type",
-        "receipt_score_centi",
-        "invoice_score_centi",
-        F.when(is_r, _receipt_struct(r_col)).alias("receipt_data"),
-        F.when(is_i, _invoice_struct(i_col)).alias("invoice_data"),
-        "text",
-        "title",
-        # warning cap [:20] (ref tesseract_engine.py:195, pipeline.py:200)
-        F.slice(warnings, 1, 20).alias("warnings"),
-    )
+    """extraction rows -> final result rows (url, doc_id, engine, success,
+    doc_type, confidence scores, receipt_data/invoice_data structs, text,
+    title, warnings)."""
+    return extracted.selectExpr(*_LINES).selectExpr(*_FIELDS).selectExpr(*_RESULT)
 
 
 def to_json_rows(results: DataFrame) -> DataFrame:
-    """(url, json) — to_json drops null fields (see module docstring); the
-    _debug analog (engine/scores) is excluded by projection, matching the
-    reference's debug-section strip (pipeline.py:89-95)."""
-    payload = F.struct(
-        F.col("success").alias("成功"),
-        F.col("doc_type").alias("文書タイプ"),
-        F.col("receipt_data").alias("領収書データ"),
-        F.col("invoice_data").alias("請求書データ"),
-        F.col("text").alias("抽出テキスト"),
-        F.col("title").alias("タイトル"),
-        F.col("warnings").alias("警告"),
-    )
-    return results.select("url", F.to_json(payload).alias("json"))
+    """(url, json) — to_json drops null fields (see module docstring)."""
+    return results.selectExpr("url", _JSON)
 
 
 def write_json(results: DataFrame, path: str) -> None:

@@ -36,7 +36,7 @@ def test_clean_text_fuzz_parity(spark):
     df = spark.createDataFrame([(s,) for s in cases], ["raw"])
     from image_ocr_spark.functions.normalize import clean_text
 
-    got = [r[0] for r in df.select(clean_text(F.col("raw"))).collect()]
+    got = [r[0] for r in df.select(F.expr(clean_text("raw"))).collect()]
     for s, g in zip(cases, got):
         assert g == pn.clean_text(s), repr(s)
 
@@ -50,8 +50,8 @@ def test_fold_and_amount_fuzz_parity(spark):
     )
 
     rows = df.select(
-        fold_alnum_upper(F.col("raw")).alias("f"),
-        normalize_amount_ocr(F.col("raw")).alias("a"),
+        F.expr(fold_alnum_upper("raw")).alias("f"),
+        F.expr(normalize_amount_ocr("raw")).alias("a"),
     ).collect()
     for s, r in zip(cases, rows):
         assert r.f == pn.fold_alnum_upper(s), repr(s)

@@ -93,10 +93,10 @@ def test_company_fix_py(raw, expected):
     assert pn.fix_company_name(raw) == expected
 
 
-def _spark_eval(spark, cases, col_builder):
-    """Evaluate a column builder over the case inputs in one Spark job."""
+def _spark_eval(spark, cases, sql_builder):
+    """Evaluate a SQL-text builder over the case inputs in one Spark job."""
     df = spark.createDataFrame([(c[0],) for c in cases], ["raw"])
-    return [r[0] for r in df.select(col_builder(F.col("raw"))).collect()]
+    return [r[0] for r in df.selectExpr(sql_builder("raw")).collect()]
 
 
 def test_normalize_date_spark(spark):
@@ -134,6 +134,42 @@ def test_company_fix_spark(spark):
     assert got == [exp for _, exp in COMPANY_CASES]
 
 
+def _strings(value):
+    """The strings of a constant: itself, or those in its list, tuple or
+    dict (keys and values)."""
+    if isinstance(value, str):
+        yield value
+    elif isinstance(value, dict):
+        for k, v in value.items():
+            yield from _strings(k)
+            yield from _strings(v)
+    elif isinstance(value, (list, tuple)):
+        for v in value:
+            yield from _strings(v)
+
+
+def test_sql_literal_round_trip(spark):
+    """Every pycore literal the SQL-text builders quote comes back from
+    Spark's parser unchanged: the regex patterns (backslashes), keyword
+    lists, era and company tables, the strip set (Unicode spaces, NEL, LS,
+    PS), the clean-text steps (raw CR, LF, tab) and the control class."""
+    from image_ocr_spark.functions import normalize as sn
+    from image_ocr_spark.operators import blocks
+    from image_ocr_spark.pycore import fields as pf
+
+    public = [
+        v for m in (pf, pn) for k, v in vars(m).items() if k.isupper() and not k.startswith("_")
+    ]
+    literals = list(dict.fromkeys(_strings(
+        public + [sn._PY_STRIP_CHARS, sn._CLEAN_STEPS, blocks._CTRL_CLASS]
+    )))
+    assert {pf.P_ITEM_ROW, *pf.P_COMPANY, *pn.ERA_BASE, "\r\n"} <= set(literals)
+    row = spark.range(1).selectExpr(
+        *[f"{sn.sql_literal(s)} AS c{i}" for i, s in enumerate(literals)]
+    ).first()
+    assert list(row) == literals
+
+
 def test_spark_py_agree_on_fuzz(spark):
     """Cross-check Spark vs pycore on generated noisy inputs."""
     inputs = []
@@ -143,10 +179,10 @@ def test_spark_py_agree_on_fuzz(spark):
     df = spark.createDataFrame([(s,) for s in inputs], ["raw"])
     from image_ocr_spark.functions import normalize as sn
 
-    got = df.select(
-        sn.normalize_date(F.col("raw")).alias("d"),
-        sn.normalize_amount(F.col("raw")).alias("a"),
-        sn.normalize_amount_ocr(F.col("raw")).alias("o"),
+    got = df.selectExpr(
+        f"{sn.normalize_date('raw')} AS d",
+        f"{sn.normalize_amount('raw')} AS a",
+        f"{sn.normalize_amount_ocr('raw')} AS o",
     ).collect()
     for s, row in zip(inputs, got):
         assert row.d == pn.normalize_date(s), s

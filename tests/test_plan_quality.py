@@ -322,20 +322,15 @@ def test_classify_folds_text_once(spark, pages_path):
     assert plan.count("translate(") == 1, plan
 
 
-def test_flagship_plan_py4j_calls(spark, pages_path, monkeypatch):
-    """Building the flagship plan over an already-read table takes a few
-    hundred Py4J round trips: the rollup and classify projections are SQL
-    text, one selectExpr each.  As Column trees (one call per lambda,
-    literal and alias) they took about 2,000.  Memory-delete commands are
-    not counted: py4j sends one whenever Python's garbage collector frees
-    a proxy, including proxies left by earlier code.  The rest of the count
-    is deterministic where a build time is not."""
+def _py4j_calls(build, pages, monkeypatch) -> int:
+    """Py4J commands sent while ``build(pages)`` builds its plan.
+    Memory-delete commands are not counted: py4j sends one whenever
+    Python's garbage collector frees a proxy, including proxies left by
+    earlier code.  The rest of the count is deterministic where a build
+    time is not."""
     from py4j import protocol
     from py4j.java_gateway import GatewayClient
 
-    from image_ocr_spark.plans.pipeline import extract_pages
-
-    pages = spark.read.parquet(pages_path)
     send, calls = GatewayClient.send_command, []
     delete = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
 
@@ -345,9 +340,41 @@ def test_flagship_plan_py4j_calls(spark, pages_path, monkeypatch):
         return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(GatewayClient, "send_command", counted)
-    extract_pages(pages)
+    build(pages)
     monkeypatch.undo()
-    n_calls = len(calls)
+    return len(calls)
+
+
+def test_flagship_plan_py4j_calls(spark, pages_path, monkeypatch):
+    """Building the flagship plan over an already-read table takes a few
+    hundred Py4J round trips: the rollup and classify projections are SQL
+    text, one selectExpr each.  As Column trees (one call per lambda,
+    literal and alias) they took about 2,000."""
+    from image_ocr_spark.plans.pipeline import extract_pages
+
+    n_calls = _py4j_calls(extract_pages, spark.read.parquet(pages_path), monkeypatch)
+    assert n_calls <= 400, n_calls
+
+
+@pytest.mark.parametrize("plan", ["pages_json", "receipt_fields", "invoice_fields"])
+def test_pages_plans_py4j_calls(spark, pages_path, monkeypatch, plan):
+    """The plans built on top of the flagship stay within the same bound:
+    the field sets, the result row and its JSON are SQL text too.  As
+    Column trees the JSON plan took about 13,000 calls and each field
+    plan 5,000-7,000."""
+    from image_ocr_spark.functions.extract_fields import (
+        extract_invoice_fields_df,
+        extract_receipt_fields_df,
+    )
+    from image_ocr_spark.plans.pipeline import extract_pages
+    from image_ocr_spark.plans.results import assemble_results, to_json_rows
+
+    build = {
+        "pages_json": lambda p: to_json_rows(assemble_results(extract_pages(p))),
+        "receipt_fields": lambda p: extract_receipt_fields_df(extract_pages(p)),
+        "invoice_fields": lambda p: extract_invoice_fields_df(extract_pages(p)),
+    }[plan]
+    n_calls = _py4j_calls(build, spark.read.parquet(pages_path), monkeypatch)
     assert n_calls <= 400, n_calls
 
 
