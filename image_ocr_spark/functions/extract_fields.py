@@ -103,6 +103,13 @@ def _first(lines: str, value: str, keep: str) -> str:
     return f"get(filter(transform({lines}, l -> {value}), x -> {keep}), 0)"
 
 
+def _quantity(digits: str) -> str:
+    """pycore ``parse_quantity``: the INT of ``digits``, NULL past
+    QTY_MAX_DIGITS digits (an ANSI ``CAST`` of a longer one can overflow
+    and fail the job)."""
+    return f"CASE WHEN length({digits}) <= {pf.QTY_MAX_DIGITS} THEN CAST({digits} AS INT) END"
+
+
 def _items(lines: str, parse: str) -> str:
     return f"filter(transform({lines}, l -> {parse}), x -> {_NOT_NULL})"
 
@@ -123,7 +130,7 @@ _FIRST_AMOUNT = _amount("l", pf.P_AMOUNT_ANY)
 # (ref receipt.py:360-400), in three bindings: ``amts`` both amount
 # matches; ``pn`` the price and the name before the matched amount (match
 # start semantics) less the reduced-tax markers; ``nq`` the name and
-# quantity once a ×N suffix is split off.
+# quantity once a ×N suffix (its digits bound to ``q``) is split off.
 _EOL, _SYM = sql_literal(pf.P_AMOUNT_EOL), sql_literal(pf.P_AMOUNT_SYM)
 _AMOUNTS = f"named_struct('eol', regexp_extract(l, {_EOL}, 1), 'sym', regexp_extract(l, {_SYM}, 1))"
 _PRICE = normalize_amount("coalesce(nullif(amts.eol, ''), nullif(amts.sym, ''))")
@@ -133,11 +140,12 @@ _NAME0 = (
 )
 for _mk in pf.REDUCED_TAX_MARKERS:
     _NAME0 = f"trim(replace({_NAME0}, {sql_literal(_mk)}))"
-_QTY = f"regexp_extract(pn.name0, {sql_literal(pf.P_QTY)}, 1)"
-_NAME_QTY = (
-    f"named_struct('name', CASE WHEN {_QTY} != '' THEN trim(regexp_extract(pn.name0,"
+_NAME_QTY = _let(
+    f"regexp_extract(pn.name0, {sql_literal(pf.P_QTY)}, 1)",
+    "q",
+    f"named_struct('name', CASE WHEN q != '' THEN trim(regexp_extract(pn.name0,"
     f" {sql_literal('^(.*?)' + pf.P_QTY)}, 1)) ELSE pn.name0 END,"
-    f" 'qty', CASE WHEN {_QTY} != '' THEN CAST({_QTY} AS INT) ELSE 1 END)"
+    f" 'qty', CASE WHEN q != '' THEN {_quantity('q')} ELSE 1 END)",
 )
 _ITEM = (
     f"CASE WHEN nq.name != '' AND pn.price IS NOT NULL AND pn.price > 0"
@@ -167,7 +175,7 @@ _INVOICE_ITEM = "CASE WHEN l RLIKE %s THEN %s END" % (
         f"CASE WHEN cells.qty != '' AND trim(cells.name) != ''"
         f" AND NOT {_any('trim(cells.name)', pf.INVOICE_ITEM_VETO)}"
         f" AND {_ROW_AMOUNT} IS NOT NULL AND {_ROW_AMOUNT} != 0"
-        f" THEN named_struct('name', trim(cells.name), 'quantity', CAST(cells.qty AS INT),"
+        f" THEN named_struct('name', trim(cells.name), 'quantity', {_quantity('cells.qty')},"
         f" 'unit_price', {_ROW_UNIT}, 'amount', {_ROW_AMOUNT}) END",
     ),
 )

@@ -111,7 +111,10 @@ def _pairs_sharing(
 
     ``max_df`` first drops keys held by more than max_df rows, so no
     key's pair fan-out exceeds max_df^2 (a boilerplate key in millions of
-    docs would otherwise be one near-quadratic bucket).
+    docs would otherwise be one near-quadratic bucket).  The count is a
+    window over the keys, so it rides the exchange the self-join needs and
+    keyed is computed once; a groupBy count joined back computed it twice
+    (two signature passes in fingerprint_match_pairs).
 
     ``sides`` names two boolean columns of keyed, neither carried: the
     rows that may take the id_a side of a pair, and those that may take
@@ -125,13 +128,8 @@ def _pairs_sharing(
     candidates at sf0.1 / 16 cores.
     """
     if max_df is not None:
-        rare = (
-            keyed.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_df)
-            .select(*keys)
-        )
-        keyed = keyed.join(rare, keys)
+        doc_freq = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        keyed = keyed.withColumn("_df", doc_freq).filter(F.col("_df") <= max_df).drop("_df")
     skip = ["id", *keys, *(sides or ())]
     carried = [c for c in keyed.columns if c not in skip]
     keyed = keyed.hint("shuffle_hash")

@@ -40,11 +40,26 @@ stale answer.  Spark's pandas passes convert their input with
 ``to_pandas`` and cast their output to the declared Spark type, so they
 return the same types and values (tests/test_arrow_boundary.py checks
 this in a reused worker).
+
+What each Python task pays before its first batch, whatever its rows:
+Spark hands the task to a reused worker, and PySpark's
+``setup_spark_files`` calls ``importlib.invalidate_caches()``.  On Python
+3.11 that makes every ``zipimporter`` on the worker's path re-read its
+archive's whole central directory: 16 of them in a batch-pass worker
+(pyspark.zip's root and 11 of its subpackages at 10-12.6 ms each, the
+Spark core jar and its ``/org`` entry at 46 / 50 ms, py4j's zip), 150-270
+ms per task on a 4-core host.  So every worker-side entry here and the
+WARC writer first call ``_lazy_zip_rereads``, after which an archive is
+re-read only when its (mtime, size) changed: a worker's first task still
+pays, its later ones do not.  CPython 3.13 made the stdlib re-read lazy,
+and there the helper does nothing.
 """
 
 from __future__ import annotations
 
+import os
 import sys
+import zipimport
 from contextlib import contextmanager
 from typing import Callable, Iterable, Iterator, Sequence, Union
 
@@ -78,6 +93,49 @@ def no_pandas() -> Iterator[None]:
         sys.meta_path.remove(_NoPandasFinder)
 
 
+_stdlib_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _archive_stamp(archive: str) -> tuple:
+    st = os.stat(archive)
+    return st.st_mtime_ns, st.st_size
+
+
+def _reread_if_changed(importer: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when its (mtime, size) changed since this importer last
+    read it.  An archive that cannot be stat'ed gets the stdlib re-read."""
+    try:
+        stamp = _archive_stamp(importer.archive)
+    except OSError:
+        stamp = None
+    if stamp is None or stamp != getattr(importer, "_stamp", None):
+        _stdlib_invalidate(importer)
+        importer._stamp = stamp
+
+
+def _lazy_zip_rereads() -> None:
+    """Stop this Python worker's later tasks from re-reading unchanged zip
+    archives; idempotent, called first by every worker-side entry.
+
+    Each task's ``setup_spark_files`` calls ``importlib.invalidate_caches``,
+    and on Python < 3.13 that makes every ``zipimporter`` re-read its
+    archive's whole directory (CPython 3.13 only drops the cache).  The
+    importers present now were re-read by this task's own setup moments
+    ago, so they are stamped as read."""
+    if sys.version_info >= (3, 13):
+        return
+    if zipimport.zipimporter.invalidate_caches is _reread_if_changed:
+        return
+    for importer in list(sys.path_importer_cache.values()):
+        if isinstance(importer, zipimport.zipimporter):
+            try:
+                importer._stamp = _archive_stamp(importer.archive)
+            except OSError:
+                pass
+    zipimport.zipimporter.invalidate_caches = _reread_if_changed
+
+
 def _struct(schema: Union[str, StructType]) -> StructType:
     return StructType.fromDDL(schema) if isinstance(schema, str) else schema
 
@@ -96,6 +154,7 @@ def map_batches(
     arrow = to_arrow_schema(struct)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _lazy_zip_rereads()
         for batch in batches:
             if batch.num_rows:
                 with no_pandas():
@@ -146,6 +205,7 @@ def map_groups(
     arrow = to_arrow_schema(struct)
 
     def run(table):
+        _lazy_zip_rereads()
         with no_pandas():
             cols = [c.combine_chunks() for c in table.columns]
             return pa.Table.from_arrays(fn(*cols), schema=arrow)

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from image_ocr_spark.operators.rowmap import map_rows, no_pandas
+from image_ocr_spark.operators.rowmap import _lazy_zip_rereads, map_rows, no_pandas
 
 READ_WARC_SCHEMA = "url string, warc_ts long, content_type string, payload binary"
 WARC_STATS_SCHEMA = "n_records long, n_skipped long, truncated boolean"
@@ -88,6 +88,7 @@ def read_warc_stats(chunks: DataFrame) -> DataFrame:
 
 def _write_batches(max_chunk_bytes: int, schema: pa.Schema):
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _lazy_zip_rereads()
         from image_ocr_spark.pycore.warc import (
             build_response_record,
             build_warc_gz,

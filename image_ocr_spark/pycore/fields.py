@@ -46,6 +46,9 @@ P_TAX10 = r"(?:10%|１０%|10％|１０％)[^\n]*?[¥￥]? ?([0-9,，]+)"
 P_SUBTOTAL_KW = r"(?:税抜金額|税抜|小計)[: ：]*[¥￥]? ?([0-9,，]+)"
 P_TAXAMT_KW = r"(?:消費税額|消費税|税額)[: ：]*[¥￥]? ?([0-9,，]+)"
 P_QTY = r"[×x] ?([0-9]+)"
+# an item quantity of more digits than this reads as None: every 9-digit
+# quantity fits the 32-bit INT the Spark item structs declare
+QTY_MAX_DIGITS = 9
 P_ITEM_ROW = r"(.{2,30}?) +([0-9]+) +[¥￥]?([0-9,，]+) +[¥￥]?([0-9,，]+)"
 P_COMPANY = [
     r"(株式会社[^ \n]{1,30})",
@@ -267,6 +270,12 @@ def extract_receipt_items(text: str) -> List[Dict]:
     return items
 
 
+def parse_quantity(digits: str) -> Optional[int]:
+    """Item-quantity digits -> int, None past QTY_MAX_DIGITS digits
+    (mirrored in functions/extract_fields.py)."""
+    return int(digits) if len(digits) <= QTY_MAX_DIGITS else None
+
+
 def parse_item_line(line: str) -> Optional[Dict]:
     """Line -> (name, price, qty, reduced_tax) or None (ref receipt.py:360-400)."""
     reduced = any(mk in line for mk in REDUCED_TAX_MARKERS)
@@ -280,7 +289,7 @@ def parse_item_line(line: str) -> Optional[Dict]:
     qty = 1
     qm = _RX_QTY.search(name)
     if qm:
-        qty = int(qm.group(1))
+        qty = parse_quantity(qm.group(1))
         name = name[: qm.start()].strip()
     if name and price and price > 0:
         if not any(kw in name for kw in ITEM_NAME_VETO):
@@ -330,7 +339,7 @@ def extract_invoice_items(text: str) -> List[Dict]:
             items.append(
                 {
                     "name": name,
-                    "quantity": int(m.group(2)),
+                    "quantity": parse_quantity(m.group(2)),
                     "unit_price": normalize_amount(m.group(3)),
                     "amount": amount,
                 }

@@ -13,6 +13,13 @@ pass starts in a fresh worker, and so is the one trade-off it makes: a
 pandas pass in a worker that a guarded pass left behind returns the same
 types and values as in a fresh worker.
 
+Each worker-side entry (``map_batches``, ``map_groups``, the WARC
+writer) first installs ``rowmap._lazy_zip_rereads``, so a reused worker's
+later tasks do not re-read every unchanged zip archive on its path.  The
+guard checks each entry calls it; the helper itself is checked here on
+archives of its own, and in the worker probe by counting the directory
+reads before each of three tasks in one worker.
+
 ``map_batches`` skips empty input batches, so no kernel sees one: the
 numpy kernels in ``similarity`` divide by a batch's row count.  Each
 operator that runs a batch pass is checked on an empty input and on one
@@ -20,10 +27,13 @@ row spread over four partitions (three of them empty).
 """
 
 import ast
+import importlib
 import json
 import os
 import subprocess
 import sys
+import zipfile
+import zipimport
 from pathlib import Path
 
 import pytest
@@ -84,6 +94,126 @@ def test_pandas_only_in_the_streaming_state_operator():
     )
 
 
+def _worker_entries():
+    """(module.def, entry) for every function the library hands to Spark's
+    Python workers: the first argument of each ``.mapInArrow(`` /
+    ``.applyInArrow(``, a nested def of the calling function, or the def a
+    module-level factory called there returns."""
+    for path in sorted(LIB.rglob("*.py")):
+        tops = {
+            n.name: n
+            for n in ast.parse(path.read_text(), str(path)).body
+            if isinstance(n, ast.FunctionDef)
+        }
+        for top in tops.values():
+            for n in ast.walk(top):
+                if not (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("mapInArrow", "applyInArrow")
+                ):
+                    continue
+                arg, scope = n.args[0], top
+                if isinstance(arg, ast.Call):
+                    scope = tops[arg.func.id]
+                    arg = [r.value for r in scope.body if isinstance(r, ast.Return)][-1]
+                entry = next(
+                    d for d in ast.walk(scope)
+                    if isinstance(d, ast.FunctionDef) and d.name == arg.id
+                )
+                yield f"{path.stem}.{top.name}", entry
+
+
+def test_worker_entries_install_lazy_zip_rereads():
+    """Every worker-side entry calls ``_lazy_zip_rereads()`` before
+    anything else it runs."""
+    entries = dict(_worker_entries())
+    assert set(entries) == {
+        "rowmap.map_batches", "rowmap.map_groups", "warcsource.pages_to_warc"
+    }
+    missing = [
+        name
+        for name, entry in entries.items()
+        if ast.unparse(entry.body[0]) != "_lazy_zip_rereads()"
+    ]
+    assert not missing, f"worker entries that do not start with _lazy_zip_rereads(): {missing}"
+
+
+@pytest.fixture
+def zip_reads(monkeypatch, tmp_path):
+    """(archive, reads): a zip on ``sys.path`` holding module ``zm_a``, and
+    the directory reads of that archive since the fixture began.  The
+    stdlib ``invalidate_caches`` and ``sys.path`` come back afterwards."""
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zm_a.py", "VALUE = 1\n")
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    reads = []
+    read = zipimport._read_directory
+
+    def counted(path):
+        reads.append(path)
+        return read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    monkeypatch.syspath_prepend(str(archive))
+    yield archive, reads
+    for name in ("zm_a", "zm_b"):
+        sys.modules.pop(name, None)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="the stdlib re-read is lazy")
+def test_lazy_zip_rereads_skip_an_unchanged_archive(zip_reads):
+    from image_ocr_spark.operators.rowmap import _lazy_zip_rereads
+
+    archive, reads = zip_reads
+    assert importlib.import_module("zm_a").VALUE == 1
+    importlib.invalidate_caches()
+    assert reads.count(str(archive)) >= 1  # the stdlib re-reads it
+    _lazy_zip_rereads()
+    _lazy_zip_rereads()
+    reads.clear()
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert reads.count(str(archive)) == 0
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="the stdlib re-read is lazy")
+def test_lazy_zip_rereads_reread_a_rewritten_archive(zip_reads):
+    from image_ocr_spark.operators.rowmap import _lazy_zip_rereads
+
+    archive, reads = zip_reads
+    assert importlib.import_module("zm_a").VALUE == 1
+    _lazy_zip_rereads()
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zm_a.py", "VALUE = 1\n")
+        z.writestr("zm_b.py", "VALUE = 2\n")
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads.count(str(archive)) == 1
+    assert importlib.import_module("zm_b").VALUE == 2
+    reads.clear()
+    importlib.invalidate_caches()
+    assert reads.count(str(archive)) == 0
+
+
+def test_lazy_zip_rereads_change_nothing_from_python_3_13(zip_reads, monkeypatch):
+    from image_ocr_spark.operators.rowmap import _lazy_zip_rereads
+
+    importlib.import_module("zm_a")
+    stdlib = zipimport.zipimporter.invalidate_caches
+    importers = [
+        f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)
+    ]
+    before = [vars(f).copy() for f in importers]
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    _lazy_zip_rereads()
+    assert zipimport.zipimporter.invalidate_caches is stdlib
+    assert [vars(f) for f in importers] == before
+
+
 def test_kernel_arrow_conversions_are_typed():
     """Under ``rowmap.no_pandas`` an untyped ``pa.array`` retries the
     blocked pandas import on every call; a typed one does not."""
@@ -124,6 +254,15 @@ def probe():
 def test_python_workers_never_load_pandas(probe, boundary):
     got = probe[boundary]
     assert got["pandas"] and not any(got["pandas"]), got
+
+
+def test_reused_worker_skips_unchanged_zip_archives(probe):
+    """Three one-task passes in one worker: the 2nd and 3rd tasks' start
+    re-reads no zip archive (Python 3.11's ``invalidate_caches`` re-read
+    the pyspark, py4j and Spark jar directories, 16 reads, per task)."""
+    got = probe["zip_rereads"]
+    assert len(got["pids"]) == 1, got
+    assert got["reads"] == [[-1], [0], [0]], got
 
 
 def test_pandas_pass_in_a_reused_guarded_worker(probe):

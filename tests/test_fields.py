@@ -60,6 +60,20 @@ def test_item_line_vetoes():
     assert ff.parse_item_line("コーヒー ×3 ¥450")["quantity"] == 3
 
 
+def test_long_quantity_reads_none():
+    """A quantity of more than QTY_MAX_DIGITS digits reads as None and the
+    item stays; nine digits still read."""
+    assert ff.QTY_MAX_DIGITS == 9
+    assert ff.parse_item_line("りんご x 12345678901 ¥100") == {
+        "name": "りんご", "price": 100, "quantity": None, "reduced_tax": False
+    }
+    assert ff.parse_item_line("りんご x 123456789 ¥100")["quantity"] == 123456789
+    assert ff.extract_invoice_items("ペン 12345678901 100 1,200") == [
+        {"name": "ペン", "quantity": None, "unit_price": 100, "amount": 1200}
+    ]
+    assert ff.extract_invoice_items("ペン 123456789 100 1,200")[0]["quantity"] == 123456789
+
+
 def test_payment_priority():
     assert ff.extract_payment_method("現金 でも カード") == "現金"
     assert ff.extract_payment_method("カードのみ") == "クレジットカード"

@@ -119,3 +119,27 @@ def test_invoice_dates_near_keywords_match_pycore(spark):
         oracle = extract_invoice_fields(text)
         for k in INVOICE_SCALARS:
             assert getattr(got[url], k) == oracle[k], (text, k)
+
+
+def test_long_item_quantities_match_pycore(spark):
+    """Item quantities around QTY_MAX_DIGITS: one past 2^31-1 used to fail
+    the whole job (an ANSI CAST AS INT); now both engines read a quantity
+    of more than nine digits as NULL and keep the item."""
+    from image_ocr_spark.pycore.fields import extract_invoice_items, extract_receipt_items
+
+    receipts = ["りんご x 12345678901 ¥100", "りんご x 1234567890 ¥100", "りんご x 123456789 ¥100"]
+    invoices = ["ペン 12345678901 100 1,200", "ペン 1234567890 100 1,200", "ペン 123456789 100 1,200"]
+    df = spark.createDataFrame(list(enumerate(receipts)), "url int, text string")
+    got = {r.url: r for r in extract_receipt_fields_df(df).collect()}
+    for url, text in enumerate(receipts):
+        s_items = [(i.name, i.price, i.quantity, i.reduced_tax) for i in got[url].items]
+        o_items = [tuple(i.values()) for i in extract_receipt_items(text)]
+        assert s_items == o_items, text
+    assert [got[u].items[0].quantity for u in range(3)] == [None, None, 123456789]
+    df = spark.createDataFrame(list(enumerate(invoices)), "url int, text string")
+    got = {r.url: r for r in extract_invoice_fields_df(df).collect()}
+    for url, text in enumerate(invoices):
+        s_items = [(i.name, i.quantity, i.unit_price, i.amount) for i in got[url].items]
+        o_items = [tuple(i.values()) for i in extract_invoice_items(text)]
+        assert s_items == o_items, text
+    assert [got[u].items[0].quantity for u in range(3)] == [None, None, 123456789]

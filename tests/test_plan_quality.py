@@ -409,7 +409,7 @@ _PAIR_ARROW_PASSES = {
     "minhash_lsh_pairs": 2,
     "simhash_hamming_pairs": 2,
     "ngram_jaccard_pairs": 1,
-    "fingerprint_match_pairs": 4,
+    "fingerprint_match_pairs": 2,
 }
 
 
@@ -437,6 +437,21 @@ def test_capped_minhash_one_signature_pass(spark, documents):
     from image_ocr_spark.operators.dedup import minhash_lsh_pairs, with_variants
 
     df = minhash_lsh_pairs(with_variants(documents), max_bucket=2)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, final
+
+
+def test_fingerprint_pairs_one_winnow_pass(spark):
+    """The df cap is a window over the candidate join's own exchange, so
+    the executed fingerprint_pairs plan runs the winnow pass once (a
+    groupBy count joined back to the keyed relation ran it twice)."""
+    import __spark_entry__ as entry
+
+    from tests.conftest import SF_DIR
+
+    df = entry.queries()["fingerprint_pairs"](spark, SF_DIR)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]

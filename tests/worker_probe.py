@@ -12,6 +12,10 @@ reuses that one worker:
   returns a categorical and a tz-aware timestamp column, in the worker
   the first pass left behind.  ``fresh`` runs the same pandas pass in a
   worker that ran no batch pass.
+- ``zip_rereads``: three ``map_batches`` passes, one task each, in one
+  worker.  The kernel counts the worker's zip archive directory reads
+  (``zipimport._read_directory``) since its previous call, so the 2nd
+  and 3rd passes report what each task's start re-read.
 
 tests/test_arrow_boundary.py runs it in a subprocess: the shared test
 session's workers have run whatever earlier tests ran.
@@ -53,6 +57,28 @@ def _probe_group(id, key) -> list:
     return [pa.array([loaded], pa.bool_()), pa.array([pid], pa.int64())]
 
 
+def _zip_reads(id, key) -> list:
+    """The worker's zip directory reads since this kernel's previous call
+    in it, -1 on the first call (which starts the count).  The count lives
+    on the wrapper in ``zipimport``: this module runs as ``__main__``, so
+    each task unpickles its own copy of it."""
+    import zipimport
+
+    read = zipimport._read_directory
+    if hasattr(read, "reads"):
+        n, read.reads = read.reads, 0
+    else:
+
+        def counted(archive):
+            counted.reads += 1
+            return read(archive)
+
+        counted.reads = 0
+        zipimport._read_directory = counted
+        n = -1
+    return [pa.array([n] * len(id), pa.int64()), pa.array([os.getpid()] * len(id), pa.int64())]
+
+
 def _pandas_pass(spark) -> dict:
     def frame(pdf):
         import pandas as pd
@@ -86,6 +112,12 @@ def _section(name: str) -> dict:
         if name == "fresh":
             return _pandas_pass(spark)
         df = spark.range(8, numPartitions=1).selectExpr("id", "id % 2 AS key")
+        if name == "zip_rereads":
+            passes = [map_batches(df, _zip_reads, "reads long, pid long").collect() for _ in range(3)]
+            return {
+                "reads": [sorted({r.reads for r in rows}) for rows in passes],
+                "pids": sorted({r.pid for rows in passes for r in rows}),
+            }
         if name == "map_rows":
             out = map_rows(df, _probe_row, PROBE_SCHEMA)
         elif name == "map_groups":
@@ -102,7 +134,7 @@ def _section(name: str) -> dict:
 
 
 def main() -> None:
-    names = ("map_batches", "map_rows", "map_groups", "reused", "fresh")
+    names = ("map_batches", "map_rows", "map_groups", "reused", "fresh", "zip_rereads")
     print(json.dumps({name: _section(name) for name in names}))
 
 
