@@ -1,18 +1,18 @@
 """Similarity search over embedding columns (array<float>).
 
-Two search paths, both scored in vectorized Arrow batches (mapInArrow +
-numpy; Spark's higher-order array functions are interpreted per element
-and measured ~10x slower at sf0.1):
-- brute-force cosine top-k: queries x corpus cross product, scored pair
-  by pair.  Correctness baseline; at scale the corpus side is the big
-  relation and the (small) query set broadcasts.
+Every cosine in this module is one numpy kernel, ``_fold_cos``, run in
+vectorized Arrow batches (``rowmap.map_batches``; Spark's higher-order
+array functions are interpreted per element and measured ~10x slower at
+sf0.1).  Two search paths, each ONE batch pass over the corpus against
+the query matrix, which is collected on the driver and broadcast:
+- brute-force cosine top-k: every query scores every corpus row.
+  Correctness baseline.
 - IVF top-k (the scale path): centroids trained with deterministic Lloyd
   iterations (k-means) seeded by a greedy farthest-point sweep (the
   deterministic k-means++ variant) over a deterministic hash sample of the
-  corpus; every vector is assigned to its nearest centroid in the scan
-  stage (centroids broadcast); search probes the query's `nprobe` nearest
-  cells — the classic inverted-file pruning, expressed as an equi-join on
-  cell id.
+  corpus; the pass assigns each corpus row to its nearest centroid and
+  scores it only against the queries whose `nprobe` nearest cells include
+  that cell — the classic inverted-file pruning.
 
 Determinism across engines and partitionings:
 - Cosine accumulates in double, dimension-ascending (the left-to-right
@@ -41,7 +41,7 @@ a deterministic O(sample_size) hash sample for the init.
 from __future__ import annotations
 
 import math
-from typing import List, Optional, Tuple
+from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -57,148 +57,47 @@ DUP_COS_MILLI = 990  # floor(1000*cos) at which two embeddings are near-dups
 DUP_TRAIN_ITERS = 1  # Lloyd iterations behind the near-dup blocking cells
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Left-to-right fold cosine over two array columns (as double).
-
-    Zero-norm (all-zero) vectors have no direction: the result is NULL for
-    them rather than a DIVIDE_BY_ZERO (Spark 4 ANSI raises even for
-    doubles) or a ranking-poisoning NaN — degenerate rows sort last / are
-    filtered by every consumer.  The guard never changes the arithmetic of
-    non-degenerate rows, so oracle bit-parity is unaffected."""
-    zero = F.lit(0.0)
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        zero,
-        lambda acc, v: acc + v,
-    )
-    na = F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        zero,
-        lambda acc, v: acc + v,
-    )
-    nb = F.aggregate(
-        F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-        zero,
-        lambda acc, v: acc + v,
-    )
-    n2 = na * nb
-    return F.when(n2 > 0, dot / F.sqrt(n2))
-
-
-def _pair_sim_arrow(pairs: DataFrame) -> DataFrame:
-    """(query_id, neighbor_id, sim) from (query_id, neighbor_id, qv, cv)
-    via mapInArrow — fold-order-exact cosine, vectorized across pairs
-    (NULL for zero-norm vectors, like cosine_sim)."""
-    import pyarrow as pa
+def _fold_cos(A, B):
+    """(n, m) cosines of the rows of A (n, d) against the rows of B (m, d),
+    float64: the left-to-right fold cosine of the DuckDB oracle's
+    list_reduce.  Each row's norm and each pair's dot accumulate
+    dimension-ascending (acc = acc + x[j] * y[j]), so every entry is
+    bitwise the sequential fold; numpy only vectorizes ACROSS rows, and
+    IEEE multiply is commutative, so fold(A, B) == fold(B, A).T bit for
+    bit.  A zero-norm row on either side has no direction: its entries are
+    -inf, which no argmax picks and no search or pair scorer emits."""
     import numpy as np
 
-    def fn(qid, nid, qv, cv):
-        n = len(qid)
-        _, A = _flat_f64(qv, n)
-        _, B = _flat_f64(cv, n)
-        d = A.shape[1]
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        dot = np.zeros(n)
-        for j in range(d):
-            x, y = A[:, j], B[:, j]
-            na = na + x * x
-            nb = nb + y * y
-            dot = dot + x * y
-        n2 = na * nb
-        ok = n2 > 0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sim = np.where(ok, dot / np.sqrt(n2), 0.0)
-        return [qid, nid, pa.array(sim, pa.float64(), mask=~ok)]
-
-    return map_batches(
-        pairs.select("query_id", "neighbor_id", "qv", "cv"),
-        fn,
-        "query_id long, neighbor_id long, sim double",
-    )
-
-
-def _rank_topk(sim: DataFrame, k: int) -> DataFrame:
-    """Shared (query_id, neighbor_id, rank) tail: NULL sims excluded,
-    deterministic (sim desc, neighbor_id asc) tiebreak, rank <= k.  The
-    brute-force and IVF paths both use THIS function so tiebreak/null
-    policy cannot diverge between them."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sim.filter(F.col("sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
-def _vecs(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, embedding) -> (vid, v), the two columns a corpus pass reads."""
-    return embeddings.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
-
-
-def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """(query_id, neighbor_id, rank) — exact cosine top-k per query over
-    (vec_id, embedding) relations.
-
-    The query side is broadcast (it is small by construction); the corpus
-    streams.  Deterministic tiebreak on neighbor id.  The broadcast-join
-    output is scored in vectorized batches with fold-order-exact doubles.
-    """
-    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
-    )
-    return _rank_topk(_pair_sim_arrow(F.broadcast(q).crossJoin(c)), k)
-
-
-Centroids = "list[tuple[int, list[float]]]"  # (centroid_id, vector), id-sorted
-
-
-# ---------------------------------------------------------------------------
-# Arrow+numpy assignment and scoring.  The fold cosine is replayed with
-# SEQUENTIAL-IN-DIMENSION accumulation (acc = acc + V[:,j]*c[j], j
-# ascending) — each row's additions happen in exactly the fold's order, so
-# doubles are bitwise identical to cosine_sim and to the DuckDB oracle;
-# numpy only vectorizes ACROSS rows.
-# ---------------------------------------------------------------------------
-
-
-def _cos_matrix(V, cents: list):
-    """(n, C) cosine matrix of V rows against the centroid list, fold-order
-    exact (see block comment above).  Zero-norm rows/centroids produce
-    -inf entries (the 'no direction' analog of cosine_sim's NULL) so they
-    can never win an argmax."""
-    import numpy as np
-
-    n, d = V.shape
-    na = np.zeros(n)
-    for j in range(d):
-        x = V[:, j]
+    na = np.zeros(len(A))
+    nb = np.zeros(len(B))
+    dot = np.zeros((len(A), len(B)))
+    for j in range(A.shape[1]):
+        x, y = A[:, j], B[:, j]
         na = na + x * x
-    sims = np.empty((n, len(cents)))
-    for ci, (_, cv) in enumerate(cents):
-        nc = 0.0
-        dot = np.zeros(n)
-        for j in range(d):
-            nc = nc + cv[j] * cv[j]
-            dot = dot + V[:, j] * cv[j]
-        n2 = na * nc
-        ok = n2 > 0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims[:, ci] = np.where(
-                ok, dot / np.sqrt(np.where(ok, n2, 1.0)), -np.inf
-            )
-    return sims
+        nb = nb + y * y
+        dot = dot + x[:, None] * y[None, :]
+    n2 = na[:, None] * nb[None, :]
+    ok = n2 > 0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(ok, dot / np.sqrt(np.where(ok, n2, 1.0)), -np.inf)
+
+
+def _nearest(sims, k: int):
+    """(rows, cols): each row's `k` largest finite entries of ``sims``,
+    row-major — rows ascending, then sim desc with column asc among ties
+    (the oracles' ROW_NUMBER tiebreak; centroid columns are id-ascending).
+    A row with no finite entry (no direction) yields none."""
+    import numpy as np
+
+    order = np.argsort(-sims, axis=1, kind="stable")[:, :k]
+    rows, slot = np.nonzero(np.isfinite(np.take_along_axis(sims, order, axis=1)))
+    return rows, order[rows, slot]
 
 
 def _flat_f64(col, n: int):
-    """(flat_f32, M) from an Arrow list<float> column: zero-copy flatten of
-    the child buffer (offset-safe), reshaped (n, d) as float64 —
-    to_pylist() here built 64M Python floats per 1M-row batch and
-    dominated wall time.
+    """(n, d) float64 matrix of an Arrow list<float> column: zero-copy
+    flatten of the child buffer (offset-safe), then one cast — to_pylist()
+    here built 64M Python floats per 1M-row batch and dominated wall time.
 
     Null or ragged rows would silently mis-align every row after them
     under a blind reshape (review r3 finding), so both are rejected loudly:
@@ -218,8 +117,114 @@ def _flat_f64(col, n: int):
                 "ragged embedding rows (differing dimensions) are not supported"
             )
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    d = len(flat) // n
-    return flat, flat.astype(np.float64).reshape(n, d)
+    return flat.astype(np.float64).reshape(n, len(flat) // n)
+
+
+def _cent_arrays(cents: list):
+    """(ids, vectors) numpy arrays of an id-sorted centroid list: the form
+    a batch pass receives them in.  ``vectors`` is (C, d), or (0,) for no
+    centroids; a kernel reshapes it to (C, its own d)."""
+    import numpy as np
+
+    return (
+        np.array([cid for cid, _ in cents], dtype=np.int64),
+        np.array([cv for _, cv in cents], dtype=np.float64),
+    )
+
+
+def _rank_topk(sim: DataFrame, k: int) -> DataFrame:
+    """Shared (query_id, neighbor_id, rank) tail: deterministic (sim desc,
+    neighbor_id asc) tiebreak, rank <= k.  The brute-force and IVF paths
+    both use THIS function so the tiebreak cannot diverge between them."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("sim"), F.asc("neighbor_id")
+    )
+    return (
+        sim.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
+def _vecs(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, embedding) -> (vid, v), the two columns a corpus pass reads."""
+    return embeddings.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
+
+
+def _search_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    cents: Optional[list] = None,
+    nprobe: int = 1,
+) -> DataFrame:
+    """(query_id, neighbor_id, rank): each query's k nearest corpus rows
+    by cosine, scored in ONE map_batches pass over the corpus.  The
+    queries (small by construction) are collected to the driver and
+    broadcast as one matrix, so the plan has no join; its one exchange is
+    _rank_topk's window.
+
+    Without ``cents`` every query scores every corpus row (brute force).
+    With them (IVF), each corpus row goes to its nearest cell (nprobe=1,
+    as kmeans_train assigns) and is scored only against the queries whose
+    `nprobe` nearest cells include that cell, both by the same _nearest
+    rule assign_cells_arrow uses.  Zero-norm rows and queries score -inf
+    and are never emitted."""
+    import numpy as np
+    import pyarrow as pa
+
+    q = queries.select("vec_id", "embedding").toArrow()
+    if not q.num_rows:
+        return queries.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, rank long"
+        )
+    qid = q.column(0).to_numpy()
+    QV = _flat_f64(q.column(1).combine_chunks(), q.num_rows)
+    if cents is None:
+        CV, probe = None, np.ones((len(qid), 1), dtype=bool)
+    else:
+        CV = _cent_arrays(cents)[1].reshape(len(cents), QV.shape[1])
+        probe = np.zeros((len(qid), len(cents)), dtype=bool)
+        probe[_nearest(_fold_cos(QV, CV), nprobe)] = True
+    bc = embeddings.sparkSession.sparkContext.broadcast((qid, QV, CV, probe))
+
+    def score(vid, v):
+        qid, QV, CV, probe = bc.value
+        ids = vid.to_numpy()
+        V = _flat_f64(v, len(ids))
+        if CV is None:
+            rows, cell = np.arange(len(ids)), np.zeros(len(ids), dtype=np.int64)
+        else:
+            rows, cell = _nearest(_fold_cos(V, CV), 1)
+            # at C ~ sqrt(N) most cells have no probing query: skip their
+            # rows before the per-cell loop
+            probed = probe.any(axis=0)[cell]
+            rows, cell = rows[probed], cell[probed]
+        out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+        for c in np.unique(cell):
+            r, qs = rows[cell == c], np.flatnonzero(probe[:, c])
+            S = _fold_cos(V[r], QV[qs])
+            ii, jj = np.nonzero(np.isfinite(S))
+            out.append((qid[qs[jj]], ids[r[ii]], S[ii, jj]))
+        qcol, ncol, scol = (np.concatenate(c) for c in zip(*out))
+        return [
+            pa.array(qcol, pa.int64()),
+            pa.array(ncol, pa.int64()),
+            pa.array(scol, pa.float64()),
+        ]
+
+    sim = map_batches(
+        _vecs(embeddings), score, "query_id long, neighbor_id long, sim double"
+    )
+    return _rank_topk(sim, k)
+
+
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """(query_id, neighbor_id, rank) — exact cosine top-k per query over
+    (vec_id, embedding) relations: one corpus pass in which every query
+    scores every row (_search_topk), deterministic tiebreak on neighbor
+    id, fold-order-exact doubles."""
+    return _search_topk(embeddings, queries, k)
 
 
 def assign_cells_arrow(
@@ -231,71 +236,45 @@ def assign_cells_arrow(
     pair straddling one Voronoi boundary still shares >= 1 cell (VERDICT
     r02 item 1: single-cell blocking silently dropped boundary pairs).
 
-    The centroid list travels as a Spark BROADCAST, not in the task
-    closure (r05): a closure payload is re-serialized into every task of
-    every stage that uses the relation — at the production C = sqrt(N)
-    geometry (31,623 x 768-dim for a 10^9-row corpus) that is hundreds
-    of MB per stage, where a broadcast ships once per executor and is
-    cached.
+    The centroids travel as a Spark BROADCAST of their _cent_arrays, not
+    in the task closure (r05): a closure payload is re-serialized into
+    every task of every stage that uses the relation — at the production
+    C = sqrt(N) geometry (31,623 x 768-dim for a 10^9-row corpus) that is
+    hundreds of MB per stage, where a broadcast ships once per executor
+    and is cached.
 
-    Iterative callers pass their own ``bc`` (a broadcast of ``cents``)
-    and destroy it once the returned relation is fully consumed —
-    otherwise a Lloyd loop leaks one full centroid payload per round
-    until GC + ContextCleaner get around to it (review r5 finding)."""
+    Iterative callers pass their own ``bc`` (a broadcast of
+    ``_cent_arrays(cents)``) and destroy it once the returned relation is
+    fully consumed — otherwise a Lloyd loop leaks one full centroid
+    payload per round until GC + ContextCleaner get around to it (review
+    r5 finding)."""
     import pyarrow as pa
     import numpy as np
 
     if bc is None:
-        bc = vecs.sparkSession.sparkContext.broadcast(cents)
-    ncents = len(cents)
+        bc = vecs.sparkSession.sparkContext.broadcast(_cent_arrays(cents))
 
-    def fn(vid_col, v):
-        cents_v = bc.value
-        cids = np.array([int(cid) for cid, _ in cents_v], dtype=np.int64)
-        n = len(vid_col)
-        vid = vid_col.to_numpy(zero_copy_only=False)
-        _, V = _flat_f64(v, n)
-        sims = _cos_matrix(V, cents_v)
-        k = min(nprobe, ncents)
-        # degenerate rows (zero-norm vector, or every centroid
-        # zero-norm) have no direction: cell -1 when nprobe == 1
-        # (kept, and skipped by _update_centroids), NO rows when
-        # nprobe > 1 (excluded from candidates)
-        deg = np.all(np.isneginf(sims), axis=1)
-        if not np.isneginf(sims).any():
-            # fast path: stable argsort of -sims = sim desc, ties keep
-            # column order (= cid asc, the fold/ROW_NUMBER tiebreak)
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :k]
-            rows = np.repeat(np.arange(n), k)
-            out_cell = cids[top.ravel()]
+    def fn(vid, v):
+        cids, CV = bc.value
+        n = len(vid)
+        V = _flat_f64(v, n)
+        rows, cols = _nearest(_fold_cos(V, CV.reshape(len(cids), V.shape[1])), nprobe)
+        if nprobe > 1:
+            cell = cids[cols]
         else:
-            rows_l: list = []
-            cell_l: list = []
-            order = np.argsort(-sims, axis=1, kind="stable")
-            for i in range(n):
-                if deg[i]:
-                    if nprobe == 1:
-                        rows_l.append(i)
-                        cell_l.append(-1)
-                    continue
-                taken = 0
-                for ci in order[i]:
-                    if taken >= k or np.isneginf(sims[i, ci]):
-                        break
-                    rows_l.append(i)
-                    cell_l.append(int(cids[ci]))
-                    taken += 1
-            rows = np.array(rows_l, dtype=np.int64)
-            out_cell = np.array(cell_l, dtype=np.int64)
+            # a degenerate row (zero-norm vector, or every centroid
+            # zero-norm) has no direction: it stays, in cell -1, which
+            # _update_centroids skips; with nprobe > 1 it has no rows, so
+            # no candidates
+            cell = np.full(n, -1, dtype=np.int64)
+            cell[rows] = cids[cols]
+            rows = np.arange(n)
+        take = pa.array(rows, pa.int64())
         # pass vectors through in their ORIGINAL Arrow type (take
         # handles the row repetition of nprobe > 1): a float32 re-emit
         # silently rounded array<double> corpora (review r4, same fix
         # as _maxcos_update_arrow)
-        return [
-            pa.array(vid[rows], pa.int64()),
-            v.take(pa.array(rows, pa.int64())),
-            pa.array(out_cell, pa.int64()),
-        ]
+        return [vid.take(take), v.take(take), pa.array(cell, pa.int64())]
 
     vtype = vecs.schema["v"].dataType.simpleString()
     return map_batches(vecs.select("vid", "v"), fn, f"vid long, v {vtype}, cell long")
@@ -323,15 +302,6 @@ def _update_centroids(assigned: DataFrame) -> DataFrame:
             lambda x: x["s"].cast("double") / (x["n"].cast("double") * CENT_SCALE),
         ).alias("centv")
     )
-
-
-def _py_dot(a: List[float], b: List[float]) -> float:
-    """Left-to-right fold — bitwise-identical to cosine_sim's F.aggregate
-    and to the DuckDB oracle's list_reduce (0.0 + x1 == x1)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
 
 
 def _sample_hash(c: Column) -> Column:
@@ -366,35 +336,35 @@ def kmeanspp_init(embeddings: DataFrame, num_centroids: int, sample_size: int) -
         .limit(sample_size)
         .collect()
     )
-    # zero-norm rows are dropped AFTER the limit (a degenerate vector has
-    # no direction and must never seed a centroid; post-limit filtering
-    # keeps the sample CTE arithmetic identical for non-degenerate corpora)
-    samp: List[Tuple[int, List[float]]] = sorted(
-        (int(r.vid), v)
-        for r in rows
-        if _py_dot((v := [float(x) for x in r.v]), v) > 0
-    )
-    if not samp:
+    if not rows:
         return []
     import numpy as np
 
+    samp = sorted((int(r.vid), [float(x) for x in r.v]) for r in rows)
+    V = np.array([v for _, v in samp], dtype=np.float64)  # vid-ascending
+    # zero-norm rows are dropped AFTER the limit (a degenerate vector has
+    # no direction and must never seed a centroid; post-limit filtering
+    # keeps the sample CTE arithmetic identical for non-degenerate
+    # corpora).  A sum of squares is > 0 in any summation order.
+    keep = (V * V).sum(axis=1) > 0
+    samp, V = [s for s, ok in zip(samp, keep) if ok], V[keep]
+    if not samp:
+        return []
     # incremental farthest-point, numpy-vectorized over the sample axis
     # (ADVICE r03: the pure-Python O(S*C*d) sweep was a single-threaded
-    # driver bottleneck at C ~ sqrt(N)).  _cos_matrix's dim-loop fold keeps
-    # every per-element accumulation left-to-right, so selections stay
+    # driver bottleneck at C ~ sqrt(N)); _fold_cos keeps selections
     # bitwise identical to the DuckDB oracle's list_reduce cosine.
-    V = np.array([v for _, v in samp], dtype=np.float64)  # vid-ascending
-    chosen = [samp[0]]  # smallest sampled id
+    pick = [0]  # smallest sampled id
     # running max cosine to the chosen set; max is associative over floats,
     # so selections match the recompute-per-step form the SQL oracle uses
-    maxcos = _cos_matrix(V, [chosen[0]])[:, 0]
-    while len(chosen) < min(num_centroids, len(samp)):
+    maxcos = _fold_cos(V, V[:1])[:, 0]
+    while len(pick) < min(num_centroids, len(samp)):
         # argmin over (maxcos, vid): rows are vid-ascending, and argmin
         # returns the FIRST minimal index = smallest vid among ties
         bidx = int(np.argmin(maxcos))
-        chosen.append(samp[bidx])
-        maxcos = np.maximum(maxcos, _cos_matrix(V, [chosen[-1]])[:, 0])
-    return [(i, v) for i, (_, v) in enumerate(chosen)]
+        pick.append(bidx)
+        maxcos = np.maximum(maxcos, _fold_cos(V, V[bidx : bidx + 1])[:, 0])
+    return [(i, samp[j][1]) for i, j in enumerate(pick)]
 
 
 SYNTH_CLUSTERS = 16
@@ -498,7 +468,7 @@ def _maxcos_update_arrow(state: DataFrame, new_seeds: list) -> DataFrame:
     the max cosine against the full seed list (the parity the DuckDB oracle
     replays), and an initial maxcos of -inf makes the first round the max
     cosine to the first seeds (max(-inf, x) == x).  A zero-norm row scores
-    -inf against every seed (_cos_matrix), so it keeps -inf.
+    -inf against every seed (_fold_cos), so it keeps -inf.
 
     The vector column passes through in its ORIGINAL Arrow type (review
     r4 finding: re-emitting through a float32 builder silently rounded
@@ -507,10 +477,11 @@ def _maxcos_update_arrow(state: DataFrame, new_seeds: list) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
+    S = np.array([sv for _, sv in new_seeds], dtype=np.float64)
+
     def fn(vid, v, maxcos):
-        _, V = _flat_f64(v, len(vid))
         old = maxcos.to_numpy(zero_copy_only=False)
-        mc = np.maximum(old, np.max(_cos_matrix(V, new_seeds), axis=1))
+        mc = np.maximum(old, _fold_cos(_flat_f64(v, len(vid)), S).max(axis=1))
         return [vid, v, pa.array(mc, pa.float64())]
 
     vtype = state.schema["v"].dataType.simpleString()
@@ -618,7 +589,7 @@ def kmeans_train(
         # round-scoped broadcast: destroyed as soon as the centroid
         # update materializes, so the loop never stacks payloads
         # (at C = sqrt(N) geometry each is hundreds of MB)
-        bc = sc.broadcast(cents)
+        bc = sc.broadcast(_cent_arrays(cents))
         try:
             updated = _update_centroids(
                 assign_cells_arrow(vecs, cents, bc=bc)
@@ -632,33 +603,6 @@ def kmeans_train(
     return cents
 
 
-def _probe_cells(queries: DataFrame, cents: list, nprobe: int) -> DataFrame:
-    """(query_id, qv, pcell): each query's `nprobe` nearest IVF cells —
-    broadcast query x broadcast centroid crossJoin, deterministic
-    (psim desc, centroid_id asc) tiebreak."""
-    spark = queries.sparkSession
-    cents_df = spark.createDataFrame(
-        [(cid, cv) for cid, cv in cents], "centroid_id long, centv array<double>"
-    )
-    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("psim"), F.asc("centroid_id")
-    )
-    return (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents_df))
-        .select(
-            "query_id",
-            "qv",
-            "centroid_id",
-            cosine_sim(F.col("qv"), F.col("centv")).alias("psim"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qv", F.col("centroid_id").alias("pcell"))
-    )
-
-
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -669,54 +613,32 @@ def ivf_topk(
     in the query's `nprobe` nearest IVF cells (centroids trained with
     IVF_TRAIN_ITERS Lloyd iterations, multi-probe — VERDICT r01 item 6).
 
-    Corpus-side cell assignment is shuffle-free (assign_cells_arrow); the
-    only corpus exchange is the broadcast-probe join's output."""
+    The search is one corpus pass (_search_topk): each row's cell
+    assignment and its scoring against the queries probing that cell run
+    in the same batch, so the only corpus exchange is the rank window's."""
     cents = kmeans_train(embeddings, num_centroids, IVF_TRAIN_ITERS)
-    assigned = assign_cells_arrow(_vecs(embeddings), cents)
-    probes = _probe_cells(queries, cents, nprobe)
-    matched = F.broadcast(probes).join(assigned, F.col("pcell") == F.col("cell"))
-    sim = _pair_sim_arrow(
-        matched.select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            "qv",
-            F.col("v").alias("cv"),
-        )
-    )
-    return _rank_topk(sim, IVF_K)
+    return _search_topk(embeddings, queries, IVF_K, cents, nprobe)
 
 
 def _blocked_cos_pairs(
-    ids_a, VA, nv_a, ids_b, VB, nv_b, triangle, block, threshold_milli,
-    out_a, out_b, out_c
+    ids_a, VA, ids_b, VB, triangle, block, threshold_milli, out_a, out_b, out_c
 ):
-    """Blocked numpy kernel shared by the diagonal (triangle=True: A is B,
-    strict upper triangle by sorted vid) and cross (triangle=False: two
-    vid-disjoint sides, emit (min,max)) group shapes.  Arithmetic is
-    bit-identical either way: the pair dot accumulates dimension-ascending
-    and IEEE multiply is commutative, so which side a vector lands on
-    cannot change a single output bit."""
+    """Blocked kernel shared by the diagonal (triangle=True: A is B, strict
+    upper triangle by sorted vid) and cross (triangle=False: two
+    vid-disjoint sides, emit (min,max)) group shapes: each tile is one
+    _fold_cos, and a pair is kept where floor(1000 * cos) >= the
+    threshold (zero-norm entries are -inf and never are).  _fold_cos is
+    symmetric bit for bit, so which side a vector lands on cannot change
+    a single output bit."""
     import numpy as np
 
-    d = VA.shape[1]
     for i0 in range(0, len(ids_a), block):
         A = VA[i0 : i0 + block]
         for j0 in range(i0 if triangle else 0, len(ids_b), block):
-            B = VB[j0 : j0 + block]
-            D = np.zeros((A.shape[0], B.shape[0]))
-            for j in range(d):
-                D = D + A[:, j][:, None] * B[:, j][None, :]
-            n2 = nv_a[i0 : i0 + block][:, None] * nv_b[j0 : j0 + block][None, :]
-            ok = n2 > 0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cm = np.where(
-                    ok,
-                    np.floor(1000.0 * (D / np.sqrt(np.where(ok, n2, 1.0)))),
-                    -(10**9),
-                )
-            sel = ok & (cm >= threshold_milli)
+            cm = np.floor(1000.0 * _fold_cos(A, VB[j0 : j0 + block]))
+            sel = cm >= threshold_milli
             if triangle and i0 == j0:  # strict upper triangle: id_a < id_b
-                sel &= np.tri(A.shape[0], B.shape[0], k=-1, dtype=bool).T
+                sel &= np.tri(*sel.shape, k=-1, dtype=bool).T
             ii, jj = np.nonzero(sel)
             ia, ib = ids_a[i0 + ii], ids_b[j0 + jj]
             if triangle:
@@ -737,12 +659,10 @@ def _dup_pairs_grouped(
     """(id_a, id_b, cos_milli >= threshold) scored PER CELL in one grouped
     Arrow pass (``rowmap.map_groups``).  Grouping shuffles each vector
     ONCE (N * dim) and scores the cell's pairs in place with blocked
-    numpy; a candidate
-    equi-join would shuffle every candidate pair with BOTH its vectors
-    (pairs * 2 * dim floats — ~6 GB at the sf1.0 battery).  Arithmetic
-    replays the oracle's fold cosine: per-vector norms and the pair dot
-    both accumulate dimension-ascending, n2 = na*nb in the same order,
-    then floor(1000 * dot/sqrt(n2)).  Blocks bound MEMORY to
+    numpy; a candidate equi-join would shuffle every candidate pair with
+    BOTH its vectors (pairs * 2 * dim floats — ~6 GB at the sf1.0
+    battery).  Arithmetic replays the oracle's fold cosine (_fold_cos),
+    then floor(1000 * cos).  Blocks bound MEMORY to
     O(PAIR_BLOCK^2 + PAIR_BLOCK*dim) per task regardless of cell size.
 
     ``max_cell`` (r05, VERDICT r04 item 2) bounds per-task COMPUTE — the
@@ -762,19 +682,14 @@ def _dup_pairs_grouped(
 
     def _side(ids: np.ndarray, V: np.ndarray):
         order = np.argsort(ids, kind="stable")
-        ids, V = ids[order], V[order]
-        nvec = np.zeros(len(ids))
-        for j in range(V.shape[1]):
-            nvec = nvec + V[:, j] * V[:, j]
-        return ids, V, nvec
+        return ids[order], V[order]
 
     def score(vid, v, cell, sb=None, lo=None, hi=None) -> list:
         out_a: list = []
         out_b: list = []
         out_c: list = []
         ids = vid.to_numpy()
-        V = v.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-        V = V.reshape(len(ids), -1)
+        V = _flat_f64(v, len(ids))
         if lo is not None and lo[0].as_py() != hi[0].as_py():
             sbs = sb.to_numpy()
             a, b = sbs == lo[0].as_py(), sbs == hi[0].as_py()

@@ -233,9 +233,6 @@ CHAINED_PYTHON_NODES = {
     "warc_ingest": 3,  # generate -> pages_to_warc -> read_warc
     "engine_fallback": 2,  # generate_pages -> tokenize
     "frontier_select": 2,  # sitemap parse -> bloom probe
-    "knn_ivf": 2,  # cell assignment -> similarity, one broadcast-join stage
-    "ivf_recall_mean": 2,
-    "ivf_recall_clustered": 2,
 }
 
 
@@ -387,21 +384,37 @@ def test_minhash_signatures_no_shuffle(spark, documents):
     assert "Exchange" not in _formatted(simhash_arrow(documents))
 
 
-def test_brute_force_knn_broadcasts_queries(spark):
-    """Query side must broadcast; the corpus must never shuffle."""
-    import os
+def _assert_one_corpus_pass(plan: str) -> None:
+    """A nearest-neighbour search plan: the queries travel as a broadcast
+    variable, so no join node of any kind; one MapInArrow scores the
+    corpus, and the only exchange is the rank window's hash partitioning
+    by query_id (post-similarity), so the corpus itself never shuffles."""
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert not [n for n in nodes if "Join" in n or "Cartesian" in n], plan
+    assert nodes.count("MapInArrow") == 1, plan
+    assert plan.count("Exchange hashpartitioning") <= 1, plan
 
+
+def test_brute_force_knn_broadcasts_queries(spark):
     from image_ocr_spark.operators.similarity import brute_force_topk
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    plan = _formatted(brute_force_topk(emb, emb.filter(F.col("vec_id") < 4), k=3))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    # the only allowed corpus-path exchange is the window's top-k hash
-    # partitioning by query_id (post-similarity); bound it so a regression
-    # that repartitions the corpus pre-join cannot slip through
-    n_hash_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_hash_exchanges <= 1, plan
+    from tests.conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    _assert_one_corpus_pass(
+        _formatted(brute_force_topk(emb, emb.filter(F.col("vec_id") < 4), k=3))
+    )
+
+
+def test_ivf_knn_one_corpus_pass(spark):
+    from image_ocr_spark.operators.similarity import ivf_topk
+
+    from tests.conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    _assert_one_corpus_pass(
+        _formatted(ivf_topk(emb, emb.filter(F.col("vec_id") < 4), num_centroids=4))
+    )
 
 
 # MapInArrow nodes in each pair operator's formatted plan
