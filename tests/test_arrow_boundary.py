@@ -335,8 +335,9 @@ def _assign_cells(spark, docs, emb, rows):
 def _brute_force(spark, docs, emb, rows):
     from image_ocr_spark.operators.similarity import brute_force_topk
 
-    one = _spread(emb, rows)
-    return brute_force_topk(one, one, k=1)
+    # the queries are collected when the plan is built: keep one, so the
+    # rows=0 case still runs the corpus pass on an empty input
+    return brute_force_topk(_spread(emb, rows), _spread(emb, 1), k=1)
 
 
 def _bloom(spark, docs, emb, rows):
